@@ -11,15 +11,8 @@ import org.apache.spark.sql.SparkSession
   *   mysqldump-to-parquet [-o|--output DIR] [--strict-tables]
   *                        [--quarantine] [--codec CODEC]
   *                        [--date-as-date] [--unsigned-decimal]
-  *                        [--resume] [--salts N] [INPUT]
+  *                        [--resume] [INPUT]
   * }}}
-  *
-  * `--salts N` sets the per-table reducer fan-out of the routing
-  * shuffle (default 8). A dump dominated by ONE huge table has exactly
-  * `salts` reduce tasks for it, so this is the parallelism dial for
-  * big dumps: SCALING.md's decade bench measured a 445 MB single-table
-  * dump converting 2× faster at `--salts 32` (≈ cores); at 100 TB set
-  * it in the thousands.
   *
   * `--resume` restarts a died convert: tables whose completion-manifest
   * entry matches the input's fingerprint are skipped, partially-written
@@ -54,8 +47,7 @@ object DumpCli {
       quarantine: Boolean = false,
       codec: String = "snappy",
       types: DumpParser.TypeOptions = DumpParser.DefaultTypes,
-      resume: Boolean = false,
-      salts: Int = 8)
+      resume: Boolean = false)
 
   private[dump] def parseArgs(args: Array[String]): CliArgs = {
     var a = CliArgs()
@@ -78,12 +70,6 @@ object DumpCli {
           a = a.copy(types = a.types.copy(unsignedBigintDecimal = true)); i += 1
         case "--resume" =>
           a = a.copy(resume = true); i += 1
-        case "--salts" =>
-          require(i + 1 < args.length, "--salts requires a value")
-          val n = args(i + 1).toIntOption.getOrElse(
-            throw new IllegalArgumentException(s"--salts needs an integer, got '${args(i + 1)}'"))
-          require(n >= 1, s"--salts must be >= 1, got $n")
-          a = a.copy(salts = n); i += 2
         case flag if flag.startsWith("-") =>
           throw new IllegalArgumentException(s"unknown flag $flag")
         case pos =>
@@ -134,7 +120,6 @@ object DumpCli {
       // `main.rs:63-86`): table discovery, a throttled rows-written
       // ticker, and a per-table line as each write commits.
       val res = DumpConverter.convert(spark, input, a.out,
-        saltsPerTable = a.salts,
         strictTables = a.strict, progress = System.err.println, quarantine = a.quarantine,
         codec = a.codec, types = a.types, resume = a.resume)
       // `rowsWritten` includes the `_quarantine` side channel; report

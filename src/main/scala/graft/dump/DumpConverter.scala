@@ -1,10 +1,23 @@
 package graft.dump
 
-import org.apache.spark.Partitioner
-import org.apache.spark.rdd.{PartitionPruningRDD, RDD}
+import scala.jdk.CollectionConverters._
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
+import org.apache.hadoop.mapreduce.lib.output.FileOutputFormat
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.TaskContext
+import org.apache.spark.internal.io.{FileCommitProtocol, FileNameSpec}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
+import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.util.{LongAccumulator, SerializableConfiguration}
 
 /** mysqldump → one Snappy parquet dir per table, the reference's whole
   * capability (`/root/reference/src/main.rs`, `parquet_writer.rs`)
@@ -42,20 +55,33 @@ import org.apache.spark.storage.StorageLevel
   *      reference's writer onto the same output path
   *      (`parquet_writer.rs:82-91`); we reproduce that positionally:
   *      only INSERTs after the table's last CREATE are written.
-  *   5. ONE parse pass routes every INSERT: rows are parsed + coerced
-  *      on executors and hash-partitioned by (table, salt) with
-  *      [[TablePartitioner]], which gives each table a private,
-  *      statically-known range of `saltsPerTable` partitions (the salt
-  *      spreads a huge table over multiple reducers instead of one).
-  *      Each per-table write then reads ONLY its own partitions via
-  *      `PartitionPruningRDD` — total work is O(dump) + O(output), not
-  *      the O(tables × dump) of a filter-per-table design.
-  *   6. Per-table row counts are EXACT: read back from the committed
-  *      parquet after each write (column-less count scan), because the
-  *      CLI reports them as authoritative totals like the reference's
-  *      counters. (Drop counts remain accumulator-based — at-least-once
-  *      under retry, acceptable for a warning line.) The data path
-  *      itself is exactly-once via Spark's output commit protocol.
+  *   5. ONE job parses every INSERT and writes parquet straight from
+  *      the parse tasks, like the reference streaming each table into
+  *      its open writer (`parquet_writer.rs:82-91`): a task opens one
+  *      parquet writer per table it meets (mysqldump writes a table's
+  *      rows contiguously, so a split touches one or two tables) and
+  *      encodes its rows through the serializer `createDataFrame`
+  *      uses. Rows are never shuffled, and one job writes every table.
+  *      Parallelism is therefore the statement partition count: when
+  *      the assembled statements have fewer partitions than
+  *      `defaultParallelism` (gzip, a single zstd shard, a small
+  *      `minPartitions = 1` dump) the statement TEXT is rebalanced to
+  *      `defaultParallelism` before parsing — decided by the input
+  *      alone. The read itself is never split harder: raw-newline
+  *      dumps rely on one sequential split.
+  *   6. The job commits through ONE `FileCommitProtocol` rooted at a
+  *      hidden staging dir under outDir ([[StagingDir]]), each table a
+  *      relative directory — the way a partitioned write commits, so a
+  *      task retry stays exactly-once and the coordinator authorizes
+  *      one commit per task. After the job commits, tables are
+  *      published one by one in table order: a directory rename into
+  *      `outDir/<table>`, a `_SUCCESS` marker, the EXACT row count from
+  *      the committed files' footers, the manifest entry, then the
+  *      `(i/N)` progress line — so a crash between tables leaves the
+  *      earlier tables complete and the later ones absent, as before.
+  *      A failed job is aborted and its staging dir deleted. (Drop
+  *      counts remain accumulator-based — at-least-once under retry,
+  *      acceptable for a warning line.)
   *
   * DEVIATION from the reference: interleaved dumps (a table's INSERTs
   * split around other tables' sections) are SUPPORTED — statements are
@@ -118,18 +144,6 @@ object DumpConverter {
     * while preserving the single-db outDir/table layout. */
   private def qualify(db: String, table: String): String =
     if (db.isEmpty) table else s"$db/$table"
-
-  /** Routes (table, salt) keys so table `i` owns exactly partitions
-    * [i*salts, (i+1)*salts) — the static layout PartitionPruningRDD
-    * needs to read one table without touching the others. */
-  private class TablePartitioner(index: Map[String, Int], salts: Int)
-      extends Partitioner {
-    def numPartitions: Int = math.max(1, index.size * salts)
-    def getPartition(key: Any): Int = key match {
-      case (t: String, s: Int) => index(t) * salts + s
-      case other => throw new IllegalArgumentException(s"bad key $other")
-    }
-  }
 
   /** Concrete data files under `input` (file, dir, or glob) in name
     * order, via the Hadoop FileSystem API so resolution matches
@@ -279,8 +293,12 @@ object DumpConverter {
     } finally in.close()
   }
 
+  /** `saltsPerTable` is ignored; it stays so callers that pass it by
+    * name still compile. */
   def convert(spark: SparkSession, input: String, outDir: String,
-              minPartitions: Int = 1, saltsPerTable: Int = 8,
+              minPartitions: Int = 1,
+              @deprecated("ignored: the parse tasks write parquet directly", "0.1.0")
+              saltsPerTable: Int = 8,
               strictTables: Boolean = false,
               progress: String => Unit = _ => (),
               quarantine: Boolean = false,
@@ -319,14 +337,17 @@ object DumpConverter {
         if (fs.exists(dir)) fs.delete(dir, true)
         Map.empty
       }
+    // a killed run's staging dir holds no committed table: drop it
+    val staging = new Path(s"$outDir/$StagingDir")
+    staging.getFileSystem(sc.hadoopConfiguration).delete(staging, true)
     val files = if (isZstdName(input)) Seq(input) else expandInput(sc, input)
     val lines =
       if (files.nonEmpty && files.forall(isZstdName)) zstdLines(sc, files)
       else sc.textFile(input, minPartitions)
 
     // Storage level for the one big intermediate (assembled
-    // statements; the routed rows travel as shuffle files, see the
-    // route phase below). The statements are cached as LZ4-PACKED
+    // statements; rows go straight from the parse into the parquet
+    // writers and are never stored). The statements are cached as LZ4-PACKED
     // blocks ([[packSegs]]): `spark.rdd.compress` is a static conf the
     // library cannot set on a caller's live session, and an
     // uncompressed statements cache writes-then-reads near-input-sized
@@ -418,14 +439,9 @@ object DumpConverter {
         creates.sortBy(_._1)(ordering).foreach(c => seen += c._2)
         seen.toSeq
       }
-      // With quarantine on, the side channel owns the index slot after
-      // the real tables — same routing, pruning and write machinery.
       if (quarantine)
         require(!tableOrder.contains(QuarantineTable),
           s"dump defines reserved table `$QuarantineTable`; rename it or run without --quarantine")
-      val tableIndex: Map[String, Int] =
-        if (quarantine) (tableOrder :+ QuarantineTable).zipWithIndex.toMap
-        else tableOrder.zipWithIndex.toMap
 
       val body: RDD[(Pos, String)] = segs.mapPartitionsWithIndex { (pid, packed) =>
         var seq = -1L
@@ -434,7 +450,17 @@ object DumpConverter {
           ((2L * pid + 1, seq): Pos, s)
         }
       }
-      val all: RDD[(Pos, String)] = body.union(sc.parallelize(healed, 1))
+      // Parallelism is the statement partition count (no reduce side
+      // re-spreads the rows), so an input that reads as fewer
+      // partitions than cores — gzip, one zstd shard, a small
+      // minPartitions = 1 dump — has its statement TEXT rebalanced
+      // before the parse. The read's own split count is left alone:
+      // raw-newline dumps rely on one sequential split.
+      val statements: RDD[(Pos, String)] = {
+        val all = body.union(sc.parallelize(healed, 1))
+        if (all.getNumPartitions < sc.defaultParallelism) all.repartition(sc.defaultParallelism)
+        else all
+      }
 
       val lastCreateB = sc.broadcast(lastCreate)
       // File-ordered (position, qualified table) of EVERY CREATE TABLE —
@@ -444,15 +470,14 @@ object DumpConverter {
       // File-ordered USE timeline for executor-side INSERT qualification.
       val useTimelineB = sc.broadcast(useTimeline)
       val dropped = sc.longAccumulator("droppedInserts")
-      val salts = math.max(1, saltsPerTable)
       // Resume, statement level: a completed table's INSERTs skip
       // parseInsert/coerceRow entirely — at a 99 %-complete restart
       // the parse CPU is the dominant cost, and paying it only to
       // filter the rows later would make "resume" a re-run with extra
       // steps. Quarantine mode must NOT take this shortcut: the bad-row
       // side channel, if unfinished, needs failures from completed
-      // tables' statements too (their good rows are dropped by the
-      // pending filter below).
+      // tables' statements too (their good rows have no writer and are
+      // dropped at the write).
       // METRIC ASYMMETRY, by design: the skip bypasses strict-routing
       // stderr warnings and the droppedInserts accumulator for the
       // completed tables' statements, so a resumed run's drop count /
@@ -463,8 +488,8 @@ object DumpConverter {
       val completedStmtSkipB =
         sc.broadcast(if (quarantine) Set.empty[String] else completed.keySet)
 
-      // The single parse pass: INSERT → coerced Rows keyed for routing.
-      val keyed: RDD[((String, Int), Row)] = all.flatMap { case (pos, s) =>
+      // The single parse pass: INSERT → (table, coerced Row).
+      val rows: RDD[(String, Row)] = statements.flatMap { case (pos, s) =>
         if (!s.startsWith("INSERT INTO")) Iterator.empty
         else {
           val t = qualify(latestAt(useTimelineB.value, pos).getOrElse(""),
@@ -477,12 +502,10 @@ object DumpConverter {
             case _ if completedStmtSkipB.value.contains(t) => Iterator.empty
             case Some((cpos, schema))
                 if strictOk && (pos._1 > cpos._1 || (pos._1 == cpos._1 && pos._2 > cpos._2)) =>
-              val salt = (pos.hashCode & Int.MaxValue) % salts
               if (!quarantine) {
                 val ins = DumpParser.parseInsert(s, types)
                 val align = DumpParser.rowAligner(ins, schema)
-                ins.rows.iterator
-                  .map(v => ((t, salt), DumpParser.coerceRow(t, schema, align(v))))
+                ins.rows.iterator.map(v => (t, DumpParser.coerceRow(t, schema, align(v))))
               } else {
                 // Bad-row side channel: a malformed STATEMENT (tokenizer
                 // failure, i64 overflow) quarantines once with the
@@ -497,12 +520,12 @@ object DumpConverter {
                   // ROW arity fails inside align(v) → row-level
                   val align = DumpParser.rowAligner(ins, schema)
                   ins.rows.iterator.flatMap { v =>
-                    try Iterator(((t, salt), DumpParser.coerceRow(t, schema, align(v))))
+                    try Iterator((t, DumpParser.coerceRow(t, schema, align(v))))
                     catch {
                       case scala.util.control.NonFatal(e) =>
                         // getMessage can be null (bare NPE); the reason
                         // column is non-nullable, so fall back to the class.
-                        Iterator(((QuarantineTable, salt),
+                        Iterator((QuarantineTable,
                           Row(t, Option(e.getMessage).getOrElse(e.getClass.getName),
                             v.map(x => if (x == null) "NULL" else x.toString)
                               .mkString("(", ", ", ")"))))
@@ -510,7 +533,7 @@ object DumpConverter {
                   }
                 } catch {
                   case scala.util.control.NonFatal(e) =>
-                    Iterator(((QuarantineTable, salt),
+                    Iterator((QuarantineTable,
                       Row(t, Option(e.getMessage).getOrElse(e.getClass.getName),
                         s.take(500))))
                 }
@@ -528,79 +551,53 @@ object DumpConverter {
       if (tableOrder.isEmpty) {
         // No CREATE TABLE anywhere: still run the pass so orphan INSERTs
         // are counted (and warned about) like the reference.
-        keyed.foreach(_ => ())
+        rows.foreach(_ => ())
         if (dropped.value > 0)
           System.err.println(s"[dump] dropped ${dropped.value} INSERT statement(s) with no (preceding) CREATE TABLE")
         return Result(Nil, Map.empty, dropped.value)
       }
 
-      // Resume: completed tables' GOOD rows are dropped BEFORE the
-      // shuffle — a restarted 100 TB ingest re-parses the dump (the
-      // cheap, stateless pass) but re-shuffles and re-writes only the
-      // unfinished tables. Quarantine rows still flow (keyed under
-      // QuarantineTable) because the side channel, if unfinished,
-      // needs bad rows from ALL statements including completed tables'.
-      val completedB = sc.broadcast(completed.keySet)
-      val pending =
-        if (completed.isEmpty) keyed
-        else keyed.filter { case ((t, _), _) => !completedB.value.contains(t) }
-      // NO persist on the routed rows (round-14 verdict item 3: the
-      // measured 13.6 GB floor was disk bandwidth over ~3 passes, one
-      // of them this cache): the per-table writes below read the
-      // routing shuffle's MAP OUTPUT FILES directly — the DAGScheduler
-      // registers the map stage's outputs after the first job and
-      // SKIPS it for every later one, so the parse still runs exactly
-      // once while the rows reach the writers through lz4-compressed
-      // shuffle files instead of a second, UNCOMPRESSED DISK_ONLY
-      // copy. One full write+read of near-input-sized data leaves the
-      // pipeline; crash/eviction recompute semantics are unchanged
-      // (a lost shuffle file re-runs its map task, same as a lost
-      // cache block re-parsed).
-      val routed = pending
-        .partitionBy(new TablePartitioner(tableIndex, salts))
-        .values
-      // Materialize ONLY the map side under its own phase: the
-      // decade-bench bottleneck question ("is the next wall the
-      // parse/shuffle or the parquet encode?") needs [dump-phase] to
-      // SEPARATE parse + shuffle-write ("route") from each table's
-      // shuffle-read + parquet encode ("write:<table>"). A one-
-      // partition job computes every MAP task (the full parse + salt
-      // shuffle write) but reads back a single reduce partition —
-      // vs the old foreachPartition warm-up, a full pass of the
-      // routed bytes never happens.
-      phase("route")(
-        sc.runJob(routed, (_: Iterator[Row]) => (), Seq(0)))
-      // Live progress (reference A14, `main.rs:63-86`): a rows-written
-      // ticker fed by task output metrics (throttled to 2 Hz) plus a
-      // per-table line as each write commits. Listener events are
-      // fire-and-forget metadata — they never touch the data path.
       progress(s"[dump] ${tableOrder.size} table(s) discovered")
+      // With quarantine on, the side channel is written after the real
+      // tables. `quarantine &&` matters: with the flag off,
+      // `_quarantine` is an ordinary dump table with its OWN schema.
+      val writeOrder = if (quarantine) tableOrder :+ QuarantineTable else tableOrder
+      val schemaOf: String => StructType = t =>
+        if (quarantine && t == QuarantineTable) QuarantineSchema else lastCreate(t)._2
+      // Live progress (reference A14, `main.rs:63-86`): a rows-written
+      // ticker (throttled to 2 Hz) fed by the write tasks' own row
+      // counter — the direct writers report no output metrics — plus a
+      // per-table line as each table is published. Listener events are
+      // fire-and-forget metadata; they never touch the data path.
+      val rowsOut = sc.longAccumulator("rowsWritten")
       val tickRows = new java.util.concurrent.atomic.AtomicLong
       val tickLast = new java.util.concurrent.atomic.AtomicLong(System.nanoTime())
-      val ticker = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = e.taskMetrics
-          if (m != null && m.outputMetrics != null && m.outputMetrics.recordsWritten > 0) {
-            val tot = tickRows.addAndGet(m.outputMetrics.recordsWritten)
-            val now = System.nanoTime()
-            val prev = tickLast.get
-            if (now - prev > 500L * 1000 * 1000 && tickLast.compareAndSet(prev, now))
-              progress(s"[dump] rows written: $tot")
+      val ticker = new SparkListener {
+        override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+          e.taskInfo.accumulables.find(_.id == rowsOut.id).flatMap(_.update) match {
+            case Some(n: java.lang.Long) if n > 0 =>
+              val tot = tickRows.addAndGet(n)
+              val now = System.nanoTime()
+              val prev = tickLast.get
+              if (now - prev > 500L * 1000 * 1000 && tickLast.compareAndSet(prev, now))
+                progress(s"[dump] rows written: $tot")
+            case _ => ()
           }
-        }
       }
-      sc.addSparkListener(ticker)
       try {
+        sc.addSparkListener(ticker)
+        try phase("write:all")(writeTables(spark, rows,
+          writeOrder.filterNot(completed.contains).map(t => t -> schemaOf(t)).toMap,
+          staging, codec, rowsOut))
+        finally sc.removeSparkListener(ticker)
+        progress(s"[dump] rows written: ${rowsOut.value}")
         // Exact per-table counts read back from the COMMITTED parquet —
-        // transformation-side accumulators double-count on task retry or
-        // cache-eviction recompute, and the CLI prints these totals as
+        // task-side counters double-count on task retry or cache-
+        // eviction recompute, and the CLI prints these totals as
         // authoritative (the reference's counters are exact). The count
         // comes from the committed files' FOOTERS ([[committedRowCount]]
         // — parquet num_rows is exact by format contract), not a scan
-        // job: the column-less count() it replaces was ~20 % of the
-        // whole sf0.1 convert (two extra jobs per run, round-17 probe).
-        val writeOrder =
-          if (quarantine) tableOrder :+ QuarantineTable else tableOrder
+        // job.
         val rowCounts = writeOrder.zipWithIndex.map { case (table, ti) =>
           completed.get(table) match {
             case Some(n) =>
@@ -609,21 +606,10 @@ object DumpConverter {
               progress(s"[dump] (${ti + 1}/${writeOrder.size}) $table: $n rows (already complete, skipped)")
               table -> n
             case None =>
-              val idx = tableIndex(table)
-              // `quarantine &&` matters: with the flag off, `_quarantine`
-              // is an ordinary dump table and keeps its OWN schema.
-              val schema =
-                if (quarantine && table == QuarantineTable) QuarantineSchema
-                else lastCreate(table)._2
-              val mine = PartitionPruningRDD.create(routed, pid => pid / salts == idx)
-              // the FIRST table's write also pays the one parse+shuffle
-              // pass that materializes `routed` for every table
-              phase(s"write:$table")(spark.createDataFrame(mine, schema)
-                .write.mode("overwrite").option("compression", codec)
-                .parquet(s"$outDir/$table"))
+              publish(sc.hadoopConfiguration, staging, outDir, table)
               val n = phase(s"count:$table")(
                 committedRowCount(spark, s"$outDir/$table"))
-              // manifest AFTER the parquet commit and count: a crash in
+              // manifest AFTER the publish and count: a crash in
               // between leaves no entry, so resume safely redoes the
               // table (overwrite) rather than trusting a torn write
               writeManifestEntry(sc.hadoopConfiguration, outDir, table, n, fingerprint)
@@ -634,19 +620,150 @@ object DumpConverter {
         if (dropped.value > 0)
           System.err.println(s"[dump] dropped ${dropped.value} INSERT statement(s) with no (preceding) CREATE TABLE")
         Result(tableOrder, rowCounts, dropped.value)
-      } finally {
-        sc.removeSparkListener(ticker)
-        // the routing shuffle's files are cleaned by ContextCleaner
-        // once `routed` is unreachable — nothing to unpersist here
-        // (the routed-rows CACHE it used to drain is gone, see the
-        // route phase)
-      }
+      } finally staging.getFileSystem(sc.hadoopConfiguration).delete(staging, true)
     } finally
       // blocking: back-to-back converts in one JVM (benches, batch
       // CLIs) must not start run N+1 while run N's gigabytes are
       // still draining asynchronously — that overlap was half the
       // measured ×100 OOM
       segs.unpersist(blocking = true)
+  }
+
+  /** Hidden directory under outDir that the write job commits into;
+    * each table is renamed out of it once the whole job has committed
+    * (see the class doc, step 6). */
+  val StagingDir = "_graft_staging"
+
+  /** How one table is written: its schema, the parquet writer factory
+    * and the Hadoop conf entries `prepareWrite` added for it (the row
+    * schema its write support reads back, the codec). */
+  private case class Sink(schema: StructType, factory: OutputWriterFactory,
+                          added: Map[String, String]) {
+    def conf(base: Configuration): Configuration = {
+      val c = new Configuration(base)
+      added.foreach { case (k, v) => c.set(k, v) }
+      c
+    }
+  }
+
+  /** The one write job: every task of `rows` writes its rows into one
+    * parquet file per table it meets, under `staging/<table>/`, and the
+    * job commits through ONE `FileCommitProtocol` rooted at `staging`.
+    * One protocol, not one per table: the output commit coordinator
+    * authorizes one commit per (stage, partition), so a task's second
+    * per-table commit would be denied — and local mode retries a denied
+    * commit forever. A failed job is aborted. Tables no task wrote a
+    * row to get one schema-only file, as a Spark write of an empty
+    * DataFrame does. Rows of tables outside `schemas` (completed by an
+    * earlier run) are dropped. */
+  private def writeTables(spark: SparkSession, rows: RDD[(String, Row)],
+                          schemas: Map[String, StructType], staging: Path,
+                          codec: String, rowsOut: LongAccumulator): Unit = {
+    val sc = spark.sparkContext
+    val job = Job.getInstance(new Configuration(sc.hadoopConfiguration))
+    job.setOutputKeyClass(classOf[Void])
+    job.setOutputValueClass(classOf[InternalRow])
+    FileOutputFormat.setOutputPath(job, staging)
+    val base = job.getConfiguration
+    val sinks: Map[String, Sink] = schemas.map { case (t, schema) =>
+      val tj = Job.getInstance(new Configuration(base))
+      val factory = new ParquetFileFormat()
+        .prepareWrite(spark, tj, Map("compression" -> codec), schema)
+      val added = tj.getConfiguration.iterator.asScala
+        .map(e => e.getKey -> e.getValue).filter { case (k, v) => base.getRaw(k) != v }.toMap
+      t -> Sink(schema, factory, added)
+    }
+    val runId = java.util.UUID.randomUUID.toString
+    val committer = FileCommitProtocol.instantiate(
+      spark.conf.get("spark.sql.sources.commitProtocolClass",
+        "org.apache.spark.sql.execution.datasources.SQLHadoopMapReduceCommitProtocol"),
+      runId, staging.toString)
+    // Hadoop job ids of the task attempts, as Spark's own writes form them
+    val tracker = new java.text.SimpleDateFormat("yyyyMMddHHmmss", java.util.Locale.US)
+      .format(new java.util.Date)
+    val baseB = sc.broadcast(new SerializableConfiguration(base))
+    val sinksB = sc.broadcast(sinks)
+    committer.setupJob(job)
+    try {
+      val msgs = sc.runJob(rows, (ctx: TaskContext, it: Iterator[(String, Row)]) =>
+        writePartition(ctx, it, committer, tracker, baseB.value.value, sinksB.value, rowsOut))
+      msgs.foreach(committer.onTaskCommit)
+      committer.commitJob(job, msgs.toSeq)
+    } catch {
+      case e: Throwable =>
+        committer.abortJob(job)
+        throw e
+    } finally {
+      baseB.destroy(); sinksB.destroy()
+    }
+    val fs = staging.getFileSystem(base)
+    sinks.foreach { case (t, sink) =>
+      if (!fs.exists(new Path(s"$staging/$t"))) {
+        val ctx = new TaskAttemptContextImpl(sink.conf(base), new TaskAttemptID())
+        val ext = sink.factory.getFileExtension(ctx)
+        sink.factory.newInstance(s"$staging/$t/part-00000-$runId-c000$ext", sink.schema, ctx).close()
+      }
+    }
+  }
+
+  /** One write task: set up the task attempt with the committer, open a
+    * writer per table on the table's first row, encode rows with the
+    * serializer `createDataFrame` uses, then close and commit — or
+    * close and abort the attempt on any failure. */
+  private def writePartition(ctx: TaskContext, rows: Iterator[(String, Row)],
+                             committer: FileCommitProtocol, tracker: String,
+                             base: Configuration, sinks: Map[String, Sink],
+                             rowsOut: LongAccumulator): FileCommitProtocol.TaskCommitMessage = {
+    val jobId = new JobID(tracker, ctx.stageId())
+    val attempt = new TaskAttemptID(
+      new TaskID(jobId, TaskType.MAP, ctx.partitionId()), ctx.attemptNumber())
+    def attemptContext(conf: Configuration): TaskAttemptContextImpl = {
+      conf.set("mapreduce.job.id", jobId.toString)
+      conf.set("mapreduce.task.id", attempt.getTaskID.toString)
+      conf.set("mapreduce.task.attempt.id", attempt.toString)
+      conf.setBoolean("mapreduce.task.ismap", true)
+      conf.setInt("mapreduce.task.partition", 0)
+      new TaskAttemptContextImpl(conf, attempt)
+    }
+    val taskCtx = attemptContext(new Configuration(base))
+    committer.setupTask(taskCtx)
+    val open = scala.collection.mutable.HashMap[String, (OutputWriter, ExpressionEncoder.Serializer[Row])]()
+    try {
+      var n = 0L
+      rows.foreach { case (t, row) =>
+        sinks.get(t).foreach { sink =>
+          val (writer, toInternal) = open.getOrElseUpdate(t, {
+            val c = attemptContext(sink.conf(base))
+            val path = committer.newTaskTempFile(
+              taskCtx, Some(t), FileNameSpec("", "-c000" + sink.factory.getFileExtension(c)))
+            (sink.factory.newInstance(path, sink.schema, c),
+              ExpressionEncoder(RowEncoder.encoderFor(sink.schema)).createSerializer())
+          })
+          writer.write(toInternal(row))
+          n += 1
+        }
+      }
+      open.values.foreach(_._1.close())
+      rowsOut.add(n)
+      committer.commitTask(taskCtx)
+    } catch {
+      case e: Throwable =>
+        open.values.foreach(w => try w._1.close() catch { case scala.util.control.NonFatal(_) => () })
+        committer.abortTask(taskCtx)
+        throw e
+    }
+  }
+
+  /** Move one committed table from the staging dir to `outDir/<table>`,
+    * replacing what an earlier run left there, and mark it complete. */
+  private def publish(conf: Configuration, staging: Path, outDir: String, table: String): Unit = {
+    val dst = new Path(s"$outDir/$table")
+    val fs = dst.getFileSystem(conf)
+    fs.delete(dst, true)
+    fs.mkdirs(dst.getParent)
+    if (!fs.rename(new Path(s"$staging/$table"), dst))
+      throw new java.io.IOException(s"could not publish table $table to $dst")
+    fs.create(new Path(dst, "_SUCCESS"), true).close()
   }
 
   /** Exact row count of a COMMITTED parquet table directory from file
@@ -658,14 +775,16 @@ object DumpConverter {
     * bar below; a table fanned into more files than that (the 100 TB
     * regime) falls back to the distributed scan, whose cost is then
     * amortized by the write it follows. */
-  private def committedRowCount(spark: SparkSession, dir: String): Long = {
+  private[dump] def committedRowCount(spark: SparkSession, dir: String): Long = {
     val p = new org.apache.hadoop.fs.Path(dir)
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = p.getFileSystem(conf)
     val parts = fs.listStatus(p).filter(st => st.isFile &&
       st.getPath.getName.startsWith("part-") &&
       st.getPath.getName.endsWith(".parquet"))
-    if (parts.length > 1024) spark.read.parquet(dir).count()
+    // no `part-*` file (written by another tool, renamed): scan rather
+    // than report 0
+    if (parts.isEmpty || parts.length > 1024) spark.read.parquet(dir).count()
     else parts.map { st =>
       val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf)
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)

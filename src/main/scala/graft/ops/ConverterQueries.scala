@@ -19,7 +19,7 @@ import graft.dump.{DumpConverter, DumpRenderer}
   *     orders rendered as one dump (tens of MB of SQL text at sf0.1,
   *     ~750k rows) and converted with `minPartitions = 32` ≫ tables,
   *     so dozens of partition boundaries exercise the heal path and
-  *     both fact tables spread over their salt range. The rendered
+  *     both fact tables are written by many parse tasks. The rendered
   *     dump is a memoized fixture (built once per session+dir,
   *     driver-streamed in bounded memory); the timed body is the
   *     distributed convert itself, which is the operator under test.
@@ -167,9 +167,9 @@ object ConverterQueries {
   /** Convert the full-fact-table dump with minPartitions ≫ tables, then
     * prove value-exactness by aggregating the CONVERTED parquet against
     * the DuckDB oracle over the ORIGINAL parquet. 32 partitions over
-    * two tables means ~30 partition boundaries healed per run and both
-    * tables fanned over their 8-salt reducer ranges — the 100 TB
-    * ingest shape at measurable size. */
+    * two tables means ~30 partition boundaries healed per run and each
+    * table written as one part file per parse task that meets it — the
+    * 100 TB ingest shape at measurable size. */
   val conv_scale: (SparkSession, String) => DataFrame = (s, d) => {
     val dump = scaleDumpFile(s, d)
     val out = Files.createTempDirectory("graft-dump-scale-out")

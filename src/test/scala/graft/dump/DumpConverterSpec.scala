@@ -588,6 +588,118 @@ class DumpConverterSpec extends AnyFunSuite {
       DumpConverter.convert(spark, s"$in/dump.sql", tmpDir("dump-typed-plain")))
   }
 
+  // --- direct writers: one job, per-task files, staged publish
+
+  private def partFiles(out: String, t: String): Seq[String] =
+    new java.io.File(s"$out/$t").listFiles().toSeq.map(_.getName)
+      .filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
+
+  private def sortedRows(out: String, t: String): Seq[Row] =
+    spark.read.parquet(s"$out/$t").collect().sortBy(_.getLong(0)).toSeq
+
+  test("gzip and minPartitions = 1 inputs rebalance their statements: same rows, <= defaultParallelism + 1 files") {
+    val in = tmpDir("dump-rebal-in")
+    val many = (1L to 3000L).map(i => Row(i, s"user_$i", i * 0.5, ts, i % 3 == 0))
+    val text = DumpRenderer.dump(
+      Seq(("user", userSchema, many), ("guest", userSchema, many.take(400))), batchSize = 50)
+    Files.writeString(java.nio.file.Paths.get(s"$in/dump.sql"), text)
+    val gz = new java.util.zip.GZIPOutputStream(new java.io.FileOutputStream(s"$in/dump.sql.gz"))
+    gz.write(text.getBytes("UTF-8")); gz.close()
+    val outSplit = tmpDir("dump-rebal-split")
+    val split = DumpConverter.convert(spark, s"$in/dump.sql", outSplit, minPartitions = 8)
+    assert(split.rowsWritten == Map("user" -> 3000L, "guest" -> 400L))
+    val cap = spark.sparkContext.defaultParallelism + 1
+    for ((input, mp) <- Seq(s"$in/dump.sql" -> 1, s"$in/dump.sql.gz" -> 1)) {
+      val out = tmpDir("dump-rebal-out")
+      val res = DumpConverter.convert(spark, input, out, minPartitions = mp)
+      assert(res.rowsWritten == split.rowsWritten, input)
+      for (t <- Seq("user", "guest")) {
+        assert(sortedRows(out, t) == sortedRows(outSplit, t), s"$input: $t differs")
+        val files = partFiles(out, t)
+        assert(files.nonEmpty && files.size <= cap, s"$input: $t has ${files.size} files")
+      }
+      // one input partition, yet the big table was parsed by several tasks
+      assert(partFiles(out, "user").size > 1, s"$input was not rebalanced")
+    }
+  }
+
+  test("interleaved multi-table dump at minPartitions 1 and 7: same rows, <= partitions + 1 files per table") {
+    val in = tmpDir("dump-inter-in")
+    val tables = Seq("a", "b", "c")
+    // `e` has no INSERT: it still lands as a readable, empty table
+    val creates = (tables :+ "e").map(t => s"CREATE TABLE `$t` (`id` bigint NOT NULL, `v` varchar(20));")
+    val inserts = (1 to 600).map { i =>
+      val t = tables(i % 3)
+      s"INSERT INTO `$t` VALUES ($i,'$t-$i'),(${i + 10000},'$t-${i + 10000}');"
+    }
+    Files.writeString(java.nio.file.Paths.get(s"$in/dump.sql"), (creates ++ inserts).mkString("", "\n", "\n"))
+    val want = tables.map { t =>
+      t -> (1 to 600).filter(i => tables(i % 3) == t)
+        .flatMap(i => Seq((i.toLong, s"$t-$i"), (i + 10000L, s"$t-${i + 10000}"))).sortBy(_._1)
+    }.toMap + ("e" -> Seq.empty)
+    for (mp <- Seq(1, 7)) {
+      val out = tmpDir(s"dump-inter-out-$mp")
+      val res = DumpConverter.convert(spark, s"$in/dump.sql", out, minPartitions = mp)
+      assert(res.rowsWritten == want.map { case (t, rs) => t -> rs.size.toLong })
+      val parts = math.max(spark.sparkContext.textFile(s"$in/dump.sql", mp).getNumPartitions,
+        spark.sparkContext.defaultParallelism)
+      for (t <- tables :+ "e") {
+        assert(tableRows(out, t) == want(t), s"minPartitions=$mp: $t differs")
+        val files = partFiles(out, t)
+        assert(files.nonEmpty && files.size <= parts + 1,
+          s"minPartitions=$mp: $t has ${files.size} files for $parts partitions")
+      }
+    }
+  }
+
+  test("a failed convert leaves no staging dir, no _temporary and no table dir behind") {
+    val in = tmpDir("dump-failclean-in")
+    val out = tmpDir("dump-failclean-out")
+    Files.writeString(java.nio.file.Paths.get(s"$in/dump.sql"), quarantineDump)
+    intercept[org.apache.spark.SparkException] {
+      DumpConverter.convert(spark, s"$in/dump.sql", out)
+    }
+    for (name <- Seq(DumpConverter.StagingDir, "_temporary", "q"))
+      assert(!new java.io.File(s"$out/$name").exists(), s"$name left in outDir")
+  }
+
+  test("a stale staging dir from a killed run is removed by the next run") {
+    val in = tmpDir("dump-stale-in")
+    val out = tmpDir("dump-stale-out")
+    Files.writeString(java.nio.file.Paths.get(s"$in/dump.sql"), resumeDump)
+    val stale = new java.io.File(s"$out/${DumpConverter.StagingDir}/ta")
+    assert(stale.mkdirs())
+    Files.writeString(stale.toPath.resolve("part-00000-stale.parquet"), "not parquet")
+    val res = DumpConverter.convert(spark, s"$in/dump.sql", out)
+    assert(res.rowsWritten == Map("ta" -> 2L, "tb" -> 3L, "tc" -> 1L))
+    assert(!new java.io.File(s"$out/${DumpConverter.StagingDir}").exists())
+    assert(new java.io.File(s"$out/ta/_SUCCESS").exists())
+  }
+
+  test("progress: the final rows-written line equals the committed per-table counts") {
+    val in = tmpDir("dump-rowsline-in")
+    val out = tmpDir("dump-rowsline-out")
+    Files.writeString(java.nio.file.Paths.get(s"$in/dump.sql"), quarantineDump)
+    // the ticker reports from the listener thread
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val res = DumpConverter.convert(spark, s"$in/dump.sql", out, quarantine = true,
+      progress = l => { seen.add(l); () })
+    val written = seen.toArray.toSeq.map(_.toString)
+      .filter(_.startsWith("[dump] rows written: ")).map(_.stripPrefix("[dump] rows written: ").toLong)
+    val committed = res.rowsWritten.values.sum
+    assert(committed == 6L)
+    assert(written.contains(committed) && written.max == committed, s"rows-written lines: $written")
+  }
+
+  test("committedRowCount falls back to a scan when no part-*.parquet file matches") {
+    val dir = tmpDir("dump-count-fallback")
+    spark.range(0, 37).coalesce(1).write.mode("overwrite").parquet(s"$dir/t")
+    new java.io.File(s"$dir/t").listFiles().filter(_.getName.startsWith("part-")).foreach { f =>
+      assert(f.renameTo(new java.io.File(f.getParentFile, "data" + f.getName.stripPrefix("part"))))
+    }
+    assert(DumpConverter.committedRowCount(spark, s"$dir/t") == 37L)
+  }
+
   test("packSegs/unpackSegs: LZ4 statement blocks round-trip exactly, stream in order, and actually compress") {
     val segs: Seq[StatementReader.Seg] =
       Seq(StatementReader.Head(Vector("CREATE TABLE `t` (", "  `a` int"))) ++

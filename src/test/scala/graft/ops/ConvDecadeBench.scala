@@ -49,20 +49,11 @@ object ConvDecadeBench {
       println(f"#DECADE# rendered once in ${(System.nanoTime() - t0) / 1e9}%.1f s")
     }
     println(s"#DECADE# dump bytes = ${Files.size(dumpPath)}")
-    // (minPartitions, saltsPerTable): the second dial matters at this
-    // size — a one-table dump's reduce side has exactly `salts` tasks.
-    // The ×100 (third-decade) grid runs salts into the hundreds: with
-    // ~4.5 GB of one-table SQL the question is whether route/write
-    // stays the bottleneck or statement-assembly starts to dominate,
-    // and whether the salt dial keeps scaling the reduce side.
-    // Round-14 ×100 grid: the r13 verdict asked for a salts sweep at
-    // the best minPartitions (128) with the new route/write phase
-    // split — {32, 128, 512} brackets the previous sweet spot a
-    // factor of 4 in each direction.
-    val grid =
-      if (reps >= 100) Seq((128, 32), (128, 128), (128, 512))
-      else Seq((8, 8), (32, 8), (64, 8), (128, 8), (32, 32), (64, 32), (64, 64))
-    for ((parts, salts) <- grid; attempt <- 1 to 2) {
+    // minPartitions is the one dial: the parse tasks write parquet
+    // directly, so the statement partitions are the whole parallelism.
+    // The ×100 grid keeps the best split count of the earlier sweeps.
+    val grid = if (reps >= 100) Seq(128) else Seq(8, 32, 64, 128)
+    for (parts <- grid; attempt <- 1 to 2) {
       val out = Files.createTempDirectory(s"decade_$parts")
       val phases = new scala.collection.mutable.LinkedHashMap[String, Double]
       val prog: String => Unit = {
@@ -73,11 +64,11 @@ object ConvDecadeBench {
       }
       val t0 = System.nanoTime()
       val res = DumpConverter.convert(spark, dumpPath.toString, out.toString,
-        minPartitions = parts, saltsPerTable = salts, progress = prog)
+        minPartitions = parts, progress = prog)
       val sec = (System.nanoTime() - t0) / 1e9
-      println(f"#DECADE# minPartitions=$parts%3d salts=$salts%2d attempt=$attempt  ${sec}%6.2f s  " +
+      println(f"#DECADE# minPartitions=$parts%3d attempt=$attempt  ${sec}%6.2f s  " +
         f"rows=${res.rowsWritten.values.sum}")
-      println(s"#DECADEPHASE# minPartitions=$parts salts=$salts  " +
+      println(s"#DECADEPHASE# minPartitions=$parts  " +
         phases.map { case (k, v) => f"$k=$v%.2f" }.mkString(" "))
       // delete output between runs so disk doesn't accumulate 10 copies
       def rec(f: java.io.File): Unit = {
