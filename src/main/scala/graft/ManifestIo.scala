@@ -2,14 +2,15 @@ package graft
 
 import java.nio.file.{Files, Path, StandardCopyOption}
 
-/** Epoch-versioned manifest plumbing shared by the three durable
-  * stores (streaming upsert table, ANN index, inverted text index):
-  * path layout, torn-write-proof commit, epoch listing, and the
-  * [[EpochGuard]]-wired manifest retention sweep. Store-specific JSON
-  * render/parse stays with each store; everything about HOW a
-  * manifest reaches and leaves disk lives here, ONCE — a durability
-  * fix (fsync, crash recovery of a stale `.tmp`) now propagates to
-  * all three instead of needing three synchronized edits.
+/** Epoch-versioned manifest file plumbing under the six durable
+  * stores (ANN, text and dedup indexes, MV store, governed table,
+  * streaming upsert state table): path layout, torn-write-proof
+  * commit, commit lock, epoch listing, and the [[EpochGuard]]-wired
+  * manifest retention sweep. [[EpochStore]] is the typed layer above
+  * it (manifest codec, open/snapshot/commit/GC per store); everything
+  * about HOW a manifest reaches and leaves disk lives here, ONCE — a
+  * durability fix (fsync, crash recovery of a stale `.tmp`) reaches
+  * all six stores.
   */
 private[graft] object ManifestIo {
 
@@ -164,8 +165,8 @@ private[graft] object ManifestIo {
 
   /** The live pointer's epoch, if a manifest exists. Every store's
     * manifest JSON carries a top-level `"epoch"` field rendered FIRST
-    * (a documented contract of this module — all five stores and the
-    * governed table render it), which is what makes a store-agnostic
+    * (a documented contract of this module — [[EpochStore]]'s codec
+    * renders it for all six stores), which is what makes a store-agnostic
     * lost-race check AND an O(1)-in-manifest-size staleness probe
     * possible: only the leading bytes are read, never the megabytes
     * of centroids/cells an ANN manifest can carry. */
@@ -276,7 +277,7 @@ private[graft] object ManifestIo {
     * every store's recovery story (idempotent replay or rebuild).
     *
     * MULTI-WRITER SAFE (round-15 verdict item 3, lifted here so all
-    * five durable stores inherit it, not just the governed table):
+    * six durable stores inherit it, not just the governed table):
     * the flip runs under [[withCommitLock]] (reentrant — a caller
     * that already serialized a wider read-modify-write section pays
     * nothing extra), and inside the lock a LOST RACE fails loudly
@@ -368,14 +369,15 @@ private[graft] object ManifestIo {
       body(parse(versionedPath(dir, epoch)))
     }
 
-  /** Versioned-manifest open with the pointed not-retained failure —
-    * the shared shape of every store's `openAt` (UNPINNED: a
+  /** Versioned-manifest open with the pointed "snapshot expired"
+    * failure — the shared shape of every store's `openAt` (UNPINNED: a
     * concurrent GC can still sweep component files between this
     * resolve and a lazy read; pin with [[withSnapshot]] for that). */
   def openVersioned[T](dir: Path, epoch: Long, parse: Path => T): T = {
     val p = versionedPath(dir, epoch)
-    require(Files.exists(p),
-      s"epoch $epoch is not retained (have: ${listEpochs(dir).mkString(",")})")
+    if (!Files.exists(p))
+      throw new IllegalStateException(s"snapshot expired: epoch $epoch of $dir " +
+        s"is not retained (retained: ${listEpochs(dir).mkString(",")})")
     parse(p)
   }
 }

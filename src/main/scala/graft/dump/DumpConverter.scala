@@ -232,65 +232,49 @@ object DumpConverter {
     md.digest().map("%02x".format(_)).mkString
   }
 
+  /** One completion-manifest entry, as its JSON file holds it. */
+  private[graft] case class ManifestEntry(table: String, rows: Long, fingerprint: String)
+
   /** Atomic manifest commit: write a temp file, then rename — a
     * half-written entry can never be mistaken for a completed table. */
-  private def writeManifestEntry(conf: org.apache.hadoop.conf.Configuration,
-                                 outDir: String, table: String,
-                                 rows: Long, fingerprint: String): Unit = {
+  private[graft] def writeManifestEntry(conf: org.apache.hadoop.conf.Configuration,
+                                        outDir: String, table: String,
+                                        rows: Long, fingerprint: String): Unit = {
     val p = manifestFile(outDir, table)
     val fs = p.getFileSystem(conf)
     fs.mkdirs(p.getParent)
     val tmp = new org.apache.hadoop.fs.Path(p.getParent, s".${p.getName}.tmp")
     val out = fs.create(tmp, true)
-    try out.write(
-      s"""{"table":${jsonStr(table)},"rows":$rows,"fingerprint":"$fingerprint"}"""
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    try out.write(org.json4s.jackson.Serialization.write(
+        ManifestEntry(table, rows, fingerprint))(org.json4s.DefaultFormats)
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
     if (fs.exists(p)) fs.delete(p, false)
     if (!fs.rename(tmp, p))
       throw new java.io.IOException(s"could not commit manifest entry $p")
   }
 
-  private def jsonStr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-
   /** Tables already completed for this exact input: manifest entry
     * present, fingerprint matches, output directory still exists. */
-  private def completedTables(conf: org.apache.hadoop.conf.Configuration,
-                              outDir: String, fingerprint: String): Map[String, Long] = {
+  private[graft] def completedTables(conf: org.apache.hadoop.conf.Configuration,
+                                     outDir: String, fingerprint: String): Map[String, Long] = {
     val dir = new org.apache.hadoop.fs.Path(s"$outDir/$ManifestDir")
     val fs = dir.getFileSystem(conf)
     if (!fs.exists(dir)) return Map.empty
     fs.listStatus(dir).toSeq.filter(st => st.isFile && st.getPath.getName.endsWith(".json"))
       .flatMap { st =>
         try {
-          import org.json4s._
-          val j = org.json4s.jackson.JsonMethods.parse(
-            new String(readFully(fs, st.getPath), java.nio.charset.StandardCharsets.UTF_8))
-          (j \ "table", j \ "rows", j \ "fingerprint") match {
-            case (JString(t), JInt(n), JString(fp))
-                if fp == fingerprint &&
-                  fs.exists(new org.apache.hadoop.fs.Path(s"$outDir/$t")) =>
-              Some(t -> n.toLong)
-            case _ => None
-          }
+          implicit val formats: org.json4s.Formats = org.json4s.DefaultFormats
+          val in = fs.open(st.getPath)
+          val e = try org.json4s.jackson.Serialization.read[ManifestEntry](
+              new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8))
+            finally in.close()
+          if (e.fingerprint == fingerprint &&
+              fs.exists(new org.apache.hadoop.fs.Path(s"$outDir/${e.table}")))
+            Some(e.table -> e.rows)
+          else None
         } catch { case scala.util.control.NonFatal(_) => None }
       }.toMap
-  }
-
-  private def readFully(fs: org.apache.hadoop.fs.FileSystem,
-                        p: org.apache.hadoop.fs.Path): Array[Byte] = {
-    val in = fs.open(p)
-    try {
-      val buf = new java.io.ByteArrayOutputStream()
-      val chunk = new Array[Byte](8192)
-      var n = in.read(chunk)
-      while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-      buf.toByteArray
-    } finally in.close()
   }
 
   /** `saltsPerTable` is ignored; it stays so callers that pass it by

@@ -272,7 +272,7 @@ object ConverterQueries {
           }
         }
     }
-    s.read.format("binaryFile").load(s"$path/*.txt")
+    s.read.format("binaryFile").option("pathGlobFilter", "*.txt").load(path)
       .select(
         regexp_extract(col("path"), "doc(\\d+)\\.txt$", 1).cast("long").as("doc_id"),
         col("length").as("n_bytes"),

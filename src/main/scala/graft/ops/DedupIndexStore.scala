@@ -73,7 +73,7 @@ import org.apache.spark.sql.functions._
   *   - Retention GC + [[withSnapshot]] leases mirror the other two
   *     stores via [[graft.EpochGuard]]; [[openAt]] time-travels.
   */
-object DedupIndexStore {
+object DedupIndexStore extends graft.EpochStore("dedup index", "b\\d+|docs|dels") {
   import graft.Fs.deleteRecursively
 
   /** Default band-key-hash posting fan-out at fixture scale (thousands
@@ -94,9 +94,6 @@ object DedupIndexStore {
     * [[TextIndexStore.suggestedBuckets]], same rationale). */
   def suggestedBuckets(nDocs: Long): Int = TextIndexStore.suggestedBuckets(nDocs)
 
-  /** Committed epochs kept readable as snapshots. */
-  val RetainEpochs = 3
-
   /** Bumps ONLY when [[build]] runs a corpus job — the spec's
     * zero-recompute proof reads it around a second-session serve. */
   private[graft] val buildCount = new java.util.concurrent.atomic.AtomicLong
@@ -106,87 +103,17 @@ object DedupIndexStore {
                            dels: Seq[String] = Nil,
                            numBuckets: Int = NumBuckets,
                            docBuckets: Int = DocBuckets)
+    extends graft.EpochStore.Versioned
 
   // ------------------------------------------------------ manifest io
 
-  private def manifestPath(dir: String) =
-    graft.ManifestIo.manifestPath(java.nio.file.Paths.get(dir))
-  private def versionedPath(dir: String, e: Long) =
-    graft.ManifestIo.versionedPath(java.nio.file.Paths.get(dir), e)
-
-  private def renderManifest(m: DedupManifest): String = {
-    val buckets = m.buckets.toSeq.sortBy(_._1)
-      .map { case (b, rel) => s""""$b":"$rel"""" }.mkString("{", ",", "}")
-    val docs = m.docs.map(d => s""""$d"""").mkString("[", ",", "]")
-    val dels = m.dels.map(d => s""""$d"""").mkString("[", ",", "]")
-    s"""{"epoch":${m.epoch},"nDocs":${m.nDocs},""" +
-      s""""numBuckets":${m.numBuckets},"docBuckets":${m.docBuckets},""" +
-      s""""buckets":$buckets,"docs":$docs,"dels":$dels}"""
-  }
-
-  private def parseManifest(p: java.nio.file.Path): DedupManifest = {
-    import org.json4s._
-    val j = org.json4s.jackson.JsonMethods.parse(java.nio.file.Files.readString(p))
-    def num(f: String): Long = (j \ f) match {
-      case JInt(n) => n.toLong; case o => sys.error(s"bad $f $o") }
-    val buckets = (j \ "buckets") match {
-      case JObject(fs) => fs.map { case (k, JString(v)) => k.toInt -> v
-                                   case o => sys.error(s"bad bucket entry $o") }.toMap
-      case o => sys.error(s"bad buckets $o")
-    }
-    val docs = (j \ "docs") match {
-      case JArray(ds) => ds.map { case JString(v) => v
-                                  case o => sys.error(s"bad docs entry $o") }
-      case o => sys.error(s"bad docs $o")
-    }
-    // absent in pre-delete manifests — an index with no deletes
-    val dels = (j \ "dels") match {
-      case JArray(ds) => ds.map { case JString(v) => v
-                                  case o => sys.error(s"bad dels entry $o") }
-      case _ => Nil
-    }
-    // pre-parameterized manifests were all built at the old fixed
-    // fan-outs — defaulting preserves their probes exactly
-    def fan(f: String, d: Int): Int = (j \ f) match {
-      case JInt(n) => n.toInt
-      case _ => d
-    }
-    DedupManifest(num("epoch"), num("nDocs"), buckets, docs, dels,
-      fan("numBuckets", NumBuckets), fan("docBuckets", DocBuckets))
-  }
-
-  private def commitManifest(dir: String, m: DedupManifest): Unit =
-    graft.ManifestIo.commit(java.nio.file.Paths.get(dir), m.epoch, renderManifest(m))
-
-  /** Whole-operation commit lock shared by every durable store
-    * ([[graft.ManifestIo.withCommitLock]] — owner token, heartbeat,
-    * verified steal, reentrant through to [[graft.ManifestIo.commit]]):
-    * MUTATORS serialize per index dir, so two racing committers can
-    * no longer stomp each other's same-epoch component dirs — the
-    * loser simply runs second against the winner's state (round-15
-    * verdict item 3: CAS lifted out of the governed table so all five
-    * stores inherit it). Readers never take the lock. */
-  private def locked[A](dir: String)(body: => A): A =
-    graft.ManifestIo.withCommitLock(java.nio.file.Paths.get(dir))(body)
-
-  def open(dir: String): DedupManifest = {
-    val p = manifestPath(dir)
-    require(java.nio.file.Files.exists(p), s"no dedup index at $dir")
-    parseManifest(p)
-  }
-
-  /** Snapshot manifest — the index AS OF a retained epoch (pin with
-    * [[withSnapshot]] under concurrent maintenance, same caveat as the
-    * sibling stores). */
-  def openAt(dir: String, epoch: Long): DedupManifest =
-    graft.ManifestIo.openVersioned(java.nio.file.Paths.get(dir), epoch, parseManifest)
-
-  def withSnapshot[A](dir: String, epoch: Long)(body: DedupManifest => A): A =
-    graft.ManifestIo.withSnapshot(java.nio.file.Paths.get(dir), epoch,
-      parseManifest)(body)
-
-  def listEpochs(dir: String): Seq[Long] =
-    graft.ManifestIo.listEpochs(java.nio.file.Paths.get(dir))
+  // open/openAt/withSnapshot/listEpochs/commit/gc: graft.EpochStore.
+  // Registry segments are append-only and referenced by every later
+  // manifest's prefix, so a segment is deletable only when NO retained
+  // manifest lists it — exactly the shared GC rule.
+  type M = DedupManifest
+  protected def manifestType = manifest[M]
+  protected def referenced(m: DedupManifest) = m.buckets.values ++ m.docs ++ m.dels
 
   // ----------------------------------------------------------- build
 
@@ -295,7 +222,7 @@ object DedupIndexStore {
       val m = DedupManifest(0L, nDocs,
         published.map(b => b -> s"b$b/e0").toMap, Seq("docs/e0"),
         numBuckets = numBuckets, docBuckets = docBuckets)
-      commitManifest(dir, m)
+      commit(dir, m)
       m
     } finally { sh.unpersist(); () }
   }
@@ -425,7 +352,7 @@ object DedupIndexStore {
       // pending (they resolve at compact)
       val m2 = DedupManifest(next, m.nDocs + added, buckets,
         m.docs :+ s"docs/e$next", m.dels, m.numBuckets, m.docBuckets)
-      commitManifest(dir, m2)
+      commit(dir, m2)
       gc(dir, next, retain)
       DeltaCommit(m2, affected, readPaths)
     } finally { sh.unpersist(); () }
@@ -527,7 +454,7 @@ object DedupIndexStore {
           published.map(b => b -> s"b$b/e$next").toMap
         val m2 = DedupManifest(next, m.nDocs, buckets,
           m.docs :+ s"docs/e$next", m.dels, m.numBuckets, m.docBuckets)
-        commitManifest(dir, m2)
+        commit(dir, m2)
         gc(dir, next, retain)
         UpdateCommit(m2, affected)
       } finally { oldSh.unpersist(); () }
@@ -603,7 +530,7 @@ object DedupIndexStore {
         published.map(b => b -> s"b$b/e$next").toMap
       val m2 = DedupManifest(next, m.nDocs - nFound, buckets, m.docs,
         m.dels :+ rel, m.numBuckets, m.docBuckets)
-      commitManifest(dir, m2)
+      commit(dir, m2)
       gc(dir, next, retain)
       DeleteCommit(m2, nFound, affected)
     } finally { victims.unpersist(); () }
@@ -641,7 +568,7 @@ object DedupIndexStore {
     val m2 = DedupManifest(next, m.nDocs,
       published.map(b => b -> s"b$b/e$next").toMap, Seq(rel), m.dels,
       newBuckets, newDocBuckets)
-    commitManifest(dir, m2)
+    commit(dir, m2)
     gc(dir, next, retain)
     m2
   }
@@ -695,22 +622,8 @@ object DedupIndexStore {
       s"compaction recomputed nDocs $n != manifest ${m.nDocs} at $dir")
     val m2 = DedupManifest(next, m.nDocs, m.buckets, Seq(rel), Nil,
       m.numBuckets, m.docBuckets)
-    commitManifest(dir, m2)
+    commit(dir, m2)
     gc(dir, next, retain)
     m2
   }
-
-  // -------------------------------------------------------------- gc
-
-  /** Retention GC through the shared [[graft.ManifestIo.gcEpochs]]
-    * core (lease handshake + unreferenced-component sweep). Registry
-    * segments are append-only and referenced by every later manifest's
-    * prefix, so a segment is deletable only when NO retained manifest
-    * lists it — exactly the shared rule. */
-  private[graft] def gc(dir: String, current: Long, retain: Int,
-                        afterIntent: Long => Unit = _ => ()): Unit =
-    graft.ManifestIo.gcEpochs(java.nio.file.Paths.get(dir), current, retain,
-      "b\\d+|docs|dels",
-      p => { val mm = parseManifest(p); mm.buckets.values ++ mm.docs ++ mm.dels },
-      afterIntent)
 }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.json4s.{CustomSerializer, JArray, JInt, JString, JValue}
 
 /** WRITE-AUDIT-PUBLISH governed table — the lakehouse ingestion
   * discipline (Iceberg's WAP / staging-branch pattern): a producer
@@ -31,7 +32,7 @@ import org.apache.spark.sql.functions._
   * publish and abort are metadata-only (one rename + one manifest
   * write / one recursive delete). Nothing rewrites history.
   */
-object GovernedTable {
+object GovernedTable extends graft.EpochStore("governed table", "") {
 
   /** Verdict entries kept in the manifest's `batches` window — enough
     * to answer "which epoch did batch B land at" for any batch a
@@ -69,94 +70,40 @@ object GovernedTable {
                       cols: Seq[(Int, String)] = Nil,
                       segCols: Map[String, Map[Int, String]] = Map.empty,
                       colTypes: Map[Int, String] = Map.empty)
+    extends graft.EpochStore.Versioned
 
-  private def render(m: Manifest): String = {
-    // Manifest is a public case class and commit() accepts any
-    // segments — a name with a quote/backslash would render
-    // unparseable JSON, so restrict to the filesystem-safe alphabet
-    // the internally generated 'e<N>' names live in.
+  // open/openAt/withSnapshot/listEpochs/commit: graft.EpochStore. Its
+  // component sweep matches no dir here: segments live at the table
+  // root, and [[gc]] below sweeps them.
+  type M = Manifest
+  protected def manifestType = manifest[M]
+  protected def referenced(m: Manifest) = m.segments
+
+  // `cols` entries stay `[id,"name"]` pairs on disk
+  override protected val formats = org.json4s.DefaultFormats +
+    new CustomSerializer[(Int, String)](_ => (
+      { case JArray(List(JInt(id), JString(n))) => id.toInt -> n },
+      { case (id: Int, n: String) => JArray(List(JInt(id), JString(n))) }))
+
+  // segment, column and type names come from callers: keep them to the
+  // alphabet the internally generated names live in
+  override protected def toJson(m: Manifest) = {
     m.segments.foreach(s => require(s.matches("[A-Za-z0-9._-]+"),
       s"illegal segment name '$s' (allowed: [A-Za-z0-9._-]+)"))
-    val b =
-      if (m.batches.isEmpty) ""
-      else m.batches.toSeq.sortBy(_._1)
-        .map { case (k, v) => s""""$k":$v""" }
-        .mkString(""","batches":{""", ",", "}")
-    val hwm = if (m.batchHwm < 0) "" else s""","batchHwm":${m.batchHwm}"""
     m.cols.foreach { case (_, n) => require(n.matches("[A-Za-z0-9._-]+"),
       s"illegal column name '$n' (allowed: [A-Za-z0-9._-]+)") }
     m.colTypes.values.foreach(t => require(t.matches("[A-Za-z0-9()., ]+"),
       s"illegal type name '$t'"))
-    val cm =
-      if (m.cols.isEmpty) ""
-      else {
-        val cols = m.cols
-          .map { case (id, n) => s"""[$id,"$n"]""" }.mkString("[", ",", "]")
-        val segs = m.segCols.toSeq.sortBy(_._1).map { case (seg, mp) =>
-          s""""$seg":{${mp.toSeq.sortBy(_._1)
-            .map { case (id, n) => s""""$id":"$n"""" }.mkString(",")}}"""
-        }.mkString("{", ",", "}")
-        val types =
-          if (m.colTypes.isEmpty) ""
-          else s""","colTypes":{${m.colTypes.toSeq.sortBy(_._1)
-            .map { case (id, t) => s""""$id":"$t"""" }.mkString(",")}}"""
-        s""","cols":$cols,"segCols":$segs$types"""
-      }
-    s"""{"epoch":${m.epoch},"segments":${
-      m.segments.map(s => s""""$s"""").mkString("[", ",", "]")}$b$hwm$cm}"""
+    super.toJson(m)
   }
 
-  private def parse(p: java.nio.file.Path): Manifest = {
-    import org.json4s._
-    val j = org.json4s.jackson.JsonMethods.parse(java.nio.file.Files.readString(p))
-    val e = (j \ "epoch") match {
-      case JInt(n) => n.toLong; case o => sys.error(s"bad epoch $o") }
-    val segs = (j \ "segments") match {
-      case JArray(ss) => ss.map { case JString(v) => v
-                                  case o => sys.error(s"bad segment $o") }
-      case o => sys.error(s"bad segments $o")
-    }
-    val batches = (j \ "batches") match {
-      case JObject(fs) => fs.collect { case (k, JInt(v)) => k.toLong -> v.toLong }.toMap
-      case _ => Map.empty[Long, Long] // pre-ingest manifests carry none
-    }
-    // pre-window manifests carried the FULL verdict map — their hwm is
-    // its max (window and hwm coincide until the first aged-out id)
-    val hwm = (j \ "batchHwm") match {
-      case JInt(n) => n.toLong
-      case _ => if (batches.isEmpty) -1L else batches.keys.max
-    }
-    val cols = (j \ "cols") match {
-      case JArray(cs) => cs.map {
-        case JArray(List(JInt(id), JString(n))) => id.toInt -> n
-        case o => sys.error(s"bad cols entry $o")
-      }
-      case _ => Nil // pre-mapping manifests
-    }
-    val segCols = (j \ "segCols") match {
-      case JObject(fs) => fs.map { case (seg, JObject(mp)) =>
-        seg -> mp.map { case (id, JString(n)) => id.toInt -> n
-                        case o => sys.error(s"bad segCols entry $o") }.toMap
-        case o => sys.error(s"bad segCols $o")
-      }.toMap
-      case _ => Map.empty[String, Map[Int, String]]
-    }
-    val colTypes = (j \ "colTypes") match {
-      case JObject(fs) => fs.map { case (id, JString(t)) => id.toInt -> t
-                                   case o => sys.error(s"bad colTypes $o") }.toMap
-      case _ => Map.empty[Int, String]
-    }
-    Manifest(e, segs, batches, hwm, cols, segCols, colTypes)
+  // pre-window manifests carried the FULL verdict map — their hwm is
+  // its max (window and hwm coincide until the first aged-out id)
+  override protected def fromJson(j: JValue) = {
+    val m = super.fromJson(j)
+    if (m.batchHwm < 0 && m.batches.nonEmpty) m.copy(batchHwm = m.batches.keys.max)
+    else m
   }
-
-  private def commit(dir: String, m: Manifest): Unit =
-    graft.ManifestIo.commit(java.nio.file.Paths.get(dir), m.epoch, render(m))
-
-  def open(dir: String): Manifest =
-    parse(graft.ManifestIo.manifestPath(java.nio.file.Paths.get(dir)))
-
-  def openAt(dir: String, epoch: Long): Manifest =
-    graft.ManifestIo.openVersioned(java.nio.file.Paths.get(dir), epoch, parse)
 
   /** Epoch 0 from the base rows — the only unaudited write (there is
     * no serving state yet to protect). `partitionBy` is the SEGMENT's
@@ -286,16 +233,14 @@ object GovernedTable {
       readSegments(s, dir, to, fresh)
   }
 
-  /** Lease-pinned time travel — the [[graft.ManifestIo.withSnapshot]]
+  /** Lease-pinned time travel — the [[graft.EpochStore.withSnapshot]]
     * handshake every durable store shares: the epoch is spared from a
     * concurrent [[gc]] for the duration of `body`, so materialize
     * (collect/write) INSIDE it; a lazily-returned DataFrame outlives
     * the lease. */
   def withSnapshot[A](s: SparkSession, dir: String, epoch: Long)
                      (body: DataFrame => A): A =
-    graft.ManifestIo.withSnapshot(java.nio.file.Paths.get(dir), epoch, parse) {
-      m => body(readUnder(s, dir, m))
-    }
+    withSnapshot(dir, epoch)(m => body(readUnder(s, dir, m)))
 
   /** Stage a batch WITHOUT publishing: written to `stage-e<next>`,
     * where no manifest points. Overwrite mode makes a re-stage after
@@ -531,18 +476,11 @@ object GovernedTable {
 
   // ------------------------------------------------ multi-writer publish
 
-  /** The table's commit lock is the shared [[graft.ManifestIo]] one
-    * (owner-token, heartbeat, rename-verified steal — see its scaladoc
-    * for the ownership argument), so the five durable stores and this
-    * table serialize commits through ONE mechanism. EVERY manifest-
-    * mutating entry point here runs its read-modify-write under it —
-    * publish, publishCas, ingestBatch, build, compact, gc, and the
-    * column-evolution flips — closing the round-15 "lock coverage is
-    * opt-in" hole: a legacy `publish` racing a `publishCas` now
-    * serializes instead of silently overwriting the CAS winner. */
-  private def locked[A](dir: String)(body: => A): A =
-    graft.ManifestIo.withCommitLock(java.nio.file.Paths.get(dir))(body)
-
+  // EVERY manifest-mutating entry point here (publish, publishCas,
+  // ingestBatch, build, compact, gc, the column-evolution flips) runs
+  // its read-modify-write under the shared commit lock ([[locked]]), so
+  // a legacy `publish` racing a `publishCas` serializes instead of
+  // silently overwriting the CAS winner.
   private val StageName = "stage-e(\\d+)(-[A-Za-z0-9._-]+)?".r
 
   private def stageEpoch(staged: String): Long = staged match {
@@ -685,7 +623,7 @@ object GovernedTable {
     * ONLY under the single-writer discipline documented on [[stage]]:
     * with a second producer, a stage taken just before a concurrent
     * publish advanced the epoch would be swept mid-audit. Layout differs
-    * from the five bucketed stores (segments live at the table root,
+    * from the bucketed stores (segments live at the table root,
     * not under `<component>/e<N>`), hence the table-shaped sweep here
     * instead of [[graft.ManifestIo.gcEpochs]]. */
   def gc(dir: String, retain: Int): Unit = locked(dir) {
@@ -693,8 +631,7 @@ object GovernedTable {
     val d = java.nio.file.Paths.get(dir)
     val live = open(dir)
     graft.ManifestIo.gcManifests(d, math.max(0L, live.epoch - retain + 1))
-    val referenced = graft.ManifestIo.listEpochs(d)
-      .flatMap(e => parse(graft.ManifestIo.versionedPath(d, e)).segments).toSet
+    val pinned = listEpochs(dir).flatMap(e => referenced(openAt(dir, e))).toSet
     for (f <- Option(d.toFile.listFiles()).toSeq.flatten
            if f.isDirectory && f.getName.matches("(stage-)?e\\d+(-[A-Za-z0-9._-]+)?")) {
       val name = f.getName
@@ -709,7 +646,7 @@ object GovernedTable {
       val horizon =
         if (name.matches("stage-e\\d+-[A-Za-z0-9._-]+")) live.epoch - retain + 1
         else live.epoch
-      if (!referenced.contains(name) && epoch <= horizon)
+      if (!pinned.contains(name) && epoch <= horizon)
         graft.Fs.deleteRecursively(f)
     }
     // a crashed [[compact]]'s private rewrite image is unreferenced by

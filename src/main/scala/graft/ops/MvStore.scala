@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * [[RelationalQueries.q_incremental_agg]], whose stored state was a
   * write-once per-run layout rather than a maintained artifact.
   *
-  * Layout (the shared manifest shape, via [[graft.ManifestIo]]):
+  * Layout (the shared manifest shape, via [[graft.EpochStore]]):
   * {{{
   * dir/
   *   _manifest.json          current pointer  {epoch, buckets}
@@ -43,15 +43,12 @@ import org.apache.spark.sql.functions._
   * immutable epoch dirs + one atomic pointer flip; a crash mid-commit
   * leaves only unreferenced garbage.
   */
-object MvStore {
+object MvStore extends graft.EpochStore("MV store", "b\\d+") {
 
   /** Refresh touches `affected buckets / NumBuckets` of the view; a
     * production deployment sizes this so one refresh unit (here a
     * month) is a small fraction. 8 over the fixture's ~70 months. */
   val NumBuckets = 8
-
-  /** Epochs kept readable as snapshots after a refresh. */
-  val RetainEpochs = 3
 
   /** The manifest carries the VIEW DEFINITION alongside the pointer:
     * `keys` (group columns beyond the month bucket key `m`), `aggs`
@@ -84,6 +81,7 @@ object MvStore {
                         buckets: Map[Int, String], kinds: Seq[String] = Nil,
                         types: Seq[String] = Nil,
                         numBuckets: Int = NumBuckets)
+    extends graft.EpochStore.Versioned
 
   private def kindsOf(m: MvManifest): Seq[String] =
     if (m.kinds.isEmpty) m.aggs.map(_ => "sum") else m.kinds
@@ -98,98 +96,17 @@ object MvStore {
 
   // ------------------------------------------------------ manifest io
 
-  private def versionedPath(dir: String, e: Long) =
-    graft.ManifestIo.versionedPath(java.nio.file.Paths.get(dir), e)
+  // open/openAt/withSnapshot/listEpochs/commit/gc: graft.EpochStore
+  type M = MvManifest
+  protected def manifestType = manifest[M]
+  protected def referenced(m: MvManifest) = m.buckets.values
 
-  private def renderManifest(m: MvManifest): String = {
-    val buckets = m.buckets.toSeq.sortBy(_._1)
-      .map { case (k, v) => s""""$k":"$v"""" }.mkString("{", ",", "}")
-    def arr(xs: Seq[String]) = xs.map(x => s""""$x"""").mkString("[", ",", "]")
-    s"""{"epoch":${m.epoch},"keys":${arr(m.keys)},"aggs":${arr(m.aggs)},""" +
-      s""""kinds":${arr(kindsOf(m))},"types":${arr(m.types)},""" +
-      s""""numBuckets":${m.numBuckets},"buckets":$buckets}"""
+  // pre-kind manifests (and views built without kinds) merge every agg
+  // as a sum
+  override protected def fromJson(j: org.json4s.JValue) = {
+    val m = super.fromJson(j)
+    m.copy(kinds = kindsOf(m))
   }
-
-  private def parseManifest(p: java.nio.file.Path): MvManifest = {
-    import org.json4s._
-    val j = org.json4s.jackson.JsonMethods.parse(java.nio.file.Files.readString(p))
-    val epoch = (j \ "epoch") match {
-      case JInt(n) => n.toLong
-      case other   => sys.error(s"bad epoch $other")
-    }
-    def arr(field: String): Seq[String] = (j \ field) match {
-      case JArray(xs) => xs.map {
-        case JString(x) => x
-        case other      => sys.error(s"bad $field entry $other")
-      }
-      case other => sys.error(s"bad $field $other")
-    }
-    val buckets = (j \ "buckets") match {
-      case JObject(fs) => fs.map {
-        case (k, JString(v)) => k.toInt -> v
-        case other           => sys.error(s"bad bucket entry $other")
-      }.toMap
-      case other => sys.error(s"bad buckets $other")
-    }
-    // absent in pre-kind manifests — every agg in those merged as sum
-    val kinds = (j \ "kinds") match {
-      case JArray(xs) => xs.map { case JString(x) => x
-                                  case other => sys.error(s"bad kind $other") }
-      case _ => Nil
-    }
-    // absent in pre-type manifests — empty-view frames fall back to
-    // string keys / long aggs there (documented legacy behavior)
-    val types = (j \ "types") match {
-      case JArray(xs) => xs.map { case JString(x) => x
-                                  case other => sys.error(s"bad type $other") }
-      case _ => Nil
-    }
-    // pre-parameterized manifests were all built at the old fixed
-    // fan-out — defaulting preserves their bucket routing exactly
-    val nb = (j \ "numBuckets") match {
-      case JInt(n) => n.toInt
-      case _ => NumBuckets
-    }
-    MvManifest(epoch, arr("keys"), arr("aggs"), buckets, kinds, types, nb)
-  }
-
-  /** Whole-operation commit lock shared by every durable store
-    * ([[graft.ManifestIo.withCommitLock]] — owner token, heartbeat,
-    * verified steal, reentrant through to [[graft.ManifestIo.commit]]):
-    * MUTATORS serialize per index dir, so two racing committers can
-    * no longer stomp each other's same-epoch component dirs — the
-    * loser simply runs second against the winner's state (round-15
-    * verdict item 3: CAS lifted out of the governed table so all five
-    * stores inherit it). Readers never take the lock. */
-  private def locked[A](dir: String)(body: => A): A =
-    graft.ManifestIo.withCommitLock(java.nio.file.Paths.get(dir))(body)
-
-  def open(dir: String): MvManifest =
-    parseManifest(graft.ManifestIo.manifestPath(java.nio.file.Paths.get(dir)))
-
-  /** Snapshot manifest AS OF a retained epoch; pointed failure once
-    * the epoch falls past retention (same contract as the other
-    * stores — never a partial view). */
-  def openAt(dir: String, epoch: Long): MvManifest = {
-    val p = versionedPath(dir, epoch)
-    if (!java.nio.file.Files.exists(p))
-      throw new IllegalStateException(
-        s"snapshot expired: epoch $epoch of $dir is no longer retained " +
-          s"(retained: ${listEpochs(dir).mkString(",")})")
-    parseManifest(p)
-  }
-
-  /** Lease-pinned snapshot access — the concurrent-reader isolation
-    * [[openAt]] alone cannot give (its parquet read is lazy; a
-    * refresh's retention GC could sweep files between resolve and
-    * action). Same [[graft.EpochGuard]] handshake as the sibling
-    * stores. */
-  def withSnapshot[A](dir: String, epoch: Long)(body: MvManifest => A): A =
-    graft.ManifestIo.withSnapshot(java.nio.file.Paths.get(dir), epoch,
-      parseManifest)(body)
-
-  def listEpochs(dir: String): Seq[Long] =
-    graft.ManifestIo.listEpochs(java.nio.file.Paths.get(dir))
 
   // ----------------------------------------------------------- build
 
@@ -226,7 +143,7 @@ object MvStore {
       withBucket(partials, numBuckets), base, 0L, "bucket", "b")
     val m = MvManifest(0L, keys, aggs, published.map(b => b -> s"b$b/e0").toMap,
       kinds, types, numBuckets)
-    graft.ManifestIo.commit(base, 0L, renderManifest(m))
+    commit(dir, m)
     m
   }
 
@@ -265,7 +182,7 @@ object MvStore {
     val m2 = MvManifest(next, m.keys, m.aggs,
       m.buckets ++ published.map(b => b -> s"b$b/e$next").toMap, m.kinds, m.types,
       m.numBuckets)
-    graft.ManifestIo.commit(base, next, renderManifest(m2))
+    commit(dir, m2)
     gc(dir, next, retain)
     RefreshCommit(m2, affected, readPaths)
   }
@@ -312,7 +229,7 @@ object MvStore {
     val published = graft.ManifestIo.publishPartitions(rehashed, base, next, "bucket", "b")
     val m2 = MvManifest(next, m.keys, m.aggs,
       published.map(b => b -> s"b$b/e$next").toMap, m.kinds, m.types, newBuckets)
-    graft.ManifestIo.commit(base, next, renderManifest(m2))
+    commit(dir, m2)
     gc(dir, next, retain)
     m2
   }
@@ -364,9 +281,9 @@ object MvStore {
                        (body: DataFrame => A): A = {
     val base = java.nio.file.Paths.get(dir)
     graft.EpochGuard.withLease(base, from,
-      java.nio.file.Files.exists(versionedPath(dir, from)), dir) {
+      java.nio.file.Files.exists(graft.ManifestIo.versionedPath(base, from)), dir) {
       graft.EpochGuard.withLease(base, to,
-        java.nio.file.Files.exists(versionedPath(dir, to)), dir) {
+        java.nio.file.Files.exists(graft.ManifestIo.versionedPath(base, to)), dir) {
         body(changeFeed(s, dir, from, to))
       }
     }
@@ -489,14 +406,4 @@ object MvStore {
       .select(mt.keys.map(k => coalesce(newV(k), oldV(k)).as(k)): _*)
       .distinct()
   }
-
-  // -------------------------------------------------------------- gc
-
-  /** Retention GC through the shared [[graft.ManifestIo.gcEpochs]]
-    * core (lease handshake + unreferenced-bucket sweep, same contract
-    * as every durable store). */
-  private[graft] def gc(dir: String, current: Long, retain: Int,
-                        afterIntent: Long => Unit = _ => ()): Unit =
-    graft.ManifestIo.gcEpochs(java.nio.file.Paths.get(dir), current, retain,
-      "b\\d+", p => parseManifest(p).buckets.values, afterIntent)
 }

@@ -71,7 +71,7 @@ import org.apache.spark.sql.functions._
   *     old epoch serves its old scores bit-identically, because its
   *     manifest pins its own stats, buckets, and scalars).
   */
-object TextIndexStore {
+object TextIndexStore extends graft.EpochStore("text index", "b\\d+|stats|docs|dels") {
   import graft.Fs.deleteRecursively
 
   /** Default token-hash posting fan-out at fixture scale. The REAL
@@ -129,9 +129,6 @@ object TextIndexStore {
     math.max(NumBuckets.toLong, math.min(pow2, 1L << 20)).toInt
   }
 
-  /** Committed epochs kept readable as snapshots. */
-  val RetainEpochs = 3
-
   /** Bumps ONLY when [[build]] runs a corpus job — the spec's
     * zero-recompute proof reads it around a second-session serve. */
   private[graft] val buildCount = new java.util.concurrent.atomic.AtomicLong
@@ -140,91 +137,18 @@ object TextIndexStore {
                           buckets: Map[Int, String], stats: String,
                           docs: Seq[String], dels: Seq[String] = Nil,
                           numBuckets: Int = NumBuckets)
+    extends graft.EpochStore.Versioned
 
   // ------------------------------------------------------ manifest io
 
-  // path layout / atomic commit / epoch listing shared with the ANN
-  // index and the upsert state table via graft.ManifestIo
-  private def manifestPath(dir: String) =
-    graft.ManifestIo.manifestPath(java.nio.file.Paths.get(dir))
-  private def versionedPath(dir: String, e: Long) =
-    graft.ManifestIo.versionedPath(java.nio.file.Paths.get(dir), e)
-
-  private def renderManifest(m: TextManifest): String = {
-    val buckets = m.buckets.toSeq.sortBy(_._1)
-      .map { case (b, rel) => s""""$b":"$rel"""" }.mkString("{", ",", "}")
-    val docs = m.docs.map(d => s""""$d"""").mkString("[", ",", "]")
-    val dels = m.dels.map(d => s""""$d"""").mkString("[", ",", "]")
-    s"""{"epoch":${m.epoch},"nDocs":${m.nDocs},"sumDl":${m.sumDl},""" +
-      s""""numBuckets":${m.numBuckets},""" +
-      s""""buckets":$buckets,"stats":"${m.stats}","docs":$docs,"dels":$dels}"""
-  }
-
-  private def parseManifest(p: java.nio.file.Path): TextManifest = {
-    import org.json4s._
-    val j = org.json4s.jackson.JsonMethods.parse(java.nio.file.Files.readString(p))
-    def num(f: String): Long = (j \ f) match {
-      case JInt(n) => n.toLong; case o => sys.error(s"bad $f $o") }
-    val buckets = (j \ "buckets") match {
-      case JObject(fs) => fs.map { case (k, JString(v)) => k.toInt -> v
-                                   case o => sys.error(s"bad bucket entry $o") }.toMap
-      case o => sys.error(s"bad buckets $o")
-    }
-    val stats = (j \ "stats") match {
-      case JString(v) => v; case o => sys.error(s"bad stats $o") }
-    val docs = (j \ "docs") match {
-      case JArray(ds) => ds.map { case JString(v) => v
-                                  case o => sys.error(s"bad docs entry $o") }
-      case o => sys.error(s"bad docs $o")
-    }
-    // absent in pre-tombstone manifests — an index with no deletes
-    val dels = (j \ "dels") match {
-      case JArray(ds) => ds.map { case JString(v) => v
-                                  case o => sys.error(s"bad dels entry $o") }
-      case _ => Nil
-    }
-    // pre-parameterized manifests were all built at the old fixed
-    // fan-out — defaulting preserves their probes exactly
-    val nb = (j \ "numBuckets") match {
-      case JInt(n) => n.toInt
-      case _ => NumBuckets
-    }
-    TextManifest(num("epoch"), num("nDocs"), num("sumDl"), buckets, stats, docs,
-      dels, nb)
-  }
-
-  private def commitManifest(dir: String, m: TextManifest): Unit =
-    graft.ManifestIo.commit(java.nio.file.Paths.get(dir), m.epoch, renderManifest(m))
-
-  /** Whole-operation commit lock shared by every durable store
-    * ([[graft.ManifestIo.withCommitLock]] — owner token, heartbeat,
-    * verified steal, reentrant through to [[graft.ManifestIo.commit]]):
-    * MUTATORS serialize per index dir, so two racing committers can
-    * no longer stomp each other's same-epoch component dirs — the
-    * loser simply runs second against the winner's state (round-15
-    * verdict item 3: CAS lifted out of the governed table so all five
-    * stores inherit it). Readers never take the lock. */
-  private def locked[A](dir: String)(body: => A): A =
-    graft.ManifestIo.withCommitLock(java.nio.file.Paths.get(dir))(body)
-
-  def open(dir: String): TextManifest = {
-    val p = manifestPath(dir)
-    require(java.nio.file.Files.exists(p), s"no text index at $dir")
-    parseManifest(p)
-  }
-
-  /** Snapshot manifest — the index AS OF a retained epoch (same
-    * resolve/read caveat as [[AnnIndexStore.openAt]]; pin with
-    * [[withSnapshot]] under concurrent maintenance). */
-  def openAt(dir: String, epoch: Long): TextManifest =
-    graft.ManifestIo.openVersioned(java.nio.file.Paths.get(dir), epoch, parseManifest)
-
-  def withSnapshot[A](dir: String, epoch: Long)(body: TextManifest => A): A =
-    graft.ManifestIo.withSnapshot(java.nio.file.Paths.get(dir), epoch,
-      parseManifest)(body)
-
-  def listEpochs(dir: String): Seq[Long] =
-    graft.ManifestIo.listEpochs(java.nio.file.Paths.get(dir))
+  // open/openAt/withSnapshot/listEpochs/commit/gc: graft.EpochStore.
+  // Doc registry segments are append-only and referenced by every later
+  // manifest's prefix, so a segment is deletable only when NO retained
+  // manifest lists it — exactly the shared GC rule.
+  type M = TextManifest
+  protected def manifestType = manifest[M]
+  protected def referenced(m: TextManifest) =
+    m.buckets.values ++ Seq(m.stats) ++ m.docs ++ m.dels
 
   // ----------------------------------------------------------- build
 
@@ -331,7 +255,7 @@ object TextIndexStore {
       val m = TextManifest(0L, scalars.getLong(0), scalars.getLong(1),
         published.map(b => b -> s"b$b/e0").toMap, "stats/e0", Seq("docs/e0"),
         numBuckets = fanOut)
-      commitManifest(dir, m)
+      commit(dir, m)
       m
     } finally { base.unpersist(); () }
   }
@@ -473,7 +397,7 @@ object TextIndexStore {
       val m2 = TextManifest(next, m.nDocs + delta.getLong(0),
         m.sumDl + delta.getLong(1), buckets, s"stats/e$next",
         m.docs :+ s"docs/e$next", m.dels, m.numBuckets)
-      commitManifest(dir, m2)
+      commit(dir, m2)
       gc(dir, next, retain)
       DeltaCommit(m2, affected, readPaths)
     } finally { rows.unpersist(); () }
@@ -614,7 +538,7 @@ object TextIndexStore {
           val m2 = TextManifest(next, m.nDocs, m.sumDl - dlBefore + dlAfter,
             buckets, s"stats/e$next", m.docs :+ s"docs/e$next", m.dels,
             m.numBuckets)
-          commitManifest(dir, m2)
+          commit(dir, m2)
           gc(dir, next, retain)
           UpdateCommit(m2, affected, dlBefore, dlAfter)
         } finally { replaced.unpersist(); () }
@@ -672,7 +596,7 @@ object TextIndexStore {
       val dropped = found.agg(sum(col("dl")).as("s")).head.getLong(0)
       val m2 = TextManifest(next, m.nDocs - nFound, m.sumDl - dropped,
         m.buckets, m.stats, m.docs, m.dels :+ rel, m.numBuckets)
-      commitManifest(dir, m2)
+      commit(dir, m2)
       gc(dir, next, retain)
       DeleteCommit(m2, nFound, dropped)
     } finally { found.unpersist(); () }
@@ -711,7 +635,7 @@ object TextIndexStore {
       val m2 = TextManifest(next, m.nDocs, m.sumDl,
         published.map(b => b -> s"b$b/e$next").toMap, m.stats,
         Seq(s"docs/e$next"), m.dels, newBuckets)
-      commitManifest(dir, m2)
+      commit(dir, m2)
       gc(dir, next, retain)
       m2
     } finally { rehashed.unpersist(); () }
@@ -761,25 +685,9 @@ object TextIndexStore {
       val m2 = TextManifest(next, m.nDocs, m.sumDl,
         published.map(b => b -> s"b$b/e$next").toMap, s"stats/e$next",
         Seq(s"docs/e$next"), Nil, m.numBuckets)
-      commitManifest(dir, m2)
+      commit(dir, m2)
       gc(dir, next, retain)
       m2
     } finally { surviving.unpersist(); () }
   }
-
-  // -------------------------------------------------------------- gc
-
-  /** Retention GC through the shared [[graft.ManifestIo.gcEpochs]]
-    * core (lease handshake + unreferenced-component sweep, same
-    * contract as every durable store). Doc registry segments are
-    * append-only and referenced by every later manifest's prefix, so
-    * a segment is deletable only when NO retained manifest lists it —
-    * exactly the shared rule. */
-  private[graft] def gc(dir: String, current: Long, retain: Int,
-                        afterIntent: Long => Unit = _ => ()): Unit =
-    graft.ManifestIo.gcEpochs(java.nio.file.Paths.get(dir), current, retain,
-      "b\\d+|stats|docs|dels",
-      p => { val mm = parseManifest(p)
-             mm.buckets.values ++ Seq(mm.stats) ++ mm.docs ++ mm.dels },
-      afterIntent)
 }

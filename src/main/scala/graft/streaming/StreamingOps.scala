@@ -670,50 +670,30 @@ object StreamingOps {
     * to a reader arriving between crash and restart). This is the
     * Delta-log shape reduced to its essential two moves: immutable
     * data versions + one atomic pointer flip. */
-  private case class UpsertManifest(epoch: Long, buckets: Map[Int, String],
-                                    numBuckets: Int = UpsertBuckets)
+  private[graft] case class UpsertManifest(epoch: Long, buckets: Map[Int, String],
+                                           numBuckets: Int = UpsertBuckets)
+    extends graft.EpochStore.Versioned
 
-  // path layout / atomic commit / epoch listing shared with the ANN
-  // and text index stores via graft.ManifestIo
-  private def upsertManifestPath(stateDir: java.nio.file.Path): java.nio.file.Path =
-    graft.ManifestIo.manifestPath(stateDir)
-
-  private def readUpsertManifest(stateDir: java.nio.file.Path): Option[UpsertManifest] = {
-    val p = upsertManifestPath(stateDir)
-    if (java.nio.file.Files.exists(p)) Some(readManifestFile(p)) else None
+  // open/openAt/withSnapshot/listEpochs/commit/gc: graft.EpochStore
+  private[graft] object UpsertTable extends graft.EpochStore("upsert state table", "b\\d+") {
+    type M = UpsertManifest
+    protected def manifestType = manifest[M]
+    protected def referenced(m: UpsertManifest) = m.buckets.values
   }
+
+  private def readUpsertManifest(stateDir: java.nio.file.Path): Option[UpsertManifest] =
+    if (!java.nio.file.Files.exists(graft.ManifestIo.manifestPath(stateDir))) None
+    else Some(UpsertTable.open(stateDir.toString))
 
   /** How many committed epochs stay readable as snapshots (time
     * travel). Retention bounds the extra disk to ≤ retain × the
     * updated buckets' sizes — the Delta `delta.logRetentionDuration`
     * dial, here counted in epochs because the fixture has no clock. */
-  private[graft] val UpsertRetainEpochs = 3
-
-  private def versionedManifestPath(stateDir: java.nio.file.Path,
-                                    epoch: Long): java.nio.file.Path =
-    graft.ManifestIo.versionedPath(stateDir, epoch)
+  private[graft] val UpsertRetainEpochs = UpsertTable.RetainEpochs
 
   /** Epochs currently readable via [[readUpsertStateAt]], ascending. */
   private[graft] def listUpsertEpochs(stateDirPath: String): Seq[Long] =
-    graft.ManifestIo.listEpochs(java.nio.file.Paths.get(stateDirPath))
-
-  private def readManifestFile(p: java.nio.file.Path): UpsertManifest = {
-    import org.json4s._
-    val j = org.json4s.jackson.JsonMethods.parse(java.nio.file.Files.readString(p))
-    val epoch = (j \ "epoch") match { case JInt(n) => n.toLong; case other => sys.error(s"bad epoch $other") }
-    val buckets = (j \ "buckets") match {
-      case JObject(fs) => fs.map { case (k, JString(v)) => k.toInt -> v
-                                   case other => sys.error(s"bad bucket entry $other") }.toMap
-      case other => sys.error(s"bad buckets $other")
-    }
-    // pre-parameterized manifests were all written at the old fixed
-    // fan-out — defaulting preserves their bucket routing exactly
-    val nb = (j \ "numBuckets") match {
-      case JInt(n) => n.toInt
-      case _ => UpsertBuckets
-    }
-    UpsertManifest(epoch, buckets, nb)
-  }
+    UpsertTable.listEpochs(stateDirPath)
 
   /** Snapshot (time-travel) read: resolve the state table AS OF a
     * retained epoch through that epoch's immutable manifest — same
@@ -725,15 +705,12 @@ object StreamingOps {
     * survive concurrent GC wraps the access in
     * [[withUpsertSnapshot]], which pins the epoch with a lease. */
   private[graft] def readUpsertStateAt(s: SparkSession, stateDirPath: String,
-                                       epoch: Long): DataFrame = {
+                                       epoch: Long): DataFrame =
+    upsertState(s, stateDirPath, UpsertTable.openAt(stateDirPath, epoch))
+
+  private def upsertState(s: SparkSession, stateDirPath: String,
+                          m: UpsertManifest): DataFrame = {
     val stateDir = java.nio.file.Paths.get(stateDirPath)
-    val p = versionedManifestPath(stateDir, epoch)
-    if (!java.nio.file.Files.exists(p))
-      throw new IllegalStateException(
-        s"snapshot expired: epoch $epoch of $stateDirPath is no longer retained " +
-          s"(retained: ${listUpsertEpochs(stateDirPath).mkString(",")}); " +
-          "pin epochs with withUpsertSnapshot or raise retainEpochs")
-    val m = readManifestFile(p)
     val paths = m.buckets.values.toSeq.sorted.map(rel => s"$stateDir/$rel")
     // A first-ever EMPTY micro-batch commits epoch 0 with zero buckets
     // (mergeUpsertBatch's empty-batch epoch flip) — there is no parquet
@@ -768,23 +745,7 @@ object StreamingOps {
     * expired" error when GC won, never a partial table. */
   private[graft] def withUpsertSnapshot[A](s: SparkSession, stateDirPath: String,
                                            epoch: Long)(body: DataFrame => A): A =
-    graft.ManifestIo.withSnapshot(java.nio.file.Paths.get(stateDirPath), epoch,
-      _ => readUpsertStateAt(s, stateDirPath, epoch))(body)
-
-  /** The atomic flip: write the immutable per-epoch manifest first
-    * (the snapshot the epoch stays readable through), then ATOMIC_MOVE
-    * the current-pointer manifest. BOTH writes go through temp +
-    * ATOMIC_MOVE — a snapshot reader lists versioned manifests, so a
-    * torn `_manifest-eN.json` would advertise an unreadable epoch; a
-    * crash between the two moves leaves a complete-but-unreferenced
-    * versioned manifest that the checkpoint's idempotent batch replay
-    * simply rewrites. */
-  private def writeUpsertManifest(stateDir: java.nio.file.Path, m: UpsertManifest): Unit = {
-    val body = m.buckets.toSeq.sortBy(_._1)
-      .map { case (b, rel) => s""""$b":"$rel"""" }.mkString("{", ",", "}")
-    graft.ManifestIo.commit(stateDir, m.epoch,
-      s"""{"epoch":${m.epoch},"numBuckets":${m.numBuckets},"buckets":$body}""")
-  }
+    UpsertTable.withSnapshot(stateDirPath, epoch)(m => body(upsertState(s, stateDirPath, m)))
 
   /** Retention GC, run after each flip: keep every epoch dir referenced
     * by a RETAINED manifest (current epoch − [[UpsertRetainEpochs]] + 1
@@ -803,8 +764,7 @@ object StreamingOps {
   private[graft] def gcUpsertEpochs(stateDir: java.nio.file.Path, current: Long,
                                     retain: Int,
                                     afterIntent: Long => Unit = _ => ()): Unit =
-    graft.ManifestIo.gcEpochs(stateDir, current, retain,
-      "b\\d+", p => readManifestFile(p).buckets.values, afterIntent)
+    UpsertTable.gc(stateDir.toString, current, retain, afterIntent)
 
   /** Write-once multi-file copy of events so the file source can
     * drain in SEVERAL micro-batches (8 files, maxFilesPerTrigger=2 →
@@ -1020,7 +980,7 @@ object StreamingOps {
       val affected = delta.select("bucket").distinct().collect().map(_.getInt(0))
       if (affected.isEmpty) {
         val newEpoch = man.map(_.epoch + 1).getOrElse(0L)
-        writeUpsertManifest(stateDir,
+        UpsertTable.commit(stateDir.toString,
           UpsertManifest(newEpoch, man.map(_.buckets).getOrElse(Map.empty), fanOut))
         gcUpsertEpochs(stateDir, newEpoch, retainEpochs)
         newEpoch
@@ -1089,7 +1049,7 @@ object StreamingOps {
     deleteRecursively(stage.toFile)
     val newBuckets = (prevBuckets -- affected.toSet.diff(committed.toSet)) ++
       committed.map(b => b -> s"b$b/e$newEpoch")
-    writeUpsertManifest(stateDir, UpsertManifest(newEpoch, newBuckets, numBuckets))
+    UpsertTable.commit(stateDir.toString, UpsertManifest(newEpoch, newBuckets, numBuckets))
     gcUpsertEpochs(stateDir, newEpoch, retainEpochs)
   }
 
@@ -1195,7 +1155,7 @@ object StreamingOps {
     if (paths.isEmpty) {
       // empty table: nothing to move, the flip just records the new
       // fan-out for every later merge
-      writeUpsertManifest(stateDir, UpsertManifest(newEpoch, Map.empty, newBuckets))
+      UpsertTable.commit(stateDir.toString, UpsertManifest(newEpoch, Map.empty, newBuckets))
       gcUpsertEpochs(stateDir, newEpoch, UpsertRetainEpochs)
     } else {
       val merged = s.read.parquet(paths: _*)

@@ -191,7 +191,7 @@ class AnnIndexStoreSpec extends AnyFunSuite {
       }
       // RetainEpochs = 3 → epochs 2,3,4 retained; 0 and 1 gone
       assert(AnnIndexStore.listEpochs(dir) == Seq(2L, 3L, 4L))
-      val err = intercept[IllegalArgumentException](AnnIndexStore.openAt(dir, 0L))
+      val err = intercept[IllegalStateException](AnnIndexStore.openAt(dir, 0L))
       assert(err.getMessage.contains("not retained"))
       // every dir a retained manifest references still exists on disk
       AnnIndexStore.listEpochs(dir).foreach { ep =>

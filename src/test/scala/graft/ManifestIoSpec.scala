@@ -144,7 +144,7 @@ class ManifestIoSpec extends AnyFunSuite {
     assert(seen)
     // lease released: the next pass evicts it, and openVersioned fails loudly
     ManifestIo.gcEpochs(dir, current = 1L, retain = 1, "b\\d+", _ => Seq("b0/e1"))
-    val gone = intercept[IllegalArgumentException](
+    val gone = intercept[IllegalStateException](
       ManifestIo.openVersioned(dir, 0L, p => p))
     assert(gone.getMessage.contains("not retained"))
   }
