@@ -47,43 +47,13 @@ object ArtifactTxn {
 
   case class Txn(id: String, steps: Seq[Step])
 
-  private def esc(s: String): String = s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
+  private implicit val formats: org.json4s.Formats = org.json4s.DefaultFormats
 
-  private def render(t: Txn): String = {
-    val steps = t.steps.map { s =>
-      s"""{"store":"${esc(s.store)}","dir":"${esc(s.dir)}",""" +
-        s""""expectedEpoch":${s.expectedEpoch},"payload":"${esc(s.payload)}"}"""
-    }.mkString("[", ",", "]")
-    s"""{"id":"${esc(t.id)}","steps":$steps}"""
-  }
+  // json4s over the case classes: fields render in constructor order
+  // (`{"id":…,"steps":[{"store":…,"dir":…,"expectedEpoch":…,"payload":…}]}`)
+  private def render(t: Txn): String = org.json4s.jackson.Serialization.write(t)
 
-  private def parse(p: Path): Txn = {
-    import org.json4s._
-    val j = org.json4s.jackson.JsonMethods.parse(Files.readString(p))
-    def str(v: JValue): String = v match {
-      case JString(x) => x
-      case other      => sys.error(s"bad txn string $other")
-    }
-    val id = str(j \ "id")
-    val steps = (j \ "steps") match {
-      case JArray(xs) => xs.map { s =>
-        val epoch = (s \ "expectedEpoch") match {
-          case JInt(n)  => n.toLong
-          case JLong(n) => n
-          case other    => sys.error(s"bad txn epoch $other")
-        }
-        Step(str(s \ "store"), str(s \ "dir"), epoch, str(s \ "payload"))
-      }
-      case other => sys.error(s"bad txn steps $other")
-    }
-    Txn(id, steps)
-  }
+  private def parse(p: Path): Txn = org.json4s.jackson.Serialization.read[Txn](Files.readString(p))
 
   private def intentPath(logDir: Path, id: String): Path = {
     require(id.matches("[A-Za-z0-9._-]+"), s"txn id $id must be filename-safe")

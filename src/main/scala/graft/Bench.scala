@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line.
@@ -75,13 +74,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Session.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
     val root = repoRoot
     val prev = baseline(root, sfDir)
@@ -268,23 +261,7 @@ object Bench {
   private def soloRuns(names: Seq[String], sfDir: String,
                        cpus: String): Map[String, Seq[Double]] =
     try {
-      val javaBin = java.nio.file.Paths.get(
-        System.getProperty("java.home"), "bin", "java").toString
-      val jvmArgs = {
-        val in = java.lang.management.ManagementFactory
-          .getRuntimeMXBean.getInputArguments
-        val it = in.iterator()
-        val out = scala.collection.mutable.ArrayBuffer[String]()
-        while (it.hasNext) {
-          val a = it.next()
-          if (a == "--add-opens" && it.hasNext) { out += a; out += it.next() }
-          else if (a.startsWith("--add-opens=") || a.startsWith("-Xmx")) out += a
-        }
-        out.toSeq
-      }
-      val cmd = Seq(javaBin) ++ jvmArgs ++
-        Seq("-cp", System.getProperty("java.class.path"), "graft.Solo") ++
-        names ++ Seq("3")
+      val cmd = childJvm("graft.Solo") ++ names ++ Seq("3")
       val pb = new ProcessBuilder(cmd: _*)
       pb.environment().put("SPARK_GRAFT_SOLO_SF", sfDir)
       pb.environment().put("SPARK_GRAFT_CPUS", cpus)
@@ -300,4 +277,20 @@ object Bench {
         name -> runs.split(",").toSeq.flatMap(_.toDoubleOption)
       }.toMap
     } catch { case scala.util.control.NonFatal(_) => Map.empty }
+
+  /** The `java` command line of a child JVM running `mainClass` with
+    * this JVM's `--add-opens`/`-Xmx` flags and classpath, plus
+    * `props` (`-Dk=v`). */
+  private[graft] def childJvm(mainClass: String, props: Seq[String] = Nil): Seq[String] = {
+    val javaBin = java.nio.file.Paths.get(System.getProperty("java.home"), "bin", "java")
+    val it = java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments.iterator()
+    val flags = scala.collection.mutable.ArrayBuffer[String]()
+    while (it.hasNext) {
+      val a = it.next()
+      if (a == "--add-opens" && it.hasNext) { flags += a; flags += it.next() }
+      else if (a.startsWith("--add-opens=") || a.startsWith("-Xmx")) flags += a
+    }
+    Seq(javaBin.toString) ++ flags ++ props ++
+      Seq("-cp", System.getProperty("java.class.path"), mainClass)
+  }
 }

@@ -38,14 +38,7 @@ object Solo {
     // Mirror Bench's session exactly (local[N], N shuffle partitions)
     // so solo numbers are comparable to driver bench numbers.
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-solo")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Session.local(cpus, Some("graft-solo"))
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { name =>
       if (deadlineNanos.forall(System.nanoTime() < _)) {

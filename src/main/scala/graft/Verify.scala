@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,16 +9,7 @@ object Verify {
     val Array(sfDir, outDir, rest @ _*) = args
     val only: Option[Set[String]] = rest.headOption.map(_.split(',').toSet)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // legacy-compat only: lets a TIMESTAMP(NANOS)-written events
-      // fixture arrive as Long for ops.Tables.normalizeEventTs; the
-      // current fixture is timestamp[us] NTZ and ignores this flag
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Session.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // A failed query must leave a red ROW in the artifact, not a
@@ -41,27 +31,16 @@ object Verify {
         Files.writeString(Paths.get(s"$outDir/$name.error.txt"), msg + "\n")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // json4s escapes backslash, quote and ALL control chars — a tab or
+    // CR in an oracle SQL string would otherwise make the reader's
+    // json.load fail and silently zero the correctness compare.
+    def json(m: Iterable[(String, String)]): String = org.json4s.jackson.Serialization
+      .write(scala.collection.immutable.ListMap.from(m))(org.json4s.DefaultFormats)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json(SparkEntry.oracleSql))
     // separate file (NOT a key inside oracle_sql.json — the driver
     // iterates that map's keys as query names, so a foreign key would
     // be read as a query called "errors")
-    val errJson = failed
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/errors.json"), errJson)
+    Files.writeString(Paths.get(s"$outDir/errors.json"), json(failed))
     spark.stop()
     // deliberately rc=0 even with failures: the driver must still run
     // the DuckDB compare over the queries that DID produce output —

@@ -133,8 +133,13 @@ case class LshBandSigs(vec: Expression, planes: Expression, rowsPerBand: Express
       var j = 0
       val base = p * dim
       while (j < lim) { acc += v(j) * flat(base + j); j += 1 }
-      // Spark's double GreaterThanOrEqual: nanSafeCompareDoubles ≥ 0
-      // (NaN ≥ 0 true; −0.0 ≥ 0 false — Double.compare, NOT `>=`)
+      // Spark's double GreaterThanOrEqual (SQLOrderingUtil
+      // .compareDoubles) is NaN ≥ 0 true, and it short-circuits on
+      // `x == y`, so −0.0 ≥ 0.0 is TRUE in Spark. `Double.compare`
+      // would put −0.0 below 0.0, but `acc` can never be −0.0: it
+      // starts at +0.0, and an IEEE sum is −0.0 only when both addends
+      // are −0.0 — so for every reachable `acc` this test and Spark's
+      // agree.
       val bit =
         if (java.lang.Double.isNaN(acc)) 1
         else if (java.lang.Double.compare(acc, 0.0) >= 0) 1

@@ -1,6 +1,6 @@
 package graft.ops
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.dump.{DumpConverter, DumpRenderer}
@@ -27,8 +27,8 @@ import graft.dump.{DumpConverter, DumpRenderer}
 object ConverterQueries {
 
   val conv_dump_roundtrip: (SparkSession, String) => DataFrame = (s, d) => {
-    val in = Files.createTempDirectory("graft-dump-in")
-    val out = Files.createTempDirectory("graft-dump-out")
+    val in = graft.Fs.scratchDir("dump_in")
+    val out = graft.Fs.scratchDir("dump_out")
     val text = DumpRenderer.dump(Seq(
       DumpRenderer.section("nation", Tables.nation(s, d), Seq("n_nationkey")),
       DumpRenderer.section("region", Tables.region(s, d), Seq("r_regionkey")),
@@ -53,8 +53,8 @@ object ConverterQueries {
     * values; [[graft.dump.DumpConverterSpec]] pins the physical schema
     * (DateType / DecimalType(20,0)) the flags produce. */
   val conv_typed: (SparkSession, String) => DataFrame = (s, d) => {
-    val in = Files.createTempDirectory("graft-dump-typed-in")
-    val out = Files.createTempDirectory("graft-dump-typed-out")
+    val in = graft.Fs.scratchDir("dump_typed_in")
+    val out = graft.Fs.scratchDir("dump_typed_out")
     val base = Tables.orders(s, d).select(
       col("o_orderkey"),
       to_date(col("o_orderdate").cast("timestamp")).as("o_date"),
@@ -88,8 +88,8 @@ object ConverterQueries {
     * against DuckDB over the ORIGINAL parquet proves values landed in
     * the right columns by name, not by position. */
   val conv_colmap: (SparkSession, String) => DataFrame = (s, d) => {
-    val in = Files.createTempDirectory("graft-dump-colmap-in")
-    val out = Files.createTempDirectory("graft-dump-colmap-out")
+    val in = graft.Fs.scratchDir("dump_colmap_in")
+    val out = graft.Fs.scratchDir("dump_colmap_out")
     val cm = Tables.customer(s, d)
     val reordered = Seq("c_mktsegment", "c_custkey", "c_acctbal", "c_name", "c_nationkey")
     val partial = Seq("c_custkey", "c_acctbal")
@@ -140,12 +140,11 @@ object ConverterQueries {
   /** The big rendered dump is a FIXTURE (the input a real user already
     * has on disk), not part of the operator under test — built once per
     * (session, fixture dir) like the bucketed-join layout. */
-  private val scaleDump = graft.SessionCache.newCache[Path]()
+  private val scaleDump = new graft.SessionCache.Artifact[Path]("dump_scale_in")
 
   private[ops] def scaleDumpFile(s: SparkSession, d: String): Path =
-    graft.SessionCache.perSession(scaleDump, s).getOrElseUpdate(d, {
-      val in = Files.createTempDirectory("graft-dump-scale-in")
-      val path = in.resolve("dump.sql")
+    scaleDump(s, d) { dir =>
+      val path = Files.createDirectories(Paths.get(dir)).resolve("dump.sql")
       val w = Files.newBufferedWriter(path)
       try {
         w.write("-- MySQL dump 10.13  Distrib 8.0.36\n")
@@ -162,7 +161,7 @@ object ConverterQueries {
         w.write("-- Dump completed\n")
       } finally w.close()
       path
-    })
+    }
 
   /** Convert the full-fact-table dump with minPartitions ≫ tables, then
     * prove value-exactness by aggregating the CONVERTED parquet against
@@ -172,7 +171,7 @@ object ConverterQueries {
     * 100 TB ingest shape at measurable size. */
   val conv_scale: (SparkSession, String) => DataFrame = (s, d) => {
     val dump = scaleDumpFile(s, d)
-    val out = Files.createTempDirectory("graft-dump-scale-out")
+    val out = graft.Fs.scratchDir("dump_scale_out")
     DumpConverter.convert(s, dump.toString, out.toString, minPartitions = 32)
     val li = s.read.parquet(s"$out/lineitem")
       .groupBy(col("l_returnflag"), col("l_linestatus"))
@@ -189,17 +188,24 @@ object ConverterQueries {
 
   // ------------------------------------------- JSONL / CSV source+sink
 
-  /** Write-once layouts for the text-format round-trips, keyed like the
-    * other pay-once fixtures. */
-  private val textLayouts = graft.SessionCache.newCache[String]()
-
-  private def layout(s: SparkSession, d: String, kind: String)(build: String => Unit): String =
-    graft.SessionCache.perSession(textLayouts, s).getOrElseUpdate(s"$kind:$d", {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_${kind}_" +
-        Tables.layoutTag(d)
-      build(path)
-      path
-    })
+  /** Write-once layouts per (session, fixture dir), one per query
+    * below — the pay-once fixtures of the format and table-evolution
+    * witnesses. */
+  private val jsonlEvents = new graft.SessionCache.ArtifactDir("jsonl_events")
+  private val binfiles = new graft.SessionCache.ArtifactDir("binfiles")
+  private val csvOrders = new graft.SessionCache.ArtifactDir("csv_orders")
+  private val orcLineitem = new graft.SessionCache.ArtifactDir("orc_lineitem")
+  private val xmlNation = new graft.SessionCache.ArtifactDir("xml_nation")
+  private val evolvePart = new graft.SessionCache.ArtifactDir("evolve_part")
+  private val corruptNation = new graft.SessionCache.ArtifactDir("corrupt_nation")
+  private val zorderLineitem = new graft.SessionCache.ArtifactDir("zorder_lineitem")
+  private val linearLineitem = new graft.SessionCache.ArtifactDir("linear_lineitem")
+  private val evolvedOrders = new graft.SessionCache.ArtifactDir("evolved_orders")
+  private val compactedOrders = new graft.SessionCache.ArtifactDir("compacted_orders")
+  private val columnEvolvedOrders = new graft.SessionCache.ArtifactDir("column_evolved_orders")
+  private val renamedOrders = new graft.SessionCache.ArtifactDir("renamed_orders")
+  private val multiwriterOrders = new graft.SessionCache.ArtifactDir("multiwriter_orders")
+  private val ingestRebaseOrders = new graft.SessionCache.ArtifactDir("ingest_rebase_orders")
 
   /** JSONL sink + source round-trip over `events` — the ingest format
     * most training corpora arrive in. The write is DISTRIBUTED
@@ -214,7 +220,7 @@ object ConverterQueries {
     * field survived both hops. */
   val src_jsonl_roundtrip: (SparkSession, String) => DataFrame = (s, d) => {
     import org.apache.spark.sql.types._
-    val path = layout(s, d, "jsonl_events") { p =>
+    val path = jsonlEvents(s, d) { p =>
       Tables.events(s, d)
         .select(col("event_id"), unix_micros(col("ts")).as("ts_us"), col("user_id"),
           col("event_type"), round(col("value") * 100).cast("long").as("value_cents"),
@@ -257,10 +263,7 @@ object ConverterQueries {
     * overhead, not the operator (production reads few large media
     * files per task, not thousands of 1 KB ones). */
   val src_binaryfile_roundtrip: (SparkSession, String) => DataFrame = (s, d) => {
-    val path = layout(s, d, "binfiles") { p =>
-      // truncate like df.write(overwrite) layouts do — a stale wider
-      // run's leftover files would otherwise survive the rebuild
-      graft.Fs.deleteRecursively(new java.io.File(p))
+    val path = binfiles(s, d) { p =>
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(p)): Unit
       Tables.documents(s, d).select(col("doc_id"), col("text"))
         .filter(col("doc_id") < 500)
@@ -282,7 +285,7 @@ object ConverterQueries {
 
   val src_csv_roundtrip: (SparkSession, String) => DataFrame = (s, d) => {
     import org.apache.spark.sql.types._
-    val path = layout(s, d, "csv_orders") { p =>
+    val path = csvOrders(s, d) { p =>
       Tables.orders(s, d)
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
           round(col("o_totalprice") * 100).cast("long").as("total_cents"),
@@ -311,7 +314,7 @@ object ConverterQueries {
     * parquet — a hash match proves every row and value survived both
     * hops through the foreign format. */
   val src_orc_roundtrip: (SparkSession, String) => DataFrame = (s, d) => {
-    val path = layout(s, d, "orc_lineitem") { p =>
+    val path = orcLineitem(s, d) { p =>
       Tables.lineitem(s, d)
         .select(col("l_orderkey"), col("l_partkey"), col("l_returnflag"),
           round(col("l_quantity") * 100).cast("long").as("qty_cents"),
@@ -338,7 +341,7 @@ object ConverterQueries {
     * aggregates the ORIGINAL parquet tables. */
   val src_xml_roundtrip: (SparkSession, String) => DataFrame = (s, d) => {
     import org.apache.spark.sql.types._
-    val path = layout(s, d, "xml_nation") { p =>
+    val path = xmlNation(s, d) { p =>
       Tables.nation(s, d)
         .join(Tables.region(s, d), col("n_regionkey") === col("r_regionkey"))
         .select(col("n_nationkey").cast("long").as("n_nationkey"), col("n_name"),
@@ -368,7 +371,7 @@ object ConverterQueries {
     * on the ORIGINAL table, so the hash match proves evolved reads are
     * lossless and null-semantics-exact. */
   val src_schema_evolution: (SparkSession, String) => DataFrame = (s, d) => {
-    val path = layout(s, d, "evolve_part") { p =>
+    val path = evolvePart(s, d) { p =>
       val part = Tables.part(s, d)
       part.filter(col("p_partkey") % 2 === 1)
         .select(col("p_partkey"), col("p_brand"))
@@ -396,7 +399,7 @@ object ConverterQueries {
     * rows — which is what the oracle hash proves against the original
     * table. */
   val src_corrupt_skip: (SparkSession, String) => DataFrame = (s, d) => {
-    val path = layout(s, d, "corrupt_nation") { p =>
+    val path = corruptNation(s, d) { p =>
       Tables.nation(s, d).write.mode("overwrite").parquet(p)
       java.nio.file.Files.write(
         java.nio.file.Paths.get(p, "part-99999-planted-garbage.parquet"),
@@ -467,7 +470,7 @@ object ConverterQueries {
     val xhi = xmn + xspan * 5 / 8 - 1
     val ylo = ymn + yspan * 3 / 8
     val yhi = ymn + yspan * 5 / 8 - 1
-    val zPath = layout(s, d, "zorder_lineitem") { p =>
+    val zPath = zorderLineitem(s, d) { p =>
       val buckets = 1L << ZBits
       val z = zInterleave(
         expr(s"CAST((l_partkey - $xmn) * $buckets DIV $xspan AS INT)"),
@@ -489,7 +492,7 @@ object ConverterQueries {
         .drop("z")
         .write.partitionBy("tile").mode("overwrite").parquet(p)
     }
-    val linPath = layout(s, d, "linear_lineitem") { p =>
+    val linPath = linearLineitem(s, d) { p =>
       li.repartitionByRange(ZFiles, col("l_orderkey"))
         .sortWithinPartitions(col("l_orderkey"))
         .write.mode("overwrite").parquet(p)
@@ -534,7 +537,6 @@ object ConverterQueries {
     * desynchronize. */
   private def evolvedOrdersLayout(s: SparkSession, d: String, p: String,
                                   compactAfter: Boolean): Unit = {
-    graft.Fs.deleteRecursively(new java.io.File(p))
     val o = Tables.orders(s, d)
       .withColumn("o_month", date_format(col("o_orderdate"), "yyyy-MM"))
     val cut = lit("1998-01-01").cast("timestamp")
@@ -545,12 +547,11 @@ object ConverterQueries {
         partitionBy = Seq("o_month", "o_orderstatus")))
     if (compactAfter)
       GovernedTable.compact(s, p, partitionBy = Seq("o_month", "o_orderstatus"))
-    graft.Fs.deleteOnExit(p): Unit
   }
 
   /** Write-once PARTITION-EVOLVED orders table. */
   private[graft] def evolvedOrdersDir(s: SparkSession, d: String): String =
-    layout(s, d, "evolved_orders")(
+    evolvedOrders(s, d)(
       p => evolvedOrdersLayout(s, d, p, compactAfter = false))
 
   /** PARTITION EVOLUTION — the table-format capability that keeps a
@@ -585,7 +586,7 @@ object ConverterQueries {
     * retires the legacy month-only layout into ONE segment under the
     * evolved (month, status) scheme. */
   private[graft] def compactedOrdersDir(s: SparkSession, d: String): String =
-    layout(s, d, "compacted_orders")(
+    compactedOrders(s, d)(
       p => evolvedOrdersLayout(s, d, p, compactAfter = true))
 
   /** LAYOUT COMPACTION after partition evolution — retiring the legacy
@@ -609,8 +610,7 @@ object ConverterQueries {
     * rewritten: the added column reads as NULL over the pre-evolution
     * segment via the serve-side `unionByName(allowMissingColumns)`. */
   private[graft] def columnEvolvedOrdersDir(s: SparkSession, d: String): String =
-    layout(s, d, "column_evolved_orders") { p =>
-      graft.Fs.deleteRecursively(new java.io.File(p))
+    columnEvolvedOrders(s, d) { p =>
       val o = Tables.orders(s, d)
         .withColumn("o_month", date_format(col("o_orderdate"), "yyyy-MM"))
       val cut = lit("1998-01-01").cast("timestamp")
@@ -624,7 +624,6 @@ object ConverterQueries {
           .count())
       require(viol == 0L && published.nonEmpty,
         s"column-evolution WAP round failed audit with $viol violations")
-      graft.Fs.deleteOnExit(p): Unit
     }
 
   /** COLUMN (SCHEMA) EVOLUTION through the governed table — the other
@@ -662,8 +661,7 @@ object ConverterQueries {
     * rewrite), and era 3 (1998+) arrives already carrying the new
     * name. Serving resolves every era BY FIELD ID. */
   private[graft] def renamedOrdersDir(s: SparkSession, d: String): String =
-    layout(s, d, "renamed_orders") { p =>
-      graft.Fs.deleteRecursively(new java.io.File(p))
+    renamedOrders(s, d) { p =>
       val o = Tables.orders(s, d)
         .select(col("o_orderkey"), col("o_orderdate"),
           date_format(col("o_orderdate"), "yyyy-MM").as("o_month"),
@@ -684,7 +682,6 @@ object ConverterQueries {
           .withColumnRenamed("o_totalcents", "o_cents"))(
         v => v.filter(col("o_cents") < 0).count())
       require(v2 == 0L && p2.nonEmpty, s"era-3 WAP round refused: $v2 violations")
-      graft.Fs.deleteOnExit(p): Unit
     }
 
   /** Write-once MULTI-WRITER orders table: two producers stage
@@ -697,8 +694,7 @@ object ConverterQueries {
     * rewritten). The optimistic-commit protocol every Iceberg/Delta
     * multi-writer deployment runs, end-to-end at the oracle gate. */
   private[graft] def multiWriterOrdersDir(s: SparkSession, d: String): String =
-    layout(s, d, "multiwriter_orders") { p =>
-      graft.Fs.deleteRecursively(new java.io.File(p))
+    multiwriterOrders(s, d) { p =>
       val o = Tables.orders(s, d)
         .select(col("o_orderkey"),
           round(col("o_totalprice") * 100).cast("long").as("o_cents"))
@@ -716,7 +712,6 @@ object ConverterQueries {
       require(audit(re) == 0L, "loser must re-audit before retrying")
       val rb2 = GovernedTable.publishCas(s, p, re)
       require(rb2.isRight, s"restaged CAS must land, got $rb2")
-      graft.Fs.deleteOnExit(p): Unit
     }
 
   /** The round-16 lock-coverage witness: a streaming WAP ingest whose
@@ -730,8 +725,7 @@ object ConverterQueries {
     * that no longer exists), and land as the next epoch with the
     * verdict riding the final flip. */
   private[graft] def ingestRebaseOrdersDir(s: SparkSession, d: String): String =
-    layout(s, d, "ingest_rebase_orders") { p =>
-      graft.Fs.deleteRecursively(new java.io.File(p))
+    ingestRebaseOrders(s, d) { p =>
       val o = Tables.orders(s, d)
         .select(col("o_orderkey"),
           round(col("o_totalprice") * 100).cast("long").as("o_cents"))
@@ -750,7 +744,6 @@ object ConverterQueries {
         s"optimistic rebase must re-audit and land: audits=$audits manifest=$m")
       require(m.batches.get(0L).contains(2L),
         s"the batch verdict must ride the FINAL flip, got ${m.batches}")
-      graft.Fs.deleteOnExit(p): Unit
     }
 
   /** Served rows after the contested ingest: exactly base ∪ the CAS

@@ -1012,19 +1012,20 @@ object DedupOps {
     * the OLD corpus slice (doc_id % 5 ≠ 4 — the same old/new split as
     * [[d_dedup_incremental]]). Lives under tmpdir for the session,
     * deleted on JVM exit. */
-  private val dedupIndexDirs = graft.SessionCache.newCache[String]()
+  private val persistedDedupIndexDirs = new graft.SessionCache.ArtifactDir("dedupidx")
+  private val deltaDedupIndexDirs = new graft.SessionCache.ArtifactDir("dedupidxd")
+  private val updatedDedupIndexDirs = new graft.SessionCache.ArtifactDir("dedupidxu")
+  private val reshardedDedupIndexDirs = new graft.SessionCache.ArtifactDir("dedupidxr")
+  private val compactedDedupIndexDirs = new graft.SessionCache.ArtifactDir("dedupidxc")
+  private val deletedDedupIndexDirs = new graft.SessionCache.ArtifactDir("dedupidxdel")
 
   private[graft] def persistedDedupIndexDir(s: org.apache.spark.sql.SparkSession,
                                             d: String): String =
-    graft.SessionCache.perSession(dedupIndexDirs, s).getOrElseUpdate(d, {
-      val p = s"${System.getProperty("java.io.tmpdir")}/graft_dedupidx_" +
-        Tables.layoutTag(d)
+    persistedDedupIndexDirs(s, d) { p =>
       DedupIndexStore.build(
         Tables.documents(s, d).filter(col("doc_id") % 5 =!= 4)
           .select(col("doc_id"), col("text")), p)
-      graft.Fs.deleteOnExit(p): Unit
-      p
-    })
+    }
 
   /** Write-once near-dup CLUSTER artifact per (session, fixture dir):
     * the full LSH → exact-Jaccard verify → connected-components
@@ -1038,20 +1039,16 @@ object DedupOps {
     * pair appear — a tiny fraction of the corpus), so consumers
     * BROADCAST it instead of re-running the pipeline. Lives under
     * tmpdir for the session, deleted on JVM exit. */
-  private val clusterArtifacts = graft.SessionCache.newCache[String]()
+  private val clusterArtifactDirs = new graft.SessionCache.ArtifactDir("dupclusters")
 
   private[graft] def clusterArtifactDir(s: org.apache.spark.sql.SparkSession,
                                         d: String): String =
-    graft.SessionCache.perSession(clusterArtifacts, s).getOrElseUpdate(d, {
-      val p = s"${System.getProperty("java.io.tmpdir")}/graft_dupclusters_" +
-        Tables.layoutTag(d)
+    clusterArtifactDirs(s, d) { p =>
       val docs = Tables.documents(s, d)
       val pairs = exactJaccard(lshCandidates(minhashSignatures(docs)), shingled(docs))
         .select(col("doc_a"), col("doc_b"))
       connectedComponents(pairs).write.mode("overwrite").parquet(p)
-      graft.Fs.deleteOnExit(p): Unit
-      p
-    })
+    }
 
   /** Write-once INCREMENTALLY-ASSEMBLED dedup index per (session,
     * fixture dir): epoch 0 indexes doc_id % 5 ∈ {0, 1}, then
@@ -1060,16 +1057,12 @@ object DedupOps {
     * the same OLD corpus as [[persistedDedupIndexDir]]. */
   private[graft] def deltaDedupIndexDir(s: org.apache.spark.sql.SparkSession,
                                         d: String): String =
-    graft.SessionCache.perSession(dedupIndexDirs, s).getOrElseUpdate("delta:" + d, {
-      val p = s"${System.getProperty("java.io.tmpdir")}/graft_dedupidxd_" +
-        Tables.layoutTag(d)
+    deltaDedupIndexDirs(s, d) { p =>
       val old = Tables.documents(s, d).filter(col("doc_id") % 5 =!= 4)
         .select(col("doc_id"), col("text"))
       DedupIndexStore.build(old.filter(col("doc_id") % 5 < 2), p)
       DedupIndexStore.applyDelta(s, p, old.filter(col("doc_id") % 5 >= 2)): Unit
-      graft.Fs.deleteOnExit(p): Unit
-      p
-    })
+    }
 
   /** The daily near-dup screen served from the PERSISTED index
     * ([[DedupIndexStore]]): the 20 % "new day" batch (doc_id % 5 = 4)
@@ -1166,9 +1159,7 @@ object DedupOps {
     * doc at Jaccard 1.0 (new postings live). */
   private[graft] def updatedDedupIndexDir(s: org.apache.spark.sql.SparkSession,
                                           d: String): String =
-    graft.SessionCache.perSession(dedupIndexDirs, s).getOrElseUpdate("upd:" + d, {
-      val p = s"${System.getProperty("java.io.tmpdir")}/graft_dedupidxu_" +
-        Tables.layoutTag(d)
+    updatedDedupIndexDirs(s, d) { p =>
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
       DedupIndexStore.build(docs.filter(col("doc_id") % 5 =!= 4), p)
       val upd = docs.filter(col("doc_id") % 45 === 1)
@@ -1176,9 +1167,7 @@ object DedupOps {
           col("text").as("new_text")), "doc_id")
         .select(col("doc_id"), col("new_text").as("text"))
       DedupIndexStore.applyUpdate(s, p, upd): Unit
-      graft.Fs.deleteOnExit(p): Unit
-      p
-    })
+    }
 
   /** Write-once RESHARDED index per (session, fixture dir) for
     * [[d_dedup_resharded]]: the OLD corpus indexed at the default
@@ -1187,16 +1176,12 @@ object DedupOps {
     * a 100×-larger corpus takes instead of re-shingling everything. */
   private[graft] def reshardedDedupIndexDir(s: org.apache.spark.sql.SparkSession,
                                             d: String): String =
-    graft.SessionCache.perSession(dedupIndexDirs, s).getOrElseUpdate("reshard:" + d, {
-      val p = s"${System.getProperty("java.io.tmpdir")}/graft_dedupidxr_" +
-        Tables.layoutTag(d)
+    reshardedDedupIndexDirs(s, d) { p =>
       DedupIndexStore.build(
         Tables.documents(s, d).filter(col("doc_id") % 5 =!= 4)
           .select(col("doc_id"), col("text")), p)
       DedupIndexStore.reshard(s, p, 64, 64): Unit
-      graft.Fs.deleteOnExit(p): Unit
-      p
-    })
+    }
 
   /** Write-once COMPACTED index per (session, fixture dir): the
     * delta-assembled index (two registry segments) squashed to one
@@ -1204,17 +1189,13 @@ object DedupOps {
     * lifecycle step that bounds serve-time read amplification. */
   private[graft] def compactedDedupIndexDir(s: org.apache.spark.sql.SparkSession,
                                             d: String): String =
-    graft.SessionCache.perSession(dedupIndexDirs, s).getOrElseUpdate("compact:" + d, {
-      val p = s"${System.getProperty("java.io.tmpdir")}/graft_dedupidxc_" +
-        Tables.layoutTag(d)
+    compactedDedupIndexDirs(s, d) { p =>
       val old = Tables.documents(s, d).filter(col("doc_id") % 5 =!= 4)
         .select(col("doc_id"), col("text"))
       DedupIndexStore.build(old.filter(col("doc_id") % 5 < 2), p)
       DedupIndexStore.applyDelta(s, p, old.filter(col("doc_id") % 5 >= 2)): Unit
       DedupIndexStore.compact(s, p): Unit
-      graft.Fs.deleteOnExit(p): Unit
-      p
-    })
+    }
 
   /** Write-once DELETED-FROM index per (session, fixture dir): the
     * full old corpus indexed, then `doc_id % 3 = 1` deleted by
@@ -1223,17 +1204,13 @@ object DedupOps {
     * no tombstone filtering. */
   private[graft] def deletedDedupIndexDir(s: org.apache.spark.sql.SparkSession,
                                           d: String): String =
-    graft.SessionCache.perSession(dedupIndexDirs, s).getOrElseUpdate("del:" + d, {
-      val p = s"${System.getProperty("java.io.tmpdir")}/graft_dedupidxdel_" +
-        Tables.layoutTag(d)
+    deletedDedupIndexDirs(s, d) { p =>
       val old = Tables.documents(s, d).filter(col("doc_id") % 5 =!= 4)
         .select(col("doc_id"), col("text"))
       DedupIndexStore.build(old, p)
       DedupIndexStore.applyDelete(s, p,
         old.filter(col("doc_id") % 3 === 1).select(col("doc_id"))): Unit
-      graft.Fs.deleteOnExit(p): Unit
-      p
-    })
+    }
 
   /** The daily screen against an index a third of whose corpus was
     * DELETED: hash-matching the from-scratch replay over the SURVIVING

@@ -553,7 +553,11 @@ object SimilarityOps {
     * sf0.1; see plans/r17/s_ann_lsh_*). Band order, signature bit
     * order, dot association, and the ≥ 0 sign rule are bit-identical
     * (asserted by SimilarityOpsSpec's plane-determinism tests and the
-    * oracle hash). */
+    * oracle hash). A vector with a NULL element (or a null vector)
+    * yields a null signature array, which `posexplode` turns into no
+    * rows: the vector is DROPPED from the band keys (it can collide
+    * with nothing), not emitted with null `sig`s
+    * (SimilarityOpsSpec pins this). */
   private[graft] def lshBandKeys(df: DataFrame, vecCol: String,
                                  planes: Seq[Array[Double]]): DataFrame = {
     val sigsCol = graft.functions.LshBandSigs.lshBandSigs(
@@ -1033,7 +1037,7 @@ object SimilarityOps {
     // of the query (guide §1.2). Every value is computed identically.
     val stats = e.agg(max(col("vec_id")), count(lit(1))).head
     val (maxId, nVecs) = (stats.getLong(0), stats.getLong(1))
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivfidx_")
+    val dir = graft.Fs.scratchDir("ivfidx")
     val idxPath = s"$dir/idx"
     try {
       val m0 = AnnIndexStore.build(e0, idxPath)
@@ -1082,20 +1086,17 @@ object SimilarityOps {
     * (vec_id ≥ 8) indexed under a quantizer trained on the full corpus
     * — the same split every other `s_ann_*` witness uses. Lives under
     * tmpdir for the session, deleted on JVM exit. */
-  private val annIndexDirs = graft.SessionCache.newCache[String]()
+  private val persistedIndexDirs = new graft.SessionCache.ArtifactDir("annidx")
+  private val rebalancedIndexDirs = new graft.SessionCache.ArtifactDir("annreb")
 
   private[graft] def persistedIndexDir(s: SparkSession, d: String): String =
-    graft.SessionCache.perSession(annIndexDirs, s).getOrElseUpdate(d, {
-      val p = s"${System.getProperty("java.io.tmpdir")}/graft_annidx_" +
-        Tables.layoutTag(d)
+    persistedIndexDirs(s, d) { p =>
       val e = Tables.embeddings(s, d)
       // ONE index serves both persisted witnesses: pq=true adds the
       // 8 codes per posting + codebooks in the manifest, and the
       // float path simply ignores them
       AnnIndexStore.build(e, p, index = Some(e.filter(col("vec_id") >= 8)), pq = true)
-      graft.Fs.deleteOnExit(p): Unit
-      p
-    })
+    }
 
   /** Write-once DRIFTED-then-REBALANCED index per (session, fixture
     * dir) for [[s_ann_rebalance]]: epoch 0 trains and indexes WITHOUT
@@ -1105,9 +1106,7 @@ object SimilarityOps {
     * [[AnnIndexStore.rebalance]] refits on the current corpus and
     * re-encodes behind one manifest flip. */
   private[graft] def rebalancedIndexDir(s: SparkSession, d: String): String =
-    graft.SessionCache.perSession(annIndexDirs, s).getOrElseUpdate(d + "#rebalance", {
-      val p = s"${System.getProperty("java.io.tmpdir")}/graft_annreb_" +
-        Tables.layoutTag(d)
+    rebalancedIndexDirs(s, d) { p =>
       val e = Tables.embeddings(s, d)
       val seeded = e.filter(col("vec_id") >= 8 && col("vec_id") % 3 =!= 0)
       AnnIndexStore.build(e.filter(col("vec_id") % 3 =!= 0), p,
@@ -1117,9 +1116,7 @@ object SimilarityOps {
           lit(null).cast(e.schema("embedding").dataType).as("old_embedding"))
       AnnIndexStore.applyDelta(s, p, late)
       AnnIndexStore.rebalance(s, p)
-      graft.Fs.deleteOnExit(p): Unit
-      p
-    })
+    }
 
   /** BOUND-WITNESS for the REBALANCED index, same recall contract as
     * every `s_ann_*` twin: after drift (a delta inserting vectors the
@@ -1258,19 +1255,15 @@ object SimilarityOps {
   /** Write-once durable TEXT index over the CANDIDATE corpus (docs
     * whose doc_id has a candidate embedding — the same corpus the
     * in-session hybrid's BM25 leg scores), for [[s_hybrid_served]]. */
-  private val candTextDirs = graft.SessionCache.newCache[String]()
+  private val candTextIndexDirs = new graft.SessionCache.ArtifactDir("candtextidx")
   private[graft] def candTextIndexDir(s: SparkSession, d: String): String =
-    graft.SessionCache.perSession(candTextDirs, s).getOrElseUpdate(d, {
-      val p = s"${System.getProperty("java.io.tmpdir")}/graft_candtextidx_" +
-        Tables.layoutTag(d)
+    candTextIndexDirs(s, d) { p =>
       val corpus = Tables.documents(s, d)
         .join(candSide(Tables.embeddings(s, d)).select(col("cid").as("doc_id")),
           Seq("doc_id"))
         .select(col("doc_id"), col("text"))
       TextIndexStore.build(corpus, p)
-      graft.Fs.deleteOnExit(p): Unit
-      p
-    })
+    }
 
   /** BOUND-WITNESS for the FULLY-SERVED hybrid — the production
     * deployment shape where BOTH retrieval legs run from persisted

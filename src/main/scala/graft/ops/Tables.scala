@@ -65,22 +65,4 @@ object Tables {
         "graft.ops.Tables.normalizeEventTs with the new case.")
   def documents(s: SparkSession, d: String): DataFrame = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
-
-  /** Unique on-disk tag for a write-once derived layout (bucketed /
-    * partitioned / text copies of a fixture dir). Two parts, both
-    * load-bearing: a SHA-256 prefix of the FULL source path (stable,
-    * debuggable, and collision-free where `String.hashCode`'s 32 bits
-    * are not — two fixture dirs with colliding hashCodes would
-    * silently share one layout), plus a fresh per-call nonce so each
-    * (session, dir) memoization entry gets its own directory — a
-    * second SparkSession preparing the same dir must never
-    * mode-overwrite files a first session's memoized path may still
-    * be reading. Hex + underscores only, so the tag is also a valid
-    * catalog table-name suffix. */
-  private[graft] def layoutTag(d: String): String = {
-    val sha = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(d.getBytes("UTF-8")).take(6).map(b => f"$b%02x").mkString
-    val nonce = java.util.UUID.randomUUID().toString.replace("-", "").take(8)
-    s"${sha}_$nonce"
-  }
 }

@@ -901,18 +901,20 @@ object TextOps {
   /** Write-once durable text index per (session, fixture dir) —
     * the lexical mirror of [[SimilarityOps.persistedIndexDir]]. Lives
     * under tmpdir for the session, deleted on JVM exit. */
-  private val textIndexDirs = graft.SessionCache.newCache[String]()
+  private val persistedTextIndexDirs = new graft.SessionCache.ArtifactDir("textidx")
+  private val deltaTextIndexDirs = new graft.SessionCache.ArtifactDir("textidxd")
+  private val updatedTextIndexDirs = new graft.SessionCache.ArtifactDir("textidxu")
+  private val reshardedTextIndexDirs = new graft.SessionCache.ArtifactDir("textidxr")
+  private val deletedTextIndexDirs = new graft.SessionCache.ArtifactDir("textidxdel")
+  private val purgedTextIndexDirs = new graft.SessionCache.ArtifactDir("textidxp")
+  private val sizedTextIndexDirs = new graft.SessionCache.ArtifactDir("textidxs")
 
   private[graft] def persistedTextIndexDir(s: org.apache.spark.sql.SparkSession,
                                            d: String): String =
-    graft.SessionCache.perSession(textIndexDirs, s).getOrElseUpdate(d, {
-      val p = s"${System.getProperty("java.io.tmpdir")}/graft_textidx_" +
-        Tables.layoutTag(d)
+    persistedTextIndexDirs(s, d) { p =>
       TextIndexStore.build(
         Tables.documents(s, d).select(col("doc_id"), col("text")), p)
-      graft.Fs.deleteOnExit(p): Unit
-      p
-    })
+    }
 
   /** Write-once INCREMENTALLY-ASSEMBLED index per (session, fixture
     * dir) for [[t_bm25_delta]]: epoch 0 indexes only doc_id % 13 ≠ 0,
@@ -921,15 +923,11 @@ object TextOps {
     * exactly the full corpus. */
   private[graft] def deltaTextIndexDir(s: org.apache.spark.sql.SparkSession,
                                        d: String): String =
-    graft.SessionCache.perSession(textIndexDirs, s).getOrElseUpdate("delta:" + d, {
-      val p = s"${System.getProperty("java.io.tmpdir")}/graft_textidxd_" +
-        Tables.layoutTag(d)
+    deltaTextIndexDirs(s, d) { p =>
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
       TextIndexStore.build(docs.filter(col("doc_id") % 13 =!= 0), p)
       TextIndexStore.applyDelta(s, p, docs.filter(col("doc_id") % 13 === 0)): Unit
-      graft.Fs.deleteOnExit(p): Unit
-      p
-    })
+    }
 
   /** The updated-corpus construction for [[t_bm25_updated]], shared
     * verbatim by the DuckDB oracle: every `doc_id % 11 = 5` doc's text
@@ -948,9 +946,7 @@ object TextOps {
     * the single-flip update lifecycle). */
   private[graft] def updatedTextIndexDir(s: org.apache.spark.sql.SparkSession,
                                          d: String): String =
-    graft.SessionCache.perSession(textIndexDirs, s).getOrElseUpdate("upd:" + d, {
-      val p = s"${System.getProperty("java.io.tmpdir")}/graft_textidxu_" +
-        Tables.layoutTag(d)
+    updatedTextIndexDirs(s, d) { p =>
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
       TextIndexStore.build(docs, p)
       TextIndexStore.applyUpdate(s, p,
@@ -958,9 +954,7 @@ object TextOps {
           .select(col("doc_id"),
             concat(lit(UpdPrefix), (col("doc_id") % 7).cast("string"))
               .as("text"))): Unit
-      graft.Fs.deleteOnExit(p): Unit
-      p
-    })
+    }
 
   /** Write-once RESHARDED index per (session, fixture dir) for
     * [[t_bm25_resharded]]: the full corpus indexed at the default
@@ -969,15 +963,11 @@ object TextOps {
     * corpus takes instead of a full rebuild. */
   private[graft] def reshardedTextIndexDir(s: org.apache.spark.sql.SparkSession,
                                            d: String): String =
-    graft.SessionCache.perSession(textIndexDirs, s).getOrElseUpdate("reshard:" + d, {
-      val p = s"${System.getProperty("java.io.tmpdir")}/graft_textidxr_" +
-        Tables.layoutTag(d)
+    reshardedTextIndexDirs(s, d) { p =>
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
       TextIndexStore.build(docs, p)
       TextIndexStore.reshard(s, p, TextIndexStore.NumBuckets * 4): Unit
-      graft.Fs.deleteOnExit(p): Unit
-      p
-    })
+    }
 
   /** Write-once TOMBSTONED index per (session, fixture dir) for
     * [[t_bm25_deleted]]: the full corpus indexed at epoch 0, then
@@ -985,16 +975,12 @@ object TextOps {
     * the index SERVES WITH DELETES (exact N/Σdl, stale df). */
   private[graft] def deletedTextIndexDir(s: org.apache.spark.sql.SparkSession,
                                          d: String): String =
-    graft.SessionCache.perSession(textIndexDirs, s).getOrElseUpdate("del:" + d, {
-      val p = s"${System.getProperty("java.io.tmpdir")}/graft_textidxdel_" +
-        Tables.layoutTag(d)
+    deletedTextIndexDirs(s, d) { p =>
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
       TextIndexStore.build(docs, p)
       TextIndexStore.applyDelete(s, p,
         docs.filter(col("doc_id") % 7 === 3).select(col("doc_id"))): Unit
-      graft.Fs.deleteOnExit(p): Unit
-      p
-    })
+    }
 
   /** Write-once PURGED index per (session, fixture dir) for
     * [[t_bm25_purged]]: the tombstoned index above compacted by
@@ -1002,17 +988,13 @@ object TextOps {
     * recomputed exactly over the survivors. */
   private[graft] def purgedTextIndexDir(s: org.apache.spark.sql.SparkSession,
                                         d: String): String =
-    graft.SessionCache.perSession(textIndexDirs, s).getOrElseUpdate("purge:" + d, {
-      val p = s"${System.getProperty("java.io.tmpdir")}/graft_textidxp_" +
-        Tables.layoutTag(d)
+    purgedTextIndexDirs(s, d) { p =>
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
       TextIndexStore.build(docs, p)
       TextIndexStore.applyDelete(s, p,
         docs.filter(col("doc_id") % 7 === 3).select(col("doc_id"))): Unit
       TextIndexStore.compact(s, p): Unit
-      graft.Fs.deleteOnExit(p): Unit
-      p
-    })
+    }
 
   /** BM25 served from the PERSISTED inverted index
     * ([[TextIndexStore]]): vocab stats pick the query terms, only
@@ -1053,15 +1035,11 @@ object TextOps {
     * [[t_bm25_sized]]. */
   private[graft] def sizedTextIndexDir(s: org.apache.spark.sql.SparkSession,
                                        d: String): String =
-    graft.SessionCache.perSession(textIndexDirs, s).getOrElseUpdate("sized:" + d, {
-      val p = s"${System.getProperty("java.io.tmpdir")}/graft_textidxs_" +
-        Tables.layoutTag(d)
+    sizedTextIndexDirs(s, d) { p =>
       TextIndexStore.build(
         Tables.documents(s, d).select(col("doc_id"), col("text")), p,
         numBuckets = TextIndexStore.SizeDerived)
-      graft.Fs.deleteOnExit(p): Unit
-      p
-    })
+    }
 
   /** BM25 served from the INCREMENTALLY-assembled index (build on
     * 12/13 of the corpus, delta-append the rest): hash-matching the

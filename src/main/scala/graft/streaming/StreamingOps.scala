@@ -35,18 +35,11 @@ import org.apache.spark.sql.types._
   * Deriving the schema from the file makes that drift impossible.
   */
 object StreamingOps {
-  import graft.Fs.deleteRecursively
+  import graft.Fs.{deleteRecursively, scratchDir}
+  import graft.SessionCache.{Artifact, ArtifactDir, PerSession, perSession}
+  import org.json4s.jackson.Serialization
 
   type Q = (SparkSession, String) => DataFrame
-
-  /** Session-keyed memo hygiene — see [[graft.SessionCache]] (weak
-    * session keys so stopped sessions and their entries are
-    * collectable; the lock covers only the outer lookup, never a
-    * Spark job). */
-  private def perSession[V](m: java.util.WeakHashMap[SparkSession,
-        scala.collection.concurrent.TrieMap[String, V]],
-      s: SparkSession): scala.collection.concurrent.TrieMap[String, V] =
-    graft.SessionCache.perSession(m, s)
 
   /** THE batch-feed drain harness, once for every `batch*.parquet`
     * ingest in the library (text/ANN/dedup/MV/hybrid/DLQ/decon/SCD):
@@ -76,9 +69,7 @@ object StreamingOps {
   /** Source schemas per session+dir: one batch footer read each —
     * a required-by-API explicit schema for the file stream, kept
     * honest by reading it from the actual file. */
-  private val sourceSchemas =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, StructType]]
+  private val sourceSchemas = graft.SessionCache.newCache[StructType]()
 
   /** File-source stream over the events parquet (glob keeps the file
     * source happy with a single-file "directory"). Built on the
@@ -115,20 +106,11 @@ object StreamingOps {
     * session could pick up the temporary value — exactly what sbt
     * test's parallel suites do. A clone is how Spark itself scopes
     * per-job conf (one SparkContext, many SparkSessions). */
-  private val streamSessions =
-    new java.util.WeakHashMap[SparkSession, SparkSession]
-
-  private def streamSession(s0: SparkSession): SparkSession =
-    streamSessions.synchronized {
-      val cur = streamSessions.get(s0)
-      if (cur != null) cur
-      else {
-        val c = s0.newSession()
-        c.conf.set("spark.sql.shuffle.partitions", StatePartitions.toString)
-        streamSessions.put(s0, c)
-        c
-      }
-    }
+  private val streamSession = new PerSession[SparkSession]({ s0 =>
+    val c = s0.newSession()
+    c.conf.set("spark.sql.shuffle.partitions", StatePartitions.toString)
+    c
+  })
 
   /** Run a streaming DataFrame to completion on AvailableNow into a
     * uniquely-named memory sink; return the materialized result as a
@@ -146,7 +128,7 @@ object StreamingOps {
       : DataFrame = {
     val s = out.sparkSession
     val name = "graft_stream_" + UUID.randomUUID().toString.replace("-", "")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt_")
+    val ckpt = scratchDir("ckpt")
     val (rows, schema) =
       try {
         val q = out.writeStream.format("memory").queryName(name)
@@ -171,7 +153,7 @@ object StreamingOps {
     * keys), the witness OOMing on data the serve path handles
     * distributed. The spill dir must outlive the call (the returned
     * frame reads it lazily), so it is swept at JVM exit
-    * ([[exitDeleteDirs]]), not here. */
+    * ([[graft.Fs.deleteOnExit]]), not here. */
   private def rehome(parent: SparkSession, df: DataFrame): DataFrame = {
     // eager localCheckpoint: materializes the state rows into executor
     // blocks BEFORE the caller deletes the temp state dir, exactly as
@@ -334,9 +316,7 @@ object StreamingOps {
   private val LateMid = "2024-01-29 00:00:00"
   private val LateCutover = "2024-01-30 00:00:00"
 
-  private val lateLayouts =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, String]]
+  private val lateLayouts = new ArtifactDir("evlate")
 
   /** One parquet FILE (not directory) per arrival batch, with an
     * explicit mtime — the file source processes oldest-first, so
@@ -344,7 +324,7 @@ object StreamingOps {
     * depend on. */
   private def writeSingleFile(df: DataFrame, dest: java.nio.file.Path,
                               mtime: Long): Unit = {
-    val staging = java.nio.file.Files.createTempDirectory("graft_late_stage_")
+    val staging = scratchDir("late_stage")
     try {
       df.coalesce(1).write.mode("overwrite").parquet(staging.toString)
       val part = staging.toFile.listFiles()
@@ -368,9 +348,7 @@ object StreamingOps {
     * time, arriving one batch late: their window is still open →
     * must be MERGED). */
   private def lateLayout(s: SparkSession, d: String): String =
-    perSession(lateLayouts, s).getOrElseUpdate(d, {
-      val p = s"${System.getProperty("java.io.tmpdir")}/graft_evlate_" +
-        graft.ops.Tables.layoutTag(d)
+    lateLayouts(s, d) { p =>
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(p))
       val ev = graft.ops.Tables.events(s, d)
         .select(col("ts"), col("user_id"), col("event_type"), col("event_id"))
@@ -387,9 +365,7 @@ object StreamingOps {
       writeSingleFile(day29, java.nio.file.Paths.get(p, "batch1.parquet"), now - 120000)
       writeSingleFile(tail.unionByName(dropClones).unionByName(keepClones),
         java.nio.file.Paths.get(p, "batch2.parquet"), now - 60000)
-      exitDeleteDirs.add(p)
-      p
-    })
+    }
 
   /** Late-data accounting under an event-time watermark — the
     * semantics every production stream must prove: a straggler whose
@@ -637,8 +613,8 @@ object StreamingOps {
   }
 
   val st_parquet_sink: Q = (s, d) => {
-    val out = java.nio.file.Files.createTempDirectory("graft_sink_out_")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_sink_ckpt_")
+    val out = scratchDir("sink_out")
+    val ckpt = scratchDir("sink_ckpt")
     try runParquetSink(s, d, out.toString, ckpt.toString)
     finally deleteRecursively(ckpt.toFile) // data files stay; only stream state goes
     s.read.parquet(out.toString)
@@ -769,31 +745,13 @@ object StreamingOps {
   /** Write-once multi-file copy of events so the file source can
     * drain in SEVERAL micro-batches (8 files, maxFilesPerTrigger=2 →
     * 4 batches) — a single-file fixture would make any foreachBatch
-    * pattern trivially single-batch. Weak-keyed per session (see
-    * [[perSession]]); every created copy is registered for JVM-exit
-    * deletion — each session's layoutTag nonce gets its own tmp copy
-    * by design (a second session must never overwrite files a first
-    * may still read), so without the exit hook a long-lived process
-    * would accrete one 8-file dir per session under java.io.tmpdir. */
-  private val splitLayouts =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, String]]
-
-  private val exitDeleteDirs =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      exitDeleteDirs.forEach(p => deleteRecursively(new java.io.File(p)))))
-  }
+    * pattern trivially single-batch. */
+  private val splitEventsLayouts = new ArtifactDir("evsplit")
 
   private def splitEventsLayout(s: SparkSession, d: String): String =
-    perSession(splitLayouts, s).getOrElseUpdate(d, {
-      val p = s"${System.getProperty("java.io.tmpdir")}/graft_evsplit_" +
-        graft.ops.Tables.layoutTag(d)
+    splitEventsLayouts(s, d) { p =>
       graft.ops.Tables.events(s, d).repartition(8).write.mode("overwrite").parquet(p)
-      exitDeleteDirs.add(p)
-      p
-    })
+    }
 
   /** Streaming MERGE/upsert — the Delta-style `foreachBatch` pattern
     * done Spark-native: each micro-batch reduces its rows to per-key
@@ -825,9 +783,7 @@ object StreamingOps {
     * commit simply rewrites the same epoch dirs before re-flipping). */
   val st_upsert: Q = (s, d) => st_upsert_run(s, d, _ => ())
 
-  private val upsertAsofDirs =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, String]]()
+  private val upsertAsofStateDirs = new ArtifactDir("upsasof")
 
   /** Write-once state table for [[st_upsert_asof]]: four DETERMINISTIC
     * merge batches (`event_id % 4 = b`, b = 0..3 — batch membership a
@@ -835,9 +791,7 @@ object StreamingOps {
     * intermediate epochs depend on how `repartition(8)` dealt the
     * rows) committed as epochs 0..3. */
   private[graft] def upsertAsofStateDir(s: SparkSession, d: String): String =
-    perSession(upsertAsofDirs, s).getOrElseUpdate(d, {
-      val p = s"${System.getProperty("java.io.tmpdir")}/graft_upsasof_" +
-        graft.ops.Tables.layoutTag(d)
+    upsertAsofStateDirs(s, d) { p =>
       if (!java.nio.file.Files.exists(
             java.nio.file.Paths.get(p, "_manifest.json"))) {
         val ev = graft.ops.Tables.events(s, d)
@@ -845,9 +799,7 @@ object StreamingOps {
           mergeUpsertBatch(s, p, ev.filter(pmod(col("event_id"), lit(4)) === b)): Unit
         }
       }
-      exitDeleteDirs.add(p)
-      p
-    })
+    }
 
   /** UPSERT-STATE TIME TRAVEL, oracle-checked — the FIFTH durable
     * artifact joins the as-of family (MV `q_mv_asof`, text
@@ -871,8 +823,8 @@ object StreamingOps {
 
   private[graft] def st_upsert_run(s: SparkSession, d: String,
                                    onBatch: Long => Unit): DataFrame = {
-    val stateDir = java.nio.file.Files.createTempDirectory("graft_upsert_state_")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_upsert_ckpt_")
+    val stateDir = scratchDir("upsert_state")
+    val ckpt = scratchDir("upsert_ckpt")
     try runUpsert(s, d, stateDir.toString, ckpt.toString, onBatch)
     finally {
       deleteRecursively(ckpt.toFile)
@@ -1177,25 +1129,13 @@ object StreamingOps {
     readUpsertManifest(java.nio.file.Paths.get(stateDirPath))
       .map(_.epoch).getOrElse(-1L)
 
-  private val dualSinkDirs =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, (String, String)]]()
+  private val dualSinkLayouts = new Artifact[(String, String)]("dualsink")
 
   private def dualSinkLayout(s: SparkSession, d: String): (String, String) =
-    perSession(dualSinkDirs, s).getOrElseUpdate(d, {
-      val pid = ProcessHandle.current().pid()
-      val tag = graft.ops.Tables.layoutTag(d)
-      val tmp = System.getProperty("java.io.tmpdir")
-      val mv = s"$tmp/graft_dualmv_${pid}_$tag"
-      val st = s"$tmp/graft_dualstate_${pid}_$tag"
-      val ck = s"$tmp/graft_dualckpt_${pid}_$tag"
-      val tx = s"$tmp/graft_dualtxn_${pid}_$tag"
-      Seq(mv, st, ck, tx).foreach { p =>
-        graft.Fs.deleteRecursively(new java.io.File(p)); exitDeleteDirs.add(p)
-      }
-      runDualSink(s, d, mv, st, ck, tx)
-      (mv, st)
-    })
+    dualSinkLayouts(s, d) { p =>
+      runDualSink(s, d, s"$p/mv", s"$p/state", s"$p/ckpt", s"$p/txn")
+      (s"$p/mv", s"$p/state")
+    }
 
   /** One stream, TWO artifacts, one logical commit per micro-batch:
     * serve both sinks and join them — the per-type MV totals beside
@@ -1249,27 +1189,20 @@ object StreamingOps {
       .write.mode("overwrite").parquet(s"$stateDirPath/$rel")
     val n = s.read.parquet(s"$stateDirPath/$rel").count()
     graft.ManifestIo.atomicWrite(stateDir.resolve("_dv.json"),
-      s"""{"epoch":${man.epoch},"rel":"$rel","n":$n}""")
+      Serialization.write(DvPointer(man.epoch, rel, n)))
     n
   }
 
-  /** (epoch, rel) of the committed deletion vector, if any. */
-  private[graft] def readDvPointer(stateDirPath: String): Option[(Long, String)] = {
+  /** The committed deletion vector `_dv.json`: the state epoch it
+    * indexes, its dir relative to the state dir, and its row count. */
+  private[graft] case class DvPointer(epoch: Long, rel: String, n: Long)
+
+  private implicit val dvFormats: org.json4s.Formats = org.json4s.DefaultFormats
+
+  private[graft] def readDvPointer(stateDirPath: String): Option[DvPointer] = {
     val p = java.nio.file.Paths.get(stateDirPath, "_dv.json")
-    if (!java.nio.file.Files.exists(p)) None
-    else {
-      import org.json4s._
-      val j = org.json4s.jackson.JsonMethods.parse(java.nio.file.Files.readString(p))
-      val epoch = (j \ "epoch") match {
-        case JInt(n) => n.toLong
-        case other   => sys.error(s"bad dv epoch $other")
-      }
-      val rel = (j \ "rel") match {
-        case JString(r) => r
-        case other      => sys.error(s"bad dv rel $other")
-      }
-      Some((epoch, rel))
-    }
+    Option.when(java.nio.file.Files.exists(p))(
+      Serialization.read[DvPointer](java.nio.file.Files.readString(p)))
   }
 
   /** Merge-on-read serve: state files (never rewritten by the delete)
@@ -1285,7 +1218,7 @@ object StreamingOps {
         col("_metadata.row_index").as("idx"),
         col("user_id"), col("tus"), col("event_type"), col("cents"))
     val alive = readDvPointer(stateDirPath) match {
-      case Some((e, rel)) =>
+      case Some(DvPointer(e, rel, _)) =>
         require(e == man.epoch,
           s"deletion vector is based on epoch $e but the table is at ${man.epoch} " +
             "— a bucket rewrite must re-base or drop its vector (compactDv does)")
@@ -1307,7 +1240,7 @@ object StreamingOps {
     val stateDir = java.nio.file.Paths.get(stateDirPath)
     val man = readUpsertManifest(stateDir)
       .getOrElse(sys.error(s"no state table at $stateDirPath"))
-    val (e, rel) = readDvPointer(stateDirPath)
+    val DvPointer(e, rel, _) = readDvPointer(stateDirPath)
       .getOrElse(sys.error(s"no deletion vector at $stateDirPath"))
     require(e == man.epoch, s"stale deletion vector (epoch $e vs ${man.epoch})")
     val dv = s.read.parquet(s"$stateDirPath/$rel")
@@ -1329,30 +1262,16 @@ object StreamingOps {
     deleteRecursively(stateDir.resolve(rel).toFile)
   }
 
-  private val dvStateDirs =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, String]]()
+  private val dvLayouts = new Artifact[String]("dvstate")
 
   /** Materialize the upsert state once per (session, fixture) and
     * commit the deletion vector over it. */
   private def dvLayout(s: SparkSession, d: String): String =
-    perSession(dvStateDirs, s).getOrElseUpdate(d, {
-      // pid-tagged (like the MvStore artifact dirs): this layout
-      // deletes-then-recreates, which would tear under a concurrently
-      // reading JVM on a shared path
-      val pid = ProcessHandle.current().pid()
-      val st = s"${System.getProperty("java.io.tmpdir")}/graft_dvstate_${pid}_" +
-        graft.ops.Tables.layoutTag(d)
-      val ck = s"${System.getProperty("java.io.tmpdir")}/graft_dvckpt_${pid}_" +
-        graft.ops.Tables.layoutTag(d)
-      exitDeleteDirs.add(st)
-      exitDeleteDirs.add(ck)
-      graft.Fs.deleteRecursively(new java.io.File(st))
-      graft.Fs.deleteRecursively(new java.io.File(ck))
-      runUpsert(s, d, st, ck): Unit
-      commitDv(s, st): Unit
-      st
-    })
+    dvLayouts(s, d) { p =>
+      runUpsert(s, d, s"$p/state", s"$p/ckpt"): Unit
+      commitDv(s, s"$p/state"): Unit
+      s"$p/state"
+    }
 
   /** The MoR-served state: full streaming MERGE materialization, then
     * a deletion-vector delete of the `user_id % 23 == 5` slice, served
@@ -1362,9 +1281,7 @@ object StreamingOps {
 
   // ------------------------------------- MERGE schema evolution (widen)
 
-  private val evolveLayouts =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, String]]
+  private val evolveLayouts = new ArtifactDir("evevo")
 
   /** Two-era arrival layout for [[st_upsert_evolve]]: events with
     * `event_id` below the cutoff are the PRE-evolution era — their
@@ -1378,9 +1295,7 @@ object StreamingOps {
   private[graft] def evolveCutoff(n: Long): Long = n * 49 / 50
 
   private def evolveLayout(s: SparkSession, d: String): String =
-    perSession(evolveLayouts, s).getOrElseUpdate(d, {
-      val p = s"${System.getProperty("java.io.tmpdir")}/graft_evevo_" +
-        graft.ops.Tables.layoutTag(d)
+    evolveLayouts(s, d) { p =>
       val ev = graft.ops.Tables.events(s, d)
       val half = evolveCutoff(ev.count())
       ev.filter(col("event_id") < half)
@@ -1391,9 +1306,7 @@ object StreamingOps {
         .select(col("event_id"), col("ts"), col("user_id"),
           col("event_type"), col("value"), col("props"))
         .repartition(3).write.mode("overwrite").parquet(s"$p/v2")
-      exitDeleteDirs.add(p)
-      p
-    })
+    }
 
   /** Per-key last-write-wins reduce over an EXPLICIT column list — the
     * evolution-aware generalization of [[runUpsert]]'s `reduceKeys`.
@@ -1492,7 +1405,7 @@ object StreamingOps {
     * over unchanged. Nulls encode "pre-evolution" in state; the query
     * surfaces them as -1 to keep the output column non-nullable. */
   val st_upsert_evolve: Q = (s, d) => {
-    val stateDir = java.nio.file.Files.createTempDirectory("graft_evolve_state_")
+    val stateDir = scratchDir("evolve_state")
     try st_upsert_evolve_run(s, d, stateDir.toString, (_, _) => ())
     finally deleteRecursively(stateDir.toFile)
   }
@@ -1508,8 +1421,8 @@ object StreamingOps {
     val ss = streamSession(s)
     val src = evolveLayout(ss, d)
     val stateDir = java.nio.file.Paths.get(stateDirPath)
-    val ckpt1 = java.nio.file.Files.createTempDirectory("graft_evolve_ck1_")
-    val ckpt2 = java.nio.file.Files.createTempDirectory("graft_evolve_ck2_")
+    val ckpt1 = scratchDir("evolve_ck1")
+    val ckpt2 = scratchDir("evolve_ck2")
     try {
       evolveDrain(ss, s"$src/v1", withProp = false, stateDir, ckpt1.toString)
       onPhase(1, readUpsertManifest(stateDir).map(_.epoch).getOrElse(-1L))
@@ -1596,8 +1509,8 @@ object StreamingOps {
     * hash-matching [[tumblingOracle]] certifies the repack lost and
     * invented nothing. */
   val st_compact: Q = (s, d) => {
-    val out = java.nio.file.Files.createTempDirectory("graft_cmp_out_")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_cmp_ckpt_")
+    val out = scratchDir("cmp_out")
+    val ckpt = scratchDir("cmp_ckpt")
     try runParquetSink(s, d, out.toString, ckpt.toString)
     finally deleteRecursively(ckpt.toFile)
     compactParquetSink(s, out.toString): Unit
@@ -1640,17 +1553,13 @@ object StreamingOps {
   private val OuterCut1 = "2024-01-20 00:00:00"
   private val OuterCut2 = "2024-01-27 00:00:00"
 
-  private val outerLayouts =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, String]]
+  private val outerLayouts = new ArtifactDir("evouter")
 
   /** Three mtime-ordered single-file batches split at [[OuterCut1]] /
     * [[OuterCut2]] — same arrival-pinning mechanism as [[lateLayout]],
     * minus the planted stragglers. */
   private def outerLayout(s: SparkSession, d: String): String =
-    perSession(outerLayouts, s).getOrElseUpdate(d, {
-      val p = s"${System.getProperty("java.io.tmpdir")}/graft_evouter_" +
-        graft.ops.Tables.layoutTag(d)
+    outerLayouts(s, d) { p =>
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(p))
       val ev = graft.ops.Tables.events(s, d)
         .select(col("ts"), col("user_id"), col("event_type"), col("event_id"))
@@ -1663,9 +1572,7 @@ object StreamingOps {
         java.nio.file.Paths.get(p, "batch1.parquet"), now - 120000)
       writeSingleFile(ev.filter(col("ts") >= c2),
         java.nio.file.Paths.get(p, "batch2.parquet"), now - 60000)
-      exitDeleteDirs.add(p)
-      p
-    })
+    }
 
   /** Watermarked stream-stream LEFT OUTER interval join — the outer
     * sibling of [[st_stream_join]] (unattributed-purchase tracking):
@@ -1780,17 +1687,13 @@ object StreamingOps {
     * mtime-pinned oldest-first — mirrored verbatim by the oracle. */
   private val ScdBatches = 3
 
-  private val scdLayouts =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, String]]
+  private val scdLayouts = new ArtifactDir("evscd")
 
   /** Three-file arrival layout for the changing-dim join (same
     * single-file-per-batch + explicit-mtime pinning as
     * [[lateLayout]]). */
   private def scdLayout(s: SparkSession, d: String): String =
-    perSession(scdLayouts, s).getOrElseUpdate(d, {
-      val p = s"${System.getProperty("java.io.tmpdir")}/graft_evscd_" +
-        graft.ops.Tables.layoutTag(d)
+    scdLayouts(s, d) { p =>
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(p))
       val ev = graft.ops.Tables.events(s, d)
         .select(col("event_id"), col("user_id"), col("event_type"),
@@ -1801,9 +1704,7 @@ object StreamingOps {
           java.nio.file.Paths.get(p, s"batch$b.parquet"),
           now - (ScdBatches - b).toLong * 60000)
       }
-      exitDeleteDirs.add(p)
-      p
-    })
+    }
 
   /** Dim version `v`'s rows over the user population: `v = 0` covers
     * every user (the base load), later versions cover a shrinking
@@ -1851,9 +1752,9 @@ object StreamingOps {
                                      onBatch: (Long, () => Long) => Unit): DataFrame = {
     val ss = streamSession(s)
     val src = scdLayout(ss, d)
-    val dimDir = java.nio.file.Files.createTempDirectory("graft_scd_dim_")
-    val outDir = java.nio.file.Files.createTempDirectory("graft_scd_out_")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_scd_ckpt_")
+    val dimDir = scratchDir("scd_dim")
+    val outDir = scratchDir("scd_out")
+    val ckpt = scratchDir("scd_ckpt")
     try {
       val base = ss.read.parquet(src)
       val schema = base.schema
@@ -1914,18 +1815,14 @@ object StreamingOps {
 
   // --------------------------------------------- streaming ANN ingest
 
-  private val annIngestDirs =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, String]]()
+  private val annIngestLayouts = new ArtifactDir("anning")
 
   /** Micro-batches of embedding inserts for [[st_ann_ingest]]: three
     * mtime-ordered single files, each one third of the LATE candidates
     * (`vec_id % 4 ∈ {1,2,3}`), already shaped as the
     * [[graft.ops.AnnIndexStore.applyDelta]] CDC contract. */
   private def annIngestLayout(s: SparkSession, d: String): String =
-    perSession(annIngestDirs, s).getOrElseUpdate(d, {
-      val p = s"${System.getProperty("java.io.tmpdir")}/graft_anning_" +
-        graft.ops.Tables.layoutTag(d)
+    annIngestLayouts(s, d) { p =>
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(p))
       val e = graft.ops.Tables.embeddings(s, d)
       val now = System.currentTimeMillis()
@@ -1937,9 +1834,7 @@ object StreamingOps {
           java.nio.file.Paths.get(p, s"batch$b.parquet"),
           now - (AnnIngestBatches - b).toLong * 60000)
       }
-      exitDeleteDirs.add(p)
-      p
-    })
+    }
 
   private[graft] val AnnIngestBatches = 3
 
@@ -1980,9 +1875,7 @@ object StreamingOps {
         graft.ops.SimilarityOps.querySide(e), k = 5, nprobe = 5))
   }
 
-  private val annIngestIndexDirs =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, String]]()
+  private val annIngestRuns = new Artifact[String]("anningidx")
 
   /** Build epoch 0 and drain the insert stream into the index once
     * per (session, fixture); returns the index dir. `ckptOverride` /
@@ -2012,24 +1905,13 @@ object StreamingOps {
     }
     (indexOverride, ckptOverride) match {
       case (Some(idx), Some(ck)) => run(idx, ck)
-      case _ =>
-        perSession(annIngestIndexDirs, s).getOrElseUpdate(d, {
-          val idx = s"${System.getProperty("java.io.tmpdir")}/graft_anningidx_" +
-            graft.ops.Tables.layoutTag(d)
-          val ck = s"${System.getProperty("java.io.tmpdir")}/graft_anningckpt_" +
-            graft.ops.Tables.layoutTag(d)
-          exitDeleteDirs.add(idx)
-          exitDeleteDirs.add(ck)
-          run(idx, ck)
-        })
+      case _ => annIngestRuns(s, d)(p => run(s"$p/idx", s"$p/ckpt"))
     }
   }
 
   // ------------------------------------------- streaming MV maintenance
 
-  private val mvIngestDirs =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, String]]()
+  private val mvIngestLayouts = new ArtifactDir("mving")
 
   private[graft] val MvIngestBatches = 3
 
@@ -2050,9 +1932,7 @@ object StreamingOps {
     * epoch 0. Raw ROWS, not partials — aggregating inside the
     * micro-batch is the shape under test. */
   private def mvIngestLayout(s: SparkSession, d: String): String =
-    perSession(mvIngestDirs, s).getOrElseUpdate(d, {
-      val p = s"${System.getProperty("java.io.tmpdir")}/graft_mving_" +
-        graft.ops.Tables.layoutTag(d)
+    mvIngestLayouts(s, d) { p =>
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(p))
       val li = graft.ops.Tables.lineitem(s, d)
         .select(col("l_orderkey"), col("l_shipdate"), col("l_returnflag"),
@@ -2063,9 +1943,7 @@ object StreamingOps {
           java.nio.file.Paths.get(p, s"batch$b.parquet"),
           now - (MvIngestBatches - b).toLong * 60000)
       }
-      exitDeleteDirs.add(p)
-      p
-    })
+    }
 
   /** STREAMING MATERIALIZED-VIEW MAINTENANCE — the MV member of the
     * live-artifact family, closing the symmetry with [[st_ann_ingest]]
@@ -2088,9 +1966,7 @@ object StreamingOps {
     graft.ops.MvStore.serve(s, dir, graft.ops.MvStore.open(dir))
   }
 
-  private val mvIngestStoreDirs =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, String]]()
+  private val mvIngestRuns = new Artifact[String]("mvingstore")
 
   /** Bootstrap epoch 0 and drain the fact stream into the MV once per
     * (session, fixture); returns the store dir. Overrides let the spec
@@ -2118,26 +1994,11 @@ object StreamingOps {
     }
     (storeOverride, ckptOverride) match {
       case (Some(st), Some(ck)) => run(st, ck)
-      case _ =>
-        perSession(mvIngestStoreDirs, s).getOrElseUpdate(d, {
-          // pid-tagged so two JVMs (bench + verify) never share a
-          // store/checkpoint pair mid-write; a killed run's leftovers
-          // are per-pid and self-heal via the epoch pins anyway
-          val pid = ProcessHandle.current().pid()
-          val st = s"${System.getProperty("java.io.tmpdir")}/graft_mvingstore_${pid}_" +
-            graft.ops.Tables.layoutTag(d)
-          val ck = s"${System.getProperty("java.io.tmpdir")}/graft_mvingckpt_${pid}_" +
-            graft.ops.Tables.layoutTag(d)
-          exitDeleteDirs.add(st)
-          exitDeleteDirs.add(ck)
-          run(st, ck)
-        })
+      case _ => mvIngestRuns(s, d)(p => run(s"$p/state", s"$p/ckpt"))
     }
   }
 
-  private val mvDistLayoutDirs =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, String]]()
+  private val mvDistinctLayouts = new ArtifactDir("mvdisting")
 
   /** Per-batch sketch partials: (month, event_type) → HLL over
     * user_id — the mergeable COUNT(DISTINCT) state
@@ -2151,9 +2012,7 @@ object StreamingOps {
     * mtime-ordered single files (`event_id % 4 ∈ {1,2,3}`); the
     * remaining quarter bootstraps epoch 0. */
   private def mvDistinctLayout(s: SparkSession, d: String): String =
-    perSession(mvDistLayoutDirs, s).getOrElseUpdate(d, {
-      val p = s"${System.getProperty("java.io.tmpdir")}/graft_mvdisting_" +
-        graft.ops.Tables.layoutTag(d)
+    mvDistinctLayouts(s, d) { p =>
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(p))
       val ev = graft.ops.Tables.events(s, d)
         .select(col("event_id"), col("ts"), col("event_type"), col("user_id"))
@@ -2163,9 +2022,7 @@ object StreamingOps {
           java.nio.file.Paths.get(p, s"batch$b.parquet"),
           now - (MvIngestBatches - b).toLong * 60000)
       }
-      exitDeleteDirs.add(p)
-      p
-    })
+    }
 
   /** STREAMING DISTINCT-COUNT MV — the sketch-state face of
     * [[st_mv_ingest]]: each micro-batch reduces ITSELF to (month,
@@ -2194,9 +2051,7 @@ object StreamingOps {
       .orderBy(col("event_type"))
   }
 
-  private val mvDistStoreDirs =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, String]]()
+  private val mvDistinctRuns = new Artifact[String]("mvdiststore")
 
   /** Bootstrap the epoch-0 sketch view and drain the event stream into
     * it once per (session, fixture); returns the store dir. Overrides
@@ -2225,28 +2080,14 @@ object StreamingOps {
     }
     (storeOverride, ckptOverride) match {
       case (Some(st), Some(ck)) => run(st, ck)
-      case _ =>
-        perSession(mvDistStoreDirs, s).getOrElseUpdate(d, {
-          val pid = ProcessHandle.current().pid()
-          val st = s"${System.getProperty("java.io.tmpdir")}/graft_mvdiststore_${pid}_" +
-            graft.ops.Tables.layoutTag(d)
-          val ck = s"${System.getProperty("java.io.tmpdir")}/graft_mvdistckpt_${pid}_" +
-            graft.ops.Tables.layoutTag(d)
-          exitDeleteDirs.add(st)
-          exitDeleteDirs.add(ck)
-          run(st, ck)
-        })
+      case _ => mvDistinctRuns(s, d)(p => run(s"$p/state", s"$p/ckpt"))
     }
   }
 
   // ---------------------------- streaming text / dedup index ingest
 
-  private val textIngestDirs =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, String]]()
-  private val textIngestIndexDirs =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, String]]()
+  private val textIngestLayouts = new ArtifactDir("texting")
+  private val textIngestRuns = new Artifact[String]("textingidx")
 
   private[graft] val TextIngestBatches = 3
 
@@ -2256,9 +2097,7 @@ object StreamingOps {
     * (doc_id, text) rows — tokenization happens inside the index's
     * delta commit, which is the shape under test. */
   private def textIngestLayout(s: SparkSession, d: String): String =
-    perSession(textIngestDirs, s).getOrElseUpdate(d, {
-      val p = s"${System.getProperty("java.io.tmpdir")}/graft_texting_" +
-        graft.ops.Tables.layoutTag(d)
+    textIngestLayouts(s, d) { p =>
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(p))
       val docs = graft.ops.Tables.documents(s, d).select(col("doc_id"), col("text"))
       val now = System.currentTimeMillis()
@@ -2267,9 +2106,7 @@ object StreamingOps {
           java.nio.file.Paths.get(p, s"batch$b.parquet"),
           now - (TextIngestBatches - b).toLong * 60000)
       }
-      exitDeleteDirs.add(p)
-      p
-    })
+    }
 
   /** Build epoch 0 and drain the document stream into the BM25 index
     * once per (session, fixture); returns the index dir. Overrides
@@ -2298,16 +2135,7 @@ object StreamingOps {
     }
     (indexOverride, ckptOverride) match {
       case (Some(idx), Some(ck)) => run(idx, ck)
-      case _ =>
-        perSession(textIngestIndexDirs, s).getOrElseUpdate(d, {
-          val idx = s"${System.getProperty("java.io.tmpdir")}/graft_textingidx_" +
-            graft.ops.Tables.layoutTag(d)
-          val ck = s"${System.getProperty("java.io.tmpdir")}/graft_textingckpt_" +
-            graft.ops.Tables.layoutTag(d)
-          exitDeleteDirs.add(idx)
-          exitDeleteDirs.add(ck)
-          run(idx, ck)
-        })
+      case _ => textIngestRuns(s, d)(p => run(s"$p/idx", s"$p/ckpt"))
     }
   }
 
@@ -2344,12 +2172,8 @@ object StreamingOps {
       .orderBy(col("doc_id"))
   }
 
-  private val dedupIngestDirs =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, String]]()
-  private val dedupIngestIndexDirs =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, String]]()
+  private val dedupIngestLayouts = new ArtifactDir("deduping")
+  private val dedupIngestRuns = new Artifact[String]("dedupingidx")
 
   private[graft] val DedupIngestBatches = 3
 
@@ -2359,9 +2183,7 @@ object StreamingOps {
     * the same old/new split as every `d_dedup_*` index witness); the
     * `% 4 = 0` quarter bootstraps epoch 0. */
   private def dedupIngestLayout(s: SparkSession, d: String): String =
-    perSession(dedupIngestDirs, s).getOrElseUpdate(d, {
-      val p = s"${System.getProperty("java.io.tmpdir")}/graft_deduping_" +
-        graft.ops.Tables.layoutTag(d)
+    dedupIngestLayouts(s, d) { p =>
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(p))
       val old = graft.ops.Tables.documents(s, d)
         .filter(col("doc_id") % 5 =!= 4).select(col("doc_id"), col("text"))
@@ -2371,9 +2193,7 @@ object StreamingOps {
           java.nio.file.Paths.get(p, s"batch$b.parquet"),
           now - (DedupIngestBatches - b).toLong * 60000)
       }
-      exitDeleteDirs.add(p)
-      p
-    })
+    }
 
   /** Build epoch 0 and drain the old-corpus stream into the near-dup
     * index once per (session, fixture); returns the index dir. */
@@ -2401,16 +2221,7 @@ object StreamingOps {
     }
     (indexOverride, ckptOverride) match {
       case (Some(idx), Some(ck)) => run(idx, ck)
-      case _ =>
-        perSession(dedupIngestIndexDirs, s).getOrElseUpdate(d, {
-          val idx = s"${System.getProperty("java.io.tmpdir")}/graft_dedupingidx_" +
-            graft.ops.Tables.layoutTag(d)
-          val ck = s"${System.getProperty("java.io.tmpdir")}/graft_dedupingckpt_" +
-            graft.ops.Tables.layoutTag(d)
-          exitDeleteDirs.add(idx)
-          exitDeleteDirs.add(ck)
-          run(idx, ck)
-        })
+      case _ => dedupIngestRuns(s, d)(p => run(s"$p/idx", s"$p/ckpt"))
     }
   }
 
@@ -2443,12 +2254,8 @@ object StreamingOps {
 
   // ------------------- dead-letter quarantine on the text ingest
 
-  private val dlqIngestDirs =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, String]]()
-  private val dlqIngestIndexDirs =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, (String, String)]]()
+  private val dlqIngestLayouts = new ArtifactDir("dlqing")
+  private val dlqIngestRuns = new Artifact[(String, String)]("dlqingidx")
 
   private[graft] val DlqBatches = 3
 
@@ -2465,9 +2272,7 @@ object StreamingOps {
     * arrive with empty text — the malformed-record fraction every
     * real feed carries. */
   private def dlqIngestLayout(s: SparkSession, d: String): String =
-    perSession(dlqIngestDirs, s).getOrElseUpdate(d, {
-      val p = s"${System.getProperty("java.io.tmpdir")}/graft_dlqing_" +
-        graft.ops.Tables.layoutTag(d)
+    dlqIngestLayouts(s, d) { p =>
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(p))
       val docs = graft.ops.Tables.documents(s, d)
         .select(col("doc_id"),
@@ -2478,9 +2283,7 @@ object StreamingOps {
           java.nio.file.Paths.get(p, s"batch$b.parquet"),
           now - (DlqBatches - b).toLong * 60000)
       }
-      exitDeleteDirs.add(p)
-      p
-    })
+    }
 
   /** Apply ONE feed micro-batch with dead-letter routing: rows that
     * tokenize to ZERO tokens go to the quarantine table, the rest
@@ -2529,17 +2332,7 @@ object StreamingOps {
     }
     (dirsOverride, ckptOverride) match {
       case (Some((t, qd)), Some(ck)) => run(t, qd, ck)
-      case _ =>
-        perSession(dlqIngestIndexDirs, s).getOrElseUpdate(d, {
-          val t = s"${System.getProperty("java.io.tmpdir")}/graft_dlqingidx_" +
-            graft.ops.Tables.layoutTag(d)
-          val qd = s"${System.getProperty("java.io.tmpdir")}/graft_dlqingq_" +
-            graft.ops.Tables.layoutTag(d)
-          val ck = s"${System.getProperty("java.io.tmpdir")}/graft_dlqingckpt_" +
-            graft.ops.Tables.layoutTag(d)
-          exitDeleteDirs.add(t); exitDeleteDirs.add(qd); exitDeleteDirs.add(ck)
-          run(t, qd, ck)
-        })
+      case _ => dlqIngestRuns(s, d)(p => run(s"$p/idx", s"$p/q", s"$p/ckpt"))
     }
   }
 
@@ -2579,9 +2372,7 @@ object StreamingOps {
 
   // ------------------- streaming decontamination gate (eval screen)
 
-  private val deconIngestIndexDirs =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, (String, String)]]()
+  private val deconIngestRuns = new Artifact[(String, String)]("deconingidx")
 
   /** The FIXED eval shingle set the gate screens against — the
     * benchmark slice's distinct 8-grams ([[graft.ops.PipelineOps
@@ -2651,15 +2442,7 @@ object StreamingOps {
     }
     (dirsOverride, ckptOverride) match {
       case (Some((t, qd)), Some(ck)) => run(t, qd, ck)
-      case _ =>
-        perSession(deconIngestIndexDirs, s).getOrElseUpdate(d, {
-          val tag = graft.ops.Tables.layoutTag(d)
-          val t = s"${System.getProperty("java.io.tmpdir")}/graft_deconingidx_$tag"
-          val qd = s"${System.getProperty("java.io.tmpdir")}/graft_deconingq_$tag"
-          val ck = s"${System.getProperty("java.io.tmpdir")}/graft_deconingckpt_$tag"
-          exitDeleteDirs.add(t); exitDeleteDirs.add(qd); exitDeleteDirs.add(ck)
-          run(t, qd, ck)
-        })
+      case _ => deconIngestRuns(s, d)(p => run(s"$p/idx", s"$p/q", s"$p/ckpt"))
     }
   }
 
@@ -2696,12 +2479,8 @@ object StreamingOps {
 
   // ------------------------- streaming WAP ingest (governed table)
 
-  private val govIngestDirs =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, String]]()
-  private val govIngestTableDirs =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, String]]()
+  private val govIngestLayouts = new ArtifactDir("goving")
+  private val govIngestRuns = new Artifact[String]("govingtbl")
 
   private[graft] val GovIngestBatches = 3
 
@@ -2712,9 +2491,7 @@ object StreamingOps {
     * Unlike the DLQ feed's per-row routing, the governed gate is
     * all-or-nothing: one bad row refuses the WHOLE batch. */
   private def govIngestLayout(s: SparkSession, d: String): String =
-    perSession(govIngestDirs, s).getOrElseUpdate(d, {
-      val p = s"${System.getProperty("java.io.tmpdir")}/graft_goving_" +
-        graft.ops.Tables.layoutTag(d)
+    govIngestLayouts(s, d) { p =>
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(p))
       val docs = graft.ops.Tables.documents(s, d)
         .select(col("doc_id"), col("source"), col("n_chars"))
@@ -2729,21 +2506,14 @@ object StreamingOps {
         writeSingleFile(rows, java.nio.file.Paths.get(p, s"batch$b.parquet"),
           now - (GovIngestBatches - b).toLong * 60000)
       }
-      exitDeleteDirs.add(p)
-      p
-    })
+    }
 
   /** Build epoch 0 (the `doc_id % 4 = 0` quarter) and drain the feed
     * through [[graft.ops.GovernedTable.ingestBatch]] once per
     * (session, fixture); returns the table dir. */
   private[graft] def runGovIngest(s: SparkSession, d: String): String =
-    perSession(govIngestTableDirs, s).getOrElseUpdate(d, {
-      val tDir = s"${System.getProperty("java.io.tmpdir")}/graft_govingtbl_" +
-        graft.ops.Tables.layoutTag(d)
-      val ck = s"${System.getProperty("java.io.tmpdir")}/graft_govingckpt_" +
-        graft.ops.Tables.layoutTag(d)
-      exitDeleteDirs.add(tDir)
-      exitDeleteDirs.add(ck)
+    govIngestRuns(s, d) { p =>
+      val (tDir, ck) = (s"$p/tbl", s"$p/ckpt")
       val ss = streamSession(s)
       val src = govIngestLayout(ss, d)
       if (!java.nio.file.Files.exists(
@@ -2764,7 +2534,7 @@ object StreamingOps {
         ()
       }
       tDir
-    })
+    }
 
   /** STREAMING INGEST THROUGH THE WAP GATE — the governed table joins
     * the five durable stores in having a live feed: every micro-batch
@@ -2809,12 +2579,8 @@ object StreamingOps {
 
   // ----------------------- hybrid (text + ANN) consistent dual ingest
 
-  private val hybridIngestDirs =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, String]]()
-  private val hybridIngestIndexDirs =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, (String, String)]]()
+  private val hybridIngestLayouts = new ArtifactDir("hybing")
+  private val hybridIngestRuns = new Artifact[(String, String)]("hybingidx")
 
   private[graft] val HybridIngestBatches = 3
 
@@ -2825,9 +2591,7 @@ object StreamingOps {
     * `% 4 = 0` quarter bootstraps both indexes' epoch 0. One feed, two
     * artifacts — the freshness-coupling shape under test. */
   private def hybridIngestLayout(s: SparkSession, d: String): String =
-    perSession(hybridIngestDirs, s).getOrElseUpdate(d, {
-      val p = s"${System.getProperty("java.io.tmpdir")}/graft_hybing_" +
-        graft.ops.Tables.layoutTag(d)
+    hybridIngestLayouts(s, d) { p =>
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(p))
       val rows = hybridCandRecords(s, d)
       val now = System.currentTimeMillis()
@@ -2836,9 +2600,7 @@ object StreamingOps {
           java.nio.file.Paths.get(p, s"batch$b.parquet"),
           now - (HybridIngestBatches - b).toLong * 60000)
       }
-      exitDeleteDirs.add(p)
-      p
-    })
+    }
 
   /** The candidate corpus as full records: (doc_id, text, embedding)
     * for every `vec_id ≥ 8` — both representations of one document,
@@ -2905,17 +2667,7 @@ object StreamingOps {
     }
     (dirsOverride, ckptOverride) match {
       case (Some((t, a)), Some(ck)) => run(t, a, ck)
-      case _ =>
-        perSession(hybridIngestIndexDirs, s).getOrElseUpdate(d, {
-          val t = s"${System.getProperty("java.io.tmpdir")}/graft_hybingtext_" +
-            graft.ops.Tables.layoutTag(d)
-          val a = s"${System.getProperty("java.io.tmpdir")}/graft_hybingann_" +
-            graft.ops.Tables.layoutTag(d)
-          val ck = s"${System.getProperty("java.io.tmpdir")}/graft_hybingckpt_" +
-            graft.ops.Tables.layoutTag(d)
-          exitDeleteDirs.add(t); exitDeleteDirs.add(a); exitDeleteDirs.add(ck)
-          run(t, a, ck)
-        })
+      case _ => hybridIngestRuns(s, d)(p => run(s"$p/text", s"$p/ann", s"$p/ckpt"))
     }
   }
 

@@ -169,4 +169,21 @@ class EpochStoreSpec extends AnyFunSuite {
     assert(DumpConverter.completedTables(conf, out.toString, "ab12") ==
       Map(table -> 12L, "orders" -> 5L))
   }
+
+  test("cross-store txn intents keep their JSON shape, and an earlier-format intent still parses") {
+    // an intent exactly as the earlier hand-written renderer wrote it
+    val golden = """{"id":"b3","steps":[{"store":"mv","dir":"/t/we\"ird\\mv",""" +
+      """"expectedEpoch":4,"payload":"a\nb"},""" +
+      """{"store":"upsert","dir":"/t/st","expectedEpoch":3,"payload":""}]}"""
+    val steps = Seq(ArtifactTxn.Step("mv", "/t/we\"ird\\mv", 4L, "a\nb"),
+      ArtifactTxn.Step("upsert", "/t/st", 3L, ""))
+    val log = tmp()
+    Files.writeString(log.resolve("_txn-b3.json"), golden)
+    assert(ArtifactTxn.pending(log) == Seq(ArtifactTxn.Txn("b3", steps)))
+    // a crash after the intent leaves it on disk byte-identical
+    val fresh = tmp()
+    intercept[RuntimeException](ArtifactTxn.run(fresh, "b3", steps,
+      _ => throw new RuntimeException("injected crash"), _ => 3L))
+    assert(Files.readString(fresh.resolve("_txn-b3.json")) == golden)
+  }
 }

@@ -387,6 +387,24 @@ class SimilarityOpsSpec extends AnyFunSuite {
     assert(pos > 0.4 && pos < 0.6, s"hyperplane signs skewed: $pos positive")
   }
 
+  test("lshBandKeys drops a vector with a null element (and a null vector) instead of emitting null sigs") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val planes = SimilarityOps.lshPlanes(SimilarityOps.LshBands * SimilarityOps.LshRowsPerBand)
+    val dim = planes.head.length
+    val ok: Seq[Any] = Seq.tabulate(dim)(i => (i + 1).toDouble)
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("v", ArrayType(DoubleType, containsNull = true))))
+    val df = spark.createDataFrame(java.util.Arrays.asList(
+      Row(1L, ok), Row(2L, ok.updated(dim / 2, null)), Row(3L, null)), schema)
+    val keys = SimilarityOps.lshBandKeys(df, "v", planes)
+    val perId = keys.groupBy(col("id")).count().collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(perId == Map(1L -> SimilarityOps.LshBands.toLong),
+      s"only the all-non-null vector may yield band keys, got $perId")
+    assert(keys.filter(col("sig").isNull).isEmpty)
+  }
+
   test("LSH bound-witness query emits the exact top-k size and an all-true recall flag") {
     val r = SimilarityOps.s_ann_lsh(spark, sf).head()
     assert(r.getAs[Long]("n_exact") > 0)
