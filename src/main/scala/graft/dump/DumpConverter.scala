@@ -10,13 +10,13 @@ import org.apache.spark.TaskContext
 import org.apache.spark.internal.io.{FileCommitProtocol, FileNameSpec}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
 import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.{LongAccumulator, SerializableConfiguration}
 
 /** mysqldump → one Snappy parquet dir per table, the reference's whole
@@ -60,8 +60,10 @@ import org.apache.spark.util.{LongAccumulator, SerializableConfiguration}
   *      its open writer (`parquet_writer.rs:82-91`): a task opens one
   *      parquet writer per table it meets (mysqldump writes a table's
   *      rows contiguously, so a split touches one or two tables) and
-  *      encodes its rows through the serializer `createDataFrame`
-  *      uses. Rows are never shuffled, and one job writes every table.
+  *      hands it the rows [[DumpParser.InsertDecoder]] decodes each
+  *      INSERT into — parquet-ready `InternalRow`s, with no boxed value
+  *      or `Row` encoder in between. Rows are never shuffled, and one
+  *      job writes every table.
   *      Parallelism is therefore the statement partition count: when
   *      the assembled statements have fewer partitions than
   *      `defaultParallelism` (gzip, a single zstd shard, a small
@@ -455,7 +457,7 @@ object DumpConverter {
       val useTimelineB = sc.broadcast(useTimeline)
       val dropped = sc.longAccumulator("droppedInserts")
       // Resume, statement level: a completed table's INSERTs skip
-      // parseInsert/coerceRow entirely — at a 99 %-complete restart
+      // the INSERT decode entirely — at a 99 %-complete restart
       // the parse CPU is the dominant cost, and paying it only to
       // filter the rows later would make "resume" a re-run with extra
       // steps. Quarantine mode must NOT take this shortcut: the bad-row
@@ -472,62 +474,53 @@ object DumpConverter {
       val completedStmtSkipB =
         sc.broadcast(if (quarantine) Set.empty[String] else completed.keySet)
 
-      // The single parse pass: INSERT → (table, coerced Row).
-      val rows: RDD[(String, Row)] = statements.flatMap { case (pos, s) =>
-        if (!s.startsWith("INSERT INTO")) Iterator.empty
-        else {
-          val t = qualify(latestAt(useTimelineB.value, pos).getOrElse(""),
-            DumpParser.insertTarget(s))
-          // Strict mode (`parquet_writer.rs:93-95`): only the current
-          // section's table may receive rows; everything else warns per
-          // statement on stderr and drops, like the reference.
-          val strictOk = !strictTables || latestAt(timelineB.value, pos).contains(t)
-          lastCreateB.value.get(t) match {
-            case _ if completedStmtSkipB.value.contains(t) => Iterator.empty
-            case Some((cpos, schema))
-                if strictOk && (pos._1 > cpos._1 || (pos._1 == cpos._1 && pos._2 > cpos._2)) =>
-              if (!quarantine) {
-                val ins = DumpParser.parseInsert(s, types)
-                val align = DumpParser.rowAligner(ins, schema)
-                ins.rows.iterator.map(v => (t, DumpParser.coerceRow(t, schema, align(v))))
-              } else {
-                // Bad-row side channel: a malformed STATEMENT (tokenizer
-                // failure, i64 overflow) quarantines once with the
-                // statement prefix; a bad ROW in a well-formed statement
-                // quarantines just that row — the statement's other rows
-                // still land. One statement can never fail a 10-hour
-                // 100 TB ingest.
-                try {
-                  val ins = DumpParser.parseInsert(s, types)
-                  // a bad column LIST (unknown/duplicate name) fails
-                  // eagerly here → statement-level quarantine; a bad
-                  // ROW arity fails inside align(v) → row-level
-                  val align = DumpParser.rowAligner(ins, schema)
-                  ins.rows.iterator.flatMap { v =>
-                    try Iterator((t, DumpParser.coerceRow(t, schema, align(v))))
-                    catch {
-                      case scala.util.control.NonFatal(e) =>
-                        // getMessage can be null (bare NPE); the reason
-                        // column is non-nullable, so fall back to the class.
-                        Iterator((QuarantineTable,
-                          Row(t, Option(e.getMessage).getOrElse(e.getClass.getName),
-                            v.map(x => if (x == null) "NULL" else x.toString)
-                              .mkString("(", ", ", ")"))))
+      // The single parse pass: INSERT → (table, parquet-ready row), one
+      // decoder per table a task meets.
+      val rows: RDD[(String, InternalRow)] = statements.mapPartitions { it =>
+        val decoders = scala.collection.mutable.HashMap[String, DumpParser.InsertDecoder]()
+        it.flatMap { case (pos, s) =>
+          if (!s.startsWith("INSERT INTO")) Iterator.empty
+          else {
+            val t = qualify(latestAt(useTimelineB.value, pos).getOrElse(""),
+              DumpParser.insertTarget(s))
+            // Strict mode (`parquet_writer.rs:93-95`): only the current
+            // section's table may receive rows; everything else warns per
+            // statement on stderr and drops, like the reference.
+            val strictOk = !strictTables || latestAt(timelineB.value, pos).contains(t)
+            lastCreateB.value.get(t) match {
+              case _ if completedStmtSkipB.value.contains(t) => Iterator.empty
+              case Some((cpos, schema))
+                  if strictOk && (pos._1 > cpos._1 || (pos._1 == cpos._1 && pos._2 > cpos._2)) =>
+                val dec = decoders.getOrElseUpdate(t, new DumpParser.InsertDecoder(t, schema, types))
+                if (!quarantine) {
+                  dec.decode(s)
+                  dec.rejects.headOption.foreach(r => throw r._1)
+                  dec.rows.map(r => (t, r))
+                } else {
+                  // Bad-row side channel: a malformed STATEMENT (tokenizer
+                  // failure, i64 overflow, a bad column LIST) quarantines
+                  // once with the statement prefix and lands none of its
+                  // rows; a bad ROW in a well-formed statement quarantines
+                  // just that row — the statement's other rows still land.
+                  // One statement can never fail a 10-hour 100 TB ingest.
+                  try {
+                    dec.decode(s)
+                    val rejected = dec.rejects.map { case (e, v) =>
+                      quarantined(t, e, v.map(x => if (x == null) "NULL" else x.toString)
+                        .mkString("(", ", ", ")"))
                     }
+                    dec.rows.map(r => (t, r)) ++ rejected
+                  } catch {
+                    case scala.util.control.NonFatal(e) => Iterator(quarantined(t, e, s.take(500)))
                   }
-                } catch {
-                  case scala.util.control.NonFatal(e) =>
-                    Iterator((QuarantineTable,
-                      Row(t, Option(e.getMessage).getOrElse(e.getClass.getName),
-                        s.take(500))))
                 }
-              }
-            case _ =>
-              if (strictTables && !strictOk)
-                System.err.println("Received a line from an unknown table: " +
-                  "CREATE TABLE statement must precede any INSERT INTO.")
-              dropped.add(1)
-              Iterator.empty
+              case _ =>
+                if (strictTables && !strictOk)
+                  System.err.println("Received a line from an unknown table: " +
+                    "CREATE TABLE statement must precede any INSERT INTO.")
+                dropped.add(1)
+                Iterator.empty
+            }
           }
         }
       }
@@ -630,6 +623,15 @@ object DumpConverter {
     }
   }
 
+  /** A `_quarantine` record: the table a rejected row or statement was
+    * bound for, the reason (getMessage can be null — a bare NPE — and
+    * the column is non-nullable, so the class name stands in) and the
+    * raw content. */
+  private def quarantined(table: String, e: Throwable, raw: String): (String, InternalRow) =
+    (QuarantineTable, InternalRow(UTF8String.fromString(table),
+      UTF8String.fromString(Option(e.getMessage).getOrElse(e.getClass.getName)),
+      UTF8String.fromString(raw)))
+
   /** The one write job: every task of `rows` writes its rows into one
     * parquet file per table it meets, under `staging/<table>/`, and the
     * job commits through ONE `FileCommitProtocol` rooted at `staging`.
@@ -640,7 +642,7 @@ object DumpConverter {
     * row to get one schema-only file, as a Spark write of an empty
     * DataFrame does. Rows of tables outside `schemas` (completed by an
     * earlier run) are dropped. */
-  private def writeTables(spark: SparkSession, rows: RDD[(String, Row)],
+  private def writeTables(spark: SparkSession, rows: RDD[(String, InternalRow)],
                           schemas: Map[String, StructType], staging: Path,
                           codec: String, rowsOut: LongAccumulator): Unit = {
     val sc = spark.sparkContext
@@ -669,7 +671,7 @@ object DumpConverter {
     val sinksB = sc.broadcast(sinks)
     committer.setupJob(job)
     try {
-      val msgs = sc.runJob(rows, (ctx: TaskContext, it: Iterator[(String, Row)]) =>
+      val msgs = sc.runJob(rows, (ctx: TaskContext, it: Iterator[(String, InternalRow)]) =>
         writePartition(ctx, it, committer, tracker, baseB.value.value, sinksB.value, rowsOut))
       msgs.foreach(committer.onTaskCommit)
       committer.commitJob(job, msgs.toSeq)
@@ -691,10 +693,10 @@ object DumpConverter {
   }
 
   /** One write task: set up the task attempt with the committer, open a
-    * writer per table on the table's first row, encode rows with the
-    * serializer `createDataFrame` uses, then close and commit — or
-    * close and abort the attempt on any failure. */
-  private def writePartition(ctx: TaskContext, rows: Iterator[(String, Row)],
+    * writer per table on the table's first row, write the rows as they
+    * come, then close and commit — or close and abort the attempt on
+    * any failure. */
+  private def writePartition(ctx: TaskContext, rows: Iterator[(String, InternalRow)],
                              committer: FileCommitProtocol, tracker: String,
                              base: Configuration, sinks: Map[String, Sink],
                              rowsOut: LongAccumulator): FileCommitProtocol.TaskCommitMessage = {
@@ -711,28 +713,26 @@ object DumpConverter {
     }
     val taskCtx = attemptContext(new Configuration(base))
     committer.setupTask(taskCtx)
-    val open = scala.collection.mutable.HashMap[String, (OutputWriter, ExpressionEncoder.Serializer[Row])]()
+    val open = scala.collection.mutable.HashMap[String, OutputWriter]()
     try {
       var n = 0L
       rows.foreach { case (t, row) =>
         sinks.get(t).foreach { sink =>
-          val (writer, toInternal) = open.getOrElseUpdate(t, {
+          open.getOrElseUpdate(t, {
             val c = attemptContext(sink.conf(base))
             val path = committer.newTaskTempFile(
               taskCtx, Some(t), FileNameSpec("", "-c000" + sink.factory.getFileExtension(c)))
-            (sink.factory.newInstance(path, sink.schema, c),
-              ExpressionEncoder(RowEncoder.encoderFor(sink.schema)).createSerializer())
-          })
-          writer.write(toInternal(row))
+            sink.factory.newInstance(path, sink.schema, c)
+          }).write(row)
           n += 1
         }
       }
-      open.values.foreach(_._1.close())
+      open.values.foreach(_.close())
       rowsOut.add(n)
       committer.commitTask(taskCtx)
     } catch {
       case e: Throwable =>
-        open.values.foreach(w => try w._1.close() catch { case scala.util.control.NonFatal(_) => () })
+        open.values.foreach(w => try w.close() catch { case scala.util.control.NonFatal(_) => () })
         committer.abortTask(taskCtx)
         throw e
     }

@@ -1,10 +1,16 @@
 package graft.dump
 
 import java.time.{LocalDate, LocalDateTime, ZoneOffset}
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.SpecificInternalRow
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Hand-rolled MySQL-dump statement parser: `CREATE TABLE` → StructType,
-  * extended `INSERT INTO ... VALUES` → typed rows. Replaces the
+  * extended `INSERT INTO ... VALUES` → parquet-ready rows
+  * ([[InsertDecoder]]) or boxed ones ([[parseInsert]]). Replaces the
   * reference's use of sqlparser 0.41 (`/root/reference/src/line_parser.rs`)
   * — no external parser dependency resolves offline, and we only need the
   * two statement shapes mysqldump emits.
@@ -29,7 +35,9 @@ import org.apache.spark.sql.types._
   *     date-only literals in timestamp columns parse as midnight UTC
   *     instead of panicking on the fixed-offset slice; fractional
   *     seconds are honored to micros instead of being sliced off.
-  *     Timestamps are still interpreted as UTC wall-clock.
+  *     Timestamps are still interpreted as UTC wall-clock, and dates
+  *     on the proleptic Gregorian calendar at every year, as chrono
+  *     does.
   *   - DEVIATION (extends a reference bail, `line_parser.rs:256`
   *     `Unsupported syntax for value`): charset-introducer literals
   *     (`_binary '...'`, `_utf8mb4 '...'`) parse as their string body,
@@ -88,6 +96,8 @@ object DumpParser extends Serializable {
     * extended-INSERT statements parse in one allocation-light pass. */
   private final class Cursor(val s: String) {
     var i = 0
+    /** The literal [[scanValue]] read last. */
+    val lit = new Lit
     def eof: Boolean = i >= s.length
     def peek: Char = s.charAt(i)
     def skipWs(): Unit = while (!eof && Character.isWhitespace(peek)) i += 1
@@ -230,7 +240,7 @@ object DumpParser extends Serializable {
         case ',' | ')' if depth == 0 => done = true
         case '(' => depth += 1; c.i += 1
         case ')' => depth -= 1; c.i += 1
-        case '\'' => skipStringLiteral(c)
+        case '\'' => scanString(c)
         case '`' | '"' => c.ident(); ()
         case ch if Character.isLetter(ch) =>
           val w = c.word().toUpperCase
@@ -250,7 +260,7 @@ object DumpParser extends Serializable {
             case "DEFAULT" =>
               c.skipWs()
               if (!c.eof) c.peek match {
-                case '\'' => skipStringLiteral(c)
+                case '\'' => scanString(c)
                 case '(' => c.i += 1; skipParenBody(c)
                 case '-' => c.i += 1; c.word(); ()
                 case _ =>
@@ -276,7 +286,7 @@ object DumpParser extends Serializable {
         case ',' | ')' if depth == 0 => done = true
         case '(' => depth += 1; c.i += 1
         case ')' => depth -= 1; c.i += 1
-        case '\'' => skipStringLiteral(c)
+        case '\'' => scanString(c)
         case _ => c.i += 1
       }
     }
@@ -290,24 +300,9 @@ object DumpParser extends Serializable {
       c.peek match {
         case '('  => depth += 1; c.i += 1
         case ')'  => depth -= 1; c.i += 1
-        case '\'' => skipStringLiteral(c)
+        case '\'' => scanString(c)
         case _    => c.i += 1
       }
-    }
-  }
-
-  /** Cursor at opening '\''; consume the whole literal (escapes + ''). */
-  private def skipStringLiteral(c: Cursor): Unit = {
-    c.i += 1
-    var done = false
-    while (!done) {
-      if (c.eof) fail("unterminated string literal")
-      val ch = c.peek
-      if (ch == '\\') c.i += 2
-      else if (ch == '\'') {
-        if (c.i + 1 < c.s.length && c.s.charAt(c.i + 1) == '\'') c.i += 2
-        else { c.i += 1; done = true }
-      } else c.i += 1
     }
   }
 
@@ -330,8 +325,24 @@ object DumpParser extends Serializable {
 
   def parseInsert(stmt: String): InsertInto = parseInsert(stmt, DefaultTypes)
 
+  /** The whole statement as boxed rows. The converter decodes with
+    * [[InsertDecoder]] instead; both read the literals through
+    * [[scanValue]], so they accept and reject the same statements. */
   def parseInsert(stmt: String, opts: TypeOptions): InsertInto = {
     val c = new Cursor(stmt)
+    val (table, columns) = insertHead(c)
+    val rows = Vector.newBuilder[Array[Any]]
+    var more = true
+    while (more) {
+      rows += boxedTuple(c, opts)
+      more = c.tryConsume(',')
+    }
+    InsertInto(table, rows.result(), columns)
+  }
+
+  /** `INSERT INTO t [(columns)] VALUES`, leaving the cursor before the
+    * first tuple: the table name and the lowercased column list. */
+  private def insertHead(c: Cursor): (String, Vector[String]) = {
     c.i = "INSERT INTO".length
     val table = c.ident()
     c.skipWs()
@@ -354,63 +365,150 @@ object DumpParser extends Serializable {
     }
     val kw = c.word()
     if (!kw.equalsIgnoreCase("VALUES")) fail(s"expected VALUES in INSERT, got '$kw': ${c.context}")
-    val rows = Vector.newBuilder[Array[Any]]
-    var more = true
-    while (more) {
-      c.expect('(')
-      val row = Vector.newBuilder[Any]
-      var rowDone = false
-      while (!rowDone) {
-        row += parseValue(c, opts)
-        if (c.tryConsume(',')) ()
-        else { c.expect(')'); rowDone = true }
-      }
-      rows += row.result().toArray
-      more = c.tryConsume(',')
-    }
-    InsertInto(table, rows.result(), columns.result())
+    (table, columns.result())
   }
 
-  /** One literal: NULL | TRUE | FALSE | number | 'string' |
+  /** One `(v, …)` tuple: each literal is scanned into `c.lit` and its
+    * position handed to `each`. Returns the number of values. */
+  private def scanTuple(c: Cursor, opts: TypeOptions, each: Int => Unit): Int = {
+    c.expect('(')
+    var k = 0
+    var done = false
+    while (!done) {
+      scanValue(c, opts)
+      each(k)
+      k += 1
+      if (!c.tryConsume(',')) { c.expect(')'); done = true }
+    }
+    k
+  }
+
+  private def boxedTuple(c: Cursor, opts: TypeOptions): Array[Any] = {
+    val row = Array.newBuilder[Any]
+    scanTuple(c, opts, _ => row += c.lit.boxed)
+    row.result()
+  }
+
+  // Literal kinds (Lit.kind). LOther is a value handed to coerceRow
+  // that no literal produces.
+  private final val LNull = 0
+  private final val LBool = 1
+  private final val LInt = 2
+  private final val LBig = 3
+  private final val LFloat = 4
+  private final val LStr = 5
+  private final val LOther = 6
+
+  /** One literal, unboxed. A string is a slice `[from, to)` of `src`;
+    * `plain` says the slice holds no escape or doubled quote, `ascii`
+    * that it is plain 7-bit text (its chars are its UTF-8 bytes). The
+    * consumer materializes it as a `String` or straight as UTF-8. */
+  private final class Lit {
+    var kind = LNull
+    var long = 0L // LInt; 1 or 0 for LBool
+    var double = 0.0
+    var big: java.math.BigDecimal = _
+    var obj: Any = _
+    var src: String = _
+    var from = 0
+    var to = 0
+    var plain = true
+    var ascii = false
+
+    def setString(s: String): Lit = {
+      kind = LStr; src = s; from = 0; to = s.length; plain = true; ascii = false
+      this
+    }
+
+    /** A boxed value, as coerceRow receives it. */
+    def set(v: Any): Lit = {
+      v match {
+        case null                    => kind = LNull
+        case l: java.lang.Long       => kind = LInt; long = l
+        case d: java.lang.Double     => kind = LFloat; double = d
+        case b: java.lang.Boolean    => kind = LBool; long = if (b) 1L else 0L
+        case b: java.math.BigDecimal => kind = LBig; big = b
+        case s: String               => setString(s)
+        case o                       => kind = LOther; obj = o
+      }
+      this
+    }
+
+    def negate(): Unit = kind match {
+      case LInt   => long = -long
+      case LFloat => double = -double
+      case _      => big = big.negate() // LBig: scanNumber makes no other kind
+    }
+
+    def boxed: Any = kind match {
+      case LNull  => null
+      case LBool  => java.lang.Boolean.valueOf(long == 1L)
+      case LInt   => java.lang.Long.valueOf(long)
+      case LBig   => big
+      case LFloat => java.lang.Double.valueOf(double)
+      case LStr   => string
+      case _      => obj
+    }
+
+    def string: String =
+      if (!plain) unescape(src, from, to)
+      else if (from == 0 && to == src.length) src
+      else src.substring(from, to)
+
+    // String.getBytes(int, int, byte[], int) keeps the low byte of each
+    // char: exactly the UTF-8 of 7-bit text, copied without a decode
+    @annotation.nowarn("cat=deprecation")
+    def utf8: UTF8String =
+      if (plain && ascii) {
+        val b = new Array[Byte](to - from)
+        src.getBytes(from, to, b, 0)
+        UTF8String.fromBytes(b)
+      } else UTF8String.fromString(string)
+
+    /** Resolve escapes once, leaving a plain slice. */
+    def flatten(): Unit = if (!plain) setString(unescape(src, from, to))
+  }
+
+  /** One literal into `c.lit`: NULL | TRUE | FALSE | number | 'string' |
     * `_charset 'string'` | `0xHEX` | `X'HEX'`. Mirrors
     * `line_parser.rs:224-267` — unquoted numbers without '.' are
     * integers (i64, overflow errors), with '.'/exponent are doubles,
     * `-` negates a following number — except the introducer/hex forms
     * (DEVIATION, see class doc): those appear in real dumps and the
     * reference bails on them. */
-  private def parseValue(c: Cursor, opts: TypeOptions): Any = {
+  private def scanValue(c: Cursor, opts: TypeOptions): Unit = {
     c.skipWs()
     if (c.eof) fail("expected value at end of statement")
+    val lit = c.lit
     c.peek match {
-      case '\'' => parseStringLiteral(c)
-      case '-'  => c.i += 1; negate(parseNumber(c, opts))
-      case '+'  => c.i += 1; parseNumber(c, opts)
+      case '\'' => scanString(c)
+      case '-'  => c.i += 1; scanNumber(c, opts); lit.negate()
+      case '+'  => c.i += 1; scanNumber(c, opts)
       case '0' if c.i + 1 < c.s.length &&
           (c.s.charAt(c.i + 1) == 'x' || c.s.charAt(c.i + 1) == 'X') &&
           c.i + 2 < c.s.length && isHex(c.s.charAt(c.i + 2)) =>
-        c.i += 2; parseHexBody(c)
-      case d if d >= '0' && d <= '9' => parseNumber(c, opts)
-      case '.' => parseNumber(c, opts)
+        c.i += 2; lit.setString(parseHexBody(c))
+      case d if d >= '0' && d <= '9' => scanNumber(c, opts)
+      case '.' => scanNumber(c, opts)
       case ('x' | 'X') if c.i + 1 < c.s.length && c.s.charAt(c.i + 1) == '\'' =>
         // X'ABCD' hex-string: body is hex digits inside quotes
         c.i += 2
         val v = parseHexBody(c)
         if (c.eof || c.peek != '\'') fail(s"unterminated hex string: ${c.context}")
         c.i += 1
-        v
+        lit.setString(v)
       case '_' =>
         // charset introducer (_binary, _utf8mb4, _latin1, ...): the
         // value is the string literal that follows
         c.word()
         c.skipWs()
         if (c.eof || c.peek != '\'') fail(s"expected string after charset introducer: ${c.context}")
-        parseStringLiteral(c)
+        scanString(c)
       case _ =>
-        val w = c.word().toUpperCase
-        w match {
-          case "NULL"  => null
-          case "TRUE"  => java.lang.Boolean.TRUE
-          case "FALSE" => java.lang.Boolean.FALSE
+        c.word().toUpperCase match {
+          case "NULL"  => lit.kind = LNull
+          case "TRUE"  => lit.kind = LBool; lit.long = 1L
+          case "FALSE" => lit.kind = LBool; lit.long = 0L
           case other   => fail(s"unsupported literal '$other': ${c.context}")
         }
     }
@@ -438,55 +536,93 @@ object DumpParser extends Serializable {
     new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
   }
 
-  private def negate(v: Any): Any = v match {
-    case l: java.lang.Long   => java.lang.Long.valueOf(-l.longValue())
-    case d: java.lang.Double => java.lang.Double.valueOf(-d.doubleValue())
-    case b: java.math.BigDecimal => b.negate()
-    case other               => fail(s"cannot negate $other")
-  }
+  /** 10^k, exact as a double for k <= 22. */
+  private val Pow10 = Array.tabulate(23)(k => math.pow(10, k))
 
-  private def parseNumber(c: Cursor, opts: TypeOptions): Any = {
+  /** Unsigned number at the cursor. Integer digits accumulate inline;
+    * one past i64::MAX is an overflow, which the reference rejects
+    * (`line_parser.rs:247`) and the unsigned-decimal mode keeps as a
+    * scale-0 decimal (range enforcement happens at coercion, where the
+    * column type is known). A plain decimal whose digits fit in 53 bits
+    * with at most 22 after the point is the quotient of two exact
+    * doubles, so one division rounds it exactly as `parseDouble` does;
+    * every other float goes to `parseDouble`. */
+  private def scanNumber(c: Cursor, opts: TypeOptions): Unit = {
+    val s = c.s
     val start = c.i
-    var isFloat = false
+    var i = start
+    var overflow = false
+    var acc = 0L
+    var digits = 0
+    var dots = 0
+    var fraction = 0 // digits after the point
+    var exponent = false
     var cont = true
-    while (!c.eof && cont) {
-      c.peek match {
-        case ch if ch >= '0' && ch <= '9' => c.i += 1
-        case '.' => isFloat = true; c.i += 1
-        case 'e' | 'E' =>
-          isFloat = true; c.i += 1
-          if (!c.eof && (c.peek == '+' || c.peek == '-')) c.i += 1
-        case _ => cont = false
-      }
+    while (i < s.length && cont) {
+      val ch = s.charAt(i)
+      if (ch >= '0' && ch <= '9') {
+        val d = ch - '0'
+        if (acc > Long.MaxValue / 10 || (acc == Long.MaxValue / 10 && d > 7)) overflow = true
+        else acc = acc * 10 + d
+        digits += 1
+        if (dots > 0) fraction += 1
+        i += 1
+      } else if (ch == '.') { dots += 1; i += 1 }
+      else if (ch == 'e' || ch == 'E') {
+        exponent = true; i += 1
+        if (i < s.length && (s.charAt(i) == '+' || s.charAt(i) == '-')) i += 1
+      } else cont = false
     }
-    val text = c.s.substring(start, c.i)
-    if (text.isEmpty) fail(s"expected number: ${c.context}")
-    if (isFloat) java.lang.Double.valueOf(text)
-    else
-      try java.lang.Long.valueOf(text)
-      catch {
-        case _: NumberFormatException =>
-          // parity: the reference parses integers as i64 and errors on
-          // overflow (line_parser.rs:247). The unsigned-decimal opt-in
-          // keeps the literal as a scale-0 decimal; range enforcement
-          // happens at coercion where the column type is known.
-          if (opts.unsignedBigintDecimal) new java.math.BigDecimal(text)
-          else fail(s"integer out of i64 range: $text")
-      }
+    c.i = i
+    if (i == start) fail(s"expected number: ${c.context}")
+    val lit = c.lit
+    if (dots > 0 || exponent) {
+      lit.kind = LFloat
+      lit.double =
+        if (dots == 1 && !exponent && digits > 0 && !overflow && acc < (1L << 53) && fraction <= 22)
+          acc.toDouble / Pow10(fraction)
+        else java.lang.Double.parseDouble(s.substring(start, i))
+    }
+    else if (!overflow) { lit.kind = LInt; lit.long = acc }
+    else if (opts.unsignedBigintDecimal) { lit.kind = LBig; lit.big = new java.math.BigDecimal(s.substring(start, i)) }
+    else fail(s"integer out of i64 range: ${s.substring(start, i)}")
   }
 
-  /** MySQL single-quoted string: backslash escapes + '' doubling. */
-  private def parseStringLiteral(c: Cursor): String = {
-    c.i += 1
-    val sb = new StringBuilder
+  /** MySQL single-quoted string at the cursor (backslash escapes + ''
+    * doubling), recorded as a slice of the statement — a value, or a
+    * quoted span the DDL parser skips. */
+  private def scanString(c: Cursor): Unit = {
+    val s = c.s
+    val lit = c.lit
+    var i = c.i + 1
+    lit.kind = LStr; lit.src = s; lit.from = i; lit.plain = true; lit.ascii = true
     var done = false
     while (!done) {
-      if (c.eof) fail("unterminated string literal")
-      val ch = c.peek
+      if (i >= s.length) fail("unterminated string literal")
+      val ch = s.charAt(i)
       if (ch == '\\') {
-        if (c.i + 1 >= c.s.length) fail("dangling escape at end of statement")
-        val e = c.s.charAt(c.i + 1)
-        sb.append(e match {
+        if (i + 1 >= s.length) fail("dangling escape at end of statement")
+        lit.plain = false
+        i += 2
+      } else if (ch == '\'') {
+        if (i + 1 < s.length && s.charAt(i + 1) == '\'') { lit.plain = false; i += 2 }
+        else { lit.to = i; i += 1; done = true }
+      } else {
+        if (ch >= 0x80) lit.ascii = false
+        i += 1
+      }
+    }
+    c.i = i
+  }
+
+  /** The value of a string literal body `s[from, to)`. */
+  private def unescape(s: String, from: Int, to: Int): String = {
+    val sb = new java.lang.StringBuilder(to - from)
+    var i = from
+    while (i < to) {
+      val ch = s.charAt(i)
+      if (ch == '\\') {
+        sb.append(s.charAt(i + 1) match {
           case 'n' => '\n'
           case 't' => '\t'
           case 'r' => '\r'
@@ -495,26 +631,106 @@ object DumpParser extends Serializable {
           case 'Z' => '\u001a'
           case other => other // \' \" \\ \% \_ and unknown → literal char
         })
-        c.i += 2
-      } else if (ch == '\'') {
-        if (c.i + 1 < c.s.length && c.s.charAt(c.i + 1) == '\'') { sb.append('\''); c.i += 2 }
-        else { c.i += 1; done = true }
-      } else { sb.append(ch); c.i += 1 }
+        i += 2
+      } else if (ch == '\'') { sb.append('\''); i += 2 } // a doubled quote
+      else { sb.append(ch); i += 1 }
     }
     sb.toString
   }
 
+  // ---------------------------------------------------------- decoding
+
+  /** Decodes one table's extended INSERTs straight into the rows the
+    * parquet writer takes: every literal is scanned by [[scanValue]]
+    * and written by [[put]], by its column's type, into a pooled
+    * `SpecificInternalRow` at the schema index the INSERT column list
+    * gives it — no boxed value, no `Row`, no encoder.
+    *
+    * A row [[put]] refuses (or of the wrong arity, or leaving a NOT
+    * NULL column out of the list) is replayed through
+    * [[parseInsert]] → [[rowAligner]] → [[coerceRow]], so its error is
+    * theirs; a column list [[rowAligner]] refuses fails the statement
+    * after the same tokenizer pass parseInsert makes. A statement's
+    * rows are handed out only after the whole statement decoded (a
+    * tokenizer error anywhere lands none of them) and are reused by
+    * the next [[decode]]: consume them first. */
+  final class InsertDecoder(table: String, schema: StructType, opts: TypeOptions) {
+    private val fields = schema.fields
+        private val positional = Array.range(0, fields.length)
+    private val pool = scala.collection.mutable.ArrayBuffer.empty[SpecificInternalRow]
+    private val bad = scala.collection.mutable.ArrayBuffer.empty[(Throwable, Array[Any])]
+    private var decoded = 0
+    // state of the tuple being decoded, read by `onValue`
+    private var c: Cursor = _
+    private var row: SpecificInternalRow = _
+    private var target = positional
+    private var ok = true
+    private val onValue: Int => Unit = k =>
+      if (ok) {
+        if (k < target.length) {
+          val j = target(k)
+          try put(row, j, fields(j), c.lit, table)
+          catch { case scala.util.control.NonFatal(_) => ok = false }
+        } else ok = false
+      }
+
+    /** The rows of the last statement that decoded. */
+    def rows: Iterator[InternalRow] = pool.iterator.take(decoded)
+
+    /** The rows of the last statement that [[coerceRow]] rejects: its
+      * error and the row's values in INSERT order. */
+    def rejects: Seq[(Throwable, Array[Any])] = bad.toSeq
+
+    /** Decode one INSERT into this table; [[rows]] and [[rejects]] then
+      * hold its rows. A tokenizer or column-list error throws, with
+      * parseInsert's or rowAligner's exception. */
+    def decode(stmt: String): Unit = {
+      decoded = 0
+      bad.clear()
+      c = new Cursor(stmt)
+      val (stmtTable, cols) = insertHead(c)
+      target =
+        if (cols.isEmpty) positional
+        else try columnTargets(stmtTable, cols, schema)
+        catch { case e: DumpParseException => parseInsert(stmt, opts); throw e }
+      // schema columns the list leaves out are NULL in every row
+      val unlisted = if (cols.isEmpty) Array.emptyIntArray
+        else fields.indices.filterNot(target.contains).toArray
+      val unlistedOk = unlisted.forall(fields(_).nullable)
+      var more = true
+      while (more) {
+        c.skipWs()
+        val at = c.i
+        if (decoded == pool.length) pool += new SpecificInternalRow(schema)
+        row = pool(decoded)
+        ok = true
+        val n = scanTuple(c, opts, onValue)
+        if (ok && n == target.length && unlistedOk) {
+          unlisted.foreach(row.setNullAt)
+          decoded += 1
+        } else bad += reject(stmt, at, stmtTable, cols)
+        more = c.tryConsume(',')
+      }
+    }
+
+    private def reject(stmt: String, at: Int, stmtTable: String,
+                       cols: Vector[String]): (Throwable, Array[Any]) = {
+      val rc = new Cursor(stmt)
+      rc.i = at
+      val raw = boxedTuple(rc, opts)
+      val align = rowAligner(InsertInto(stmtTable, Vector.empty, cols), schema)
+      val err =
+        try { coerceRow(table, schema, align(raw)); null }
+        catch { case scala.util.control.NonFatal(e) => e }
+      if (err == null)
+        throw new IllegalStateException(
+          s"table $table: the decoder rejected a row coerceRow accepts at offset $at")
+      (err, raw)
+    }
+  }
+
   // ----------------------------------------------------------- coercion
 
-  /** Type-check and coerce one raw row against the table schema,
-    * mirroring the writer's enforcement (`parquet_writer.rs:120-218`):
-    * strict on mismatch, Long→Double widening in Float columns, string
-    * timestamps parsed as UTC wall-clock. A NULL in a NOT NULL column
-    * is rejected HERE with a clear error — the reference appends the
-    * null (`parquet_writer.rs:140,151,...`) and then panics deep inside
-    * `RecordBatch::try_new` when the non-nullable arrow field sees it;
-    * we surface the same hard failure at the parser boundary instead of
-    * a confusing downstream parquet-write error. */
   /** Per-row permutation from an INSERT's value order to schema order.
     *
     * Positional insert (no column list) → identity; [[coerceRow]]
@@ -532,14 +748,7 @@ object DumpParser extends Serializable {
     if (ins.columns.isEmpty) identity
     else {
       val cols = ins.columns
-      val schemaIdx = schema.fieldNames.zipWithIndex.toMap
-      val unknown = cols.filterNot(schemaIdx.contains)
-      if (unknown.nonEmpty)
-        fail(s"table ${ins.table}: INSERT column list names unknown column(s) " +
-          s"${unknown.mkString(", ")} (schema: ${schema.fieldNames.mkString(", ")})")
-      if (cols.distinct.length != cols.length)
-        fail(s"table ${ins.table}: INSERT column list repeats a column: ${cols.mkString(", ")}")
-      val target = cols.map(schemaIdx).toArray
+      val target = columnTargets(ins.table, cols, schema)
       raw => {
         if (raw.length != cols.length)
           fail(s"table ${ins.table}: row has ${raw.length} values but INSERT " +
@@ -552,78 +761,112 @@ object DumpParser extends Serializable {
     }
   }
 
-  def coerceRow(table: String, schema: StructType, raw: Array[Any]): org.apache.spark.sql.Row = {
+  /** Schema index of each listed column; an unknown or repeated name
+    * fails the statement. */
+  private def columnTargets(table: String, cols: Vector[String], schema: StructType): Array[Int] = {
+    val schemaIdx = schema.fieldNames.zipWithIndex.toMap
+    val unknown = cols.filterNot(schemaIdx.contains)
+    if (unknown.nonEmpty)
+      fail(s"table $table: INSERT column list names unknown column(s) " +
+        s"${unknown.mkString(", ")} (schema: ${schema.fieldNames.mkString(", ")})")
+    if (cols.distinct.length != cols.length)
+      fail(s"table $table: INSERT column list repeats a column: ${cols.mkString(", ")}")
+    cols.map(schemaIdx).toArray
+  }
+
+  /** Type-check and coerce one boxed row (schema order) against the
+    * table schema — [[put]] per value, the rules [[InsertDecoder]]
+    * applies — and return it with external values: `Long`, `Double`,
+    * `String`, `Boolean`, `java.math.BigDecimal`, and
+    * `java.sql.Timestamp`/`java.sql.Date` built from the proleptic
+    * micros/days the decoder writes (at micro precision). */
+  def coerceRow(table: String, schema: StructType, raw: Array[Any]): Row = {
     if (raw.length != schema.length)
       fail(s"table $table: row has ${raw.length} values but schema has ${schema.length} columns")
-    val out = new Array[Any](raw.length)
+    val row = new SpecificInternalRow(schema)
+    val lit = new Lit
     var i = 0
     while (i < raw.length) {
       val f = schema(i)
-      val v = raw(i)
-      if (v == null && !f.nullable)
-        fail(s"table $table column ${f.name}: NULL in NOT NULL column")
-      out(i) =
-        if (v == null) null
-        else f.dataType match {
-          case LongType => v match {
-            case l: java.lang.Long => l
-            case b: java.math.BigDecimal =>
-              // a > i64 literal (admitted by the unsigned-decimal mode)
-              // landing in a plain bigint column is still an overflow
-              fail(s"table $table column ${f.name}: integer out of i64 range: $b")
-            case other => fail(s"table $table column ${f.name}: expected integer, got $other")
-          }
-          case dt: DecimalType if dt.precision == 20 && dt.scale == 0 => v match {
-            // BIGINT UNSIGNED via TypeOptions.unsignedBigintDecimal:
-            // anything integral in [0, u64::MAX]
-            case l: java.lang.Long if l >= 0L => java.math.BigDecimal.valueOf(l)
-            case l: java.lang.Long =>
-              fail(s"table $table column ${f.name}: negative value $l in UNSIGNED column")
-            case b: java.math.BigDecimal
-                if b.signum() >= 0 && b.compareTo(U64Max) <= 0 =>
-              b
-            case b: java.math.BigDecimal =>
-              fail(s"table $table column ${f.name}: integer out of u64 range: $b")
-            case other => fail(s"table $table column ${f.name}: expected integer, got $other")
-          }
-          case DoubleType => v match {
-            case d: java.lang.Double => d
-            case l: java.lang.Long   => java.lang.Double.valueOf(l.doubleValue())
-            case other => fail(s"table $table column ${f.name}: expected float, got $other")
-          }
-          case StringType => v match {
-            case s: String => s
-            case other => fail(s"table $table column ${f.name}: expected string, got $other")
-          }
-          case TimestampType => v match {
-            case s: String => parseTimestamp(s, table, f.name)
-            case other => fail(s"table $table column ${f.name}: expected timestamp string, got $other")
-          }
-          case DateType => v match {
-            // TypeOptions.dateAsDate: 'YYYY-MM-DD' only — a DATE column
-            // carrying a time component is a schema lie we refuse
-            case s: String =>
-              try java.sql.Date.valueOf(LocalDate.parse(s))
-              catch {
-                case e: java.time.format.DateTimeParseException =>
-                  fail(s"table $table column ${f.name}: cannot parse date '$s': ${e.getMessage}")
-              }
-            case other => fail(s"table $table column ${f.name}: expected date string, got $other")
-          }
-          case BooleanType => v match {
-            case b: java.lang.Boolean => b
-            case l: java.lang.Long if l == 0L || l == 1L => java.lang.Boolean.valueOf(l == 1L)
-            case other => fail(s"table $table column ${f.name}: expected boolean, got $other")
-          }
-          case other => fail(s"table $table column ${f.name}: unsupported type $other")
-        }
+      put(row, i, f, lit.set(raw(i)), table)
       i += 1
     }
-    org.apache.spark.sql.Row.fromSeq(out.toIndexedSeq)
+    Row.fromSeq(schema.fields.indices.map { i =>
+      if (row.isNullAt(i)) null
+      else schema(i).dataType match {
+        case TimestampType => toTimestamp(row.getLong(i))
+        case DateType      => java.sql.Date.valueOf(LocalDate.ofEpochDay(row.getInt(i)))
+        case _: DecimalType => row.getDecimal(i, 20, 0).toJavaBigDecimal
+        case StringType    => row.getUTF8String(i).toString
+        case dt            => row.get(i, dt)
+      }
+    })
   }
 
+  /** Write one literal into `row(i)` as column `f` takes it, mirroring the writer's enforcement (`parquet_writer.rs:120-218`):
+    * strict on mismatch, Long→Double widening in Float columns, string
+    * timestamps parsed as UTC wall-clock. A NULL in a NOT NULL column
+    * is rejected HERE with a clear error — the reference appends the
+    * null (`parquet_writer.rs:140,151,...`) and then panics deep inside
+    * `RecordBatch::try_new` when the non-nullable arrow field sees it;
+    * we surface the same hard failure at the parser boundary instead of
+    * a confusing downstream parquet-write error. */
+  private def put(row: InternalRow, i: Int, f: StructField, v: Lit,
+                  table: String): Unit = {
+    def mismatch(what: String): Nothing =
+      fail(s"table $table column ${f.name}: expected $what, got ${v.boxed}")
+    if (v.kind == LNull) {
+      if (!f.nullable) fail(s"table $table column ${f.name}: NULL in NOT NULL column")
+      row.setNullAt(i)
+    } else f.dataType match {
+      case LongType => v.kind match {
+        case LInt => row.setLong(i, v.long)
+        case LBig =>
+          // a > i64 literal (admitted by the unsigned-decimal mode)
+          // landing in a plain bigint column is still an overflow
+          fail(s"table $table column ${f.name}: integer out of i64 range: ${v.big}")
+        case _ => mismatch("integer")
+      }
+      case dt: DecimalType if dt.precision == 20 && dt.scale == 0 => v.kind match {
+        // BIGINT UNSIGNED via TypeOptions.unsignedBigintDecimal:
+        // anything integral in [0, u64::MAX]
+        case LInt if v.long >= 0L =>
+          row.update(i, Decimal(java.math.BigDecimal.valueOf(v.long), 20, 0))
+        case LInt =>
+          fail(s"table $table column ${f.name}: negative value ${v.long} in UNSIGNED column")
+        case LBig if v.big.signum() >= 0 && v.big.compareTo(U64Max) <= 0 =>
+          row.update(i, Decimal(v.big, 20, 0))
+        case LBig => fail(s"table $table column ${f.name}: integer out of u64 range: ${v.big}")
+        case _ => mismatch("integer")
+      }
+      case DoubleType => v.kind match {
+        case LFloat => row.setDouble(i, v.double)
+        case LInt   => row.setDouble(i, v.long.toDouble)
+        case _      => mismatch("float")
+      }
+      case StringType =>
+        if (v.kind == LStr) row.update(i, v.utf8) else mismatch("string")
+      case TimestampType =>
+        if (v.kind == LStr) row.setLong(i, timestampMicros(v, table, f.name))
+        else mismatch("timestamp string")
+      case DateType =>
+        // TypeOptions.dateAsDate: 'YYYY-MM-DD' only — a DATE column
+        // carrying a time component is a schema lie we refuse
+        if (v.kind == LStr) row.setInt(i, dateDays(v, table, f.name))
+        else mismatch("date string")
+      case BooleanType => v.kind match {
+        case LBool                                 => row.setBoolean(i, v.long == 1L)
+        case LInt if v.long == 0L || v.long == 1L => row.setBoolean(i, v.long == 1L)
+        case _                                     => mismatch("boolean")
+      }
+      case _ => fail(s"table $table column ${f.name}: unsupported type ${f.dataType}")
+    }
+  }
+
+  // ------------------------------------------------------ date and time
+
   /** 'YYYY-MM-DD[ HH:MM:SS[.ffffff]]' as UTC wall-clock →
-    * java.sql.Timestamp anchored via Instant (timezone-independent).
+    * java.sql.Timestamp of the same instant (at micro precision).
     *
     * Also accepts a bare TIME-of-day 'HH:MM:SS[.ffffff]', anchored to
     * 1970-01-01 — the THIRD deliberate deviation from a reference
@@ -633,18 +876,131 @@ object DumpParser extends Serializable {
     * column survives the reference end-to-end (same class of hole as
     * Boolean schemas and DATE-only values, both already fixed). The
     * epoch-day anchor mirrors the DATE→midnight rule: the stored
-    * instant carries exactly the information the literal had. */
-  def parseTimestamp(s: String, table: String, column: String): java.sql.Timestamp = {
-    try {
+    * instant carries exactly the information the literal had.
+    *
+    * The rules are `LocalDateTime`/`LocalDate`/`LocalTime.parse`'s
+    * (proleptic Gregorian, strict field ranges): the common
+    * fixed-field shapes are computed directly, every other shape goes
+    * to java.time itself, so the accepted set and the error text are
+    * java.time's. */
+  def parseTimestamp(s: String, table: String, column: String): java.sql.Timestamp =
+    toTimestamp(timestampMicros(new Lit().setString(s), table, column))
+
+  private def toTimestamp(micros: Long): java.sql.Timestamp =
+    java.sql.Timestamp.from(DateTimeUtils.microsToInstant(micros))
+
+  private def timestampMicros(v: Lit, table: String, column: String): Long = {
+    v.flatten()
+    val fixed = fixedMicros(v.src, v.from, v.to)
+    if (fixed != NoFixed) fixed
+    else {
+      val s = v.string
       val ldt =
-        if (s.length >= 8 && s.charAt(2) == ':')
-          java.time.LocalTime.parse(s).atDate(LocalDate.ofEpochDay(0))
-        else if (s.length <= 10) LocalDate.parse(s).atStartOfDay()
-        else LocalDateTime.parse(s.replace(' ', 'T'))
-      java.sql.Timestamp.from(ldt.toInstant(ZoneOffset.UTC))
-    } catch {
-      case e: java.time.format.DateTimeParseException =>
-        fail(s"table $table column $column: cannot parse timestamp '$s': ${e.getMessage}")
+        try {
+          if (s.length >= 8 && s.charAt(2) == ':')
+            java.time.LocalTime.parse(s).atDate(LocalDate.ofEpochDay(0))
+          else if (s.length <= 10) LocalDate.parse(s).atStartOfDay()
+          else LocalDateTime.parse(s.replace(' ', 'T'))
+        } catch {
+          case e: java.time.format.DateTimeParseException =>
+            fail(s"table $table column $column: cannot parse timestamp '$s': ${e.getMessage}")
+        }
+      Math.addExact(Math.multiplyExact(ldt.toEpochSecond(ZoneOffset.UTC), 1000000L),
+        ldt.getNano / 1000L)
     }
+  }
+
+  private def dateDays(v: Lit, table: String, column: String): Int = {
+    v.flatten()
+    val fixed = if (v.to - v.from == 10) fixedDay(v.src, v.from) else NoFixed
+    if (fixed != NoFixed) fixed.toInt
+    else {
+      val s = v.string
+      try Math.toIntExact(LocalDate.parse(s).toEpochDay)
+      catch {
+        case e: java.time.format.DateTimeParseException =>
+          fail(s"table $table column $column: cannot parse date '$s': ${e.getMessage}")
+      }
+    }
+  }
+
+  /** A shape the fixed-field parse leaves to java.time. */
+  private final val NoFixed = Long.MinValue
+  private final val MicrosPerDay = 86400L * 1000000L
+
+  /** Micros of `s[from, to)` when it is 'YYYY-MM-DD', 'HH:MM:SS[.f]' or
+    * 'YYYY-MM-DD[ T]HH:MM:SS[.f]' (1–9 fraction digits, truncated to
+    * micros) with every field in range; the branch is chosen exactly
+    * as the java.time fallback chooses it. */
+  private def fixedMicros(s: String, from: Int, to: Int): Long = {
+    val n = to - from
+    if (n >= 8 && s.charAt(from + 2) == ':') fixedTime(s, from, to)
+    else if (n < 10) NoFixed
+    else if (n == 10) {
+      val d = fixedDay(s, from)
+      if (d == NoFixed) NoFixed else d * MicrosPerDay
+    } else if (s.charAt(from + 10) != ' ' && s.charAt(from + 10) != 'T') NoFixed
+    else {
+      val d = fixedDay(s, from)
+      val t = fixedTime(s, from + 11, to)
+      if (d == NoFixed || t == NoFixed) NoFixed else d * MicrosPerDay + t
+    }
+  }
+
+  /** Two ASCII digits at `i` as a number, or -1. */
+  private def digits2(s: String, i: Int): Int = {
+    val a = s.charAt(i) - '0'
+    val b = s.charAt(i + 1) - '0'
+    if (a < 0 || a > 9 || b < 0 || b > 9) -1 else a * 10 + b
+  }
+
+  /** Epoch day of 'YYYY-MM-DD' at `i` (a real proleptic date), else NoFixed. */
+  private def fixedDay(s: String, i: Int): Long = {
+    val yh = digits2(s, i)
+    val yl = digits2(s, i + 2)
+    val m = digits2(s, i + 5)
+    val d = digits2(s, i + 8)
+    if (yh < 0 || yl < 0 || m < 1 || m > 12 || d < 1 ||
+        s.charAt(i + 4) != '-' || s.charAt(i + 7) != '-') NoFixed
+    else {
+      val y = yh * 100 + yl
+      val leap = y % 4 == 0 && (y % 100 != 0 || y % 400 == 0)
+      val monthLength = m match {
+        case 2 => if (leap) 29 else 28
+        case 4 | 6 | 9 | 11 => 30
+        case _ => 31
+      }
+      if (d > monthLength) NoFixed
+      else {
+        // LocalDate.toEpochDay for a year >= 0
+        var days = 365L * y + (y + 3) / 4 - (y + 99) / 100 + (y + 399) / 400
+        days += (367 * m - 362) / 12 + d - 1
+        if (m > 2) days -= (if (leap) 1 else 2)
+        days - 719528L
+      }
+    }
+  }
+
+  /** Micros into the day of 'HH:MM:SS[.f]' spanning `s[i, to)`, else NoFixed. */
+  private def fixedTime(s: String, i: Int, to: Int): Long = {
+    val n = to - i
+    if (n < 8 || n == 9 || n > 18) return NoFixed
+    val h = digits2(s, i)
+    val mi = digits2(s, i + 3)
+    val sec = digits2(s, i + 6)
+    if (h < 0 || h > 23 || mi < 0 || mi > 59 || sec < 0 || sec > 59 ||
+        s.charAt(i + 2) != ':' || s.charAt(i + 5) != ':' || (n > 8 && s.charAt(i + 8) != '.'))
+      return NoFixed
+    var frac = 0L
+    var scale = 100000L // micros per unit of the next fraction digit
+    var k = i + 9
+    while (k < to) {
+      val d = s.charAt(k) - '0'
+      if (d < 0 || d > 9) return NoFixed
+      frac += d * scale
+      scale /= 10
+      k += 1
+    }
+    (h * 3600L + mi * 60L + sec) * 1000000L + frac
   }
 }

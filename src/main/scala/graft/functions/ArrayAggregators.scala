@@ -5,64 +5,17 @@ import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions.udaf
 
-/** Element-wise array aggregators (the engine's typed-UDAF surface,
-  * `Aggregator[IN, BUF, OUT]` registered through `functions.udaf`).
-  * Both are associative + commutative, so Spark computes them with
-  * map-side partial aggregation — one shuffled buffer per group per
-  * partition, not one row per input, which is what makes cross-row
-  * sketching viable at 100 TB.
-  *
-  * [[ElementwiseSum]] is live in the SimHash pipeline (tallying ±1 bit
-  * votes across a doc's token occurrences — per-row state cannot
-  * express it). [[ElementwiseMin]] is the parity WITNESS for the
-  * native one-pass `MinHashSignature` expression that replaced it in
-  * the hot path: ShingleExprSpec proves the two formulations agree, so
-  * it is retained as the independent reference implementation.
+/** The engine's typed-UDAF surface (`Aggregator[IN, BUF, OUT]`
+  * registered through `functions.udaf`). The aggregate is associative
+  * + commutative, so Spark computes it with map-side partial
+  * aggregation — one shuffled buffer per group per partition, not one
+  * row per input, which is what makes cross-row sketching viable at
+  * 100 TB. The element-wise sum and min it replaced are kept in test
+  * scope as reference implementations (`ReferenceAggregators`).
   */
 object ArrayAggregators {
 
   private def longArrayEnc: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
-  private def longSeqEnc: Encoder[Seq[Long]] = ExpressionEncoder[Seq[Long]]()
-
-  class ElementwiseMin(dim: Int) extends Aggregator[Seq[Long], Array[Long], Seq[Long]] {
-    def zero: Array[Long] = Array.fill(dim)(Long.MaxValue)
-    def reduce(b: Array[Long], a: Seq[Long]): Array[Long] = {
-      var i = 0
-      while (i < dim) { val v = a(i); if (v < b(i)) b(i) = v; i += 1 }
-      b
-    }
-    def merge(x: Array[Long], y: Array[Long]): Array[Long] = {
-      var i = 0
-      while (i < dim) { if (y(i) < x(i)) x(i) = y(i); i += 1 }
-      x
-    }
-    def finish(r: Array[Long]): Seq[Long] = r.toSeq
-    def bufferEncoder: Encoder[Array[Long]] = longArrayEnc
-    def outputEncoder: Encoder[Seq[Long]] = longSeqEnc
-  }
-
-  class ElementwiseSum(dim: Int) extends Aggregator[Seq[Long], Array[Long], Seq[Long]] {
-    def zero: Array[Long] = Array.fill(dim)(0L)
-    def reduce(b: Array[Long], a: Seq[Long]): Array[Long] = {
-      var i = 0
-      while (i < dim) { b(i) += a(i); i += 1 }
-      b
-    }
-    def merge(x: Array[Long], y: Array[Long]): Array[Long] = {
-      var i = 0
-      while (i < dim) { x(i) += y(i); i += 1 }
-      x
-    }
-    def finish(r: Array[Long]): Seq[Long] = r.toSeq
-    def bufferEncoder: Encoder[Array[Long]] = longArrayEnc
-    def outputEncoder: Encoder[Seq[Long]] = longSeqEnc
-  }
-
-  def elementwiseMin(dim: Int)(c: Column): Column =
-    udaf(new ElementwiseMin(dim), longSeqEnc).apply(c)
-
-  def elementwiseSum(dim: Int)(c: Column): Column =
-    udaf(new ElementwiseSum(dim), longSeqEnc).apply(c)
 
   /** SimHash fingerprint straight from the token HASH stream: 64 vote
     * counters (+1 per set bit, −1 per clear bit) folded to the

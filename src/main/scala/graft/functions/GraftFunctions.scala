@@ -90,11 +90,6 @@ object GraftFunctions {
       MinHashSignature(args(0), MinHashSignature.stdA, MinHashSignature.stdB,
         MinHashSignature.StdP)
     },
-    entry("graft_bit_votes",
-      "graft_bit_votes(hash) - per-bit +/-1 votes of one 64-bit hash (SimHash fold input)") { args =>
-      arity("graft_bit_votes", args, 1)
-      BitVotes(args(0))
-    },
   )
 
   /** Runtime registration on an already-built session (idempotent —

@@ -171,7 +171,7 @@ class DedupOpsSpec extends AnyFunSuite {
   }
 
   test("occurrence-vote SimHash equals the classic per-token-count formulation") {
-    import graft.functions.ArrayAggregators
+    import graft.functions.ReferenceAggregators
     val docs = Tables.documents(spark, sf)
     val occ = DedupOps.simhashFingerprints(docs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -182,7 +182,7 @@ class DedupOpsSpec extends AnyFunSuite {
         "transform(sequence(0, 63), i -> CASE WHEN (shiftright(xxhash64(tok), i) & 1) = 1 THEN c ELSE -c END)")
         .as("votes"))
       .groupBy("doc_id")
-      .agg(ArrayAggregators.elementwiseSum(64)(col("votes")).as("bits"))
+      .agg(ReferenceAggregators.elementwiseSum(64)(col("votes")).as("bits"))
       .select(col("doc_id"), expr(
         "aggregate(sequence(0, 63), 0L, (acc, i) -> CASE WHEN element_at(bits, i + 1) > 0 THEN acc | shiftleft(1L, i) ELSE acc END)")
         .as("f"))

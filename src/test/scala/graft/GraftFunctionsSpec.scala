@@ -7,9 +7,9 @@ import graft.ops.Tables
 
 /** The SQL registration contract ([[graft.functions.GraftFunctions]]):
   * every native Catalyst expression resolves from SQL text and
-  * evaluates BIT-IDENTICALLY to its Column API — including the two
-  * with no DuckDB replay (minhash signature, bit votes), which the
-  * registered witness `q_sql_native_fns` cannot cover. Also pins the
+  * evaluates BIT-IDENTICALLY to its Column API — including the minhash
+  * signature, which has no DuckDB replay and so escapes the registered
+  * witness `q_sql_native_fns`. Also pins the
   * literal-config contract (non-literal width/window arguments fail
   * with a pointed message, never silently misconfigure a kernel) and
   * that the `spark.sql.extensions` installer carries the same entries.
@@ -31,7 +31,6 @@ class GraftFunctionsSpec extends AnyFunSuite {
         """SELECT doc_id,
           |  graft_word_shingles(text, 3) AS sh,
           |  graft_minhash_signature(graft_word_shingles(text, 3)) AS sig,
-          |  graft_bit_votes(xxhash64(text)) AS votes,
           |  graft_rolling_hashes(text, 8, 257, 1000003) AS rh,
           |  graft_jaro_winkler(text, reverse(text)) AS jw
           |FROM gf_docs ORDER BY doc_id""".stripMargin).collect()
@@ -40,7 +39,6 @@ class GraftFunctionsSpec extends AnyFunSuite {
         MinHashSignature.stdA, MinHashSignature.stdB, MinHashSignature.StdP)
       val viaCol = docs.select(col("doc_id"),
           sh.as("sh"), sig.as("sig"),
-          BitVotes.bitVotes(xxhash64(col("text"))).as("votes"),
           RollingHashes.rollingHashes(col("text"), 8, 257L, 1000003L).as("rh"),
           JaroWinkler.jaroWinkler(col("text"), reverse(col("text"))).as("jw"))
         .orderBy(col("doc_id")).collect()
@@ -82,7 +80,7 @@ class GraftFunctionsSpec extends AnyFunSuite {
     val reference = toks
       .select(col("doc_id"), BitVotes.bitVotes(xxhash64(col("tok"))).as("votes"))
       .groupBy("doc_id")
-      .agg(ArrayAggregators.elementwiseSum(64)(col("votes")).as("bits"))
+      .agg(ReferenceAggregators.elementwiseSum(64)(col("votes")).as("bits"))
       .select(col("doc_id"), expr(
         "aggregate(sequence(0, 63), 0L, (acc, i) -> CASE WHEN element_at(bits, i + 1) > 0 THEN acc | shiftleft(1L, i) ELSE acc END)")
         .as("f"))
@@ -113,7 +111,7 @@ class GraftFunctionsSpec extends AnyFunSuite {
     assert(names.distinct.length == names.length, "duplicate registrations")
     assert(names.toSet == Set("graft_jaro_winkler", "graft_dot_product",
       "graft_word_shingles", "graft_rolling_hashes",
-      "graft_minhash_signature", "graft_bit_votes"))
+      "graft_minhash_signature"))
     // and the installer compiles against them (injectFunction accepts
     // the triple type) — instantiating it must not throw
     new graft.plans.GraftSparkExtensions()

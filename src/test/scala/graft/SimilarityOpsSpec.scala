@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.{SimilarityOps, Tables}
-import graft.functions.ArrayAggregators
+import graft.functions.ReferenceAggregators
 
 /** Verifies the similarity-search surface promised at
   * SimilarityOps.scala: the IVF approximate path is measured against
@@ -145,7 +145,7 @@ class SimilarityOpsSpec extends AnyFunSuite {
       ("b", Seq(10L, 10L, 10L))
     ).toDF("g", "v")
     val out = df.groupBy("g")
-      .agg(ArrayAggregators.elementwiseMin(3)(col("v")).as("m"))
+      .agg(ReferenceAggregators.elementwiseMin(3)(col("v")).as("m"))
       .collect().map(r => r.getString(0) -> r.getSeq[Long](1)).toMap
     assert(out("a") == Seq(3L, 1L, 2L))
     assert(out("b") == Seq(10L, 10L, 10L))
@@ -159,7 +159,7 @@ class SimilarityOpsSpec extends AnyFunSuite {
       ("a", Seq(3L, -3L))
     ).toDF("g", "v")
     val out = df.groupBy("g")
-      .agg(ArrayAggregators.elementwiseSum(2)(col("v")).as("s"))
+      .agg(ReferenceAggregators.elementwiseSum(2)(col("v")).as("s"))
       .head().getSeq[Long](1)
     assert(out == Seq(6L, -6L))
   }

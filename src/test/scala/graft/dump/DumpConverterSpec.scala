@@ -369,6 +369,52 @@ class DumpConverterSpec extends AnyFunSuite {
     assert(e.getMessage != null)
   }
 
+  test("quarantine: a statement that fails to tokenize after good rows lands none of them") {
+    val in = tmpDir("dump-quartok-in")
+    val out = tmpDir("dump-quartok-out")
+    Files.writeString(java.nio.file.Paths.get(s"$in/dump.sql"),
+      """CREATE TABLE `s` (`id` bigint NOT NULL, `v` varchar(10));
+        |INSERT INTO `s` VALUES (1,'a'),(2,'b'),(3,'c'),(4,'d' bogus);
+        |INSERT INTO `s` VALUES (5,'e'),(6,'f');
+        |""".stripMargin)
+    val res = DumpConverter.convert(spark, s"$in/dump.sql", out, quarantine = true)
+    assert(res.rowsWritten("s") == 2)
+    assert(spark.read.parquet(s"$out/s").collect().map(_.getLong(0)).sorted.toSeq == Seq(5L, 6L))
+    val quar = spark.read.parquet(s"$out/${DumpConverter.QuarantineTable}")
+      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2)))
+    assert(quar.length == 1, s"one statement-level record, got ${quar.toSeq}")
+    assert(quar.head._1 == "s" && quar.head._2.startsWith("expected ')'"))
+    assert(quar.head._3.startsWith("INSERT INTO `s` VALUES (1,'a'),(2,'b')"))
+  }
+
+  test("pre-Gregorian TIMESTAMP and DATE literals land as their proleptic micros and days") {
+    // java.time's proleptic Gregorian reading of each literal, as
+    // chrono and DuckDB read it; the boxed java.sql path shifted the
+    // timestamps before 1582-10-15 by days and the dates in the
+    // 1582-10-05..14 gap by 10
+    val in = tmpDir("dump-proleptic-in")
+    val out = tmpDir("dump-proleptic-out")
+    val lits = Seq(
+      ("0001-01-01 00:00:00", "0001-01-01"), ("1000-06-15 12:00:00", "1000-06-15"),
+      ("1582-10-10 00:00:00", "1582-10-10"), ("1582-10-14 23:59:59.5", "1582-10-05"),
+      ("1900-01-01 00:00:00", "1900-01-01"), ("2012-01-02 12:55:22", "2012-01-02"))
+    Files.writeString(java.nio.file.Paths.get(s"$in/dump.sql"),
+      "CREATE TABLE `old` (`id` bigint NOT NULL, `ts` datetime, `d` date);\n" +
+        lits.zipWithIndex.map { case ((ts, d), i) => s"($i,'$ts','$d')" }
+          .mkString("INSERT INTO `old` VALUES ", ",", ";\n"))
+    DumpConverter.convert(spark, s"$in/dump.sql", out,
+      types = DumpParser.TypeOptions(dateAsDate = true))
+    val got = spark.read.parquet(s"$out/old")
+      .selectExpr("id", "unix_micros(ts)", "unix_date(d)").collect()
+      .sortBy(_.getLong(0)).map(r => (r.getLong(1), r.getInt(2))).toSeq
+    val want = lits.map { case (ts, d) =>
+      val ldt = java.time.LocalDateTime.parse(ts.replace(' ', 'T'))
+      (ldt.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L + ldt.getNano / 1000,
+        java.time.LocalDate.parse(d).toEpochDay.toInt)
+    }
+    assert(got == want)
+  }
+
   // --- restartability (completion manifest + --resume)
 
   val resumeDump =

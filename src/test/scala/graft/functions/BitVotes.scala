@@ -8,12 +8,13 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.GraftColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
-/** Native Catalyst expression: the 64 SimHash bit votes of a hash —
-  * votes[i] = +1 if bit i of the input is set, else −1. Equivalent to
+/** Reference expression for specs: the 64 SimHash bit votes of a hash
+  * — votes[i] = +1 if bit i of the input is set, else −1. Equivalent to
   * `transform(sequence(0, 63), i -> CASE WHEN (shiftright(h, i) & 1) =
-  * 1 THEN 1 ELSE -1 END)` but a tight loop instead of 64 interpreted
-  * lambda evaluations per row (the vote projection ran once per token
-  * occurrence — the hottest row count in the SimHash pipeline). */
+  * 1 THEN 1 ELSE -1 END)`. With [[ReferenceAggregators.ElementwiseSum]]
+  * it spells out the unfused SimHash pipeline that
+  * [[ArrayAggregators.SimhashFingerprint]] fuses, and the specs compare
+  * the two. */
 case class BitVotes(child: Expression) extends UnaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult =

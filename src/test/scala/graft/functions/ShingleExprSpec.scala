@@ -90,7 +90,7 @@ class ShingleExprSpec extends AnyFunSuite {
           i => pmod(element_at(aLit, i + 1) * col("u") + element_at(bLit, i + 1), lit(p)))
           .as("hs"))
       .groupBy("doc_id")
-      .agg(ArrayAggregators.elementwiseMin(k)(col("hs")).as("sig"))
+      .agg(ReferenceAggregators.elementwiseMin(k)(col("hs")).as("sig"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSeq).toMap
     assert(native == udaf)
   }

@@ -4,8 +4,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** conv_scale: the converter at minPartitions ≫ tables — every
-  * partition boundary runs the heal path and both fact tables spread
-  * over their salt ranges. Value-exactness is asserted against the same
+  * partition boundary runs the heal path and both fact tables are
+  * written from many parse tasks. Value-exactness is asserted against the same
   * aggregate computed directly over the ORIGINAL parquet (the shape the
   * DuckDB oracle replays at sf0.01). */
 class ConverterQueriesSpec extends AnyFunSuite {
