@@ -1,8 +1,11 @@
 package graft.dump
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerJobEnd}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.RDDBlockId
 import org.scalatest.funsuite.AnyFunSuite
 
 class DumpConverterSpec extends AnyFunSuite {
@@ -746,20 +749,77 @@ class DumpConverterSpec extends AnyFunSuite {
     assert(DumpConverter.committedRowCount(spark, s"$dir/t") == 37L)
   }
 
-  test("packSegs/unpackSegs: LZ4 statement blocks round-trip exactly, stream in order, and actually compress") {
-    val segs: Seq[StatementReader.Seg] =
-      Seq(StatementReader.Head(Vector("CREATE TABLE `t` (", "  `a` int"))) ++
-        (0 until 5000).map(i => StatementReader.Stmt(
-          s"INSERT INTO `t` VALUES ($i,'v$i','${"x" * 200}');")) ++
-        Seq(StatementReader.Stmt("INSERT INTO `t` VALUES (9,'π — ünïcode ☃');"),
-          StatementReader.Stmt("big:" + "y" * (80 * 1024)), // past writeUTF's 64 KB cap
-          StatementReader.Tail(Vector("INSERT INTO `t` VAL")))
-    val blocks = DumpConverter.packSegs(segs.iterator).toVector
-    assert(blocks.nonEmpty)
-    val packed = blocks.map(_.length.toLong).sum
-    val raw = segs.collect { case StatementReader.Stmt(s) => s.length.toLong }.sum
-    assert(packed < raw / 3, s"expected ≥3x pack ratio, got $raw -> $packed")
-    val back = DumpConverter.unpackSegs(blocks.iterator).toSeq
-    assert(back == segs, "packed statement stream must round-trip in order")
+  test("zstd shards are read through the session's Hadoop conf") {
+    val in = tmpDir("dump-zconf-in")
+    val out = tmpDir("dump-zconf-out")
+    val lines = DumpRenderer.dump(Seq(("user", userSchema, userRows)), batchSize = 1).split("\n")
+    (0 until 2).foreach { k =>
+      val chunk = lines.slice(k * lines.length / 2, (k + 1) * lines.length / 2).map(_ + "\n").mkString
+      val zo = new com.github.luben.zstd.ZstdOutputStreamNoFinalizer(
+        new java.io.FileOutputStream(f"$in/dump-$k%03d.sql.zst"))
+      zo.write(chunk.getBytes("UTF-8")); zo.close()
+    }
+    // a `file` FileSystem set only on the session's conf, uncached so an
+    // instance made from a default conf cannot stand in for it
+    val hc = spark.sparkContext.hadoopConfiguration
+    val keys = Seq("fs.file.impl", "fs.file.impl.disable.cache")
+    val saved = keys.map(k => k -> Option(hc.get(k)))
+    hc.set("fs.file.impl", classOf[OpenRecordingLocalFs].getName)
+    hc.setBoolean("fs.file.impl.disable.cache", true)
+    OpenRecordingLocalFs.opened.clear()
+    try {
+      val res = DumpConverter.convert(spark, in, out)
+      assert(res.rowsWritten("user") == 3)
+      val zst = OpenRecordingLocalFs.opened.asScala.toSet.filter(_.endsWith(".zst"))
+      assert(zst == Set("dump-000.sql.zst", "dump-001.sql.zst"),
+        s"zstd shards opened through the session conf: $zst")
+    } finally saved.foreach { case (k, v) => v.fold(hc.unset(k))(hc.set(k, _)) }
+    val back = spark.read.parquet(s"$out/user").collect().sortBy(_.getLong(0))
+    assert(back.toSeq == userRows)
   }
+
+  test("the converter stores no block: a multi-table convert caches no RDD partition") {
+    val in = tmpDir("dump-noblock-in")
+    val out = tmpDir("dump-noblock-out")
+    val manyRows = (1L to 3000L).map(i => Row(i, s"user_$i", i * 1.5, ts, i % 2 == 0))
+    val text = DumpRenderer.dump(
+      Seq(("a", userSchema, manyRows), ("b", userSchema, manyRows)), batchSize = 50)
+    Files.writeString(java.nio.file.Paths.get(s"$in/dump.sql"), text)
+    val sc = spark.sparkContext
+    val rddBlocks = new java.util.concurrent.atomic.AtomicInteger
+    val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onBlockUpdated(e: SparkListenerBlockUpdated): Unit =
+        if (e.blockUpdatedInfo.blockId.isInstanceOf[RDDBlockId]) rddBlocks.incrementAndGet()
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = ended.add(e.jobId)
+    }
+    sc.addSparkListener(listener)
+    try {
+      val res = DumpConverter.convert(spark, s"$in/dump.sql", out, minPartitions = 7)
+      assert(res.tables == Seq("a", "b"))
+      assert(res.rowsWritten == Map("a" -> 3000L, "b" -> 3000L))
+      // listener events arrive in posting order: once the listener has
+      // seen a later marker job end, it has seen every event of the convert
+      sc.setJobGroup("no-block-marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val marker = sc.statusTracker.getJobIdsForGroup("no-block-marker").max
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!ended.contains(marker) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(ended.contains(marker), "marker job end never reached the listener")
+      assert(rddBlocks.get == 0, s"${rddBlocks.get} RDD block(s) stored during the convert")
+    } finally sc.removeSparkListener(listener)
+  }
+}
+
+/** The local FileSystem, recording the name of every file it opens —
+  * shows which reads go through a conf that names it as `fs.file.impl`. */
+class OpenRecordingLocalFs extends org.apache.hadoop.fs.LocalFileSystem {
+  override def open(f: org.apache.hadoop.fs.Path, bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
+    OpenRecordingLocalFs.opened.add(f.getName)
+    super.open(f, bufferSize)
+  }
+}
+
+object OpenRecordingLocalFs {
+  val opened = new java.util.concurrent.ConcurrentLinkedQueue[String]()
 }
