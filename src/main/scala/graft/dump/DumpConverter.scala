@@ -153,8 +153,10 @@ object DumpConverter {
     * order, via the Hadoop FileSystem API so resolution matches
     * `sc.textFile`. Name order IS file order for sharded dumps
     * (`dump-000.sql.zst`, `dump-001.sql.zst`, …) — the statement
-    * position machinery depends on it. */
-  private[dump] def expandInput(sc: org.apache.spark.SparkContext, input: String): Seq[String] = {
+    * position machinery depends on it. The listing's statuses are
+    * kept, so nothing downstream stats a file again. */
+  private[dump] def expandInput(sc: org.apache.spark.SparkContext,
+                                input: String): Seq[org.apache.hadoop.fs.FileStatus] = {
     val path = new org.apache.hadoop.fs.Path(input)
     val fs = path.getFileSystem(sc.hadoopConfiguration)
     Option(fs.globStatus(path)).map(_.toSeq).getOrElse(Seq.empty)
@@ -162,7 +164,7 @@ object DumpConverter {
         if (st.isDirectory) fs.listStatus(st.getPath).toSeq.filter(_.isFile)
         else Seq(st)
       }
-      .map(_.getPath.toString).sorted
+      .sortBy(_.getPath.toString)
   }
 
   /** Line RDD over zstd shards: one partition per file, partitions in
@@ -216,7 +218,8 @@ object DumpConverter {
       s"$outDir/$ManifestDir/" + java.net.URLEncoder.encode(table, "UTF-8") + ".json")
 
   /** Identity of the INPUT a manifest entry was computed from: name +
-    * length + mtime of every file [[expandInput]] resolved, PLUS every
+    * length + mtime of every file [[expandInput]] listed (from the
+    * listing's own statuses — no per-file metadata call), PLUS every
     * option that changes what the output contains (type mapping, codec,
     * quarantine, strict routing) — a rerun against different or
     * modified dump files, or with different conversion semantics,
@@ -226,13 +229,11 @@ object DumpConverter {
     * Byte-hashing 100 TB to decide restartability would defeat the
     * point; (name, size, mtime) is the standard cheap sentinel
     * (rsync's quick check). */
-  private[dump] def inputFingerprint(sc: org.apache.spark.SparkContext, files: Seq[String],
+  private[dump] def inputFingerprint(files: Seq[org.apache.hadoop.fs.FileStatus],
                                      optionsTag: String = ""): String = {
     val md = java.security.MessageDigest.getInstance("SHA-256")
-    files.foreach { f =>
-      val p = new org.apache.hadoop.fs.Path(f)
-      val st = p.getFileSystem(sc.hadoopConfiguration).getFileStatus(p)
-      md.update(s"$f|${st.getLen}|${st.getModificationTime}\n"
+    files.foreach { st =>
+      md.update(s"${st.getPath}|${st.getLen}|${st.getModificationTime}\n"
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     }
     md.update(optionsTag.getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -319,7 +320,7 @@ object DumpConverter {
     // stable, total rendering of the semantic knobs.
     val (files, fingerprint) = phase("fingerprint") {
       val files = expandInput(sc, input)
-      (files, inputFingerprint(sc, files,
+      (files.map(_.getPath.toString), inputFingerprint(files,
         s"codec=$codec|quarantine=$quarantine|strict=$strictTables|types=$types"))
     }
     val completed: Map[String, Long] =

@@ -41,13 +41,16 @@ object StreamingOps {
 
   type Q = (SparkSession, String) => DataFrame
 
-  /** THE batch-feed drain harness, once for every `batch*.parquet`
-    * ingest in the library (text/ANN/dedup/MV/hybrid/DLQ/decon/SCD):
-    * explicit schema from one footer read, one mtime-ordered file per
-    * micro-batch, checkpointed `foreachBatch`, drain-and-stop trigger.
-    * A harness fix (checkpoint discipline, trigger, file ordering) is
-    * one edit here, not N synchronized ones. */
-  private def drainBatchFeed(ss: SparkSession, src: String, ckptDir: String)
+  /** THE batch-feed drain harness, once for every store ingest in the
+    * library (ANN/MV/MV-distinct/text/dedup/DLQ/decon/governed/hybrid,
+    * each a [[writeFeed]] layout): explicit schema from one footer
+    * read, one mtime-ordered file per micro-batch, checkpointed
+    * `foreachBatch`, drain-and-stop trigger. `onBatch` sees each batch
+    * id before `apply` commits it. A harness fix (checkpoint
+    * discipline, trigger, file ordering) is one edit here, not N
+    * synchronized ones. */
+  private def drainBatchFeed(ss: SparkSession, src: String, ckptDir: String,
+                             onBatch: Long => Unit)
                             (apply: (DataFrame, Long) => Unit): Unit = {
     // memoized: batch-feed layouts are write-once per (session, dir),
     // so one footer read serves every drain of the same feed instead
@@ -60,11 +63,18 @@ object StreamingOps {
     val q = stream.writeStream
       .option("checkpointLocation", ckptDir)
       .foreachBatch { (batch: DataFrame, id: java.lang.Long) =>
+        onBatch(id.longValue())
         apply(batch, id.longValue())
       }
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
   }
+
+  /** Run `build` (a store's epoch-0 bootstrap) only while `dir` has no
+    * manifest pointer: a restart over a committed store skips it. */
+  private def bootstrapOnce(dir: String)(build: => Any): Unit =
+    if (!java.nio.file.Files.exists(
+          graft.ManifestIo.manifestPath(java.nio.file.Paths.get(dir)))) build
 
   /** Source schemas per session+dir: one batch footer read each —
     * a required-by-API explicit schema for the file stream, kept
@@ -106,7 +116,7 @@ object StreamingOps {
     * session could pick up the temporary value — exactly what sbt
     * test's parallel suites do. A clone is how Spark itself scopes
     * per-job conf (one SparkContext, many SparkSessions). */
-  private val streamSession = new PerSession[SparkSession]({ s0 =>
+  private[graft] val streamSession = new PerSession[SparkSession]({ s0 =>
     val c = s0.newSession()
     c.conf.set("spark.sql.shuffle.partitions", StatePartitions.toString)
     c
@@ -319,12 +329,10 @@ object StreamingOps {
   private val lateLayouts = new ArtifactDir("evlate")
 
   /** One parquet FILE (not directory) per arrival batch, with an
-    * explicit mtime — the file source processes oldest-first, so
-    * distinct mtimes pin the arrival order the late-data semantics
-    * depend on. */
+    * explicit mtime. */
   private def writeSingleFile(df: DataFrame, dest: java.nio.file.Path,
                               mtime: Long): Unit = {
-    val staging = scratchDir("late_stage")
+    val staging = scratchDir("feed_stage")
     try {
       df.coalesce(1).write.mode("overwrite").parquet(staging.toString)
       val part = staging.toFile.listFiles()
@@ -334,6 +342,21 @@ object StreamingOps {
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
       dest.toFile.setLastModified(mtime): Unit
     } finally deleteRecursively(staging.toFile)
+  }
+
+  /** THE arrival-feed writer: creates `dir` and writes `batches(i)` as
+    * the single file `batch<i>.parquet`, with mtimes strictly
+    * increasing in `i`. The file source processes oldest-first, so
+    * with `maxFilesPerTrigger=1` batch `i` is micro-batch `i` — the
+    * arrival order the late-data, changing-dim and store-ingest
+    * semantics depend on. */
+  private def writeFeed(dir: String, batches: Seq[DataFrame]): Unit = {
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+    val now = System.currentTimeMillis()
+    batches.zipWithIndex.foreach { case (df, i) =>
+      writeSingleFile(df, java.nio.file.Paths.get(dir, s"batch$i.parquet"),
+        now - (batches.size - i).toLong * 60000)
+    }
   }
 
   /** Three-file arrival layout: batch 0 = every event before Jan 29
@@ -349,7 +372,6 @@ object StreamingOps {
     * must be MERGED). */
   private def lateLayout(s: SparkSession, d: String): String =
     lateLayouts(s, d) { p =>
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(p))
       val ev = graft.ops.Tables.events(s, d)
         .select(col("ts"), col("user_id"), col("event_type"), col("event_id"))
       val mid = lit(LateMid).cast("timestamp")
@@ -360,11 +382,7 @@ object StreamingOps {
       val dropClones = base.filter(col("event_id") % LateDropMod === 0)
         .withColumn("ts", col("ts") - expr("INTERVAL 25 DAYS"))
       val keepClones = day29.filter(col("event_id") % LateKeepMod === 0)
-      val now = System.currentTimeMillis()
-      writeSingleFile(base, java.nio.file.Paths.get(p, "batch0.parquet"), now - 180000)
-      writeSingleFile(day29, java.nio.file.Paths.get(p, "batch1.parquet"), now - 120000)
-      writeSingleFile(tail.unionByName(dropClones).unionByName(keepClones),
-        java.nio.file.Paths.get(p, "batch2.parquet"), now - 60000)
+      writeFeed(p, Seq(base, day29, tail.unionByName(dropClones).unionByName(keepClones)))
     }
 
   /** Late-data accounting under an event-time watermark — the
@@ -792,11 +810,10 @@ object StreamingOps {
     * rows) committed as epochs 0..3. */
   private[graft] def upsertAsofStateDir(s: SparkSession, d: String): String =
     upsertAsofStateDirs(s, d) { p =>
-      if (!java.nio.file.Files.exists(
-            java.nio.file.Paths.get(p, "_manifest.json"))) {
+      bootstrapOnce(p) {
         val ev = graft.ops.Tables.events(s, d)
         (0 until 4).foreach { b =>
-          mergeUpsertBatch(s, p, ev.filter(pmod(col("event_id"), lit(4)) === b)): Unit
+          mergeUpsertBatch(s, p, ev.filter(pmod(col("event_id"), lit(4)) === b))
         }
       }
     }
@@ -1041,11 +1058,10 @@ object StreamingOps {
       : Unit = {
     val ss = streamSession(s)
     val src = splitEventsLayout(ss, d)
-    if (!java.nio.file.Files.exists(
-          java.nio.file.Paths.get(mvDirPath, "_manifest.json"))) {
+    bootstrapOnce(mvDirPath) {
       // bootstrap: an EMPTY epoch-0 view (the stream owns all the data)
       graft.ops.MvStore.build(dualMvPartials(ss.read.parquet(src).limit(0)),
-        mvDirPath, Seq("event_type"), Seq("n", "cents")): Unit
+        mvDirPath, Seq("event_type"), Seq("n", "cents"))
     }
     val schema = perSession(sourceSchemas, ss).getOrElseUpdate(s"split:$src",
       ss.read.parquet(src).schema)
@@ -1555,23 +1571,17 @@ object StreamingOps {
 
   private val outerLayouts = new ArtifactDir("evouter")
 
-  /** Three mtime-ordered single-file batches split at [[OuterCut1]] /
-    * [[OuterCut2]] — same arrival-pinning mechanism as [[lateLayout]],
-    * minus the planted stragglers. */
-  private def outerLayout(s: SparkSession, d: String): String =
+  /** Three [[writeFeed]] batches split at [[OuterCut1]] /
+    * [[OuterCut2]] — [[lateLayout]]'s arrival pinning, minus the
+    * planted stragglers. */
+  private[graft] def outerLayout(s: SparkSession, d: String): String =
     outerLayouts(s, d) { p =>
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(p))
       val ev = graft.ops.Tables.events(s, d)
         .select(col("ts"), col("user_id"), col("event_type"), col("event_id"))
       val c1 = lit(OuterCut1).cast("timestamp")
       val c2 = lit(OuterCut2).cast("timestamp")
-      val now = System.currentTimeMillis()
-      writeSingleFile(ev.filter(col("ts") < c1),
-        java.nio.file.Paths.get(p, "batch0.parquet"), now - 180000)
-      writeSingleFile(ev.filter(col("ts") >= c1 && col("ts") < c2),
-        java.nio.file.Paths.get(p, "batch1.parquet"), now - 120000)
-      writeSingleFile(ev.filter(col("ts") >= c2),
-        java.nio.file.Paths.get(p, "batch2.parquet"), now - 60000)
+      writeFeed(p, Seq(ev.filter(col("ts") < c1),
+        ev.filter(col("ts") >= c1 && col("ts") < c2), ev.filter(col("ts") >= c2)))
     }
 
   /** Watermarked stream-stream LEFT OUTER interval join — the outer
@@ -1623,12 +1633,21 @@ object StreamingOps {
     // layouts (arrival order == event-time order, so no input is ever
     // late-dropped and no intermediate emission can differ from the
     // final set — probed at all three SFs against the oracle, hash
-    // unchanged). Cutting 3 stateful micro-batches to 1 removes two
-    // full rounds of per-partition state-store commits on both join
-    // sides — the per-query fixed cost that made this the
-    // scaling-ratio-1.00 worst line of the round-16 bench (guide §1.2:
-    // fixed costs first at this SF).
-    def arrivals = ss.readStream.schema(schema).parquet(s"$src/*.parquet")
+    // unchanged; StreamingOpsSpec drains the same layout one file per
+    // micro-batch and pins equal rows). Cutting 3 stateful
+    // micro-batches to 1 removes two full rounds of per-partition
+    // state-store commits on both join sides — the per-query fixed
+    // cost that made this the scaling-ratio-1.00 worst line of the
+    // round-16 bench (guide §1.2: fixed costs first at this SF).
+    outerJoinDrain(ss.readStream.schema(schema).parquet(s"$src/*.parquet"))
+  }
+
+  /** [[st_stream_outer_join]]'s join over an arrivals stream (by name:
+    * each side reads its own source), drained to a local relation;
+    * `onDone` sees the finished query. */
+  private[graft] def outerJoinDrain(arrivals: => DataFrame,
+      onDone: org.apache.spark.sql.streaming.StreamingQuery => Unit = _ => ())
+      : DataFrame = {
     val clicks = arrivals.filter(col("event_type") === "click")
       .select(col("user_id").as("c_user"), col("ts").as("click_ts"),
         col("event_id").as("click_id"))
@@ -1647,7 +1666,7 @@ object StreamingOps {
         col("purchase_ts"),
         coalesce(col("click_ts"),
           lit("1970-01-01 00:00:00").cast("timestamp")).as("click_ts"))
-    drain(joined, "append")
+    drain(joined, "append", onDone)
       .orderBy(col("user_id"), col("purchase_id"), col("click_id"))
   }
 
@@ -1689,21 +1708,14 @@ object StreamingOps {
 
   private val scdLayouts = new ArtifactDir("evscd")
 
-  /** Three-file arrival layout for the changing-dim join (same
-    * single-file-per-batch + explicit-mtime pinning as
-    * [[lateLayout]]). */
+  /** Three-file [[writeFeed]] arrival layout for the changing-dim
+    * join. */
   private def scdLayout(s: SparkSession, d: String): String =
     scdLayouts(s, d) { p =>
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(p))
       val ev = graft.ops.Tables.events(s, d)
         .select(col("event_id"), col("user_id"), col("event_type"),
           round(col("value") * 100).cast("long").as("cents"))
-      val now = System.currentTimeMillis()
-      (0 until ScdBatches).foreach { b =>
-        writeSingleFile(ev.filter(col("event_id") % ScdBatches === b),
-          java.nio.file.Paths.get(p, s"batch$b.parquet"),
-          now - (ScdBatches - b).toLong * 60000)
-      }
+      writeFeed(p, (0 until ScdBatches).map(b => ev.filter(col("event_id") % ScdBatches === b)))
     }
 
   /** Dim version `v`'s rows over the user population: `v = 0` covers
@@ -1813,30 +1825,37 @@ object StreamingOps {
     }
   }
 
-  // --------------------------------------------- streaming ANN ingest
+  // ------------------------------------------- streaming store ingest
+  //
+  // Every store ingest below has one shape. Its layout writes the feed
+  // with [[writeFeed]]: FeedBatches files, the `% 4 ∈ {1,2,3}` quarters
+  // of its corpus (the `% 4 = 0` quarter bootstraps epoch 0). Its
+  // runner `run…(s, d, root, onBatch)` bootstraps the store(s) under
+  // `root` once ([[bootstrapOnce]]) and drains the feed into them
+  // ([[drainBatchFeed]]) with the checkpoint at `root/ckpt`. Runners
+  // are un-memoized — a second call over the same root is a restart
+  // against the drained checkpoint — and each registered query
+  // memoizes its runner once per (session, fixture) through one
+  // [[graft.SessionCache.Artifact]] per kind.
+
+  /** Micro-batches in every store-ingest feed. */
+  private[graft] val FeedBatches = 3
 
   private val annIngestLayouts = new ArtifactDir("anning")
 
-  /** Micro-batches of embedding inserts for [[st_ann_ingest]]: three
-    * mtime-ordered single files, each one third of the LATE candidates
-    * (`vec_id % 4 ∈ {1,2,3}`), already shaped as the
-    * [[graft.ops.AnnIndexStore.applyDelta]] CDC contract. */
+  /** Micro-batches of embedding inserts for [[st_ann_ingest]]: each
+    * one third of the LATE candidates (`vec_id % 4 ∈ {1,2,3}`),
+    * already shaped as the [[graft.ops.AnnIndexStore.applyDelta]] CDC
+    * contract. */
   private def annIngestLayout(s: SparkSession, d: String): String =
     annIngestLayouts(s, d) { p =>
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(p))
       val e = graft.ops.Tables.embeddings(s, d)
-      val now = System.currentTimeMillis()
-      (1 to AnnIngestBatches).foreach { b =>
-        val slice = e.filter(col("vec_id") >= 8 && col("vec_id") % 4 === b)
+      writeFeed(p, (1 to FeedBatches).map { b =>
+        e.filter(col("vec_id") >= 8 && col("vec_id") % 4 === b)
           .select(col("vec_id"), col("embedding"), lit("insert").as("op"),
             lit(null).cast(e.schema("embedding").dataType).as("old_embedding"))
-        writeSingleFile(slice,
-          java.nio.file.Paths.get(p, s"batch$b.parquet"),
-          now - (AnnIngestBatches - b).toLong * 60000)
-      }
+      })
     }
-
-  private[graft] val AnnIngestBatches = 3
 
   /** STREAMING INGEST INTO THE DURABLE ANN INDEX — the composition
     * that turns [[graft.ops.AnnIndexStore]] into a live system: an
@@ -1866,7 +1885,7 @@ object StreamingOps {
     * stores: none — the index IS the state, versioned on disk. */
   val st_ann_ingest: Q = (s, d) => {
     val e = graft.ops.Tables.embeddings(s, d)
-    val dir = runAnnIngest(s, d)
+    val dir = annIngestRuns(s, d)(runAnnIngest(s, d, _))
     graft.ops.SimilarityOps.recallWitness(
       graft.ops.SimilarityOps.bruteForceTopK(
         graft.ops.SimilarityOps.querySide(e),
@@ -1877,43 +1896,27 @@ object StreamingOps {
 
   private val annIngestRuns = new Artifact[String]("anningidx")
 
-  /** Build epoch 0 and drain the insert stream into the index once
-    * per (session, fixture); returns the index dir. `ckptOverride` /
-    * `indexOverride` let the spec run an un-memoized copy and restart
-    * it against the same checkpoint. */
-  private[graft] def runAnnIngest(s: SparkSession, d: String,
-                                  indexOverride: Option[String] = None,
-                                  ckptOverride: Option[String] = None,
+  /** Build epoch 0 and drain the insert stream into the index at
+    * `root/idx`; returns the index dir. */
+  private[graft] def runAnnIngest(s: SparkSession, d: String, root: String,
                                   onBatch: Long => Unit = _ => ()): String = {
-    def run(indexDir: String, ckptDir: String): String = {
-      val ss = streamSession(s)
-      val src = annIngestLayout(ss, d)
-      val e = graft.ops.Tables.embeddings(ss, d)
-      if (!java.nio.file.Files.exists(
-            java.nio.file.Paths.get(indexDir, "_manifest.json"))) {
-        graft.ops.AnnIndexStore.build(e, indexDir,
-          index = Some(e.filter(col("vec_id") >= 8 && col("vec_id") % 4 === 0)))
-        ()
-      }
-      drainBatchFeed(ss, src, ckptDir) { (batch, id) =>
-        onBatch(id)
-        graft.ops.AnnIndexStore.applyDeltaIdempotent(
-          batch.sparkSession, indexDir, batch, id)
-        ()
-      }
-      indexDir
+    val indexDir = s"$root/idx"
+    val ss = streamSession(s)
+    val src = annIngestLayout(ss, d)
+    val e = graft.ops.Tables.embeddings(ss, d)
+    bootstrapOnce(indexDir) {
+      graft.ops.AnnIndexStore.build(e, indexDir,
+        index = Some(e.filter(col("vec_id") >= 8 && col("vec_id") % 4 === 0)))
     }
-    (indexOverride, ckptOverride) match {
-      case (Some(idx), Some(ck)) => run(idx, ck)
-      case _ => annIngestRuns(s, d)(p => run(s"$p/idx", s"$p/ckpt"))
+    drainBatchFeed(ss, src, s"$root/ckpt", onBatch) { (batch, id) =>
+      graft.ops.AnnIndexStore.applyDeltaIdempotent(batch.sparkSession, indexDir, batch, id)
     }
+    indexDir
   }
 
   // ------------------------------------------- streaming MV maintenance
 
   private val mvIngestLayouts = new ArtifactDir("mving")
-
-  private[graft] val MvIngestBatches = 3
 
   /** The ingest view's partial derivation — ONE definition shared by
     * the epoch-0 build and every micro-batch delta, so the streamed
@@ -1926,23 +1929,16 @@ object StreamingOps {
         sum(round(col("l_quantity")).cast("long")).as("qty"),
         count(lit(1)).as("n"))
 
-  /** Micro-batches of raw fact rows for [[st_mv_ingest]]: three
-    * mtime-ordered single files, each one quarter of lineitem
-    * (`l_orderkey % 4 ∈ {1,2,3}`); the remaining quarter bootstraps
-    * epoch 0. Raw ROWS, not partials — aggregating inside the
-    * micro-batch is the shape under test. */
+  /** Micro-batches of raw fact rows for [[st_mv_ingest]]: each one
+    * quarter of lineitem (`l_orderkey % 4 ∈ {1,2,3}`); the remaining
+    * quarter bootstraps epoch 0. Raw ROWS, not partials — aggregating
+    * inside the micro-batch is the shape under test. */
   private def mvIngestLayout(s: SparkSession, d: String): String =
     mvIngestLayouts(s, d) { p =>
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(p))
       val li = graft.ops.Tables.lineitem(s, d)
         .select(col("l_orderkey"), col("l_shipdate"), col("l_returnflag"),
           col("l_extendedprice"), col("l_quantity"))
-      val now = System.currentTimeMillis()
-      (1 to MvIngestBatches).foreach { b =>
-        writeSingleFile(li.filter(col("l_orderkey") % 4 === b),
-          java.nio.file.Paths.get(p, s"batch$b.parquet"),
-          now - (MvIngestBatches - b).toLong * 60000)
-      }
+      writeFeed(p, (1 to FeedBatches).map(b => li.filter(col("l_orderkey") % 4 === b)))
     }
 
   /** STREAMING MATERIALIZED-VIEW MAINTENANCE — the MV member of the
@@ -1962,40 +1958,29 @@ object StreamingOps {
     * months-touched-sized bucket merge; the view never rebuilds, and
     * the stream carries no state store (the artifact IS the state). */
   val st_mv_ingest: Q = (s, d) => {
-    val dir = runMvIngest(s, d)
+    val dir = mvIngestRuns(s, d)(runMvIngest(s, d, _))
     graft.ops.MvStore.serve(s, dir, graft.ops.MvStore.open(dir))
   }
 
   private val mvIngestRuns = new Artifact[String]("mvingstore")
 
-  /** Bootstrap epoch 0 and drain the fact stream into the MV once per
-    * (session, fixture); returns the store dir. Overrides let the spec
-    * run an un-memoized copy and restart it against its checkpoint. */
-  private[graft] def runMvIngest(s: SparkSession, d: String,
-                                 storeOverride: Option[String] = None,
-                                 ckptOverride: Option[String] = None,
+  /** Bootstrap epoch 0 and drain the fact stream into the MV at
+    * `root/state`; returns the store dir. */
+  private[graft] def runMvIngest(s: SparkSession, d: String, root: String,
                                  onBatch: Long => Unit = _ => ()): String = {
-    def run(storeDir: String, ckptDir: String): String = {
-      val ss = streamSession(s)
-      val src = mvIngestLayout(ss, d)
-      if (!java.nio.file.Files.exists(
-            java.nio.file.Paths.get(storeDir, "_manifest.json"))) {
-        val li = graft.ops.Tables.lineitem(ss, d).filter(col("l_orderkey") % 4 === 0)
-        graft.ops.MvStore.build(mvIngestPartials(li), storeDir,
-          Seq("l_returnflag"), Seq("rev_cents", "qty", "n")): Unit
-      }
-      drainBatchFeed(ss, src, ckptDir) { (batch, id) =>
-        onBatch(id)
-        graft.ops.MvStore.refreshIdempotent(
-          batch.sparkSession, storeDir, mvIngestPartials(batch), id)
-        ()
-      }
-      storeDir
+    val storeDir = s"$root/state"
+    val ss = streamSession(s)
+    val src = mvIngestLayout(ss, d)
+    bootstrapOnce(storeDir) {
+      val li = graft.ops.Tables.lineitem(ss, d).filter(col("l_orderkey") % 4 === 0)
+      graft.ops.MvStore.build(mvIngestPartials(li), storeDir,
+        Seq("l_returnflag"), Seq("rev_cents", "qty", "n"))
     }
-    (storeOverride, ckptOverride) match {
-      case (Some(st), Some(ck)) => run(st, ck)
-      case _ => mvIngestRuns(s, d)(p => run(s"$p/state", s"$p/ckpt"))
+    drainBatchFeed(ss, src, s"$root/ckpt", onBatch) { (batch, id) =>
+      graft.ops.MvStore.refreshIdempotent(
+        batch.sparkSession, storeDir, mvIngestPartials(batch), id)
     }
+    storeDir
   }
 
   private val mvDistinctLayouts = new ArtifactDir("mvdisting")
@@ -2008,20 +1993,14 @@ object StreamingOps {
       .groupBy(col("m"), col("event_type"))
       .agg(hll_sketch_agg(col("user_id"), lit(12)).as("sk"))
 
-  /** Micro-batches of raw events for [[st_mv_distinct]]: three
-    * mtime-ordered single files (`event_id % 4 ∈ {1,2,3}`); the
-    * remaining quarter bootstraps epoch 0. */
+  /** Micro-batches of raw events for [[st_mv_distinct]]
+    * (`event_id % 4 ∈ {1,2,3}`); the remaining quarter bootstraps
+    * epoch 0. */
   private def mvDistinctLayout(s: SparkSession, d: String): String =
     mvDistinctLayouts(s, d) { p =>
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(p))
       val ev = graft.ops.Tables.events(s, d)
         .select(col("event_id"), col("ts"), col("event_type"), col("user_id"))
-      val now = System.currentTimeMillis()
-      (1 to MvIngestBatches).foreach { b =>
-        writeSingleFile(ev.filter(col("event_id") % 4 === b),
-          java.nio.file.Paths.get(p, s"batch$b.parquet"),
-          now - (MvIngestBatches - b).toLong * 60000)
-      }
+      writeFeed(p, (1 to FeedBatches).map(b => ev.filter(col("event_id") % 4 === b)))
     }
 
   /** STREAMING DISTINCT-COUNT MV — the sketch-state face of
@@ -2038,7 +2017,7 @@ object StreamingOps {
     * never rebuild, and the stream carries no state store (the
     * artifact IS the state). */
   val st_mv_distinct: Q = (s, d) => {
-    val dir = runMvDistinct(s, d)
+    val dir = mvDistinctRuns(s, d)(runMvDistinct(s, d, _))
     val served = graft.ops.MvStore.serve(s, dir, graft.ops.MvStore.open(dir))
       .select(col("event_type"), hll_sketch_estimate(col("sk")).as("est"))
     val exact = graft.ops.Tables.events(s, d)
@@ -2053,35 +2032,23 @@ object StreamingOps {
 
   private val mvDistinctRuns = new Artifact[String]("mvdiststore")
 
-  /** Bootstrap the epoch-0 sketch view and drain the event stream into
-    * it once per (session, fixture); returns the store dir. Overrides
-    * let the spec run an un-memoized copy and restart it against its
-    * checkpoint. */
-  private[graft] def runMvDistinct(s: SparkSession, d: String,
-                                   storeOverride: Option[String] = None,
-                                   ckptOverride: Option[String] = None,
+  /** Bootstrap the epoch-0 sketch view at `root/state` and drain the
+    * event stream into it; returns the store dir. */
+  private[graft] def runMvDistinct(s: SparkSession, d: String, root: String,
                                    onBatch: Long => Unit = _ => ()): String = {
-    def run(storeDir: String, ckptDir: String): String = {
-      val ss = streamSession(s)
-      val src = mvDistinctLayout(ss, d)
-      if (!java.nio.file.Files.exists(
-            java.nio.file.Paths.get(storeDir, "_manifest.json"))) {
-        val boot = graft.ops.Tables.events(ss, d).filter(col("event_id") % 4 === 0)
-        graft.ops.MvStore.build(mvDistinctPartials(boot), storeDir,
-          Seq("event_type"), Seq("sk"), kinds = Seq("hll")): Unit
-      }
-      drainBatchFeed(ss, src, ckptDir) { (batch, id) =>
-        onBatch(id)
-        graft.ops.MvStore.refreshIdempotent(
-          batch.sparkSession, storeDir, mvDistinctPartials(batch), id)
-        ()
-      }
-      storeDir
+    val storeDir = s"$root/state"
+    val ss = streamSession(s)
+    val src = mvDistinctLayout(ss, d)
+    bootstrapOnce(storeDir) {
+      val boot = graft.ops.Tables.events(ss, d).filter(col("event_id") % 4 === 0)
+      graft.ops.MvStore.build(mvDistinctPartials(boot), storeDir,
+        Seq("event_type"), Seq("sk"), kinds = Seq("hll"))
     }
-    (storeOverride, ckptOverride) match {
-      case (Some(st), Some(ck)) => run(st, ck)
-      case _ => mvDistinctRuns(s, d)(p => run(s"$p/state", s"$p/ckpt"))
+    drainBatchFeed(ss, src, s"$root/ckpt", onBatch) { (batch, id) =>
+      graft.ops.MvStore.refreshIdempotent(
+        batch.sparkSession, storeDir, mvDistinctPartials(batch), id)
     }
+    storeDir
   }
 
   // ---------------------------- streaming text / dedup index ingest
@@ -2089,54 +2056,32 @@ object StreamingOps {
   private val textIngestLayouts = new ArtifactDir("texting")
   private val textIngestRuns = new Artifact[String]("textingidx")
 
-  private[graft] val TextIngestBatches = 3
-
-  /** Micro-batches of document inserts for [[st_text_ingest]]: three
-    * mtime-ordered single files, each the `doc_id % 4 = b` quarter of
-    * the corpus; the `% 4 = 0` quarter bootstraps epoch 0. Raw
-    * (doc_id, text) rows — tokenization happens inside the index's
-    * delta commit, which is the shape under test. */
+  /** Micro-batches of document inserts for [[st_text_ingest]]: each
+    * the `doc_id % 4 = b` quarter of the corpus; the `% 4 = 0` quarter
+    * bootstraps epoch 0. Raw (doc_id, text) rows — tokenization
+    * happens inside the index's delta commit, which is the shape under
+    * test. */
   private def textIngestLayout(s: SparkSession, d: String): String =
     textIngestLayouts(s, d) { p =>
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(p))
       val docs = graft.ops.Tables.documents(s, d).select(col("doc_id"), col("text"))
-      val now = System.currentTimeMillis()
-      (1 to TextIngestBatches).foreach { b =>
-        writeSingleFile(docs.filter(col("doc_id") % 4 === b),
-          java.nio.file.Paths.get(p, s"batch$b.parquet"),
-          now - (TextIngestBatches - b).toLong * 60000)
-      }
+      writeFeed(p, (1 to FeedBatches).map(b => docs.filter(col("doc_id") % 4 === b)))
     }
 
   /** Build epoch 0 and drain the document stream into the BM25 index
-    * once per (session, fixture); returns the index dir. Overrides
-    * let the spec run an un-memoized copy and restart it against the
-    * same checkpoint. */
-  private[graft] def runTextIngest(s: SparkSession, d: String,
-                                   indexOverride: Option[String] = None,
-                                   ckptOverride: Option[String] = None,
+    * at `root/idx`; returns the index dir. */
+  private[graft] def runTextIngest(s: SparkSession, d: String, root: String,
                                    onBatch: Long => Unit = _ => ()): String = {
-    def run(indexDir: String, ckptDir: String): String = {
-      val ss = streamSession(s)
-      val src = textIngestLayout(ss, d)
-      val docs = graft.ops.Tables.documents(ss, d).select(col("doc_id"), col("text"))
-      if (!java.nio.file.Files.exists(
-            java.nio.file.Paths.get(indexDir, "_manifest.json"))) {
-        graft.ops.TextIndexStore.build(docs.filter(col("doc_id") % 4 === 0), indexDir)
-        ()
-      }
-      drainBatchFeed(ss, src, ckptDir) { (batch, id) =>
-        onBatch(id)
-        graft.ops.TextIndexStore.applyDeltaIdempotent(
-          batch.sparkSession, indexDir, batch, id)
-        ()
-      }
-      indexDir
+    val indexDir = s"$root/idx"
+    val ss = streamSession(s)
+    val src = textIngestLayout(ss, d)
+    val docs = graft.ops.Tables.documents(ss, d).select(col("doc_id"), col("text"))
+    bootstrapOnce(indexDir) {
+      graft.ops.TextIndexStore.build(docs.filter(col("doc_id") % 4 === 0), indexDir)
     }
-    (indexOverride, ckptOverride) match {
-      case (Some(idx), Some(ck)) => run(idx, ck)
-      case _ => textIngestRuns(s, d)(p => run(s"$p/idx", s"$p/ckpt"))
+    drainBatchFeed(ss, src, s"$root/ckpt", onBatch) { (batch, id) =>
+      graft.ops.TextIndexStore.applyDeltaIdempotent(batch.sparkSession, indexDir, batch, id)
     }
+    indexDir
   }
 
   /** STREAMING INGEST INTO THE DURABLE BM25 INDEX — the text twin of
@@ -2165,7 +2110,7 @@ object StreamingOps {
     * flip) — nothing in the loop re-reads the corpus. State stores:
     * none — the index IS the state, versioned on disk. */
   val st_text_ingest: Q = (s, d) => {
-    val dir = runTextIngest(s, d)
+    val dir = textIngestRuns(s, d)(runTextIngest(s, d, _))
     graft.ops.TextIndexStore.bm25Scores(s, dir, graft.ops.TextIndexStore.open(dir))
       .orderBy(desc("score_e6"), col("doc_id"))
       .limit(graft.ops.TextOps.BmTopK)
@@ -2175,54 +2120,34 @@ object StreamingOps {
   private val dedupIngestLayouts = new ArtifactDir("deduping")
   private val dedupIngestRuns = new Artifact[String]("dedupingidx")
 
-  private[graft] val DedupIngestBatches = 3
-
   /** Micro-batches of OLD-corpus document inserts for
-    * [[st_dedup_ingest]]: three mtime-ordered single files, each the
-    * `doc_id % 4 = b` quarter of the old corpus (`doc_id % 5 ≠ 4` —
-    * the same old/new split as every `d_dedup_*` index witness); the
-    * `% 4 = 0` quarter bootstraps epoch 0. */
+    * [[st_dedup_ingest]]: each the `doc_id % 4 = b` quarter of the old
+    * corpus (`doc_id % 5 ≠ 4` — the same old/new split as every
+    * `d_dedup_*` index witness); the `% 4 = 0` quarter bootstraps
+    * epoch 0. */
   private def dedupIngestLayout(s: SparkSession, d: String): String =
     dedupIngestLayouts(s, d) { p =>
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(p))
       val old = graft.ops.Tables.documents(s, d)
         .filter(col("doc_id") % 5 =!= 4).select(col("doc_id"), col("text"))
-      val now = System.currentTimeMillis()
-      (1 to DedupIngestBatches).foreach { b =>
-        writeSingleFile(old.filter(col("doc_id") % 4 === b),
-          java.nio.file.Paths.get(p, s"batch$b.parquet"),
-          now - (DedupIngestBatches - b).toLong * 60000)
-      }
+      writeFeed(p, (1 to FeedBatches).map(b => old.filter(col("doc_id") % 4 === b)))
     }
 
   /** Build epoch 0 and drain the old-corpus stream into the near-dup
-    * index once per (session, fixture); returns the index dir. */
-  private[graft] def runDedupIngest(s: SparkSession, d: String,
-                                    indexOverride: Option[String] = None,
-                                    ckptOverride: Option[String] = None,
+    * index at `root/idx`; returns the index dir. */
+  private[graft] def runDedupIngest(s: SparkSession, d: String, root: String,
                                     onBatch: Long => Unit = _ => ()): String = {
-    def run(indexDir: String, ckptDir: String): String = {
-      val ss = streamSession(s)
-      val src = dedupIngestLayout(ss, d)
-      val old = graft.ops.Tables.documents(ss, d)
-        .filter(col("doc_id") % 5 =!= 4).select(col("doc_id"), col("text"))
-      if (!java.nio.file.Files.exists(
-            java.nio.file.Paths.get(indexDir, "_manifest.json"))) {
-        graft.ops.DedupIndexStore.build(old.filter(col("doc_id") % 4 === 0), indexDir)
-        ()
-      }
-      drainBatchFeed(ss, src, ckptDir) { (batch, id) =>
-        onBatch(id)
-        graft.ops.DedupIndexStore.applyDeltaIdempotent(
-          batch.sparkSession, indexDir, batch, id)
-        ()
-      }
-      indexDir
+    val indexDir = s"$root/idx"
+    val ss = streamSession(s)
+    val src = dedupIngestLayout(ss, d)
+    val old = graft.ops.Tables.documents(ss, d)
+      .filter(col("doc_id") % 5 =!= 4).select(col("doc_id"), col("text"))
+    bootstrapOnce(indexDir) {
+      graft.ops.DedupIndexStore.build(old.filter(col("doc_id") % 4 === 0), indexDir)
     }
-    (indexOverride, ckptOverride) match {
-      case (Some(idx), Some(ck)) => run(idx, ck)
-      case _ => dedupIngestRuns(s, d)(p => run(s"$p/idx", s"$p/ckpt"))
+    drainBatchFeed(ss, src, s"$root/ckpt", onBatch) { (batch, id) =>
+      graft.ops.DedupIndexStore.applyDeltaIdempotent(batch.sparkSession, indexDir, batch, id)
     }
+    indexDir
   }
 
   /** STREAMING INGEST INTO THE DURABLE NEAR-DUP INDEX — the dedup twin
@@ -2245,7 +2170,7 @@ object StreamingOps {
     * appends one registry segment, one flip); the serve stays
     * probe-proportional. */
   val st_dedup_ingest: Q = (s, d) => {
-    val dir = runDedupIngest(s, d)
+    val dir = dedupIngestRuns(s, d)(runDedupIngest(s, d, _))
     graft.ops.DedupIndexStore.nearDups(s, dir, graft.ops.DedupIndexStore.open(dir),
         graft.ops.Tables.documents(s, d).filter(col("doc_id") % 5 === 4)
           .select(col("doc_id"), col("text")))
@@ -2256,8 +2181,6 @@ object StreamingOps {
 
   private val dlqIngestLayouts = new ArtifactDir("dlqing")
   private val dlqIngestRuns = new Artifact[(String, String)]("dlqingidx")
-
-  private[graft] val DlqBatches = 3
 
   /** The planted-invalid predicate for the DLQ feed: streamed docs
     * with `doc_id % 31 = 7` arrive with their text BLANKED — zero
@@ -2273,16 +2196,10 @@ object StreamingOps {
     * real feed carries. */
   private def dlqIngestLayout(s: SparkSession, d: String): String =
     dlqIngestLayouts(s, d) { p =>
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(p))
       val docs = graft.ops.Tables.documents(s, d)
         .select(col("doc_id"),
           when(dlqInvalid, lit("")).otherwise(col("text")).as("text"))
-      val now = System.currentTimeMillis()
-      (1 to DlqBatches).foreach { b =>
-        writeSingleFile(docs.filter(col("doc_id") % 4 === b),
-          java.nio.file.Paths.get(p, s"batch$b.parquet"),
-          now - (DlqBatches - b).toLong * 60000)
-      }
+      writeFeed(p, (1 to FeedBatches).map(b => docs.filter(col("doc_id") % 4 === b)))
     }
 
   /** Apply ONE feed micro-batch with dead-letter routing: rows that
@@ -2307,33 +2224,24 @@ object StreamingOps {
     ()
   }
 
-  /** Bootstrap + drain the dead-lettered feed once per (session,
-    * fixture); returns (indexDir, quarantineDir). */
-  private[graft] def runDlqIngest(s: SparkSession, d: String,
-                                  dirsOverride: Option[(String, String)] = None,
-                                  ckptOverride: Option[String] = None,
+  /** Bootstrap + drain the dead-lettered feed into the index at
+    * `root/idx` and the quarantine table at `root/q`; returns
+    * (indexDir, quarantineDir). */
+  private[graft] def runDlqIngest(s: SparkSession, d: String, root: String,
                                   onBatch: Long => Unit = _ => ()): (String, String) = {
-    def run(textDir: String, qDir: String, ckptDir: String): (String, String) = {
-      val ss = streamSession(s)
-      val src = dlqIngestLayout(ss, d)
-      if (!java.nio.file.Files.exists(
-            java.nio.file.Paths.get(textDir, "_manifest.json"))) {
-        graft.ops.TextIndexStore.build(
-          graft.ops.Tables.documents(ss, d)
-            .filter(col("doc_id") % 4 === 0).select(col("doc_id"), col("text")),
-          textDir)
-        ()
-      }
-      drainBatchFeed(ss, src, ckptDir) { (batch, id) =>
-        onBatch(id)
-        applyDlqBatch(textDir, qDir, batch, id)
-      }
-      (textDir, qDir)
+    val (textDir, qDir) = (s"$root/idx", s"$root/q")
+    val ss = streamSession(s)
+    val src = dlqIngestLayout(ss, d)
+    bootstrapOnce(textDir) {
+      graft.ops.TextIndexStore.build(
+        graft.ops.Tables.documents(ss, d)
+          .filter(col("doc_id") % 4 === 0).select(col("doc_id"), col("text")),
+        textDir)
     }
-    (dirsOverride, ckptOverride) match {
-      case (Some((t, qd)), Some(ck)) => run(t, qd, ck)
-      case _ => dlqIngestRuns(s, d)(p => run(s"$p/idx", s"$p/q", s"$p/ckpt"))
+    drainBatchFeed(ss, src, s"$root/ckpt", onBatch) { (batch, id) =>
+      applyDlqBatch(textDir, qDir, batch, id)
     }
+    (textDir, qDir)
   }
 
   /** DEAD-LETTER QUARANTINE ON A STREAMING INDEX FEED — the
@@ -2351,7 +2259,7 @@ object StreamingOps {
     * valid doc was lost; [[st_dlq_table]] pins the other half — the
     * quarantine table IS the planted invalid set, row for row. */
   val st_dlq_ingest: Q = (s, d) => {
-    val (tDir, _) = runDlqIngest(s, d)
+    val (tDir, _) = dlqIngestRuns(s, d)(runDlqIngest(s, d, _))
     graft.ops.TextIndexStore.bm25Scores(s, tDir, graft.ops.TextIndexStore.open(tDir))
       .orderBy(desc("score_e6"), col("doc_id"))
       .limit(graft.ops.TextOps.BmTopK)
@@ -2364,7 +2272,7 @@ object StreamingOps {
     * batch routing (`doc_id % 4`), so a doc quarantined twice, dropped
     * silently, or routed to the wrong batch all hash-mismatch. */
   val st_dlq_table: Q = (s, d) => {
-    val (_, qDir) = runDlqIngest(s, d)
+    val (_, qDir) = dlqIngestRuns(s, d)(runDlqIngest(s, d, _))
     s.read.option("basePath", qDir).parquet(s"$qDir/batch=*")
       .select(col("doc_id"), col("reason"), col("batch").cast("long").as("batch"))
       .orderBy(col("doc_id"))
@@ -2413,37 +2321,30 @@ object StreamingOps {
   }
 
   /** Bootstrap (the pre-screened `doc_id % 4 = 0` quarter) + drain the
-    * document feed through the contamination gate once per (session,
-    * fixture); returns (indexDir, quarantineDir). The bootstrap runs
-    * the SAME screen as the stream — a contaminated doc must not
-    * enter through the batch door either. */
-  private[graft] def runDeconIngest(s: SparkSession, d: String,
-                                    dirsOverride: Option[(String, String)] = None,
-                                    ckptOverride: Option[String] = None): (String, String) = {
-    def run(textDir: String, qDir: String, ckptDir: String): (String, String) = {
-      val ss = streamSession(s)
-      val src = textIngestLayout(ss, d)
-      val evalSh = deconEvalShingles(ss, d).localCheckpoint()
-      if (!java.nio.file.Files.exists(
-            java.nio.file.Paths.get(textDir, "_manifest.json"))) {
-        val boot = graft.ops.Tables.documents(ss, d)
-          .filter(col("doc_id") % 4 === 0).select(col("doc_id"), col("text"))
-        val bootHits = boot.select(col("doc_id"),
-            explode(graft.functions.WordShingles.wordShingles(col("text"), 8)).as("s8"))
-          .join(broadcast(evalSh), "s8").select(col("doc_id")).distinct()
-        graft.ops.TextIndexStore.build(
-          boot.join(bootHits, Seq("doc_id"), "left_anti"), textDir)
-        ()
-      }
-      drainBatchFeed(ss, src, ckptDir) { (batch, id) =>
-        applyDeconBatch(textDir, qDir, evalSh, batch, id)
-      }
-      (textDir, qDir)
+    * document feed through the contamination gate into the index at
+    * `root/idx` and the quarantine table at `root/q`; returns
+    * (indexDir, quarantineDir). The bootstrap runs the SAME screen as
+    * the stream — a contaminated doc must not enter through the batch
+    * door either. */
+  private[graft] def runDeconIngest(s: SparkSession, d: String, root: String,
+                                    onBatch: Long => Unit = _ => ()): (String, String) = {
+    val (textDir, qDir) = (s"$root/idx", s"$root/q")
+    val ss = streamSession(s)
+    val src = textIngestLayout(ss, d)
+    val evalSh = deconEvalShingles(ss, d).localCheckpoint()
+    bootstrapOnce(textDir) {
+      val boot = graft.ops.Tables.documents(ss, d)
+        .filter(col("doc_id") % 4 === 0).select(col("doc_id"), col("text"))
+      val bootHits = boot.select(col("doc_id"),
+          explode(graft.functions.WordShingles.wordShingles(col("text"), 8)).as("s8"))
+        .join(broadcast(evalSh), "s8").select(col("doc_id")).distinct()
+      graft.ops.TextIndexStore.build(
+        boot.join(bootHits, Seq("doc_id"), "left_anti"), textDir)
     }
-    (dirsOverride, ckptOverride) match {
-      case (Some((t, qd)), Some(ck)) => run(t, qd, ck)
-      case _ => deconIngestRuns(s, d)(p => run(s"$p/idx", s"$p/q", s"$p/ckpt"))
+    drainBatchFeed(ss, src, s"$root/ckpt", onBatch) { (batch, id) =>
+      applyDeconBatch(textDir, qDir, evalSh, batch, id)
     }
+    (textDir, qDir)
   }
 
   /** STREAMING DECONTAMINATION GATE — benchmark screening moved to
@@ -2457,7 +2358,7 @@ object StreamingOps {
     * stream, nothing clean was lost). [[st_decon_table]] pins the
     * quarantine half. */
   val st_decon_ingest: Q = (s, d) => {
-    val (tDir, _) = runDeconIngest(s, d)
+    val (tDir, _) = deconIngestRuns(s, d)(runDeconIngest(s, d, _))
     graft.ops.TextIndexStore.bm25Scores(s, tDir, graft.ops.TextIndexStore.open(tDir))
       .orderBy(desc("score_e6"), col("doc_id"))
       .limit(graft.ops.TextOps.BmTopK)
@@ -2471,7 +2372,7 @@ object StreamingOps {
     * corpus (overlap counts from first principles, batch routing from
     * the `doc_id % 4` feed rule). */
   val st_decon_table: Q = (s, d) => {
-    val (_, qDir) = runDeconIngest(s, d)
+    val (_, qDir) = deconIngestRuns(s, d)(runDeconIngest(s, d, _))
     s.read.option("basePath", qDir).parquet(s"$qDir/batch=*")
       .select(col("doc_id"), col("n_hits"), col("batch").cast("long").as("batch"))
       .orderBy(col("doc_id"))
@@ -2482,59 +2383,49 @@ object StreamingOps {
   private val govIngestLayouts = new ArtifactDir("goving")
   private val govIngestRuns = new Artifact[String]("govingtbl")
 
-  private[graft] val GovIngestBatches = 3
-
   /** Micro-batches for [[st_gov_ingest]]: quarters 1–3 of the
-    * documents corpus as mtime-ordered single files, with quarter 2
-    * PLANTED dirty — rows at `doc_id ≡ 2 (mod 20)` carry a NEGATED
-    * n_chars, the data-quality violation the WAP audit screens for.
-    * Unlike the DLQ feed's per-row routing, the governed gate is
-    * all-or-nothing: one bad row refuses the WHOLE batch. */
+    * documents corpus, with quarter 2 PLANTED dirty — rows at
+    * `doc_id ≡ 2 (mod 20)` carry a NEGATED n_chars, the data-quality
+    * violation the WAP audit screens for. Unlike the DLQ feed's
+    * per-row routing, the governed gate is all-or-nothing: one bad row
+    * refuses the WHOLE batch. */
   private def govIngestLayout(s: SparkSession, d: String): String =
     govIngestLayouts(s, d) { p =>
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(p))
       val docs = graft.ops.Tables.documents(s, d)
         .select(col("doc_id"), col("source"), col("n_chars"))
-      val now = System.currentTimeMillis()
-      (1 to GovIngestBatches).foreach { b =>
+      writeFeed(p, (1 to FeedBatches).map { b =>
         val q = docs.filter(col("doc_id") % 4 === b)
-        val rows =
-          if (b == 2) q.withColumn("n_chars",
-            when(col("doc_id") % 20 === 2, -col("n_chars"))
-              .otherwise(col("n_chars")))
-          else q
-        writeSingleFile(rows, java.nio.file.Paths.get(p, s"batch$b.parquet"),
-          now - (GovIngestBatches - b).toLong * 60000)
-      }
+        if (b == 2) q.withColumn("n_chars",
+          when(col("doc_id") % 20 === 2, -col("n_chars"))
+            .otherwise(col("n_chars")))
+        else q
+      })
     }
 
-  /** Build epoch 0 (the `doc_id % 4 = 0` quarter) and drain the feed
-    * through [[graft.ops.GovernedTable.ingestBatch]] once per
-    * (session, fixture); returns the table dir. */
-  private[graft] def runGovIngest(s: SparkSession, d: String): String =
-    govIngestRuns(s, d) { p =>
-      val (tDir, ck) = (s"$p/tbl", s"$p/ckpt")
-      val ss = streamSession(s)
-      val src = govIngestLayout(ss, d)
-      if (!java.nio.file.Files.exists(
-            graft.ManifestIo.manifestPath(java.nio.file.Paths.get(tDir)))) {
-        graft.ops.GovernedTable.build(
-          graft.ops.Tables.documents(ss, d)
-            .select(col("doc_id"), col("source"), col("n_chars"))
-            .filter(col("doc_id") % 4 === 0), tDir)
-        ()
-      }
-      drainBatchFeed(ss, src, ck) { (batch, id) =>
-        // the no-negative-n_chars invariant is PER-ROW, so the audit
-        // scopes to the staged batch alone (batch-proportional by
-        // construction; GovernedTableSpec pins the inputFiles claim)
-        graft.ops.GovernedTable.ingestBatch(batch.sparkSession, tDir, batch, id,
-          auditStagedOnly = true)(
-          v => v.filter(col("n_chars") < 0).count())
-        ()
-      }
-      tDir
+  /** Build epoch 0 (the `doc_id % 4 = 0` quarter) at `root/tbl` and
+    * drain the feed through [[graft.ops.GovernedTable.ingestBatch]];
+    * returns the table dir. */
+  private[graft] def runGovIngest(s: SparkSession, d: String, root: String,
+                                  onBatch: Long => Unit = _ => ()): String = {
+    val tDir = s"$root/tbl"
+    val ss = streamSession(s)
+    val src = govIngestLayout(ss, d)
+    bootstrapOnce(tDir) {
+      graft.ops.GovernedTable.build(
+        graft.ops.Tables.documents(ss, d)
+          .select(col("doc_id"), col("source"), col("n_chars"))
+          .filter(col("doc_id") % 4 === 0), tDir)
     }
+    drainBatchFeed(ss, src, s"$root/ckpt", onBatch) { (batch, id) =>
+      // the no-negative-n_chars invariant is PER-ROW, so the audit
+      // scopes to the staged batch alone (batch-proportional by
+      // construction; GovernedTableSpec pins the inputFiles claim)
+      graft.ops.GovernedTable.ingestBatch(batch.sparkSession, tDir, batch, id,
+        auditStagedOnly = true)(
+        v => v.filter(col("n_chars") < 0).count())
+    }
+    tDir
+  }
 
   /** STREAMING INGEST THROUGH THE WAP GATE — the governed table joins
     * the five durable stores in having a live feed: every micro-batch
@@ -2552,7 +2443,7 @@ object StreamingOps {
     * batch-proportional: stage writes the batch, the audit predicate
     * pushes down onto it, publish/refuse are one manifest write. */
   val st_gov_ingest: Q = (s, d) => {
-    val tDir = runGovIngest(s, d)
+    val tDir = govIngestRuns(s, d)(runGovIngest(s, d, _))
     graft.ops.GovernedTable.read(s, tDir)
       .groupBy((col("doc_id") % 4).as("quarter"))
       .agg(count(lit(1)).as("n"),
@@ -2569,7 +2460,7 @@ object StreamingOps {
     * that the verdict log in the manifest is exactly the protocol's
     * promised lineage. */
   val st_gov_log: Q = (s, d) => {
-    val tDir = runGovIngest(s, d)
+    val tDir = govIngestRuns(s, d)(runGovIngest(s, d, _))
     val ss = s
     import ss.implicits._
     graft.ops.GovernedTable.open(tDir).batches.toSeq.sortBy(_._1)
@@ -2582,24 +2473,16 @@ object StreamingOps {
   private val hybridIngestLayouts = new ArtifactDir("hybing")
   private val hybridIngestRuns = new Artifact[(String, String)]("hybingidx")
 
-  private[graft] val HybridIngestBatches = 3
-
   /** Micro-batches of FULL document records — text AND embedding in
-    * one row — for [[st_hybrid_ingest]]: three mtime-ordered single
-    * files over the candidate corpus (`vec_id ≥ 8`, the hybrid
-    * family's retrieval side), each the `doc_id % 4 = b` quarter; the
-    * `% 4 = 0` quarter bootstraps both indexes' epoch 0. One feed, two
-    * artifacts — the freshness-coupling shape under test. */
+    * one row — for [[st_hybrid_ingest]] over the candidate corpus
+    * (`vec_id ≥ 8`, the hybrid family's retrieval side), each the
+    * `doc_id % 4 = b` quarter; the `% 4 = 0` quarter bootstraps both
+    * indexes' epoch 0. One feed, two artifacts — the
+    * freshness-coupling shape under test. */
   private def hybridIngestLayout(s: SparkSession, d: String): String =
     hybridIngestLayouts(s, d) { p =>
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(p))
       val rows = hybridCandRecords(s, d)
-      val now = System.currentTimeMillis()
-      (1 to HybridIngestBatches).foreach { b =>
-        writeSingleFile(rows.filter(col("doc_id") % 4 === b),
-          java.nio.file.Paths.get(p, s"batch$b.parquet"),
-          now - (HybridIngestBatches - b).toLong * 60000)
-      }
+      writeFeed(p, (1 to FeedBatches).map(b => rows.filter(col("doc_id") % 4 === b)))
     }
 
   /** The candidate corpus as full records: (doc_id, text, embedding)
@@ -2635,40 +2518,28 @@ object StreamingOps {
     ()
   }
 
-  /** Bootstrap both indexes' epoch 0 and drain the hybrid feed once
-    * per (session, fixture); returns (textDir, annDir). */
-  private[graft] def runHybridIngest(s: SparkSession, d: String,
-                                     dirsOverride: Option[(String, String)] = None,
-                                     ckptOverride: Option[String] = None,
+  /** Bootstrap both indexes' epoch 0 (text at `root/text`, ANN at
+    * `root/ann`) and drain the hybrid feed; returns (textDir, annDir). */
+  private[graft] def runHybridIngest(s: SparkSession, d: String, root: String,
                                      onBatch: Long => Unit = _ => ()): (String, String) = {
-    def run(textDir: String, annDir: String, ckptDir: String): (String, String) = {
-      val ss = streamSession(s)
-      val src = hybridIngestLayout(ss, d)
-      val rows = hybridCandRecords(ss, d)
-      if (!java.nio.file.Files.exists(
-            java.nio.file.Paths.get(textDir, "_manifest.json"))) {
-        graft.ops.TextIndexStore.build(
-          rows.filter(col("doc_id") % 4 === 0).select(col("doc_id"), col("text")),
-          textDir)
-        ()
-      }
-      if (!java.nio.file.Files.exists(
-            java.nio.file.Paths.get(annDir, "_manifest.json"))) {
-        val e = graft.ops.Tables.embeddings(ss, d)
-        graft.ops.AnnIndexStore.build(e, annDir,
-          index = Some(e.filter(col("vec_id") >= 8 && col("vec_id") % 4 === 0)))
-        ()
-      }
-      drainBatchFeed(ss, src, ckptDir) { (batch, id) =>
-        onBatch(id)
-        applyHybridBatch(textDir, annDir, batch, id)
-      }
-      (textDir, annDir)
+    val (textDir, annDir) = (s"$root/text", s"$root/ann")
+    val ss = streamSession(s)
+    val src = hybridIngestLayout(ss, d)
+    val rows = hybridCandRecords(ss, d)
+    bootstrapOnce(textDir) {
+      graft.ops.TextIndexStore.build(
+        rows.filter(col("doc_id") % 4 === 0).select(col("doc_id"), col("text")),
+        textDir)
     }
-    (dirsOverride, ckptOverride) match {
-      case (Some((t, a)), Some(ck)) => run(t, a, ck)
-      case _ => hybridIngestRuns(s, d)(p => run(s"$p/text", s"$p/ann", s"$p/ckpt"))
+    bootstrapOnce(annDir) {
+      val e = graft.ops.Tables.embeddings(ss, d)
+      graft.ops.AnnIndexStore.build(e, annDir,
+        index = Some(e.filter(col("vec_id") >= 8 && col("vec_id") % 4 === 0)))
     }
+    drainBatchFeed(ss, src, s"$root/ckpt", onBatch) { (batch, id) =>
+      applyHybridBatch(textDir, annDir, batch, id)
+    }
+    (textDir, annDir)
   }
 
   /** CONSISTENT DUAL INGEST FOR HYBRID RETRIEVAL — one document CDC
@@ -2694,7 +2565,7 @@ object StreamingOps {
     * (bucket-pruned posting merges on the text side, affected-cells
     * merge on the ANN side); nothing re-reads either corpus. */
   val st_hybrid_ingest: Q = (s, d) => {
-    val (tDir, aDir) = runHybridIngest(s, d)
+    val (tDir, aDir) = hybridIngestRuns(s, d)(runHybridIngest(s, d, _))
     graft.ops.SimilarityOps.hybridServedFrom(s, d, tDir, aDir)
   }
 

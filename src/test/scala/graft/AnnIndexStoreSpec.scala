@@ -334,17 +334,15 @@ class AnnIndexStoreSpec extends AnyFunSuite {
   }
 
   test("streaming ingest: one epoch per micro-batch, restart fires zero batches") {
-    val idx = java.nio.file.Files.createTempDirectory("graft_anning_idx_").toString
-    val ck = java.nio.file.Files.createTempDirectory("graft_anning_ck_").toString
+    val root = Fs.scratchDir("anning_spec").toString
     try {
       var batches = List.empty[Long]
-      streaming.StreamingOps.runAnnIngest(spark, sf,
-        indexOverride = Some(idx), ckptOverride = Some(ck),
+      val idx = streaming.StreamingOps.runAnnIngest(spark, sf, root,
         onBatch = id => batches ::= id)
-      assert(batches.sorted == (0L until streaming.StreamingOps.AnnIngestBatches),
+      assert(batches.sorted == (0L until streaming.StreamingOps.FeedBatches),
         s"expected one micro-batch per delta file, got $batches")
       val m = AnnIndexStore.open(idx)
-      assert(m.epoch == streaming.StreamingOps.AnnIngestBatches.toLong,
+      assert(m.epoch == streaming.StreamingOps.FeedBatches.toLong,
         "each micro-batch must commit exactly one index epoch")
       // the index holds EVERY candidate exactly CandAssign times
       val ids = AnnIndexStore.postings(spark, idx, m)
@@ -355,13 +353,12 @@ class AnnIndexStoreSpec extends AnyFunSuite {
       // RESTART against the drained checkpoint: the offset log says
       // everything is processed — zero batches fire, epoch unchanged
       var restart = 0
-      streaming.StreamingOps.runAnnIngest(spark, sf,
-        indexOverride = Some(idx), ckptOverride = Some(ck),
+      streaming.StreamingOps.runAnnIngest(spark, sf, root,
         onBatch = _ => restart += 1)
       assert(restart == 0, "restart of a drained stream must fire no batches")
       assert(AnnIndexStore.open(idx).epoch ==
-        streaming.StreamingOps.AnnIngestBatches.toLong)
-    } finally { deleteDir(idx); deleteDir(ck) }
+        streaming.StreamingOps.FeedBatches.toLong)
+    } finally deleteDir(root)
   }
 
   test("served recall meets the same witness floor as the in-session IVF path") {

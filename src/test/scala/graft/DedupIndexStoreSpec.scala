@@ -473,16 +473,14 @@ class DedupIndexStoreSpec extends AnyFunSuite {
   }
 
   test("streaming ingest: one epoch per micro-batch, restart fires zero batches, screen equals brute force") {
-    val idx = freshDir("ing_idx")
-    val ck = freshDir("ing_ck")
+    val root = Fs.scratchDir("dis_ing").toString
     var batches = List.empty[Long]
-    streaming.StreamingOps.runDedupIngest(spark, sf,
-      indexOverride = Some(idx), ckptOverride = Some(ck),
+    val idx = streaming.StreamingOps.runDedupIngest(spark, sf, root,
       onBatch = id => batches ::= id)
-    assert(batches.sorted == (0L until streaming.StreamingOps.DedupIngestBatches),
+    assert(batches.sorted == (0L until streaming.StreamingOps.FeedBatches),
       s"expected one micro-batch per delta file, got $batches")
     val m = DedupIndexStore.open(idx)
-    assert(m.epoch == streaming.StreamingOps.DedupIngestBatches.toLong,
+    assert(m.epoch == streaming.StreamingOps.FeedBatches.toLong,
       "each micro-batch must commit exactly one index epoch")
     // the stream-assembled index screens exactly like brute force over
     // the full OLD corpus (a third derivation vs store and oracle)
@@ -491,11 +489,10 @@ class DedupIndexStoreSpec extends AnyFunSuite {
       "stream-assembled index must screen like a batch build over the old corpus")
     // RESTART against the drained checkpoint: zero batches fire, epoch unchanged
     var restart = 0
-    streaming.StreamingOps.runDedupIngest(spark, sf,
-      indexOverride = Some(idx), ckptOverride = Some(ck),
+    streaming.StreamingOps.runDedupIngest(spark, sf, root,
       onBatch = _ => restart += 1)
     assert(restart == 0, "restart of a drained stream must fire no batches")
     assert(DedupIndexStore.open(idx).epoch ==
-      streaming.StreamingOps.DedupIngestBatches.toLong)
+      streaming.StreamingOps.FeedBatches.toLong)
   }
 }

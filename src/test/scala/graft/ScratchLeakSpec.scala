@@ -15,7 +15,7 @@ object ScratchLeakMain {
     ops.RelationalQueries.partitionedOrdersPath(spark, sf)
     ops.ConverterQueries.conv_dump_roundtrip(spark, sf).collect()
     streaming.StreamingOps.st_parquet_sink(spark, sf).collect()
-    streaming.StreamingOps.runMvIngest(spark, sf)
+    streaming.StreamingOps.st_mv_ingest(spark, sf).collect()
     spark.stop()
   }
 }

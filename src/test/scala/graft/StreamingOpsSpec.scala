@@ -798,14 +798,13 @@ class StreamingOpsSpec extends AnyFunSuite {
   }
 
   test("streaming distinct MV: sketch epochs pin to batches, estimates land, restart fires nothing") {
-    val store = java.nio.file.Files.createTempDirectory("graft_mvdistspec_").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_mvdistspec_ck_").toString
+    val root = graft.Fs.scratchDir("mvdistspec").toString
     var batches = List.empty[Long]
-    StreamingOps.runMvDistinct(spark, sf, Some(store), Some(ckpt), id => batches ::= id)
-    assert(batches.sorted == (0L until StreamingOps.MvIngestBatches).toList,
+    val store = StreamingOps.runMvDistinct(spark, sf, root, id => batches ::= id)
+    assert(batches.sorted == (0L until StreamingOps.FeedBatches).toList,
       s"expected one batch per file, got $batches")
     val head = graft.ops.MvStore.open(store)
-    assert(head.epoch == StreamingOps.MvIngestBatches.toLong,
+    assert(head.epoch == StreamingOps.FeedBatches.toLong,
       "one epoch per micro-batch plus the bootstrap")
     assert(head.kinds == Seq("hll"), "the streamed view must persist its merge kind")
     // the stream-maintained sketch estimates land within 5% of exact
@@ -821,22 +820,20 @@ class StreamingOpsSpec extends AnyFunSuite {
     }
     // restart over the same checkpoint fires zero batches
     var again = 0
-    StreamingOps.runMvDistinct(spark, sf, Some(store), Some(ckpt), _ => again += 1)
+    StreamingOps.runMvDistinct(spark, sf, root, _ => again += 1)
     assert(again == 0, s"restart re-fired $again batches")
     assert(graft.ops.MvStore.open(store).epoch == head.epoch)
-    graft.Fs.deleteRecursively(new java.io.File(store))
-    graft.Fs.deleteRecursively(new java.io.File(ckpt))
+    graft.Fs.deleteRecursively(new java.io.File(root))
   }
 
   test("streaming MV ingest: exactly-once epochs, replay no-op, gap error, restart fires nothing") {
-    val store = java.nio.file.Files.createTempDirectory("graft_mvingspec_").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_mvingspec_ck_").toString
+    val root = graft.Fs.scratchDir("mvingspec").toString
     var batches = List.empty[Long]
-    StreamingOps.runMvIngest(spark, sf, Some(store), Some(ckpt), id => batches ::= id)
-    assert(batches.sorted == (0L until StreamingOps.MvIngestBatches).toList,
+    val store = StreamingOps.runMvIngest(spark, sf, root, id => batches ::= id)
+    assert(batches.sorted == (0L until StreamingOps.FeedBatches).toList,
       s"expected one batch per file, got $batches")
     val head = graft.ops.MvStore.open(store)
-    assert(head.epoch == StreamingOps.MvIngestBatches.toLong,
+    assert(head.epoch == StreamingOps.FeedBatches.toLong,
       "one epoch per micro-batch plus the bootstrap")
 
     // the streamed view equals the direct aggregate
@@ -873,12 +870,11 @@ class StreamingOpsSpec extends AnyFunSuite {
 
     // restart against the drained checkpoint: ZERO batches fire
     var restarted = 0
-    StreamingOps.runMvIngest(spark, sf, Some(store), Some(ckpt), _ => restarted += 1)
+    StreamingOps.runMvIngest(spark, sf, root, _ => restarted += 1)
     assert(restarted == 0, s"restart re-fired $restarted batches")
     assert(graft.ops.MvStore.open(store).epoch == head.epoch)
 
-    graft.Fs.deleteRecursively(new java.io.File(store))
-    graft.Fs.deleteRecursively(new java.io.File(ckpt))
+    graft.Fs.deleteRecursively(new java.io.File(root))
   }
 
   test("stream-stream outer join: null emission gated on the min-of-sources watermark") {
@@ -920,18 +916,32 @@ class StreamingOpsSpec extends AnyFunSuite {
     assert(dmin > 60L * 1000000L, s"unmatched purchase within 60s of watermark ($dmin us)")
   }
 
+  test("stream-stream outer join: one file per micro-batch emits the same rows") {
+    // the registered query drains the three-file layout in ONE data
+    // micro-batch; draining the same layout one file per trigger
+    // carries the join state (buffered purchases and clicks, the
+    // min-watermark) across batches and must emit the same rows
+    val ss = StreamingOps.streamSession(spark)
+    val src = StreamingOps.outerLayout(ss, sf)
+    val schema = ss.read.parquet(s"$src/batch0.parquet").schema
+    var dataBatches = 0L
+    val rows = StreamingOps.outerJoinDrain(
+      ss.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+        .parquet(s"$src/*.parquet"),
+      q => dataBatches = q.recentProgress.count(_.numInputRows > 0).toLong)
+      .collect().toSeq
+    assert(dataBatches > 1, s"expected several data micro-batches, got $dataBatches")
+    assert(rows == StreamingOps.st_stream_outer_join(spark, sf).collect().toSeq,
+      "the cross-batch join state changed the emitted rows")
+  }
+
   test("dlq ingest: replay never double-quarantines, restart fires zero batches, index holds only valid docs") {
     import graft.ops.TextIndexStore
-    def tmp(tag: String) = {
-      val p = java.nio.file.Files.createTempDirectory(s"graft_dlq_$tag")
-      p.toFile.deleteOnExit(); p.toString
-    }
-    val (tDir, qDir, ck) = (tmp("idx"), tmp("q"), tmp("ck"))
+    val root = graft.Fs.scratchDir("dlq_spec").toString
     var batches = List.empty[Long]
-    StreamingOps.runDlqIngest(spark, sf,
-      dirsOverride = Some((tDir, qDir)), ckptOverride = Some(ck),
+    val (tDir, qDir) = StreamingOps.runDlqIngest(spark, sf, root,
       onBatch = id => batches ::= id)
-    assert(batches.sorted == (0L until StreamingOps.DlqBatches),
+    assert(batches.sorted == (0L until StreamingOps.FeedBatches),
       s"expected one micro-batch per feed file, got $batches")
     def quarantined() = spark.read.option("basePath", qDir)
       .parquet(s"$qDir/batch=*")
@@ -951,9 +961,9 @@ class StreamingOpsSpec extends AnyFunSuite {
     val src = docs
       .select(col("doc_id"),
         when(col("doc_id") % 31 === 7, lit("")).otherwise(col("text")).as("text"))
-      .filter(col("doc_id") % 4 === StreamingOps.DlqBatches)
+      .filter(col("doc_id") % 4 === StreamingOps.FeedBatches)
     val epochBefore = TextIndexStore.open(tDir).epoch
-    StreamingOps.applyDlqBatch(tDir, qDir, src, StreamingOps.DlqBatches - 1L)
+    StreamingOps.applyDlqBatch(tDir, qDir, src, StreamingOps.FeedBatches - 1L)
     assert(quarantined() == planted, "replay must not duplicate quarantine rows")
     assert(TextIndexStore.open(tDir).epoch == epochBefore,
       "replay must not advance the index epoch")
@@ -969,21 +979,15 @@ class StreamingOpsSpec extends AnyFunSuite {
     assert(reg == valid, "a valid doc went missing from the index")
     // restart against the drained checkpoint: zero batches fire
     var restart = 0
-    StreamingOps.runDlqIngest(spark, sf,
-      dirsOverride = Some((tDir, qDir)), ckptOverride = Some(ck),
+    StreamingOps.runDlqIngest(spark, sf, root,
       onBatch = _ => restart += 1)
     assert(restart == 0, "restart of a drained stream must fire no batches")
   }
 
   test("decon gate: replay never double-quarantines, clean/contaminated partition is exact") {
     import graft.ops.{PipelineOps, TextIndexStore}
-    def tmp(tag: String) = {
-      val p = java.nio.file.Files.createTempDirectory(s"graft_dg_$tag")
-      p.toFile.deleteOnExit(); p.toString
-    }
-    val (tDir, qDir, ck) = (tmp("idx"), tmp("q"), tmp("ck"))
-    StreamingOps.runDeconIngest(spark, sf,
-      dirsOverride = Some((tDir, qDir)), ckptOverride = Some(ck))
+    val (tDir, qDir) = StreamingOps.runDeconIngest(spark, sf,
+      graft.Fs.scratchDir("decon_spec").toString)
     // ground truth: the exact contaminated set from the batch operator
     val contaminated = PipelineOps.p_decontaminate(spark, sf).collect()
       .filter(_.getBoolean(3)).map(r => r.getLong(0) -> r.getLong(2)).toMap
@@ -1024,20 +1028,14 @@ class StreamingOpsSpec extends AnyFunSuite {
 
   test("hybrid dual ingest: crash between the two applies heals on replay, epochs stay aligned") {
     import graft.ops.{AnnIndexStore, TextIndexStore}
-    def tmp(tag: String) = {
-      val p = java.nio.file.Files.createTempDirectory(s"graft_hyb_$tag")
-      p.toFile.deleteOnExit(); p.toString
-    }
-    val (tDir, aDir, ck) = (tmp("text"), tmp("ann"), tmp("ck"))
     var batches = List.empty[Long]
-    StreamingOps.runHybridIngest(spark, sf,
-      dirsOverride = Some((tDir, aDir)), ckptOverride = Some(ck),
-      onBatch = id => batches ::= id)
-    assert(batches.sorted == (0L until StreamingOps.HybridIngestBatches),
+    val (tDir, aDir) = StreamingOps.runHybridIngest(spark, sf,
+      graft.Fs.scratchDir("hyb_spec").toString, onBatch = id => batches ::= id)
+    assert(batches.sorted == (0L until StreamingOps.FeedBatches),
       s"expected one micro-batch per feed file, got $batches")
     // lock-step epochs: both stores at exactly batches-drained
     val (tm, am) = (TextIndexStore.open(tDir), AnnIndexStore.open(aDir))
-    assert(tm.epoch == am.epoch && tm.epoch == StreamingOps.HybridIngestBatches.toLong,
+    assert(tm.epoch == am.epoch && tm.epoch == StreamingOps.FeedBatches.toLong,
       s"stores diverged: text@${tm.epoch} ann@${am.epoch}")
 
     // CRASH INTERLEAVING: batch N+1's text apply lands, then the
@@ -1050,7 +1048,7 @@ class StreamingOpsSpec extends AnyFunSuite {
     val extra = docs
       .join(e.filter(col("vec_id") < 8)
         .select(col("vec_id").as("doc_id"), col("embedding")), Seq("doc_id"))
-    val nextId = StreamingOps.HybridIngestBatches.toLong
+    val nextId = StreamingOps.FeedBatches.toLong
     TextIndexStore.applyDeltaIdempotent(spark, tDir,
       extra.select(col("doc_id"), col("text")), nextId)
     assert(TextIndexStore.open(tDir).epoch == nextId + 1)

@@ -463,16 +463,14 @@ class TextIndexStoreSpec extends AnyFunSuite {
   }
 
   test("streaming ingest: one epoch per micro-batch, restart fires zero batches, scores equal from-scratch") {
-    val idx = freshDir("ing_idx")
-    val ck = freshDir("ing_ck")
+    val root = Fs.scratchDir("tis_ing").toString
     var batches = List.empty[Long]
-    streaming.StreamingOps.runTextIngest(spark, sf,
-      indexOverride = Some(idx), ckptOverride = Some(ck),
+    val idx = streaming.StreamingOps.runTextIngest(spark, sf, root,
       onBatch = id => batches ::= id)
-    assert(batches.sorted == (0L until streaming.StreamingOps.TextIngestBatches),
+    assert(batches.sorted == (0L until streaming.StreamingOps.FeedBatches),
       s"expected one micro-batch per delta file, got $batches")
     val m = TextIndexStore.open(idx)
-    assert(m.epoch == streaming.StreamingOps.TextIngestBatches.toLong,
+    assert(m.epoch == streaming.StreamingOps.FeedBatches.toLong,
       "each micro-batch must commit exactly one index epoch")
     // the stream-assembled index scores exactly like the from-scratch pipeline
     assert(scoreKey(TextIndexStore.bm25Scores(spark, idx, m)) ==
@@ -480,11 +478,10 @@ class TextIndexStoreSpec extends AnyFunSuite {
       "stream-assembled index must score like a batch build over the full corpus")
     // RESTART against the drained checkpoint: zero batches fire, epoch unchanged
     var restart = 0
-    streaming.StreamingOps.runTextIngest(spark, sf,
-      indexOverride = Some(idx), ckptOverride = Some(ck),
+    streaming.StreamingOps.runTextIngest(spark, sf, root,
       onBatch = _ => restart += 1)
     assert(restart == 0, "restart of a drained stream must fire no batches")
     assert(TextIndexStore.open(idx).epoch ==
-      streaming.StreamingOps.TextIngestBatches.toLong)
+      streaming.StreamingOps.FeedBatches.toLong)
   }
 }

@@ -138,7 +138,7 @@ class DumpConverterSpec extends AnyFunSuite {
         new java.io.FileOutputStream(f"$shardDir/dump-$k%03d.sql.zst"))
       zo.write(chunk.getBytes("UTF-8")); zo.close()
     }
-    val files = DumpConverter.expandInput(spark.sparkContext, shardDir)
+    val files = DumpConverter.expandInput(spark.sparkContext, shardDir).map(_.getPath.toString)
     assert(files.map(f => f.substring(f.lastIndexOf('/') + 1)) ==
       (0 until 4).map(k => f"dump-$k%03d.sql.zst"))
     val rdd = DumpConverter.zstdLines(spark.sparkContext, files)
@@ -778,6 +778,44 @@ class DumpConverterSpec extends AnyFunSuite {
     assert(back.toSeq == userRows)
   }
 
+  test("listing the input stats no shard: the fingerprint comes from the listing's statuses") {
+    val in = tmpDir("dump-zstat-in")
+    val out = tmpDir("dump-zstat-out")
+    val lines = DumpRenderer.dump(Seq(("user", userSchema, userRows)), batchSize = 1).split("\n")
+    val shards = (0 until 3).map(k => f"dump-$k%03d.sql.zst")
+    shards.zipWithIndex.foreach { case (name, k) =>
+      val chunk = lines.slice(k * lines.length / 3, (k + 1) * lines.length / 3).map(_ + "\n").mkString
+      val zo = new com.github.luben.zstd.ZstdOutputStreamNoFinalizer(
+        new java.io.FileOutputStream(s"$in/$name"))
+      zo.write(chunk.getBytes("UTF-8")); zo.close()
+    }
+    // the fingerprint bytes are `path|len|mtime` per file, as before
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    shards.foreach { name =>
+      val f = new java.io.File(s"$in/$name")
+      md.update(s"file:${f.getPath}|${f.length}|${f.lastModified}\n".getBytes("UTF-8"))
+    }
+    md.update("tag".getBytes("UTF-8"))
+    assert(DumpConverter.inputFingerprint(DumpConverter.expandInput(spark.sparkContext, in), "tag") ==
+      md.digest().map("%02x".format(_)).mkString)
+    // shard stats made through the session's `file` FileSystem before
+    // the fingerprint phase ends (the reads stat each shard they open)
+    val hc = spark.sparkContext.hadoopConfiguration
+    val keys = Seq("fs.file.impl", "fs.file.impl.disable.cache")
+    val saved = keys.map(k => k -> Option(hc.get(k)))
+    hc.set("fs.file.impl", classOf[StatRecordingLocalFs].getName)
+    hc.setBoolean("fs.file.impl.disable.cache", true)
+    StatRecordingLocalFs.statted.clear()
+    var atFingerprint = Option.empty[Seq[String]]
+    try {
+      val res = DumpConverter.convert(spark, in, out, progress = line =>
+        if (line.startsWith("[dump-phase] fingerprint="))
+          atFingerprint = Some(StatRecordingLocalFs.statted.asScala.toSeq.filter(shards.contains)))
+      assert(res.rowsWritten("user") == 3)
+    } finally saved.foreach { case (k, v) => v.fold(hc.unset(k))(hc.set(k, _)) }
+    assert(atFingerprint == Some(Seq.empty), s"shards statted after listing: $atFingerprint")
+  }
+
   test("the converter stores no block: a multi-table convert caches no RDD partition") {
     val in = tmpDir("dump-noblock-in")
     val out = tmpDir("dump-noblock-out")
@@ -822,4 +860,16 @@ class OpenRecordingLocalFs extends org.apache.hadoop.fs.LocalFileSystem {
 
 object OpenRecordingLocalFs {
   val opened = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+}
+
+/** The local FileSystem, recording the name of every file it stats. */
+class StatRecordingLocalFs extends org.apache.hadoop.fs.LocalFileSystem {
+  override def getFileStatus(f: org.apache.hadoop.fs.Path): org.apache.hadoop.fs.FileStatus = {
+    StatRecordingLocalFs.statted.add(f.getName)
+    super.getFileStatus(f)
+  }
+}
+
+object StatRecordingLocalFs {
+  val statted = new java.util.concurrent.ConcurrentLinkedQueue[String]()
 }

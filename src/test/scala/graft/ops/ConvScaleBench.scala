@@ -5,7 +5,7 @@ import graft.dump.DumpConverter
 
 /** Measures converter wall-clock vs minPartitions on the sf0.1-scale
   * rendered dump (the SCALING.md partition-scaling table).
-  * Run: sbt 'Test/runMain graft.ConvScaleBench' */
+  * Run: sbt 'Test/runMain graft.ops.ConvScaleBench' */
 object ConvScaleBench {
   def main(args: Array[String]): Unit = {
     val spark = org.apache.spark.sql.SparkSession.builder()
