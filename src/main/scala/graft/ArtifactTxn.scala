@@ -19,7 +19,7 @@ import java.nio.file.{Files, Path}
   *      the operation from (e.g. the victim id list's defining rule).
   *   2. Steps run in order. Each step is made idempotent by its EPOCH
   *      PIN — the same discipline as the streaming sinks
-  *      ([[graft.ops.MvStore.refreshIdempotent]]): if the store's head
+  *      ([[EpochStore.applyPinned]]): if the store's head
   *      is already at/past the step's expected epoch, the step ALREADY
   *      COMMITTED (we crashed after its flip) and is skipped; a store
   *      head more than one epoch behind its pin means an out-of-band
@@ -77,18 +77,8 @@ object ArtifactTxn {
 
   private def apply(t: Txn, exec: Step => Unit, head: Step => Long): Unit =
     t.steps.foreach { st =>
-      val h = head(st)
-      if (h >= st.expectedEpoch) {
-        // crashed AFTER this step's flip: already committed, skip
-      } else if (h < st.expectedEpoch - 1) {
-        sys.error(s"txn ${t.id}: store ${st.store} head $h is behind pin " +
-          s"${st.expectedEpoch} by more than one epoch — out-of-band writer")
-      } else {
-        exec(st)
-        val h2 = head(st)
-        require(h2 == st.expectedEpoch,
-          s"txn ${t.id}: step ${st.store} committed epoch $h2, pinned ${st.expectedEpoch}")
-      }
+      EpochStore.applyPinned(s"txn ${t.id}: store ${st.store}", head(st),
+        st.expectedEpoch)(exec(st))
     }
 
   /** Transactions whose intent survived a crash, oldest first. Ids

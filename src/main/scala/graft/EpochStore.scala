@@ -81,6 +81,18 @@ abstract class EpochStore(name: String, componentPattern: String) {
   protected def locked[A](dir: String)(body: => A): A =
     ManifestIo.withCommitLock(Paths.get(dir))(body)
 
+  /** Commit streaming micro-batch `batchId` as epoch `batchId + 1`
+    * (epoch 0 is the bootstrap). `foreachBatch` delivery is
+    * at-least-once — a crash between the sink's commit and the
+    * checkpoint replays the batch — so the commit runs through
+    * [[EpochStore.applyPinned]] under the store lock: a replay finds
+    * its epoch flipped and no-ops, a batch past a hole fails. Returns
+    * the live manifest. */
+  def applyBatch(dir: String, batchId: Long)(commit: => Any): M = locked(dir) {
+    EpochStore.applyPinned(s"$name batch $batchId at $dir", open(dir).epoch, batchId + 1)(commit)
+    open(dir)
+  }
+
   /** Write the immutable per-epoch manifest, then atomically replace
     * the live pointer ([[ManifestIo.commit]]: a lost race fails
     * loudly). */
@@ -102,4 +114,25 @@ object EpochStore {
 
   /** A manifest: `epoch` is its first constructor field. */
   trait Versioned { def epoch: Long }
+
+  /** The exactly-once epoch pin every replayable commit shares (the
+    * streaming batch feeds, [[ArtifactTxn]]'s steps): `apply` must
+    * commit exactly epoch `pin` on a store whose head reads `head`.
+    *   - head ≥ pin: already committed (a replay after the flip) — skip;
+    *   - head < pin − 1: a gap — an earlier commit never landed, or an
+    *     out-of-band writer moved the store — fail loudly;
+    *   - otherwise apply, then check the head landed on `pin`.
+    * The flip is atomic after the whole apply, so a crash mid-apply
+    * leaves the head at pin − 1 and the replay re-runs it. */
+  def applyPinned(what: String, head: => Long, pin: Long)(apply: => Any): Unit = {
+    val h = head
+    if (h < pin - 1)
+      sys.error(s"$what: head epoch $h is behind pin $pin by more than one epoch — " +
+        "a gap (an earlier commit never landed) or an out-of-band writer")
+    if (h < pin) {
+      apply
+      val landed = head
+      require(landed == pin, s"$what: committed epoch $landed, pinned $pin")
+    }
+  }
 }

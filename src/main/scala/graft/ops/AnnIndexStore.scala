@@ -374,37 +374,6 @@ object AnnIndexStore extends graft.EpochStore("ANN index", "c\\d+") {
     DeltaCommit(next, affected, readPaths)
   }
 
-  /** Replay-safe [[applyDelta]] for streaming `foreachBatch` feeds:
-    * commit the batch as epoch `batchId + 1`, keyed to Structured
-    * Streaming's monotone batch ids. foreachBatch delivery is
-    * AT-LEAST-ONCE — after a crash between the sink's action and the
-    * checkpoint commit, the engine REPLAYS the last batch — so an
-    * index feed that blindly called applyDelta would double-apply it
-    * (duplicate postings for inserts, a second epoch for the same
-    * data). The contract here:
-    *
-    *   - `m.epoch > batchId`: the batch is already committed (this is
-    *     the replay) — no-op, return the live manifest. Safe because
-    *     epoch N+1 commits ATOMICALLY after batch N's full apply: a
-    *     crash mid-apply leaves the epoch un-flipped and the replay
-    *     re-runs it (publishCells rewrites the same epoch dirs).
-    *   - `m.epoch == batchId`: first delivery — apply, committing
-    *     epoch `batchId + 1`.
-    *   - `m.epoch < batchId`: a GAP — some earlier batch never
-    *     committed; failing loudly beats silently indexing around a
-    *     hole.
-    */
-  def applyDeltaIdempotent(s: SparkSession, dir: String, delta: DataFrame,
-                           batchId: Long,
-                           retain: Int = RetainEpochs): AnnManifest = locked(dir) {
-    val m = open(dir)
-    if (m.epoch > batchId) m
-    else if (m.epoch < batchId)
-      sys.error(s"ANN ingest gap: index at epoch ${m.epoch} but batch " +
-        s"$batchId arrived — an earlier batch never committed")
-    else applyDelta(s, dir, delta, retain).manifest
-  }
-
   /** Retrain-and-re-encode maintenance — the rebuild an IVF index
     * needs after enough [[applyDelta]] batches drift the corpus away
     * from the quantizer it was trained on (skewed cells, decaying

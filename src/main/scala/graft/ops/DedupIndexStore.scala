@@ -358,26 +358,6 @@ object DedupIndexStore extends graft.EpochStore("dedup index", "b\\d+|docs|dels"
     } finally { sh.unpersist(); () }
   }
 
-  /** Replay-safe [[applyDelta]] for streaming `foreachBatch` feeds:
-    * commit the batch as epoch `batchId + 1`, keyed to Structured
-    * Streaming's monotone batch ids — the same exactly-once-on-
-    * at-least-once contract as [[AnnIndexStore.applyDeltaIdempotent]]
-    * (which documents the three cases: replay → no-op, first delivery
-    * → apply, gap → loud failure). The atomic epoch flip after the
-    * full apply is what makes the replay no-op safe; the insert-only
-    * clash check inside [[applyDelta]] never fires on a true replay
-    * because the replayed batch is gated out BEFORE the apply. */
-  def applyDeltaIdempotent(s: SparkSession, dir: String, newDocs: DataFrame,
-                           batchId: Long,
-                           retain: Int = RetainEpochs): DedupManifest = locked(dir) {
-    val m = open(dir)
-    if (m.epoch > batchId) m
-    else if (m.epoch < batchId)
-      sys.error(s"dedup ingest gap: index at epoch ${m.epoch} but batch " +
-        s"$batchId arrived — an earlier batch never committed")
-    else applyDelta(s, dir, newDocs, retain).manifest
-  }
-
   // --------------------------------------------------- single-flip update
 
   /** Outcome of one update commit (ONE epoch advanced; the posting

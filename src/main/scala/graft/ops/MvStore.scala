@@ -187,25 +187,6 @@ object MvStore extends graft.EpochStore("MV store", "b\\d+") {
     RefreshCommit(m2, affected, readPaths)
   }
 
-  /** EXACTLY-ONCE streaming refresh: micro-batch `batchId`'s delta
-    * commits as epoch `batchId + 1` (epoch 0 is the build). On
-    * Structured Streaming's at-least-once `foreachBatch` delivery a
-    * crash-replayed batch finds its epoch already flipped and NO-OPS
-    * (zero jobs, zero writes); a batch arriving PAST a hole fails
-    * loudly rather than committing a view that silently skipped a
-    * delta — the same epoch-pinning contract as
-    * [[graft.ops.AnnIndexStore.applyDeltaIdempotent]]. */
-  def refreshIdempotent(s: SparkSession, dir: String, deltaPartials: DataFrame,
-                        batchId: Long, retain: Int = RetainEpochs): Unit = locked(dir) {
-    val head = open(dir).epoch
-    val want = batchId + 1
-    if (head >= want) () // replayed batch: epoch already committed
-    else if (head < want - 1)
-      sys.error(s"mv refresh gap: head epoch $head cannot accept batch " +
-        s"$batchId — batch ${head} was never committed")
-    else { refresh(s, dir, deltaPartials, retain); () }
-  }
-
   /** RESHARD to a new month-bucket fan-out behind ONE flip — the
     * grow-path sibling of [[graft.ops.TextIndexStore.reshard]]: a view
     * sized for a few years of months outgrows its birth fan-out as

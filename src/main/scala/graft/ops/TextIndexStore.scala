@@ -403,27 +403,6 @@ object TextIndexStore extends graft.EpochStore("text index", "b\\d+|stats|docs|d
     } finally { rows.unpersist(); () }
   }
 
-  /** Replay-safe [[applyDelta]] for streaming `foreachBatch` feeds:
-    * commit the batch as epoch `batchId + 1`, keyed to Structured
-    * Streaming's monotone batch ids — the same exactly-once-on-
-    * at-least-once contract as [[AnnIndexStore.applyDeltaIdempotent]]
-    * (which documents the three cases). Safe for the same reason:
-    * the epoch flips ATOMICALLY after the batch's full apply, and a
-    * crash mid-apply leaves it un-flipped so the engine's replay
-    * re-runs the merge into the same epoch dirs. The insert-only
-    * clash check inside [[applyDelta]] never fires on a true replay
-    * because the replayed batch is gated out BEFORE the apply. */
-  def applyDeltaIdempotent(s: SparkSession, dir: String, newDocs: DataFrame,
-                           batchId: Long,
-                           retain: Int = RetainEpochs): TextManifest = locked(dir) {
-    val m = open(dir)
-    if (m.epoch > batchId) m
-    else if (m.epoch < batchId)
-      sys.error(s"text ingest gap: index at epoch ${m.epoch} but batch " +
-        s"$batchId arrived — an earlier batch never committed")
-    else applyDelta(s, dir, newDocs, retain).manifest
-  }
-
   // --------------------------------------------------- single-flip update
 
   /** Outcome of one update commit, with the diagnostics the spec

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import java.util.UUID
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, Trigger}
 import org.apache.spark.sql.types._
@@ -41,25 +41,28 @@ object StreamingOps {
 
   type Q = (SparkSession, String) => DataFrame
 
-  /** THE batch-feed drain harness, once for every store ingest in the
-    * library (ANN/MV/MV-distinct/text/dedup/DLQ/decon/governed/hybrid,
-    * each a [[writeFeed]] layout): explicit schema from one footer
-    * read, one mtime-ordered file per micro-batch, checkpointed
-    * `foreachBatch`, drain-and-stop trigger. `onBatch` sees each batch
-    * id before `apply` commits it. A harness fix (checkpoint
-    * discipline, trigger, file ordering) is one edit here, not N
-    * synchronized ones. */
-  private def drainBatchFeed(ss: SparkSession, src: String, ckptDir: String,
+  /** THE checkpointed `foreachBatch` drain, once for every sink in the
+    * library: the store ingests (ANN/MV/MV-distinct/text/dedup/DLQ/
+    * decon/governed/hybrid, each a [[writeFeed]] layout, and the SCD
+    * join: `batch*.parquet`, 1 file per trigger) and the upsert,
+    * dual-sink and evolve drains (a split layout: `part-*.parquet`, 2
+    * files per trigger). Explicit schema from one memoized footer
+    * read, mtime-ordered files, drain-and-stop trigger. `onBatch` sees
+    * each batch id before `apply` commits it. A harness fix
+    * (checkpoint discipline, trigger, file ordering) is one edit here,
+    * not N synchronized ones. */
+  private def drainBatchFeed(ss: SparkSession, src: String, glob: String,
+                             filesPerTrigger: Int, ckptDir: String,
                              onBatch: Long => Unit)
                             (apply: (DataFrame, Long) => Unit): Unit = {
-    // memoized: batch-feed layouts are write-once per (session, dir),
-    // so one footer read serves every drain of the same feed instead
-    // of a listing + footer job per run (guide §1.2: fixed per-query
-    // costs dominate the streaming suite at this SF)
+    // memoized: drained layouts are write-once per (session, dir), so
+    // one footer read serves every drain of the same feed instead of a
+    // listing + footer job per run (fixed per-query costs dominate
+    // the streaming suite at this SF)
     val schema = perSession(sourceSchemas, ss).getOrElseUpdate(s"feed:$src",
       ss.read.parquet(src).schema)
     val stream = ss.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$src/batch*.parquet")
+      .option("maxFilesPerTrigger", filesPerTrigger.toString).parquet(s"$src/$glob")
     val q = stream.writeStream
       .option("checkpointLocation", ckptDir)
       .foreachBatch { (batch: DataFrame, id: java.lang.Long) =>
@@ -84,11 +87,15 @@ object StreamingOps {
   /** File-source stream over the events parquet (glob keeps the file
     * source happy with a single-file "directory"). Built on the
     * [[streamSession]] clone so the stream plans with
-    * [[StatePartitions]] without ever touching the caller's conf. */
+    * [[StatePartitions]] without ever touching the caller's conf. The
+    * schema comes from the concrete file [[graft.ops.Tables.events]]
+    * reads: a batch read of the glob path logs a
+    * `FileStreamSink` metadata-probe stack for the literal glob. */
   private def eventStream(s: SparkSession, d: String): DataFrame = {
     val ss = streamSession(s)
     val path = s"$d/events*.parquet"
-    val schema = perSession(sourceSchemas, ss).getOrElseUpdate(d, ss.read.parquet(path).schema)
+    val schema = perSession(sourceSchemas, ss).getOrElseUpdate(d,
+      ss.read.parquet(s"$d/events.parquet").schema)
     graft.ops.Tables.normalizeEventTs(
       ss.readStream.schema(schema).parquet(path), path)
   }
@@ -668,26 +675,49 @@ object StreamingOps {
                                            numBuckets: Int = UpsertBuckets)
     extends graft.EpochStore.Versioned
 
-  // open/openAt/withSnapshot/listEpochs/commit/gc: graft.EpochStore
+  /** The upsert state table's epoch store (open/openAt/withSnapshot/
+    * listEpochs/commit/gc: [[graft.EpochStore]]). Every commit is
+    * followed by a [[gc]] at [[RetainEpochs]]: that many committed
+    * epochs stay readable as snapshots (time travel) — the Delta
+    * `delta.logRetentionDuration` dial, counted in epochs because the
+    * fixture has no clock — and an epoch a reader leases through
+    * [[withSnapshot]] is spared whatever the horizon. */
   private[graft] object UpsertTable extends graft.EpochStore("upsert state table", "b\\d+") {
     type M = UpsertManifest
     protected def manifestType = manifest[M]
     protected def referenced(m: UpsertManifest) = m.buckets.values
   }
 
-  private def readUpsertManifest(stateDir: java.nio.file.Path): Option[UpsertManifest] =
-    if (!java.nio.file.Files.exists(graft.ManifestIo.manifestPath(stateDir))) None
-    else Some(UpsertTable.open(stateDir.toString))
+  /** The state table's columns: the key, then the last-write-wins
+    * data columns in comparator order (the evolve table appends
+    * `eid` and `prop_k`). */
+  private val UpsertSchema = new StructType().add("user_id", LongType)
+    .add("tus", LongType).add("event_type", StringType).add("cents", LongType)
 
-  /** How many committed epochs stay readable as snapshots (time
-    * travel). Retention bounds the extra disk to ≤ retain × the
-    * updated buckets' sizes — the Delta `delta.logRetentionDuration`
-    * dial, here counted in epochs because the fixture has no clock. */
-  private[graft] val UpsertRetainEpochs = UpsertTable.RetainEpochs
+  /** The LWW data columns of one event, in comparator order: the max
+    * (tus, event_type, cents) struct wins, the tie order of [[st_cdc]]. */
+  private def lwwCols: Seq[Column] = Seq(unix_micros(col("ts")).as("tus"),
+    col("event_type"), round(col("value") * 100).cast("long").as("cents"))
 
-  /** Epochs currently readable via [[readUpsertStateAt]], ascending. */
-  private[graft] def listUpsertEpochs(stateDirPath: String): Seq[Long] =
-    UpsertTable.listEpochs(stateDirPath)
+  /** The state table's rows at manifest `m` — the buckets `buckets`
+    * selects, all by default. THE one place bucket paths are resolved
+    * from a manifest. The read takes `schema` as given and infers
+    * nothing from footers: a file written before a column joined the
+    * table reads it as null, and a zero-bucket epoch (a first EMPTY
+    * micro-batch commits one) reads as a typed empty table. */
+  private def stateRows(s: SparkSession, dir: String, m: UpsertManifest,
+                        schema: StructType = UpsertSchema,
+                        buckets: Int => Boolean = _ => true): DataFrame = {
+    val paths = m.buckets.toSeq.filter(b => buckets(b._1)).sortBy(_._1)
+      .map { case (_, rel) => s"$dir/$rel" }
+    if (paths.isEmpty) s.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+    else s.read.schema(schema).parquet(paths: _*)
+  }
+
+  /** The served shape of the state table, then `extra`. */
+  private def lastState(rows: DataFrame, extra: Column*): DataFrame =
+    rows.select(Seq(col("user_id"), col("tus").as("last_tus"),
+      col("event_type").as("last_type"), col("cents")) ++ extra: _*)
 
   /** Snapshot (time-travel) read: resolve the state table AS OF a
     * retained epoch through that epoch's immutable manifest — same
@@ -700,30 +730,7 @@ object StreamingOps {
     * [[withUpsertSnapshot]], which pins the epoch with a lease. */
   private[graft] def readUpsertStateAt(s: SparkSession, stateDirPath: String,
                                        epoch: Long): DataFrame =
-    upsertState(s, stateDirPath, UpsertTable.openAt(stateDirPath, epoch))
-
-  private def upsertState(s: SparkSession, stateDirPath: String,
-                          m: UpsertManifest): DataFrame = {
-    val stateDir = java.nio.file.Paths.get(stateDirPath)
-    val paths = m.buckets.values.toSeq.sorted.map(rel => s"$stateDir/$rel")
-    // A first-ever EMPTY micro-batch commits epoch 0 with zero buckets
-    // (mergeUpsertBatch's empty-batch epoch flip) — there is no parquet
-    // to read a schema from, so build the typed empty frame explicitly
-    // (the select below fixes the column shape anyway) instead of
-    // handing spark.read.parquet() an empty path list (unpointed
-    // AnalysisException).
-    if (paths.isEmpty) {
-      import org.apache.spark.sql.types._
-      return s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("user_id", LongType),
-          StructField("last_tus", LongType),
-          StructField("last_type", StringType),
-          StructField("cents", LongType))))
-    }
-    s.read.parquet(paths: _*)
-      .select(col("user_id"), col("tus").as("last_tus"),
-        col("event_type").as("last_type"), col("cents"))
-  }
+    lastState(stateRows(s, stateDirPath, UpsertTable.openAt(stateDirPath, epoch)))
 
   // ------------------------------------ snapshot leases (reader vs GC)
 
@@ -739,26 +746,8 @@ object StreamingOps {
     * expired" error when GC won, never a partial table. */
   private[graft] def withUpsertSnapshot[A](s: SparkSession, stateDirPath: String,
                                            epoch: Long)(body: DataFrame => A): A =
-    UpsertTable.withSnapshot(stateDirPath, epoch)(m => body(upsertState(s, stateDirPath, m)))
-
-  /** Retention GC, run after each flip: keep every epoch dir referenced
-    * by a RETAINED manifest (current epoch − [[UpsertRetainEpochs]] + 1
-    * … current, clamped at 0), delete versioned manifests below the
-    * horizon and any `b∗/e∗` dir that (a) no retained manifest
-    * references and (b) carries an epoch below the current one — (b)
-    * protects a crashed in-flight commit's future dirs, which the
-    * checkpoint replay will reuse. Epochs pinned by a reader lease
-    * ([[withUpsertSnapshot]]) are spared regardless of the horizon —
-    * the grace that makes snapshot reads safe against concurrent GC
-    * (round-10 verdict item 3). Single-writer op, like the commit
-    * itself. `afterIntent` is [[graft.EpochGuard.guardedDelete]]'s
-    * test seam (specs plant a racing lease at the exact point the
-    * round-10 protocol missed it); production callers leave it
-    * default. */
-  private[graft] def gcUpsertEpochs(stateDir: java.nio.file.Path, current: Long,
-                                    retain: Int,
-                                    afterIntent: Long => Unit = _ => ()): Unit =
-    UpsertTable.gc(stateDir.toString, current, retain, afterIntent)
+    UpsertTable.withSnapshot(stateDirPath, epoch)(m =>
+      body(lastState(stateRows(s, stateDirPath, m))))
 
   /** Write-once multi-file copy of events so the file source can
     * drain in SEVERAL micro-batches (8 files, maxFilesPerTrigger=2 →
@@ -857,42 +846,33 @@ object StreamingOps {
     * the state table is byte-identical. */
   private[graft] def runUpsert(s: SparkSession, d: String,
                                stateDirPath: String, ckptPath: String,
-                               onBatch: Long => Unit = _ => (),
-                               retainEpochs: Int = UpsertRetainEpochs): DataFrame = {
+                               onBatch: Long => Unit = _ => ()): DataFrame = {
     val ss = streamSession(s)
-    val src = splitEventsLayout(ss, d)
-    val stateDir = java.nio.file.Paths.get(stateDirPath)
-    val ckpt = java.nio.file.Paths.get(ckptPath)
-    locally {
-      val schema = perSession(sourceSchemas, ss).getOrElseUpdate(s"split:$src",
-        ss.read.parquet(src).schema)
-      val stream = ss.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "2").parquet(s"$src/part-*.parquet")
-      val q = stream.writeStream
-        .option("checkpointLocation", ckpt.toString)
-        .foreachBatch { (batch: DataFrame, id: java.lang.Long) =>
-          onBatch(id)
-          mergeUpsertBatch(batch.sparkSession, stateDirPath, batch, retainEpochs): Unit
-          ()
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val finalPaths = readUpsertManifest(stateDir).toSeq
-        .flatMap(_.buckets.values).map(rel => s"$stateDir/$rel")
-      val rows = ss.read.parquet(finalPaths: _*)
-        .select(col("user_id"), col("tus").as("last_tus"),
-          col("event_type").as("last_type"), col("cents"))
-      // the state table is O(distinct users) — re-home it distributed
-      // (spill + re-read), never through the driver
-      rehome(ss, rows).orderBy(col("user_id"))
+    drainBatchFeed(ss, splitEventsLayout(ss, d), "part-*.parquet", 2, ckptPath, onBatch) {
+      (batch, _) => mergeUpsertBatch(batch.sparkSession, stateDirPath, batch): Unit
     }
+    // the state table is O(distinct users) — re-home it distributed
+    // (spill + re-read), never through the driver
+    rehome(ss, lastState(stateRows(ss, stateDirPath, UpsertTable.open(stateDirPath))))
+      .orderBy(col("user_id"))
   }
 
-  /** ONE upsert micro-batch: LWW-reduce the batch, read back only the
-    * buckets it touches, merge, commit exactly one epoch (factored out
-    * of [[runUpsert]] so [[st_dual_sink]] can drive the same state
-    * table as one step of a cross-artifact transaction). Commit
-    * protocol, in order:
+  /** ONE upsert micro-batch of raw events: [[mergeLww]] over
+    * `tus, event_type, cents` (factored out of [[runUpsert]] so
+    * [[st_dual_sink]] can drive the same state table as one step of a
+    * cross-artifact transaction). `numBuckets` seeds the fan-out of a
+    * first-ever batch only. Returns the committed epoch. */
+  private[graft] def mergeUpsertBatch(sb: SparkSession, stateDirPath: String,
+                                      batch: DataFrame,
+                                      numBuckets: Int = UpsertBuckets): Long =
+    mergeLww(sb, stateDirPath, batch.select(col("user_id") +: lwwCols: _*), numBuckets)
+
+  /** THE last-write-wins merge of one micro-batch into the state
+    * table, behind [[mergeUpsertBatch]] and the evolve drain: `rows`
+    * is the batch projected to `user_id` plus the data columns in
+    * comparator order, and its schema is the table's. LWW-reduce the
+    * batch, read back only the buckets it touches, merge, commit
+    * exactly one epoch. Commit protocol, in order:
     *   1. stage: one job writes every affected bucket's merged rows
     *      under .stage-eN/bucket=B/
     *   2. publish: per-bucket rename into the immutable bB/eN location
@@ -913,24 +893,26 @@ object StreamingOps {
     * exactly-once protocol) would otherwise permanently misalign every
     * later batch's pin the first time a micro-batch delivers no rows.
     * Returns the committed epoch. */
-  private[graft] def mergeUpsertBatch(sb: SparkSession, stateDirPath: String,
-                                      batch: DataFrame,
-                                      retainEpochs: Int = UpsertRetainEpochs,
-                                      numBuckets: Int = UpsertBuckets): Long = {
-    val stateDir = java.nio.file.Paths.get(stateDirPath)
+  private def mergeLww(sb: SparkSession, stateDirPath: String, rows: DataFrame,
+                       numBuckets: Int): Long = {
     // the fan-out is a PERSISTED table parameter: the manifest's value
     // wins over both the constant and the argument once state exists
-    // (`numBuckets` only seeds a first-ever batch), so re-tuning the
-    // default can never mis-route merges against an existing table —
-    // the same version-safety rule as every bucketed store here
-    val man = readUpsertManifest(stateDir)
-    val fanOut = man.map(_.numBuckets).getOrElse(numBuckets)
-    val lww = Seq(col("tus"), col("event_type"), col("cents"))
+    // (`numBuckets` only seeds a first-ever batch, whose table reads
+    // as the empty epoch −1), so re-tuning the default can never
+    // mis-route merges against an existing table — the same
+    // version-safety rule as every bucketed store here
+    val man =
+      if (java.nio.file.Files.exists(
+            graft.ManifestIo.manifestPath(java.nio.file.Paths.get(stateDirPath))))
+        UpsertTable.open(stateDirPath)
+      else UpsertManifest(-1L, Map.empty, numBuckets)
+    val newEpoch = man.epoch + 1
+    val bucket = (col("user_id") % man.numBuckets).cast("int")
+    val dataCols = rows.columns.toSeq.filter(_ != "user_id")
     def reduceKeys(df: DataFrame): DataFrame =
       df.groupBy(col("bucket"), col("user_id"))
-        .agg(max(struct(lww: _*)).as("m"))
-        .select(col("bucket"), col("user_id"), col("m.tus").as("tus"),
-          col("m.event_type").as("event_type"), col("m.cents").as("cents"))
+        .agg(max(struct(dataCols.map(col): _*)).as("m"))
+        .select(col("bucket") +: col("user_id") +: dataCols.map(c => col(s"m.$c").as(c)): _*)
     // persisted across the two actions below (affected-bucket collect,
     // merged write): a foreachBatch DataFrame re-reads its source files
     // and re-runs this aggregation on EVERY action, so without the
@@ -939,34 +921,19 @@ object StreamingOps {
     // guide §2.4 — one exchange shared by both consumers). The delta is
     // per-batch-keys-sized (bounded by the micro-batch), never the
     // table, so the cache is safe at any corpus scale.
-    val delta = reduceKeys(batch
-      .select(col("user_id"), unix_micros(col("ts")).as("tus"),
-        col("event_type"), round(col("value") * 100).cast("long").as("cents"))
-      .withColumn("bucket", (col("user_id") % fanOut).cast("int")))
+    val delta = reduceKeys(rows.withColumn("bucket", bucket))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // ≤ fanOut driver-side ints — the partition list, not data
-      val affected = delta.select("bucket").distinct().collect().map(_.getInt(0))
+      // ≤ numBuckets driver-side ints — the partition list, not data
+      val affected = delta.select("bucket").distinct().collect().map(_.getInt(0)).toSeq
       if (affected.isEmpty) {
-        val newEpoch = man.map(_.epoch + 1).getOrElse(0L)
-        UpsertTable.commit(stateDir.toString,
-          UpsertManifest(newEpoch, man.map(_.buckets).getOrElse(Map.empty), fanOut))
-        gcUpsertEpochs(stateDir, newEpoch, retainEpochs)
-        newEpoch
-      }
-      else {
-        val curPaths = man.toSeq.flatMap(m =>
-          affected.toSeq.sorted.flatMap(m.buckets.get)).map(rel => s"$stateDir/$rel")
-        val cur =
-          if (curPaths.nonEmpty)
-            // the bucket column is derivable (user_id % buckets), so
-            // epoch dirs store only the data columns
-            sb.read.parquet(curPaths: _*)
-              .withColumn("bucket", (col("user_id") % fanOut).cast("int"))
-              .select(col("bucket"), col("user_id"), col("tus"),
-                col("event_type"), col("cents"))
-          else delta.limit(0)
-        val newEpoch = man.map(_.epoch + 1).getOrElse(0L)
+        UpsertTable.commit(stateDirPath, man.copy(epoch = newEpoch))
+        UpsertTable.gc(stateDirPath, newEpoch, UpsertTable.RetainEpochs)
+      } else {
+        // the bucket column is derivable (user_id % buckets), so epoch
+        // dirs store only the data columns
+        val cur = stateRows(sb, stateDirPath, man, rows.schema, affected.toSet)
+          .withColumn("bucket", bucket).select(delta.columns.toSeq.map(col): _*)
         // ONE exchange for merge + write: clustering by bucket BEFORE
         // the reduce satisfies the aggregation's ClusteredDistribution
         // (bucket ⊂ (bucket, user_id)) AND is exactly the layout the
@@ -976,26 +943,28 @@ object StreamingOps {
         // loses almost nothing here: both union sides are already
         // key-unique, so at most 2 rows per key existed to collapse.
         val merged = reduceKeys(cur.unionByName(delta).repartition(col("bucket")))
-        commitMergedBuckets(stateDir, merged, affected.toSeq, newEpoch,
-          man.map(_.buckets).getOrElse(Map.empty), retainEpochs, fanOut)
-        newEpoch
+        commitMergedBuckets(stateDirPath, merged, affected, newEpoch, man.buckets,
+          man.numBuckets)
       }
+      newEpoch
     } finally delta.unpersist(blocking = false): Unit
   }
 
   /** Steps 1–3 of the upsert commit protocol (stage → per-bucket
-    * rename → atomic manifest flip) plus retention GC, shared by
-    * [[runUpsert]] and the schema-evolution drain: `merged` holds the
-    * affected buckets' complete post-merge rows (with the `bucket`
-    * partition column), and the crash argument in [[runUpsert]]'s
-    * protocol comment applies verbatim — the schema of the staged
-    * rows never changes the protocol, which is what makes evolution a
-    * data-path concern only. */
-  private def commitMergedBuckets(stateDir: java.nio.file.Path, merged: DataFrame,
+    * rename → atomic manifest flip) plus retention GC. The one merge
+    * caller is [[mergeLww]] (the upsert, as-of, dual-sink and evolve
+    * tables); the re-layouts [[reshardUpsertState]] and [[compactDv]]
+    * commit through it too. `merged` holds the affected buckets'
+    * complete post-merge rows (with the `bucket` partition column),
+    * and the crash argument in [[mergeLww]]'s protocol comment applies
+    * verbatim — the schema of the staged rows never changes the
+    * protocol, which is what makes evolution a data-path concern
+    * only. */
+  private def commitMergedBuckets(stateDirPath: String, merged: DataFrame,
                                   affected: Seq[Int], newEpoch: Long,
                                   prevBuckets: Map[Int, String],
-                                  retainEpochs: Int,
-                                  numBuckets: Int = UpsertBuckets): Unit = {
+                                  numBuckets: Int): Unit = {
+    val stateDir = java.nio.file.Paths.get(stateDirPath)
     val stage = stateDir.resolve(s".stage-e$newEpoch")
     deleteRecursively(stage.toFile)
     // CALLER CONTRACT: `merged` arrives clustered by `bucket` (each
@@ -1018,8 +987,8 @@ object StreamingOps {
     deleteRecursively(stage.toFile)
     val newBuckets = (prevBuckets -- affected.toSet.diff(committed.toSet)) ++
       committed.map(b => b -> s"b$b/e$newEpoch")
-    UpsertTable.commit(stateDir.toString, UpsertManifest(newEpoch, newBuckets, numBuckets))
-    gcUpsertEpochs(stateDir, newEpoch, retainEpochs)
+    UpsertTable.commit(stateDirPath, UpsertManifest(newEpoch, newBuckets, numBuckets))
+    UpsertTable.gc(stateDirPath, newEpoch, UpsertTable.RetainEpochs)
   }
 
   // ------------------ dual-sink fan-out (one stream, two artifacts)
@@ -1063,44 +1032,35 @@ object StreamingOps {
       graft.ops.MvStore.build(dualMvPartials(ss.read.parquet(src).limit(0)),
         mvDirPath, Seq("event_type"), Seq("n", "cents"))
     }
-    val schema = perSession(sourceSchemas, ss).getOrElseUpdate(s"split:$src",
-      ss.read.parquet(src).schema)
-    val stream = ss.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "2").parquet(s"$src/part-*.parquet")
-    val q = stream.writeStream
-      .option("checkpointLocation", ckptPath)
-      .foreachBatch { (batch: DataFrame, id: java.lang.Long) =>
-        val sb = batch.sparkSession
-        val log = java.nio.file.Paths.get(txnLogPath)
-        val txnId = s"b$id"
-        def exec(st: graft.ArtifactTxn.Step): Unit = {
-          crashBefore.filter(c => c._1 == id.toLong && c._2 == st.store).foreach(_ =>
-            throw new RuntimeException(s"injected crash before ${st.store} in batch $id"))
-          onExec(id.toLong, st.store)
-          st.store match {
-            case "mv" =>
-              graft.ops.MvStore.refresh(sb, mvDirPath, dualMvPartials(batch)): Unit
-            case "upsert" =>
-              mergeUpsertBatch(sb, stateDirPath, batch): Unit
-          }
-        }
-        val head: graft.ArtifactTxn.Step => Long = st => st.store match {
-          case "mv" => graft.ops.MvStore.open(mvDirPath).epoch
+    val log = java.nio.file.Paths.get(txnLogPath)
+    drainBatchFeed(ss, src, "part-*.parquet", 2, ckptPath, _ => ()) { (batch, id) =>
+      val sb = batch.sparkSession
+      val txnId = s"b$id"
+      def exec(st: graft.ArtifactTxn.Step): Unit = {
+        crashBefore.filter(c => c._1 == id && c._2 == st.store).foreach(_ =>
+          throw new RuntimeException(s"injected crash before ${st.store} in batch $id"))
+        onExec(id, st.store)
+        st.store match {
+          case "mv" =>
+            graft.ops.MvStore.refresh(sb, mvDirPath, dualMvPartials(batch)): Unit
           case "upsert" =>
-            readUpsertManifest(java.nio.file.Paths.get(stateDirPath))
-              .map(_.epoch).getOrElse(-1L)
+            mergeUpsertBatch(sb, stateDirPath, batch): Unit
         }
-        val steps = Seq(
-          graft.ArtifactTxn.Step("mv", mvDirPath, id.toLong + 1, ""),
-          graft.ArtifactTxn.Step("upsert", stateDirPath, id.toLong, ""))
-        if (graft.ArtifactTxn.pending(log).exists(_.id == txnId))
-          graft.ArtifactTxn.recover(log, exec, head): Unit
-        else
-          graft.ArtifactTxn.run(log, txnId, steps, exec, head)
-        ()
       }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+      // −1 until the state table's first commit
+      val head: graft.ArtifactTxn.Step => Long = st => st.store match {
+        case "mv" => graft.ops.MvStore.open(mvDirPath).epoch
+        case "upsert" =>
+          graft.ManifestIo.pointerEpoch(java.nio.file.Paths.get(stateDirPath)).getOrElse(-1L)
+      }
+      val steps = Seq(
+        graft.ArtifactTxn.Step("mv", mvDirPath, id + 1, ""),
+        graft.ArtifactTxn.Step("upsert", stateDirPath, id, ""))
+      if (graft.ArtifactTxn.pending(log).exists(_.id == txnId))
+        graft.ArtifactTxn.recover(log, exec, head): Unit
+      else
+        graft.ArtifactTxn.run(log, txnId, steps, exec, head)
+    }
   }
 
   /** RESHARD the upsert state table to a new bucket fan-out behind ONE
@@ -1110,40 +1070,22 @@ object StreamingOps {
     * toward 1): existing state rows re-bucket on their stored user_id,
     * republish under the new fan-out, one atomic manifest flip; every
     * later merge routes under the manifest's new value. Zero source
-    * re-reads — state is already the LWW reduce. */
+    * re-reads — state is already the LWW reduce. An empty table
+    * stages nothing: the flip just records the new fan-out. */
   private[graft] def reshardUpsertState(s: SparkSession, stateDirPath: String,
                                         newBuckets: Int): Long = {
-    val stateDir = java.nio.file.Paths.get(stateDirPath)
-    val man = readUpsertManifest(stateDir)
-      .getOrElse(sys.error(s"no state table at $stateDirPath"))
+    val man = UpsertTable.open(stateDirPath)
     require(newBuckets > 0 && newBuckets != man.numBuckets,
       s"reshard wants a new positive fan-out, got $newBuckets (table at ${man.numBuckets})")
-    val newEpoch = man.epoch + 1
-    val paths = man.buckets.values.toSeq.sorted.map(rel => s"$stateDirPath/$rel")
-    if (paths.isEmpty) {
-      // empty table: nothing to move, the flip just records the new
-      // fan-out for every later merge
-      UpsertTable.commit(stateDir.toString, UpsertManifest(newEpoch, Map.empty, newBuckets))
-      gcUpsertEpochs(stateDir, newEpoch, UpsertRetainEpochs)
-    } else {
-      val merged = s.read.parquet(paths: _*)
-        .withColumn("bucket", (col("user_id") % newBuckets).cast("int"))
-        .select(col("bucket"), col("user_id"), col("tus"),
-          col("event_type"), col("cents"))
-        .repartition(col("bucket")) // commitMergedBuckets caller contract
-      // prevBuckets = empty: the OLD fan-out's bucket ids must not
-      // carry into the new map (a re-layout replaces the whole set)
-      commitMergedBuckets(stateDir, merged, 0 until newBuckets, newEpoch,
-        Map.empty, UpsertRetainEpochs, newBuckets)
-    }
-    newEpoch
+    val merged = stateRows(s, stateDirPath, man)
+      .withColumn("bucket", (col("user_id") % newBuckets).cast("int"))
+      .repartition(col("bucket")) // commitMergedBuckets caller contract
+    // prevBuckets = empty: the OLD fan-out's bucket ids must not
+    // carry into the new map (a re-layout replaces the whole set)
+    commitMergedBuckets(stateDirPath, merged, 0 until newBuckets, man.epoch + 1,
+      Map.empty, newBuckets)
+    man.epoch + 1
   }
-
-  /** Current upsert-table head epoch, −1 when no commit landed yet
-    * (spec accessor — readUpsertManifest is file-layout-private). */
-  private[graft] def readUpsertEpochHead(stateDirPath: String): Long =
-    readUpsertManifest(java.nio.file.Paths.get(stateDirPath))
-      .map(_.epoch).getOrElse(-1L)
 
   private val dualSinkLayouts = new Artifact[(String, String)]("dualsink")
 
@@ -1162,9 +1104,7 @@ object StreamingOps {
   val st_dual_sink: Q = (s, d) => {
     val (mvDir, stDir) = dualSinkLayout(s, d)
     val mv = graft.ops.MvStore.serve(s, mvDir, graft.ops.MvStore.open(mvDir))
-    val statePaths = readUpsertManifest(java.nio.file.Paths.get(stDir))
-      .toSeq.flatMap(_.buckets.values).map(rel => s"$stDir/$rel")
-    val lastCounts = s.read.parquet(statePaths: _*)
+    val lastCounts = stateRows(s, stDir, UpsertTable.open(stDir))
       .groupBy(col("event_type")).agg(count(lit(1)).as("n_users_last"))
     mv.join(lastCounts, Seq("event_type"), "left")
       .select(col("event_type"), col("n"), col("cents"),
@@ -1193,21 +1133,24 @@ object StreamingOps {
     * vector loudly (a bucket rewrite would re-base or drop it, as
     * compaction does) rather than silently resurrecting rows. */
   private[graft] def commitDv(s: SparkSession, stateDirPath: String): Long = {
-    val stateDir = java.nio.file.Paths.get(stateDirPath)
-    val man = readUpsertManifest(stateDir)
-      .getOrElse(sys.error(s"no state table at $stateDirPath"))
-    val paths = man.buckets.values.toSeq.sorted.map(rel => s"$stateDirPath/$rel")
+    val man = UpsertTable.open(stateDirPath)
     val rel = s"dv/e${man.epoch}"
-    s.read.parquet(paths: _*)
+    positioned(stateRows(s, stateDirPath, man))
       .filter(col("user_id") % DvMod === DvRem)
-      .select(col("_metadata.file_path").as("file"),
-        col("_metadata.row_index").as("idx"))
+      .select(col("file"), col("idx"))
       .write.mode("overwrite").parquet(s"$stateDirPath/$rel")
     val n = s.read.parquet(s"$stateDirPath/$rel").count()
-    graft.ManifestIo.atomicWrite(stateDir.resolve("_dv.json"),
+    graft.ManifestIo.atomicWrite(java.nio.file.Paths.get(stateDirPath, "_dv.json"),
       Serialization.write(DvPointer(man.epoch, rel, n)))
     n
   }
+
+  /** State rows with their physical position (file, row index) — the
+    * key a deletion vector names rows by. */
+  private def positioned(rows: DataFrame): DataFrame =
+    rows.select(col("_metadata.file_path").as("file"),
+      col("_metadata.row_index").as("idx"),
+      col("user_id"), col("tus"), col("event_type"), col("cents"))
 
   /** The committed deletion vector `_dv.json`: the state epoch it
     * indexes, its dir relative to the state dir, and its row count. */
@@ -1225,14 +1168,8 @@ object StreamingOps {
     * anti-joined against the broadcast deletion vector on
     * (file, row_index). */
   private[graft] def serveUpsertMor(s: SparkSession, stateDirPath: String): DataFrame = {
-    val stateDir = java.nio.file.Paths.get(stateDirPath)
-    val man = readUpsertManifest(stateDir)
-      .getOrElse(sys.error(s"no state table at $stateDirPath"))
-    val paths = man.buckets.values.toSeq.sorted.map(rel => s"$stateDirPath/$rel")
-    val base = s.read.parquet(paths: _*)
-      .select(col("_metadata.file_path").as("file"),
-        col("_metadata.row_index").as("idx"),
-        col("user_id"), col("tus"), col("event_type"), col("cents"))
+    val man = UpsertTable.open(stateDirPath)
+    val base = positioned(stateRows(s, stateDirPath, man))
     val alive = readDvPointer(stateDirPath) match {
       case Some(DvPointer(e, rel, _)) =>
         require(e == man.epoch,
@@ -1242,9 +1179,7 @@ object StreamingOps {
           Seq("file", "idx"), "left_anti")
       case None => base
     }
-    alive.select(col("user_id"), col("tus").as("last_tus"),
-        col("event_type").as("last_type"), col("cents"))
-      .orderBy(col("user_id"))
+    lastState(alive).orderBy(col("user_id"))
   }
 
   /** Apply the deletion vector PHYSICALLY: rewrite only the buckets
@@ -1253,9 +1188,7 @@ object StreamingOps {
     * which serving pays no anti-join. Untouched buckets' files never
     * move. */
   private[graft] def compactDv(s: SparkSession, stateDirPath: String): Unit = {
-    val stateDir = java.nio.file.Paths.get(stateDirPath)
-    val man = readUpsertManifest(stateDir)
-      .getOrElse(sys.error(s"no state table at $stateDirPath"))
+    val man = UpsertTable.open(stateDirPath)
     val DvPointer(e, rel, _) = readDvPointer(stateDirPath)
       .getOrElse(sys.error(s"no deletion vector at $stateDirPath"))
     require(e == man.epoch, s"stale deletion vector (epoch $e vs ${man.epoch})")
@@ -1263,19 +1196,15 @@ object StreamingOps {
     // buckets owning dv'd files — parsed from the vector itself
     val affected = dv.select(regexp_extract(col("file"), "/b(\\d+)/e\\d+/", 1)
         .cast("int").as("b")).distinct().collect().map(_.getInt(0)).toSeq.sorted
-    val paths = affected.flatMap(man.buckets.get).map(r => s"$stateDirPath/$r")
-    val merged = s.read.parquet(paths: _*)
-      .select(col("_metadata.file_path").as("file"),
-        col("_metadata.row_index").as("idx"),
-        col("user_id"), col("tus"), col("event_type"), col("cents"))
+    val merged = positioned(stateRows(s, stateDirPath, man, buckets = affected.toSet))
       .join(broadcast(dv), Seq("file", "idx"), "left_anti")
       .withColumn("bucket", (col("user_id") % man.numBuckets).cast("int"))
       .select(col("bucket"), col("user_id"), col("tus"), col("event_type"), col("cents"))
       .repartition(col("bucket")) // commitMergedBuckets caller contract
-    commitMergedBuckets(stateDir, merged, affected, man.epoch + 1,
-      man.buckets, UpsertRetainEpochs, man.numBuckets)
-    java.nio.file.Files.delete(stateDir.resolve("_dv.json"))
-    deleteRecursively(stateDir.resolve(rel).toFile)
+    commitMergedBuckets(stateDirPath, merged, affected, man.epoch + 1,
+      man.buckets, man.numBuckets)
+    java.nio.file.Files.delete(java.nio.file.Paths.get(stateDirPath, "_dv.json"))
+    deleteRecursively(java.nio.file.Paths.get(stateDirPath, rel).toFile)
   }
 
   private val dvLayouts = new Artifact[String]("dvstate")
@@ -1324,77 +1253,26 @@ object StreamingOps {
         .repartition(3).write.mode("overwrite").parquet(s"$p/v2")
     }
 
-  /** Per-key last-write-wins reduce over an EXPLICIT column list — the
-    * evolution-aware generalization of [[runUpsert]]'s `reduceKeys`.
-    * `event_id` sits in the comparator before any evolved column, and
-    * it is unique, so the struct max NEVER compares an evolved field —
-    * null-bearing new columns ride along without entering the order. */
-  private def reduceEvolveKeys(df: DataFrame, dataCols: Seq[String]): DataFrame =
-    df.groupBy(col("bucket"), col("user_id"))
-      .agg(max(struct(dataCols.map(col): _*)).as("m"))
-      .select(Seq(col("bucket"), col("user_id")) ++
-        dataCols.map(c => col(s"m.$c").as(c)): _*)
-
-  /** One era's streaming drain into the shared evolving state table.
-    * Post-evolution batches read pre-evolution epoch dirs with
-    * `mergeSchema` and align by name (`unionByName(allowMissing)`), so
-    * old rows widen to nulls IN THE MERGE — no rewrite of historical
+  /** One era's streaming drain into the shared evolving state table:
+    * each micro-batch is one [[mergeLww]] over `tus, event_type,
+    * cents, eid[, prop_k]`. `event_id` sits in the comparator before
+    * any evolved column, and it is unique, so the struct max NEVER
+    * compares an evolved field — null-bearing new columns ride along
+    * without entering the order. A post-evolution merge reads
+    * pre-evolution epoch dirs with the widened schema given, so old
+    * rows widen to nulls IN THE MERGE — no rewrite of historical
     * epochs, which is the property that matters at 100 TB: evolution
     * costs zero data movement on existing state. */
   private def evolveDrain(ss: SparkSession, srcDir: String, withProp: Boolean,
-                          stateDir: java.nio.file.Path, ckpt: String): Unit = {
-    val dataCols = Seq("tus", "event_type", "cents", "eid") ++
-      (if (withProp) Seq("prop_k") else Nil)
-    val schema = perSession(sourceSchemas, ss).getOrElseUpdate(s"evolve:$srcDir",
-      ss.read.parquet(srcDir).schema)
-    val stream = ss.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "2").parquet(s"$srcDir/part-*.parquet")
-    val q = stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, _: java.lang.Long) =>
-        val sb = batch.sparkSession
-        val fanOut = readUpsertManifest(stateDir)
-          .map(_.numBuckets).getOrElse(UpsertBuckets)
-        val base = batch.select(
-          Seq(col("user_id"), unix_micros(col("ts")).as("tus"),
-            col("event_type"), round(col("value") * 100).cast("long").as("cents"),
-            col("event_id").as("eid")) ++
-            (if (withProp)
-              Seq(get_json_object(col("props"), "$.k").cast("int").as("prop_k"))
-            else Nil): _*)
-          .withColumn("bucket", (col("user_id") % fanOut).cast("int"))
-        // persisted for the same reason as mergeUpsertBatch's delta:
-        // the affected-collect and the merged write would otherwise
-        // each re-read the batch files and re-run this aggregation
-        val delta = reduceEvolveKeys(base, dataCols)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          // ≤ UpsertBuckets driver-side ints — the partition list, not data
-          val affected = delta.select("bucket").distinct().collect()
-            .map(_.getInt(0)).toSeq
-          if (affected.nonEmpty) {
-            val man = readUpsertManifest(stateDir)
-            val curPaths = man.toSeq.flatMap(m =>
-              affected.sorted.flatMap(m.buckets.get)).map(rel => s"$stateDir/$rel")
-            val cur =
-              if (curPaths.nonEmpty)
-                sb.read.option("mergeSchema", "true").parquet(curPaths: _*)
-                  .withColumn("bucket", (col("user_id") % fanOut).cast("int"))
-              else delta.limit(0)
-            // same single-exchange shape as mergeUpsertBatch's merge
-            val merged = reduceEvolveKeys(
-              cur.unionByName(delta, allowMissingColumns = true)
-                .repartition(col("bucket")), dataCols)
-            commitMergedBuckets(stateDir, merged, affected,
-              man.map(_.epoch + 1).getOrElse(0L),
-              man.map(_.buckets).getOrElse(Map.empty), UpsertRetainEpochs, fanOut)
-          }
-        } finally delta.unpersist(blocking = false): Unit
-        ()
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-  }
+                          stateDirPath: String, ckpt: String): Unit =
+    drainBatchFeed(ss, srcDir, "part-*.parquet", 2, ckpt, _ => ()) { (batch, _) =>
+      val prop =
+        if (withProp) Seq(get_json_object(col("props"), "$.k").cast("int").as("prop_k"))
+        else Nil
+      mergeLww(batch.sparkSession, stateDirPath, batch.select(
+        (col("user_id") +: lwwCols :+ col("event_id").as("eid")) ++ prop: _*),
+        UpsertBuckets): Unit
+    }
 
   /** STREAMING MERGE WITH SCHEMA EVOLUTION — the production shape
     * [[st_upsert]] cannot express: the source gains a NEW column
@@ -1403,9 +1281,9 @@ object StreamingOps {
     * schema (a file stream's schema is fixed at plan time — the same
     * restart Delta's `schemaTrackingLocation` mandates), and the
     * MERGE WIDENS the state table in place: pre-evolution epoch dirs
-    * are never rewritten; their rows surface with nulls via
-    * by-name alignment, and a key's `prop_k` is non-null exactly when
-    * its last-write-wins winner arrived post-evolution.
+    * are never rewritten; their rows surface with nulls under the
+    * widened read schema, and a key's `prop_k` is non-null exactly
+    * when its last-write-wins winner arrived post-evolution.
     *
     * Determinism: the era split is `event_id < count·49/50` and the LWW
     * comparator ends at the UNIQUE `event_id`, so the winning row —
@@ -1413,10 +1291,10 @@ object StreamingOps {
     * data, replayed by the oracle as one row_number over all events.
     *
     * 100 TB notes: evolution costs ZERO data movement on existing
-    * state (old epochs stay immutable; widening happens in the merge
-    * read path via `mergeSchema` + `unionByName(allowMissing)`); the
-    * per-batch work is unchanged from [[runUpsert]] — delta keys +
-    * affected buckets only; and the commit protocol is byte-identical
+    * state (old epochs stay immutable; widening happens in the read
+    * path, [[stateRows]] with the widened schema); the per-batch work
+    * is unchanged from [[runUpsert]] — delta keys + affected buckets
+    * only; and the commit protocol is byte-identical
     * ([[commitMergedBuckets]]), so crash/atomicity guarantees carry
     * over unchanged. Nulls encode "pre-evolution" in state; the query
     * surfaces them as -1 to keep the output column non-nullable. */
@@ -1436,23 +1314,16 @@ object StreamingOps {
                                           onPhase: (Int, Long) => Unit): DataFrame = {
     val ss = streamSession(s)
     val src = evolveLayout(ss, d)
-    val stateDir = java.nio.file.Paths.get(stateDirPath)
     val ckpt1 = scratchDir("evolve_ck1")
     val ckpt2 = scratchDir("evolve_ck2")
     try {
-      evolveDrain(ss, s"$src/v1", withProp = false, stateDir, ckpt1.toString)
-      onPhase(1, readUpsertManifest(stateDir).map(_.epoch).getOrElse(-1L))
-      evolveDrain(ss, s"$src/v2", withProp = true, stateDir, ckpt2.toString)
-      onPhase(2, readUpsertManifest(stateDir).map(_.epoch).getOrElse(-1L))
-      val finalPaths = readUpsertManifest(stateDir).toSeq
-        .flatMap(_.buckets.values).map(rel => s"$stateDir/$rel")
-      val all = ss.read.option("mergeSchema", "true").parquet(finalPaths: _*)
-      val widened =
-        if (all.columns.contains("prop_k")) all
-        else all.withColumn("prop_k", lit(null).cast("int"))
-      val out = widened.select(col("user_id"), col("tus").as("last_tus"),
-          col("event_type").as("last_type"), col("cents"),
-          coalesce(col("prop_k"), lit(-1)).cast("int").as("prop_k"))
+      evolveDrain(ss, s"$src/v1", withProp = false, stateDirPath, ckpt1.toString)
+      onPhase(1, UpsertTable.open(stateDirPath).epoch)
+      evolveDrain(ss, s"$src/v2", withProp = true, stateDirPath, ckpt2.toString)
+      onPhase(2, UpsertTable.open(stateDirPath).epoch)
+      val out = lastState(stateRows(ss, stateDirPath, UpsertTable.open(stateDirPath),
+          UpsertSchema.add("prop_k", IntegerType)),
+        coalesce(col("prop_k"), lit(-1)).cast("int").as("prop_k"))
       // O(distinct users) — re-home distributed, never via the driver
       rehome(ss, out).orderBy(col("user_id"))
     } finally {
@@ -1768,49 +1639,40 @@ object StreamingOps {
     val outDir = scratchDir("scd_out")
     val ckpt = scratchDir("scd_ckpt")
     try {
-      val base = ss.read.parquet(src)
-      val schema = base.schema
       // user population, computed ONCE: every dim-version write used to
       // re-run the distinct over the source (one extra scan+shuffle per
       // new version, guide §2.4); the population is tiny (distinct
       // user_ids) and consumed by up to ScdBatches writers.
-      val users = base.select("user_id").distinct().localCheckpoint()
+      val users = ss.read.parquet(src).select("user_id").distinct().localCheckpoint()
       // base load: version 0 is live before the stream starts
       scdDimVersion(users, 0).write.mode("overwrite")
         .parquet(s"$dimDir/v=0")
-      val stream = ss.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$src/batch*.parquet")
-      val q = stream.writeStream
-        .option("checkpointLocation", ckpt.toString)
-        .foreachBatch { (batch: DataFrame, id: java.lang.Long) =>
-          val sb = batch.sparkSession
-          // the "external updater": a new dim version lands between
-          // micro-batches (idempotent under checkpoint replay — the
-          // version dir is overwritten, never appended)
-          if (id > 0 && id < ScdBatches)
-            scdDimVersion(users, id.toInt).write.mode("overwrite")
-              .parquet(s"$dimDir/v=$id")
-          // AS-OF resolve, fresh from disk EVERY batch: latest
-          // valid_from <= batch id per user
-          val versions = sb.read
-            .option("basePath", dimDir.toString).parquet(dimDir.toString)
-            .filter(col("valid_from") <= lit(id.toLong))
-          val resolved = versions
-            .groupBy(col("user_id"))
-            .agg(max(struct(col("valid_from"), col("tier"))).as("m"))
-            .select(col("user_id"), col("m.tier").as("tier"))
-          // dim-row count is a DIAGNOSTIC the spec consumes — passed
-          // lazily so the declared query (no-op onBatch) never pays
-          // the extra per-batch count job it used to run (guide §1.4:
-          // don't let the measurement harness into the timed path)
-          onBatch(id.toLong, () => versions.count())
-          batch.join(broadcast(resolved), "user_id")
-            .select(col("user_id"), col("event_type"), col("cents"), col("tier"))
-            .write.mode("append").parquet(outDir.toString)
-          ()
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      drainBatchFeed(ss, src, "batch*.parquet", 1, ckpt.toString, _ => ()) { (batch, id) =>
+        val sb = batch.sparkSession
+        // the "external updater": a new dim version lands between
+        // micro-batches (idempotent under checkpoint replay — the
+        // version dir is overwritten, never appended)
+        if (id > 0 && id < ScdBatches)
+          scdDimVersion(users, id.toInt).write.mode("overwrite")
+            .parquet(s"$dimDir/v=$id")
+        // AS-OF resolve, fresh from disk EVERY batch: latest
+        // valid_from <= batch id per user
+        val versions = sb.read
+          .option("basePath", dimDir.toString).parquet(dimDir.toString)
+          .filter(col("valid_from") <= lit(id))
+        val resolved = versions
+          .groupBy(col("user_id"))
+          .agg(max(struct(col("valid_from"), col("tier"))).as("m"))
+          .select(col("user_id"), col("m.tier").as("tier"))
+        // dim-row count is a DIAGNOSTIC the spec consumes — passed
+        // lazily so the declared query (no-op onBatch) never pays
+        // the extra per-batch count job it used to run (the
+        // measurement harness stays out of the timed path)
+        onBatch(id, () => versions.count())
+        batch.join(broadcast(resolved), "user_id")
+          .select(col("user_id"), col("event_type"), col("cents"), col("tier"))
+          .write.mode("append").parquet(outDir.toString)
+      }
       val agg = ss.read.parquet(outDir.toString)
         .groupBy(col("event_type"), col("tier"))
         .agg(count(lit(1)).as("n"), sum(col("cents")).as("cents"),
@@ -1861,7 +1723,7 @@ object StreamingOps {
     * that turns [[graft.ops.AnnIndexStore]] into a live system: an
     * embedding CDC feed drains through `foreachBatch`, and each
     * micro-batch commits one index epoch via
-    * [[graft.ops.AnnIndexStore.applyDeltaIdempotent]]. The batch id
+    * [[graft.EpochStore.applyBatch]]. The batch id
     * pins the epoch, which is what makes the sink EXACTLY-ONCE on an
     * at-least-once delivery: a crash-replayed batch finds its epoch
     * already flipped and no-ops ([[graft.AnnIndexStoreSpec]] proves
@@ -1908,8 +1770,9 @@ object StreamingOps {
       graft.ops.AnnIndexStore.build(e, indexDir,
         index = Some(e.filter(col("vec_id") >= 8 && col("vec_id") % 4 === 0)))
     }
-    drainBatchFeed(ss, src, s"$root/ckpt", onBatch) { (batch, id) =>
-      graft.ops.AnnIndexStore.applyDeltaIdempotent(batch.sparkSession, indexDir, batch, id)
+    drainBatchFeed(ss, src, "batch*.parquet", 1, s"$root/ckpt", onBatch) { (batch, id) =>
+      graft.ops.AnnIndexStore.applyBatch(indexDir, id)(
+        graft.ops.AnnIndexStore.applyDelta(batch.sparkSession, indexDir, batch))
     }
     indexDir
   }
@@ -1946,7 +1809,7 @@ object StreamingOps {
     * (ANN index) and [[st_upsert]] (state table): a fact stream drains
     * through `foreachBatch`, each micro-batch aggregates ITSELF to
     * monthly partials (batch-sized work) and commits them as one MV
-    * epoch via [[graft.ops.MvStore.refreshIdempotent]] — the batch id
+    * epoch via [[graft.EpochStore.applyBatch]] — the batch id
     * pins the epoch, so at-least-once delivery becomes an exactly-once
     * view (replayed batch → epoch already flipped → no-op; skipped
     * batch → pointed gap error, never a view missing a delta). Epoch 0
@@ -1976,9 +1839,9 @@ object StreamingOps {
       graft.ops.MvStore.build(mvIngestPartials(li), storeDir,
         Seq("l_returnflag"), Seq("rev_cents", "qty", "n"))
     }
-    drainBatchFeed(ss, src, s"$root/ckpt", onBatch) { (batch, id) =>
-      graft.ops.MvStore.refreshIdempotent(
-        batch.sparkSession, storeDir, mvIngestPartials(batch), id)
+    drainBatchFeed(ss, src, "batch*.parquet", 1, s"$root/ckpt", onBatch) { (batch, id) =>
+      graft.ops.MvStore.applyBatch(storeDir, id)(
+        graft.ops.MvStore.refresh(batch.sparkSession, storeDir, mvIngestPartials(batch)))
     }
     storeDir
   }
@@ -2044,9 +1907,9 @@ object StreamingOps {
       graft.ops.MvStore.build(mvDistinctPartials(boot), storeDir,
         Seq("event_type"), Seq("sk"), kinds = Seq("hll"))
     }
-    drainBatchFeed(ss, src, s"$root/ckpt", onBatch) { (batch, id) =>
-      graft.ops.MvStore.refreshIdempotent(
-        batch.sparkSession, storeDir, mvDistinctPartials(batch), id)
+    drainBatchFeed(ss, src, "batch*.parquet", 1, s"$root/ckpt", onBatch) { (batch, id) =>
+      graft.ops.MvStore.applyBatch(storeDir, id)(
+        graft.ops.MvStore.refresh(batch.sparkSession, storeDir, mvDistinctPartials(batch)))
     }
     storeDir
   }
@@ -2078,8 +1941,9 @@ object StreamingOps {
     bootstrapOnce(indexDir) {
       graft.ops.TextIndexStore.build(docs.filter(col("doc_id") % 4 === 0), indexDir)
     }
-    drainBatchFeed(ss, src, s"$root/ckpt", onBatch) { (batch, id) =>
-      graft.ops.TextIndexStore.applyDeltaIdempotent(batch.sparkSession, indexDir, batch, id)
+    drainBatchFeed(ss, src, "batch*.parquet", 1, s"$root/ckpt", onBatch) { (batch, id) =>
+      graft.ops.TextIndexStore.applyBatch(indexDir, id)(
+        graft.ops.TextIndexStore.applyDelta(batch.sparkSession, indexDir, batch))
     }
     indexDir
   }
@@ -2089,7 +1953,7 @@ object StreamingOps {
     * the durable artifacts (ANN and MV had live feeds; the text and
     * dedup indexes were batch-only): a document CDC feed drains
     * through `foreachBatch`, each micro-batch committing one index
-    * epoch via [[graft.ops.TextIndexStore.applyDeltaIdempotent]] —
+    * epoch via [[graft.EpochStore.applyBatch]] —
     * the same epoch-pins-batch-id contract that makes the sink
     * EXACTLY-ONCE on at-least-once delivery (replayed batch finds its
     * epoch flipped and no-ops; a gap fails loudly;
@@ -2144,8 +2008,9 @@ object StreamingOps {
     bootstrapOnce(indexDir) {
       graft.ops.DedupIndexStore.build(old.filter(col("doc_id") % 4 === 0), indexDir)
     }
-    drainBatchFeed(ss, src, s"$root/ckpt", onBatch) { (batch, id) =>
-      graft.ops.DedupIndexStore.applyDeltaIdempotent(batch.sparkSession, indexDir, batch, id)
+    drainBatchFeed(ss, src, "batch*.parquet", 1, s"$root/ckpt", onBatch) { (batch, id) =>
+      graft.ops.DedupIndexStore.applyBatch(indexDir, id)(
+        graft.ops.DedupIndexStore.applyDelta(batch.sparkSession, indexDir, batch))
     }
     indexDir
   }
@@ -2154,7 +2019,7 @@ object StreamingOps {
     * of [[st_text_ingest]] (same epoch-pins-batch-id exactly-once
     * contract, proven in [[graft.DedupIndexStoreSpec]]): the old
     * corpus arrives as a document feed, each micro-batch committing
-    * one [[graft.ops.DedupIndexStore.applyDeltaIdempotent]] epoch —
+    * one [[graft.EpochStore.applyBatch]] epoch —
     * the shape a production dedup screen actually runs, where the
     * reference corpus is never rebuilt, only appended as crawls land.
     *
@@ -2219,8 +2084,8 @@ object StreamingOps {
     val bad = batch.filter(size(toks) === 0)
       .select(col("doc_id"), lit("empty_text").as("reason"))
     bad.coalesce(1).write.mode("overwrite").parquet(s"$qDir/batch=$id")
-    graft.ops.TextIndexStore.applyDeltaIdempotent(
-      batch.sparkSession, textDir, batch.filter(size(toks) > 0), id)
+    graft.ops.TextIndexStore.applyBatch(textDir, id)(graft.ops.TextIndexStore.applyDelta(
+      batch.sparkSession, textDir, batch.filter(size(toks) > 0)))
     ()
   }
 
@@ -2238,7 +2103,7 @@ object StreamingOps {
           .filter(col("doc_id") % 4 === 0).select(col("doc_id"), col("text")),
         textDir)
     }
-    drainBatchFeed(ss, src, s"$root/ckpt", onBatch) { (batch, id) =>
+    drainBatchFeed(ss, src, "batch*.parquet", 1, s"$root/ckpt", onBatch) { (batch, id) =>
       applyDlqBatch(textDir, qDir, batch, id)
     }
     (textDir, qDir)
@@ -2273,7 +2138,7 @@ object StreamingOps {
     * silently, or routed to the wrong batch all hash-mismatch. */
   val st_dlq_table: Q = (s, d) => {
     val (_, qDir) = dlqIngestRuns(s, d)(runDlqIngest(s, d, _))
-    s.read.option("basePath", qDir).parquet(s"$qDir/batch=*")
+    s.read.parquet(qDir) // the batch=<id> dirs give the batch column
       .select(col("doc_id"), col("reason"), col("batch").cast("long").as("batch"))
       .orderBy(col("doc_id"))
   }
@@ -2314,9 +2179,9 @@ object StreamingOps {
     // batch, and the two sinks agree by construction
     val quarantinedIds = batch.sparkSession.read
       .parquet(s"$qDir/batch=$id").select(col("doc_id"))
-    graft.ops.TextIndexStore.applyDeltaIdempotent(
+    graft.ops.TextIndexStore.applyBatch(textDir, id)(graft.ops.TextIndexStore.applyDelta(
       batch.sparkSession, textDir,
-      batch.join(broadcast(quarantinedIds), Seq("doc_id"), "left_anti"), id)
+      batch.join(broadcast(quarantinedIds), Seq("doc_id"), "left_anti")))
     ()
   }
 
@@ -2341,7 +2206,7 @@ object StreamingOps {
       graft.ops.TextIndexStore.build(
         boot.join(bootHits, Seq("doc_id"), "left_anti"), textDir)
     }
-    drainBatchFeed(ss, src, s"$root/ckpt", onBatch) { (batch, id) =>
+    drainBatchFeed(ss, src, "batch*.parquet", 1, s"$root/ckpt", onBatch) { (batch, id) =>
       applyDeconBatch(textDir, qDir, evalSh, batch, id)
     }
     (textDir, qDir)
@@ -2373,7 +2238,7 @@ object StreamingOps {
     * the `doc_id % 4` feed rule). */
   val st_decon_table: Q = (s, d) => {
     val (_, qDir) = deconIngestRuns(s, d)(runDeconIngest(s, d, _))
-    s.read.option("basePath", qDir).parquet(s"$qDir/batch=*")
+    s.read.parquet(qDir) // the batch=<id> dirs give the batch column
       .select(col("doc_id"), col("n_hits"), col("batch").cast("long").as("batch"))
       .orderBy(col("doc_id"))
   }
@@ -2416,7 +2281,7 @@ object StreamingOps {
           .select(col("doc_id"), col("source"), col("n_chars"))
           .filter(col("doc_id") % 4 === 0), tDir)
     }
-    drainBatchFeed(ss, src, s"$root/ckpt", onBatch) { (batch, id) =>
+    drainBatchFeed(ss, src, "batch*.parquet", 1, s"$root/ckpt", onBatch) { (batch, id) =>
       // the no-negative-n_chars invariant is PER-ROW, so the audit
       // scopes to the staged batch alone (batch-proportional by
       // construction; GovernedTableSpec pins the inputFiles claim)
@@ -2496,7 +2361,7 @@ object StreamingOps {
 
   /** Apply ONE hybrid micro-batch to BOTH stores — the text index
     * first, then the ANN index, each through its own
-    * `applyDeltaIdempotent` epoch-pins-batch-id gate. This is the
+    * `applyBatch` epoch-pins-batch-id gate. This is the
     * whole cross-artifact consistency story, and it needs NO
     * distributed transaction: a crash between the two applies leaves
     * the text index at epoch id+1 and the ANN index at epoch id, and
@@ -2509,12 +2374,12 @@ object StreamingOps {
   private[graft] def applyHybridBatch(textDir: String, annDir: String,
                                       batch: DataFrame, id: Long): Unit = {
     val s = batch.sparkSession
-    graft.ops.TextIndexStore.applyDeltaIdempotent(
-      s, textDir, batch.select(col("doc_id"), col("text")), id)
-    graft.ops.AnnIndexStore.applyDeltaIdempotent(
+    graft.ops.TextIndexStore.applyBatch(textDir, id)(graft.ops.TextIndexStore.applyDelta(
+      s, textDir, batch.select(col("doc_id"), col("text"))))
+    graft.ops.AnnIndexStore.applyBatch(annDir, id)(graft.ops.AnnIndexStore.applyDelta(
       s, annDir, batch.select(col("doc_id").as("vec_id"), col("embedding"),
         lit("insert").as("op"),
-        lit(null).cast(batch.schema("embedding").dataType).as("old_embedding")), id)
+        lit(null).cast(batch.schema("embedding").dataType).as("old_embedding"))))
     ()
   }
 
@@ -2536,7 +2401,7 @@ object StreamingOps {
       graft.ops.AnnIndexStore.build(e, annDir,
         index = Some(e.filter(col("vec_id") >= 8 && col("vec_id") % 4 === 0)))
     }
-    drainBatchFeed(ss, src, s"$root/ckpt", onBatch) { (batch, id) =>
+    drainBatchFeed(ss, src, "batch*.parquet", 1, s"$root/ckpt", onBatch) { (batch, id) =>
       applyHybridBatch(textDir, annDir, batch, id)
     }
     (textDir, annDir)

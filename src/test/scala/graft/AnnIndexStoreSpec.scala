@@ -316,19 +316,19 @@ class AnnIndexStoreSpec extends AnyFunSuite {
       val delta = e0.filter(col("vec_id") >= 8 && col("vec_id") % 2 === 1)
         .select(col("vec_id"), col("embedding"), lit("insert").as("op"),
           lit(null).cast(e0.schema("embedding").dataType).as("old_embedding"))
-      val m1 = AnnIndexStore.applyDeltaIdempotent(spark, dir, delta, batchId = 0L)
+      val m1 = AnnIndexStore.applyBatch(dir, batchId = 0L)(AnnIndexStore.applyDelta(spark, dir, delta))
       assert(m1.epoch == 1L)
       val before = postingKey(AnnIndexStore.postings(spark, dir, m1))
       // the at-least-once REPLAY: same batch id again — must not
       // double-apply (a blind applyDelta would duplicate every insert)
-      val m1b = AnnIndexStore.applyDeltaIdempotent(spark, dir, delta, batchId = 0L)
+      val m1b = AnnIndexStore.applyBatch(dir, batchId = 0L)(AnnIndexStore.applyDelta(spark, dir, delta))
       assert(m1b.epoch == 1L, "replayed batch must not advance the epoch")
       assert(postingKey(AnnIndexStore.postings(spark, dir,
         AnnIndexStore.open(dir))) == before,
         "replayed batch must leave the postings byte-identical")
       // a GAP (skipped batch) must fail pointedly, never index around a hole
       val err = intercept[RuntimeException](
-        AnnIndexStore.applyDeltaIdempotent(spark, dir, delta, batchId = 5L))
+        AnnIndexStore.applyBatch(dir, batchId = 5L)(AnnIndexStore.applyDelta(spark, dir, delta)))
       assert(err.getMessage.contains("gap"), err.getMessage)
     } finally deleteDir(dir)
   }

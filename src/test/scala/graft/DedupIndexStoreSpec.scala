@@ -454,21 +454,21 @@ class DedupIndexStoreSpec extends AnyFunSuite {
     val dir = freshDir("idem")
     DedupIndexStore.build(oldDocs.filter(col("doc_id") % 2 === 0), dir)
     val delta = oldDocs.filter(col("doc_id") % 2 === 1)
-    val m1 = DedupIndexStore.applyDeltaIdempotent(spark, dir, delta, batchId = 0L)
+    val m1 = DedupIndexStore.applyBatch(dir, batchId = 0L)(DedupIndexStore.applyDelta(spark, dir, delta))
     assert(m1.epoch == 1L)
     val before = pairKey(
       DedupIndexStore.nearDups(spark, dir, m1, batchDocs))
     // the at-least-once REPLAY: same batch id again — must not
     // double-apply (a blind applyDelta would trip its own clash check,
     // crashing the stream; the gate no-ops instead)
-    val m1b = DedupIndexStore.applyDeltaIdempotent(spark, dir, delta, batchId = 0L)
+    val m1b = DedupIndexStore.applyBatch(dir, batchId = 0L)(DedupIndexStore.applyDelta(spark, dir, delta))
     assert(m1b.epoch == 1L, "replayed batch must not advance the epoch")
     assert(pairKey(DedupIndexStore.nearDups(spark, dir,
       DedupIndexStore.open(dir), batchDocs)) == before,
       "replayed batch must leave the served screen identical")
     // a GAP (skipped batch) must fail pointedly, never index around a hole
     val err = intercept[RuntimeException](
-      DedupIndexStore.applyDeltaIdempotent(spark, dir, delta, batchId = 5L))
+      DedupIndexStore.applyBatch(dir, batchId = 5L)(DedupIndexStore.applyDelta(spark, dir, delta)))
     assert(err.getMessage.contains("gap"), err.getMessage)
   }
 

@@ -179,8 +179,8 @@ class StreamingOpsSpec extends AnyFunSuite {
     // AvailableNow batch cadence). The file sink's commit log must make
     // the restart a no-op when no new input arrived — duplicated window
     // rows here would silently corrupt every downstream aggregate.
-    val out = java.nio.file.Files.createTempDirectory("graft_restart_out_")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_restart_ckpt_")
+    val out = graft.Fs.scratchDir("restart_out")
+    val ckpt = graft.Fs.scratchDir("restart_ckpt")
     StreamingOps.runParquetSink(spark, sf, out.toString, ckpt.toString)
     val firstRows = spark.read.parquet(out.toString).collect().toSeq
     assert(firstRows.nonEmpty)
@@ -193,8 +193,8 @@ class StreamingOpsSpec extends AnyFunSuite {
   }
 
   test("sink compaction: fewer files, identical rows, idempotent, crash window heals") {
-    val out = java.nio.file.Files.createTempDirectory("graft_cmpspec_out_")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_cmpspec_ckpt_")
+    val out = graft.Fs.scratchDir("cmpspec_out")
+    val ckpt = graft.Fs.scratchDir("cmpspec_ckpt")
     StreamingOps.runParquetSink(spark, sf, out.toString, ckpt.toString)
     def files(suffix: String) = Option(out.toFile.listFiles()).toSeq.flatten
       .filter(f => f.isFile && f.getName.endsWith(suffix) && !f.getName.startsWith("."))
@@ -253,12 +253,12 @@ class StreamingOpsSpec extends AnyFunSuite {
     // empty batch that skipped its commit would permanently misalign
     // every later batch's pin — so an empty merge must flip the
     // manifest (unchanged bucket pointers, zero data moved)
-    val state = java.nio.file.Files.createTempDirectory("graft_upsert_empty_state_")
+    val state = graft.Fs.scratchDir("upsert_empty_state")
     val ev = Tables.events(spark, sf)
       .select(col("user_id"), col("ts"), col("event_type"), col("value"))
     // first-ever batch EMPTY: epoch 0 with no buckets, not a skip
     assert(StreamingOps.mergeUpsertBatch(spark, state.toString, ev.limit(0)) == 0L)
-    assert(StreamingOps.readUpsertEpochHead(state.toString) == 0L)
+    assert(StreamingOps.UpsertTable.open(state.toString).epoch == 0L)
     StreamingOps.mergeUpsertBatch(spark, state.toString, ev.limit(200)): Unit
     val filesBefore = java.nio.file.Files.walk(state).toArray.map(_.toString)
       .filter(_.endsWith(".parquet")).sorted.toSeq
@@ -266,7 +266,7 @@ class StreamingOpsSpec extends AnyFunSuite {
       .collect().map(_.toString).sorted.toSeq
     val e = StreamingOps.mergeUpsertBatch(spark, state.toString, ev.limit(0))
     assert(e == 2L, s"empty batch must commit the next epoch, got $e")
-    assert(StreamingOps.readUpsertEpochHead(state.toString) == 2L)
+    assert(StreamingOps.UpsertTable.open(state.toString).epoch == 2L)
     val filesAfter = java.nio.file.Files.walk(state).toArray.map(_.toString)
       .filter(_.endsWith(".parquet")).sorted.toSeq
     assert(filesAfter == filesBefore, "empty epoch must move zero data files")
@@ -277,7 +277,7 @@ class StreamingOpsSpec extends AnyFunSuite {
   }
 
   test("upsert fan-out persists in the manifest: later merges route under it; zero-bucket epoch reads typed-empty") {
-    val state = java.nio.file.Files.createTempDirectory("graft_upsert_fan_state_")
+    val state = graft.Fs.scratchDir("upsert_fan_state")
     val ev = Tables.events(spark, sf)
       .select(col("user_id"), col("ts"), col("event_type"), col("value"))
     // first-ever batch EMPTY at a NON-default fan-out: epoch 0 has zero
@@ -297,7 +297,7 @@ class StreamingOpsSpec extends AnyFunSuite {
     assert(bucketDirs.nonEmpty && bucketDirs.forall(b => b >= 0 && b < 4),
       s"merges must route under the persisted fan-out 4, got dirs ${bucketDirs.toSeq}")
     // ...and the state content is the usual LWW reduce
-    val head = StreamingOps.readUpsertEpochHead(state.toString)
+    val head = StreamingOps.UpsertTable.open(state.toString).epoch
     val before = StreamingOps.readUpsertStateAt(spark, state.toString, head)
       .collect().map(_.toString).sorted.toSeq
     assert(before.nonEmpty)
@@ -317,8 +317,8 @@ class StreamingOpsSpec extends AnyFunSuite {
   }
 
   test("upsert restart is idempotent: rerun over the same checkpoint fires zero batches") {
-    val state = java.nio.file.Files.createTempDirectory("graft_upsert_restart_state_")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_upsert_restart_ckpt_")
+    val state = graft.Fs.scratchDir("upsert_restart_state")
+    val ckpt = graft.Fs.scratchDir("upsert_restart_ckpt")
     val first = StreamingOps.runUpsert(spark, sf, state.toString, ckpt.toString)
       .collect().map(_.toString).sorted.toSeq
     assert(first.nonEmpty)
@@ -335,6 +335,44 @@ class StreamingOpsSpec extends AnyFunSuite {
     assert(stateFiles2 == stateFiles, "restart must not rewrite any state partition")
   }
 
+  test("upsert drain job count: a fresh runUpsert starts the pinned number of Spark jobs") {
+    // st_upsert is ops_mix's slowest op; a job added per micro-batch to
+    // the merge or the state read shows here as +4. Warm the session's
+    // split layout and source schema first, then count one drain over
+    // fresh dirs: jobs started under this thread's tag (the stream
+    // thread inherits it), up to a marker job the listener saw end.
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+    StreamingOps.runUpsert(spark, sf, graft.Fs.scratchDir("upsert_jobs_warm").toString,
+      graft.Fs.scratchDir("upsert_jobs_warm_ckpt").toString): Unit
+    val sc = spark.sparkContext
+    val (key, tag) = ("graft.spec.upsertJobs", java.util.UUID.randomUUID().toString)
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(key) == tag)) started.incrementAndGet(): Unit
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = ended.add(e.jobId): Unit
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, tag)
+      try StreamingOps.runUpsert(spark, sf, graft.Fs.scratchDir("upsert_jobs_state").toString,
+        graft.Fs.scratchDir("upsert_jobs_ckpt").toString): Unit
+      finally sc.setLocalProperty(key, null)
+      sc.setJobGroup("upsert-jobs-marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val marker = sc.statusTracker.getJobIdsForGroup("upsert-jobs-marker").max
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!ended.contains(marker) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(ended.contains(marker), "marker job end never reached the listener")
+      assert(started.get == UpsertDrainJobs,
+        s"runUpsert started ${started.get} jobs, pinned $UpsertDrainJobs")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** Jobs one fresh 4-batch [[StreamingOps.runUpsert]] starts. */
+  private val UpsertDrainJobs = 25
+
   test("upsert commit is atomic across buckets: torn epoch dirs are invisible to readers") {
     // Round-9 verdict item 4. A crash between the per-bucket epoch-dir
     // renames and the manifest flip leaves NEW epoch dirs on disk with
@@ -344,8 +382,8 @@ class StreamingOpsSpec extends AnyFunSuite {
     // planting unreferenced epoch dirs (bogus rows) plus a stale
     // staging dir, then read the table again: the manifest-resolved
     // view must be byte-for-byte the committed state, garbage unseen.
-    val state = java.nio.file.Files.createTempDirectory("graft_upsert_torn_state_")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_upsert_torn_ckpt_")
+    val state = graft.Fs.scratchDir("upsert_torn_state")
+    val ckpt = graft.Fs.scratchDir("upsert_torn_ckpt")
     val first = StreamingOps.runUpsert(spark, sf, state.toString, ckpt.toString)
       .collect().map(_.toString).sorted.toSeq
     assert(first.nonEmpty)
@@ -386,15 +424,15 @@ class StreamingOpsSpec extends AnyFunSuite {
   }
 
   test("upsert time travel: retained epoch snapshots are monotone LWW prefixes") {
-    val state = java.nio.file.Files.createTempDirectory("graft_upsert_tt_state_")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_upsert_tt_ckpt_")
+    val state = graft.Fs.scratchDir("upsert_tt_state")
+    val ckpt = graft.Fs.scratchDir("upsert_tt_ckpt")
     locally {
       val live = StreamingOps.runUpsert(spark, sf, state.toString, ckpt.toString)
         .collect().map(r => r.getLong(0) ->
           ((r.getLong(1), r.getString(2), r.getLong(3)))).toMap
-      val epochs = StreamingOps.listUpsertEpochs(state.toString)
+      val epochs = StreamingOps.UpsertTable.listEpochs(state.toString)
       assert(epochs.length >= 2, s"need >= 2 retained epochs, got $epochs")
-      assert(epochs.length <= StreamingOps.UpsertRetainEpochs + 1)
+      assert(epochs.length <= StreamingOps.UpsertTable.RetainEpochs + 1)
       // snapshot at the newest epoch IS the live table
       val atHead = StreamingOps.readUpsertStateAt(spark, state.toString, epochs.last)
         .collect().map(r => r.getLong(0) ->
@@ -424,12 +462,13 @@ class StreamingOpsSpec extends AnyFunSuite {
   }
 
   test("upsert retention GC: epochs beyond the horizon are dropped, retained reads stay whole") {
-    val state = java.nio.file.Files.createTempDirectory("graft_upsert_gc_state_")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_upsert_gc_ckpt_")
+    val state = graft.Fs.scratchDir("upsert_gc_state")
+    val ckpt = graft.Fs.scratchDir("upsert_gc_ckpt")
     locally {
-      StreamingOps.runUpsert(spark, sf, state.toString, ckpt.toString,
-        retainEpochs = 1)
-      val epochs = StreamingOps.listUpsertEpochs(state.toString)
+      StreamingOps.runUpsert(spark, sf, state.toString, ckpt.toString)
+      StreamingOps.UpsertTable.gc(state.toString,
+        StreamingOps.UpsertTable.open(state.toString).epoch, retain = 1)
+      val epochs = StreamingOps.UpsertTable.listEpochs(state.toString)
       assert(epochs.length == 1, s"retain=1 must keep exactly the head epoch, got $epochs")
       // the head snapshot still resolves every bucket dir it references
       val rows = StreamingOps.readUpsertStateAt(spark, state.toString, epochs.head).count()
@@ -450,11 +489,11 @@ class StreamingOpsSpec extends AnyFunSuite {
   }
 
   test("snapshot read vs GC: lease spares the epoch, expired snapshot fails pointedly") {
-    val state = java.nio.file.Files.createTempDirectory("graft_upsert_lease_state_")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_upsert_lease_ckpt_")
+    val state = graft.Fs.scratchDir("upsert_lease_state")
+    val ckpt = graft.Fs.scratchDir("upsert_lease_ckpt")
     locally {
       StreamingOps.runUpsert(spark, sf, state.toString, ckpt.toString)
-      val epochs = StreamingOps.listUpsertEpochs(state.toString)
+      val epochs = StreamingOps.UpsertTable.listEpochs(state.toString)
       assert(epochs.length >= 2, s"need >= 2 retained epochs, got $epochs")
       val oldest = epochs.head
       val head = epochs.last
@@ -467,11 +506,10 @@ class StreamingOpsSpec extends AnyFunSuite {
         .collect().map(r => r.getLong(0) ->
           ((r.getLong(1), r.getString(2), r.getLong(3)))).toMap
       val got = StreamingOps.withUpsertSnapshot(spark, state.toString, oldest) { df =>
-        StreamingOps.gcUpsertEpochs(
-          java.nio.file.Paths.get(state.toString), head, retain = 1)
+        StreamingOps.UpsertTable.gc(state.toString, head, retain = 1)
         // GC ran mid-read: the leased epoch's manifest and dirs must
         // still be there, and the frame must materialize whole
-        assert(StreamingOps.listUpsertEpochs(state.toString).contains(oldest),
+        assert(StreamingOps.UpsertTable.listEpochs(state.toString).contains(oldest),
           "leased epoch was GC'd out from under an active reader")
         df.collect().map(r => r.getLong(0) ->
           ((r.getLong(1), r.getString(2), r.getLong(3)))).toMap
@@ -482,24 +520,22 @@ class StreamingOpsSpec extends AnyFunSuite {
       // published) but BEFORE its lease listing must be seen, sparing
       // the epoch. The afterIntent seam plants the lease at exactly
       // that point.
-      StreamingOps.gcUpsertEpochs(
-        java.nio.file.Paths.get(state.toString), head, retain = 1,
+      StreamingOps.UpsertTable.gc(state.toString, head, retain = 1,
         afterIntent = e => if (e == oldest) {
           java.nio.file.Files.writeString(
             graft.EpochGuard.leasePath(state, oldest, "racer"),
             s"""{"epoch":$oldest}""")
           ()
         })
-      assert(StreamingOps.listUpsertEpochs(state.toString).contains(oldest),
+      assert(StreamingOps.UpsertTable.listEpochs(state.toString).contains(oldest),
         "epoch evicted despite a lease landing between GC's intent and its list")
       assert(StreamingOps.readUpsertStateAt(spark, state.toString, oldest).count() > 0)
       java.nio.file.Files.delete(graft.EpochGuard.leasePath(state, oldest, "racer"))
       // INTERLEAVING 2 — lease released, same GC pass now evicts the
       // epoch; a late reader gets the pointed error, never a partial
       // table: the expired-epoch half.
-      StreamingOps.gcUpsertEpochs(
-        java.nio.file.Paths.get(state.toString), head, retain = 1)
-      assert(!StreamingOps.listUpsertEpochs(state.toString).contains(oldest))
+      StreamingOps.UpsertTable.gc(state.toString, head, retain = 1)
+      assert(!StreamingOps.UpsertTable.listEpochs(state.toString).contains(oldest))
       val err = intercept[IllegalStateException](
         StreamingOps.readUpsertStateAt(spark, state.toString, oldest))
       assert(err.getMessage.contains("snapshot expired"), err.getMessage)
@@ -624,7 +660,7 @@ class StreamingOpsSpec extends AnyFunSuite {
 
   test("upsert schema evolution: old epochs never rewritten, widen-on-merge, winner era decides prop_k") {
     import scala.jdk.CollectionConverters._
-    val state = java.nio.file.Files.createTempDirectory("graft_evolve_spec_")
+    val state = graft.Fs.scratchDir("evolve_spec")
     def epochFiles(): Map[String, (Long, Long)] =
       java.nio.file.Files.walk(state).iterator().asScala
         .filter(f => java.nio.file.Files.isRegularFile(f) &&
@@ -701,7 +737,7 @@ class StreamingOpsSpec extends AnyFunSuite {
 
   test("dual sink: crash between the two commits recovers exactly-once; batch pins stop re-application") {
     def tmp(t: String) =
-      java.nio.file.Files.createTempDirectory(s"graft_dual_$t").toString
+      graft.Fs.scratchDir(s"dual_$t").toString
     val (mv, st, ck, tx) = (tmp("mv"), tmp("st"), tmp("ck"), tmp("tx"))
     Seq(mv, st, ck, tx).foreach(p => graft.Fs.deleteRecursively(new java.io.File(p)))
     var execs = List.empty[(Long, String)]
@@ -715,7 +751,7 @@ class StreamingOpsSpec extends AnyFunSuite {
       "batch 1's intent must survive the crash")
     assert(graft.ops.MvStore.open(mv).epoch == 2L,
       "MV must hold bootstrap + batches 0 and 1")
-    assert(StreamingOps.readUpsertEpochHead(st) == 0L,
+    assert(StreamingOps.UpsertTable.open(st).epoch == 0L,
       "upsert must hold only batch 0")
 
     // restart on the same checkpoint: batch 1 replays with identical
@@ -750,8 +786,8 @@ class StreamingOpsSpec extends AnyFunSuite {
   }
 
   test("deletion vectors: zero rewrite at delete, exact MoR serve, physical compaction, stale guard") {
-    val st = java.nio.file.Files.createTempDirectory("graft_dvspec_state_").toString
-    val ck = java.nio.file.Files.createTempDirectory("graft_dvspec_ckpt_").toString
+    val st = graft.Fs.scratchDir("dvspec_state").toString
+    val ck = graft.Fs.scratchDir("dvspec_ckpt").toString
     val full = StreamingOps.runUpsert(spark, sf, st, ck).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getLong(3)))
     def dataFiles(): Map[String, (Long, Long)] = {
@@ -859,13 +895,13 @@ class StreamingOpsSpec extends AnyFunSuite {
       .groupBy(date_format(col("l_shipdate"), "yyyy-MM").as("m"), col("l_returnflag"))
       .agg(sum(round(col("l_extendedprice") * 100).cast("long")).as("rev_cents"),
         sum(round(col("l_quantity")).cast("long")).as("qty"), count(lit(1)).as("n"))
-    graft.ops.MvStore.refreshIdempotent(spark, store, someDelta,
-      batchId = 0L) // long committed
+    graft.ops.MvStore.applyBatch(store, batchId = 0L)( // long committed
+      graft.ops.MvStore.refresh(spark, store, someDelta))
     assert(snapshot() == before, "replayed batch wrote to the store")
 
     // a batch past a hole fails loudly instead of committing around it
-    val gap = intercept[RuntimeException](graft.ops.MvStore.refreshIdempotent(
-      spark, store, someDelta, batchId = head.epoch + 5))
+    val gap = intercept[RuntimeException](graft.ops.MvStore.applyBatch(
+      store, batchId = head.epoch + 5)(graft.ops.MvStore.refresh(spark, store, someDelta)))
     assert(gap.getMessage.contains("gap"))
 
     // restart against the drained checkpoint: ZERO batches fire
@@ -943,8 +979,7 @@ class StreamingOpsSpec extends AnyFunSuite {
       onBatch = id => batches ::= id)
     assert(batches.sorted == (0L until StreamingOps.FeedBatches),
       s"expected one micro-batch per feed file, got $batches")
-    def quarantined() = spark.read.option("basePath", qDir)
-      .parquet(s"$qDir/batch=*")
+    def quarantined() = spark.read.parquet(qDir) // batch=<id> dirs → batch column
       .select("doc_id", "reason", "batch").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSet
     val q1 = quarantined()
@@ -992,8 +1027,7 @@ class StreamingOpsSpec extends AnyFunSuite {
     val contaminated = PipelineOps.p_decontaminate(spark, sf).collect()
       .filter(_.getBoolean(3)).map(r => r.getLong(0) -> r.getLong(2)).toMap
     assert(contaminated.nonEmpty, "fixture has no contamination — gate witness moot")
-    def quarantined() = spark.read.option("basePath", qDir)
-      .parquet(s"$qDir/batch=*")
+    def quarantined() = spark.read.parquet(qDir) // batch=<id> dirs → batch column
       .select("doc_id", "n_hits", "batch").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     val q1 = quarantined()
@@ -1049,8 +1083,8 @@ class StreamingOpsSpec extends AnyFunSuite {
       .join(e.filter(col("vec_id") < 8)
         .select(col("vec_id").as("doc_id"), col("embedding")), Seq("doc_id"))
     val nextId = StreamingOps.FeedBatches.toLong
-    TextIndexStore.applyDeltaIdempotent(spark, tDir,
-      extra.select(col("doc_id"), col("text")), nextId)
+    TextIndexStore.applyBatch(tDir, nextId)(TextIndexStore.applyDelta(spark, tDir,
+      extra.select(col("doc_id"), col("text"))))
     assert(TextIndexStore.open(tDir).epoch == nextId + 1)
     assert(AnnIndexStore.open(aDir).epoch == nextId, "ann must still be behind")
     // ...and the engine's at-least-once REPLAY of the full batch heals

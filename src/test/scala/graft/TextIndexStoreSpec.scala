@@ -445,20 +445,20 @@ class TextIndexStoreSpec extends AnyFunSuite {
     val dir = freshDir("idem")
     TextIndexStore.build(docs.filter(col("doc_id") % 2 === 0), dir)
     val delta = docs.filter(col("doc_id") % 2 === 1)
-    val m1 = TextIndexStore.applyDeltaIdempotent(spark, dir, delta, batchId = 0L)
+    val m1 = TextIndexStore.applyBatch(dir, batchId = 0L)(TextIndexStore.applyDelta(spark, dir, delta))
     assert(m1.epoch == 1L)
     val before = scoreKey(TextIndexStore.bm25Scores(spark, dir, m1))
     // the at-least-once REPLAY: same batch id again — must not
     // double-apply (a blind applyDelta would trip its own clash check,
     // crashing the stream; the gate no-ops instead)
-    val m1b = TextIndexStore.applyDeltaIdempotent(spark, dir, delta, batchId = 0L)
+    val m1b = TextIndexStore.applyBatch(dir, batchId = 0L)(TextIndexStore.applyDelta(spark, dir, delta))
     assert(m1b.epoch == 1L, "replayed batch must not advance the epoch")
     assert(scoreKey(TextIndexStore.bm25Scores(spark, dir,
       TextIndexStore.open(dir))) == before,
       "replayed batch must leave the served scores identical")
     // a GAP (skipped batch) must fail pointedly, never index around a hole
     val err = intercept[RuntimeException](
-      TextIndexStore.applyDeltaIdempotent(spark, dir, delta, batchId = 5L))
+      TextIndexStore.applyBatch(dir, batchId = 5L)(TextIndexStore.applyDelta(spark, dir, delta)))
     assert(err.getMessage.contains("gap"), err.getMessage)
   }
 
