@@ -20,6 +20,16 @@ import org.json4s.jackson.JsonMethods
   * shape is not the default case-class form overrides [[toJson]] /
   * [[fromJson]] or adds to [[formats]].
   *
+  * The bucketed stores' mutators (ANN, text, dedup, MV) advance one
+  * way, through [[advance]]: under the store lock it opens the live
+  * manifest, the mutator's body stages epoch `m.epoch + 1`'s component
+  * dirs and returns the new manifest, and `advance` commits it and runs
+  * retention GC at [[RetainEpochs]]. GC on commit is the rule; a caller
+  * that wants a tighter horizon calls [[gc]] itself afterwards. The
+  * epoch-0 builds open no manifest and commit directly; the governed
+  * table (operator-run retention, optimistic re-checks) and the
+  * lock-free upsert table commit through [[commit]] themselves.
+  *
   * `name` names the store in "no <name> at <dir>"; `componentPattern`
   * matches the top-level component dirs [[gc]] sweeps (`"b\\d+"`; the
   * empty pattern matches none).
@@ -91,6 +101,23 @@ abstract class EpochStore(name: String, componentPattern: String) {
   def applyBatch(dir: String, batchId: Long)(commit: => Any): M = locked(dir) {
     EpochStore.applyPinned(s"$name batch $batchId at $dir", open(dir).epoch, batchId + 1)(commit)
     open(dir)
+  }
+
+  /** The one epoch advance: under [[locked]], open the live manifest
+    * `m` and hand `body` it and `next = m.epoch + 1`. The body stages
+    * epoch `next`'s component dirs and returns the manifest to flip to
+    * (at epoch `next`) with the caller's result; `advance` then
+    * [[commit]]s it and runs [[gc]] at [[RetainEpochs]]. A body that
+    * throws commits nothing. */
+  protected def advance[A](dir: String)(body: (M, Long) => (M, A)): A = locked(dir) {
+    val m = open(dir)
+    val next = m.epoch + 1
+    val (m2, out) = body(m, next)
+    require(m2.epoch == next, s"$name at $dir: advance from epoch ${m.epoch} " +
+      s"must commit epoch $next, got ${m2.epoch}")
+    commit(dir, m2)
+    gc(dir, next, RetainEpochs)
+    out
   }
 
   /** Write the immutable per-epoch manifest, then atomically replace

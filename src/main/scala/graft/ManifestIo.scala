@@ -192,25 +192,31 @@ private[graft] object ManifestIo {
     }
   }
 
+  /** The relative path of component `k`'s epoch-`epoch` dir,
+    * `"<prefix><k>/e<epoch>"` (`"b3/e2"`, `"c7/e0"`): the one bucket-dir
+    * format every bucketed store's manifest records and [[gcEpochs]]
+    * sweeps. */
+  def partitionPath(prefix: String, k: Int, epoch: Long): String = s"$prefix$k/e$epoch"
+
   /** Stage-then-rename publish of per-partition parquet dirs — the
     * shared write path of every bucketed store artifact (ANN cells,
-    * text-index posting buckets, dedup-index band buckets): stage
-    * `rows` under `.stage-e<epoch>` partitioned by a COPY of
-    * `partColumn` (so the data files keep the original as a real
-    * column after the rename strips the `p<col>=K` dir name), then
-    * publish each staged partition via rename into its immutable
-    * `<dirPrefix><K>/e<epoch>` location. Published ids come from the
-    * STAGE DIRECTORY LISTING — the write is the only job over `rows`,
-    * so callers never pay a second corpus-sized pass just to learn
-    * which partitions materialized. A crashed attempt's leftover
-    * destination dirs are overwritten on replay (idempotent: nothing
-    * references `e<epoch>` until the manifest flips). Returns the
-    * published partition ids, sorted. */
+    * text-index posting buckets, dedup-index band buckets, MV month
+    * buckets): stage `rows` under `.stage-e<epoch>` partitioned by a
+    * COPY of `partColumn` (so the data files keep the original as a
+    * real column after the rename strips the `p<col>=K` dir name),
+    * then publish each staged partition via rename into its immutable
+    * [[partitionPath]] location. Published ids come from the STAGE
+    * DIRECTORY LISTING — the write is the only job over `rows`, so
+    * callers never pay a second corpus-sized pass just to learn which
+    * partitions materialized. A crashed attempt's leftover destination
+    * dirs are overwritten on replay (idempotent: nothing references
+    * `e<epoch>` until the manifest flips). Returns partition id →
+    * relative path (`"<dirPrefix><K>/e<epoch>"`) for every partition
+    * that published, ready to merge into a manifest's bucket map. */
   def publishPartitions(rows: org.apache.spark.sql.DataFrame, dir: Path,
                         epoch: Long, partColumn: String,
-                        dirPrefix: String, saltTasks: Int = 1): Seq[Int] = {
-    import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
-    require(saltTasks >= 1, s"saltTasks must be ≥ 1, got $saltTasks")
+                        dirPrefix: String): Map[Int, String] = {
+    import org.apache.spark.sql.functions.col
     val stage = dir.resolve(s".stage-e$epoch")
     Fs.deleteRecursively(stage.toFile)
     // repartition ON the partition column first: without it every
@@ -220,42 +226,25 @@ private[graft] object ManifestIo {
     // punish harder). One extra shuffle of the posting rows buys
     // ~one file per partition dir. Trade-off: a partition's rows now
     // land on ONE task, so a pathologically hot partition writes as a
-    // straggler — usually acceptable because every caller sizes its
-    // fan-out ~√N (suggestedBuckets/suggestedNlist), which shrinks
-    // per-partition bytes as the corpus grows. A store that EXPECTS
-    // heavy skew passes `saltTasks` > 1: the shuffle key gains a
-    // deterministic row-content salt (xxhash64 over the row, mod
-    // saltTasks — stable under task retry, unlike round-robin), so a
-    // hot partition's rows spread over up to `saltTasks` parallel
-    // writers and its dir holds ≤ saltTasks files instead of one —
-    // bounded small-file cost, no straggler.
-    val keyed = rows.withColumn("p" + partColumn, col(partColumn))
-    val parted =
-      if (saltTasks == 1) keyed.repartition(col("p" + partColumn))
-      // explicit partition count: an AQE-coalescible repartition would
-      // merge the salt groups right back into one task, silently
-      // undoing the skew spread (observed: 300k-row hot bucket → 1
-      // file at saltTasks=4 under AQE). REPARTITION_BY_NUM is exempt
-      // from AQE coalescing.
-      else keyed.repartition(
-        rows.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
-        col("p" + partColumn),
-        pmod(xxhash64(rows.columns.map(col): _*), lit(saltTasks.toLong)))
-    parted
+    // straggler — acceptable because every caller sizes its fan-out
+    // ~√N (suggestedBuckets/suggestedNlist), which shrinks
+    // per-partition bytes as the corpus grows.
+    rows.withColumn("p" + partColumn, col(partColumn))
+      .repartition(col("p" + partColumn))
       .write.mode("overwrite").partitionBy("p" + partColumn).parquet(stage.toString)
     val staged = Option(stage.toFile.listFiles()).toSeq.flatten
       .filter(f => f.isDirectory && f.getName.startsWith(s"p$partColumn="))
-      .map(_.getName.stripPrefix(s"p$partColumn=").toInt).sorted
-    staged.foreach { k =>
-      val src = stage.resolve(s"p$partColumn=$k")
-      val dst = dir.resolve(s"$dirPrefix$k").resolve(s"e$epoch")
+      .map(_.getName.stripPrefix(s"p$partColumn=").toInt)
+    val published = staged.map { k =>
+      val rel = partitionPath(dirPrefix, k, epoch)
+      val dst = dir.resolve(rel)
       Files.createDirectories(dst.getParent)
       Fs.deleteRecursively(dst.toFile)
-      Files.move(src, dst)
-      ()
-    }
+      Files.move(stage.resolve(s"p$partColumn=$k"), dst)
+      k -> rel
+    }.toMap
     Fs.deleteRecursively(stage.toFile)
-    staged
+    published
   }
 
   /** The immutable per-epoch snapshot manifest. */

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions._
+import graft.ManifestIo.publishPartitions
+import java.nio.file.Paths
 
 /** Durable, versioned IVF index artifact — the production conclusion of
   * [[SimilarityOps]]'s session-scoped memos (round-10 verdict item 2).
@@ -148,16 +150,6 @@ object AnnIndexStore extends graft.EpochStore("ANN index", "c\\d+") {
       col("embedding"), codebooks.map(_.zipWithIndex.map { case (v, i) => (i, v) })))
   }
 
-  /** Stage `rows` (must carry a `cent` column) partitioned by cell,
-    * publish each staged cell via rename into its immutable
-    * `cK/e<epoch>` location — the stage/rename publish shared with the
-    * text and dedup index stores ([[graft.ManifestIo
-    * .publishPartitions]]); the write is the only job over `rows` (a
-    * corpus-sized assignment + PQ encode at build time). */
-  private def publishCells(rows: DataFrame, dir: String, epoch: Long): Seq[Int] =
-    graft.ManifestIo.publishPartitions(rows, java.nio.file.Paths.get(dir),
-      epoch, "cent", "c")
-
   /** Production sizing for `k` (the IVF cell count, FAISS's `nlist`):
     * ~√N cells balances cells-scanned-per-probe against
     * vectors-per-cell (probe cost ≈ nprobe·N/k + k, minimized near
@@ -208,8 +200,8 @@ object AnnIndexStore extends graft.EpochStore("ANN index", "c\\d+") {
       if (pq) SimilarityOps.pqCodebooks(corpus).map(_.map(_._2)) else Seq.empty
     val rows = entries(index.getOrElse(corpus), cents, books)
     // ONE job: the stage write; published cells come from its listing
-    val published = publishCells(rows, dir, 0L)
-    val m = AnnManifest(0L, cents, published.map(c => c -> s"c$c/e0").toMap, books)
+    val m = AnnManifest(0L, cents, publishPartitions(rows, Paths.get(dir), 0L, "cent", "c"),
+      books)
     commit(dir, m)
     m
   }
@@ -337,9 +329,8 @@ object AnnIndexStore extends graft.EpochStore("ANN index", "c\\d+") {
     * existing dirs and manifest entries. Cells that end empty leave
     * the manifest. One atomic flip commits the epoch; retention GC
     * runs after. */
-  def applyDelta(s: SparkSession, dir: String, delta: DataFrame,
-                 retain: Int = RetainEpochs): DeltaCommit = locked(dir) {
-    val m = open(dir)
+  def applyDelta(s: SparkSession, dir: String,
+                 delta: DataFrame): DeltaCommit = advance(dir) { (m, next) =>
     val cents = m.centroids
     // updates and deletes both evict their before-image's posting;
     // only updates and inserts contribute an after-image
@@ -354,24 +345,19 @@ object AnnIndexStore extends graft.EpochStore("ANN index", "c\\d+") {
     // the affected-cells collect re-evaluates newEntries once more in
     // the stage write below — acceptable because both passes are
     // BATCH-sized (the narrow assignment of |delta| rows), unlike the
-    // corpus-sized build where publishCells' stage listing replaced
+    // corpus-sized build where the publish's stage listing replaced
     // the second pass entirely
     val affected = oldCells.union(newEntries.select("cent"))
       .distinct().collect().map(_.getInt(0)).sorted.toSeq
     val cur = postings(s, dir, m, Some(affected))
     val readPaths = affected.sorted.flatMap(m.cells.get).map(rel => s"$dir/$rel")
-    val newEpoch = m.epoch + 1
     val rewritten = cur
       .join(broadcast(remKeys), Seq("vec_id"), "left_anti")
       .unionByName(newEntries)
     // staged ⊆ affected: `rewritten` only carries affected cells' rows
-    val published = publishCells(rewritten, dir, newEpoch)
-    val newCells = (m.cells -- affected.filterNot(published.contains)) ++
-      published.map(c => c -> s"c$c/e$newEpoch")
-    val next = AnnManifest(newEpoch, cents, newCells, m.codebooks)
-    commit(dir, next)
-    gc(dir, newEpoch, retain)
-    DeltaCommit(next, affected, readPaths)
+    val published = publishPartitions(rewritten, Paths.get(dir), next, "cent", "c")
+    val m2 = AnnManifest(next, cents, (m.cells -- affected) ++ published, m.codebooks)
+    (m2, DeltaCommit(m2, affected, readPaths))
   }
 
   /** Retrain-and-re-encode maintenance — the rebuild an IVF index
@@ -399,9 +385,7 @@ object AnnIndexStore extends graft.EpochStore("ANN index", "c\\d+") {
     * becomes a capped sample of the postings (as at [[build]]) while
     * the re-encode stays the full one-pass narrow assignment. */
   def rebalance(s: SparkSession, dir: String,
-                k: Int = SimilarityOps.NumCentroids,
-                retain: Int = RetainEpochs): AnnManifest = locked(dir) {
-    val m = open(dir)
+                k: Int = SimilarityOps.NumCentroids): AnnManifest = advance(dir) { (m, next) =>
     val corpus = postings(s, dir, m)
       .groupBy(col("vec_id")).agg(first(col("embedding")).as("embedding"))
       .orderBy(col("vec_id"))
@@ -410,12 +394,8 @@ object AnnIndexStore extends graft.EpochStore("ANN index", "c\\d+") {
       if (m.codebooks.nonEmpty) SimilarityOps.pqCodebooks(corpus).map(_.map(_._2))
       else Seq.empty
     val rows = entries(corpus, cents, books)
-    val newEpoch = m.epoch + 1
-    val published = publishCells(rows, dir, newEpoch)
-    val next = AnnManifest(newEpoch, cents,
-      published.map(c => c -> s"c$c/e$newEpoch").toMap, books)
-    commit(dir, next)
-    gc(dir, newEpoch, retain)
-    next
+    val m2 = AnnManifest(next, cents,
+      publishPartitions(rows, Paths.get(dir), next, "cent", "c"), books)
+    (m2, m2)
   }
 }

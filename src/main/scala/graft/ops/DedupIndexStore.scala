@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.ManifestIo.publishPartitions
+import java.nio.file.Paths
 
 /** Durable, versioned NEAR-DUP (MinHash-LSH) index — the third member
   * of the durable-index family ([[AnnIndexStore]] for vectors,
@@ -216,11 +218,10 @@ object DedupIndexStore extends graft.EpochStore("dedup index", "b\\d+|docs|dels"
     buildCount.incrementAndGet()
     val sh = DedupOps.shingled(docs).cache()
     try {
-      val published = graft.ManifestIo.publishPartitions(
-        postingsOf(sh, numBuckets), java.nio.file.Paths.get(dir), 0L, "bucket", "b")
+      val published = publishPartitions(
+        postingsOf(sh, numBuckets), Paths.get(dir), 0L, "bucket", "b")
       val nDocs = writeRegistrySegment(sh, dir, "docs/e0", docBuckets)
-      val m = DedupManifest(0L, nDocs,
-        published.map(b => b -> s"b$b/e0").toMap, Seq("docs/e0"),
+      val m = DedupManifest(0L, nDocs, published, Seq("docs/e0"),
         numBuckets = numBuckets, docBuckets = docBuckets)
       commit(dir, m)
       m
@@ -317,10 +318,8 @@ object DedupIndexStore extends graft.EpochStore("dedup index", "b\\d+|docs|dels"
     * batch-proportional: only the buckets the batch's band keys hash
     * into are read and merged, the registry gains one APPENDED
     * segment, one atomic flip commits, retention GC runs. */
-  def applyDelta(s: SparkSession, dir: String, newDocs: DataFrame,
-                 retain: Int = RetainEpochs): DeltaCommit = locked(dir) {
-    val m = open(dir)
-    val next = m.epoch + 1
+  def applyDelta(s: SparkSession, dir: String,
+                 newDocs: DataFrame): DeltaCommit = advance(dir) { (m, next) =>
     val sh = DedupOps.shingled(newDocs).cache()
     try {
       val regPaths = registryLeafPaths(dir, m, 0 until m.docBuckets)
@@ -343,18 +342,14 @@ object DedupIndexStore extends graft.EpochStore("dedup index", "b\\d+|docs|dels"
       val merged = oldAffected
         .select(col("band"), col("key"), col("doc_id"), col("sfull"), col("bucket"))
         .unionByName(rows)
-      val published = graft.ManifestIo.publishPartitions(
-        merged, java.nio.file.Paths.get(dir), next, "bucket", "b")
+      val published = publishPartitions(merged, Paths.get(dir), next, "bucket", "b")
 
       val added = writeRegistrySegment(sh, dir, s"docs/e$next", m.docBuckets)
-      val buckets = m.buckets ++ published.map(b => b -> s"b$b/e$next").toMap
       // m.dels carries forward: an insert epoch keeps pending deletes
       // pending (they resolve at compact)
-      val m2 = DedupManifest(next, m.nDocs + added, buckets,
+      val m2 = DedupManifest(next, m.nDocs + added, m.buckets ++ published,
         m.docs :+ s"docs/e$next", m.dels, m.numBuckets, m.docBuckets)
-      commit(dir, m2)
-      gc(dir, next, retain)
-      DeltaCommit(m2, affected, readPaths)
+      (m2, DeltaCommit(m2, affected, readPaths))
     } finally { sh.unpersist(); () }
   }
 
@@ -384,10 +379,8 @@ object DedupIndexStore extends graft.EpochStore("dedup index", "b\\d+|docs|dels"
     * (updating a deleted doc is a re-insert — after [[compact]], as
     * before), and must shingle to ≥1 shingle (an update-to-empty is a
     * delete). */
-  def applyUpdate(s: SparkSession, dir: String, updDocs: DataFrame,
-                  retain: Int = RetainEpochs): UpdateCommit = locked(dir) {
-    val m = open(dir)
-    val next = m.epoch + 1
+  def applyUpdate(s: SparkSession, dir: String,
+                  updDocs: DataFrame): UpdateCommit = advance(dir) { (m, next) =>
     val newSh = DedupOps.shingled(updDocs).cache()
     try {
       val ids = updDocs.select(col("doc_id")).distinct()
@@ -425,18 +418,13 @@ object DedupIndexStore extends graft.EpochStore("dedup index", "b\\d+|docs|dels"
             .join(broadcast(ids.select(col("doc_id"))), Seq("doc_id"), "left_anti")
             .select(col("band"), col("key"), col("doc_id"), col("sfull"), col("bucket"))
           else newPost.limit(0)
-        val published = graft.ManifestIo.publishPartitions(
-          cleaned.unionByName(newPost), java.nio.file.Paths.get(dir), next,
-          "bucket", "b")
+        val published = publishPartitions(
+          cleaned.unionByName(newPost), Paths.get(dir), next, "bucket", "b")
         writeRegistrySegment(newSh, dir, s"docs/e$next", m.docBuckets): Unit
         // a bucket emptied by the update drops from the manifest
-        val buckets = (m.buckets -- affected) ++
-          published.map(b => b -> s"b$b/e$next").toMap
-        val m2 = DedupManifest(next, m.nDocs, buckets,
+        val m2 = DedupManifest(next, m.nDocs, (m.buckets -- affected) ++ published,
           m.docs :+ s"docs/e$next", m.dels, m.numBuckets, m.docBuckets)
-        commit(dir, m2)
-        gc(dir, next, retain)
-        UpdateCommit(m2, affected)
+        (m2, UpdateCommit(m2, affected))
       } finally { oldSh.unpersist(); () }
     } finally { newSh.unpersist(); () }
   }
@@ -464,10 +452,8 @@ object DedupIndexStore extends graft.EpochStore("dedup index", "b\\d+|docs|dels"
     * them physically, at which point the doc_id becomes re-insertable
     * (the same delete → compact → insert update lifecycle as the text
     * index). Unknown or already-deleted doc_ids fail loudly. */
-  def applyDelete(s: SparkSession, dir: String, delDocs: DataFrame,
-                  retain: Int = RetainEpochs): DeleteCommit = locked(dir) {
-    val m = open(dir)
-    val next = m.epoch + 1
+  def applyDelete(s: SparkSession, dir: String,
+                  delDocs: DataFrame): DeleteCommit = advance(dir) { (m, next) =>
     val ids = delDocs.select(col("doc_id")).distinct()
       .withColumn("dbucket", docBucket(col("doc_id"), m.docBuckets))
     // victims' shingles from ONLY their registry leaf dirs (bounded
@@ -500,19 +486,14 @@ object DedupIndexStore extends graft.EpochStore("dedup index", "b\\d+|docs|dels"
       val cleaned = s.read.parquet(readPaths: _*)
         .join(broadcast(ids.select(col("doc_id"))), Seq("doc_id"), "left_anti")
         .select(col("band"), col("key"), col("doc_id"), col("sfull"), col("bucket"))
-      val published = graft.ManifestIo.publishPartitions(
-        cleaned, java.nio.file.Paths.get(dir), next, "bucket", "b")
+      val published = publishPartitions(cleaned, Paths.get(dir), next, "bucket", "b")
       val rel = s"dels/e$next"
       ids.select(col("doc_id")).write.mode("overwrite").parquet(s"$dir/$rel")
       // a bucket emptied by the delete drops out of the manifest
       // entirely (published ⊆ affected)
-      val buckets = (m.buckets -- affected) ++
-        published.map(b => b -> s"b$b/e$next").toMap
-      val m2 = DedupManifest(next, m.nDocs - nFound, buckets, m.docs,
-        m.dels :+ rel, m.numBuckets, m.docBuckets)
-      commit(dir, m2)
-      gc(dir, next, retain)
-      DeleteCommit(m2, nFound, affected)
+      val m2 = DedupManifest(next, m.nDocs - nFound, (m.buckets -- affected) ++ published,
+        m.docs, m.dels :+ rel, m.numBuckets, m.docBuckets)
+      (m2, DeleteCommit(m2, nFound, affected))
     } finally { victims.unpersist(); () }
   }
 
@@ -528,29 +509,23 @@ object DedupIndexStore extends graft.EpochStore("dedup index", "b\\d+|docs|dels"
     * fan-outs afterwards ([[DedupOps.d_dedup_resharded]] hash-checks
     * the served screen unchanged). */
   def reshard(s: SparkSession, dir: String, newBuckets: Int,
-              newDocBuckets: Int, retain: Int = RetainEpochs): DedupManifest = locked(dir) {
-    val m = open(dir)
+              newDocBuckets: Int): DedupManifest = advance(dir) { (m, next) =>
     require(newBuckets > 0 && newDocBuckets > 0 &&
       (newBuckets != m.numBuckets || newDocBuckets != m.docBuckets),
       s"reshard wants new positive fan-outs, got ($newBuckets, $newDocBuckets) " +
         s"(index at (${m.numBuckets}, ${m.docBuckets}))")
-    val next = m.epoch + 1
     val rehashed = s.read.parquet(m.buckets.values.map(rel => s"$dir/$rel").toSeq: _*)
       .select(col("band"), col("key"), col("doc_id"), col("sfull"))
       .withColumn("bucket", bandBucket(col("band"), col("key"), newBuckets))
-    val published = graft.ManifestIo.publishPartitions(
-      rehashed, java.nio.file.Paths.get(dir), next, "bucket", "b")
+    val published = publishPartitions(rehashed, Paths.get(dir), next, "bucket", "b")
     val rel = s"docs/e$next"
     latestRegistryRows(s, dir, m, 0 until m.docBuckets, None)
       .withColumn("dbucket", docBucket(col("doc_id"), newDocBuckets))
       .repartition(col("dbucket"))
       .write.mode("overwrite").partitionBy("dbucket").parquet(s"$dir/$rel")
-    val m2 = DedupManifest(next, m.nDocs,
-      published.map(b => b -> s"b$b/e$next").toMap, Seq(rel), m.dels,
+    val m2 = DedupManifest(next, m.nDocs, published, Seq(rel), m.dels,
       newBuckets, newDocBuckets)
-    commit(dir, m2)
-    gc(dir, next, retain)
-    m2
+    (m2, m2)
   }
 
   // ------------------------------------------------------- compaction
@@ -572,10 +547,7 @@ object DedupIndexStore extends graft.EpochStore("dedup index", "b\\d+|docs|dels"
     * compaction is provably identical ([[DedupOps.d_dedup_compacted]]
     * hash-checks it against the same from-scratch DuckDB replay as the
     * other two witnesses). */
-  def compact(s: SparkSession, dir: String,
-              retain: Int = RetainEpochs): DedupManifest = locked(dir) {
-    val m = open(dir)
-    val next = m.epoch + 1
+  def compact(s: SparkSession, dir: String): DedupManifest = advance(dir) { (m, next) =>
     val regPaths = registryLeafPaths(dir, m, 0 until m.docBuckets)
     require(regPaths.nonEmpty, s"nothing to compact at $dir (empty registry)")
     val dels =
@@ -602,8 +574,6 @@ object DedupIndexStore extends graft.EpochStore("dedup index", "b\\d+|docs|dels"
       s"compaction recomputed nDocs $n != manifest ${m.nDocs} at $dir")
     val m2 = DedupManifest(next, m.nDocs, m.buckets, Seq(rel), Nil,
       m.numBuckets, m.docBuckets)
-    commit(dir, m2)
-    gc(dir, next, retain)
-    m2
+    (m2, m2)
   }
 }

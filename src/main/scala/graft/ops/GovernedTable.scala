@@ -294,10 +294,11 @@ object GovernedTable extends graft.EpochStore("governed table", "") {
   def stagedOnly(s: SparkSession, dir: String, staged: String): DataFrame =
     s.read.parquet(s"$dir/$staged")
 
-  /** Publish a clean staged batch: rename into the epoch layout, ONE
-    * manifest flip. A STALE handle (the table advanced since the
-    * stage) fails pointedly — the audit's verdict no longer describes
-    * the table it would be joining.
+  /** Publish a clean staged batch: [[publishCas]] (rename into the
+    * epoch layout, ONE manifest flip) for the single-writer caller. A
+    * STALE handle (the table advanced since the stage) fails pointedly
+    * — the audit's verdict no longer describes the table it would be
+    * joining.
     *
     * Crash seams compose: a crash AFTER the rename but BEFORE the flip
     * may be recovered either by replaying publish directly (the
@@ -306,18 +307,12 @@ object GovernedTable extends graft.EpochStore("governed table", "") {
     * the re-staged dir is a duplicate of the already-renamed segment
     * (same deterministic batch) and is discarded in favor of the
     * rename, so the two recovery paths cannot collide. */
-  def publish(s: SparkSession, dir: String, staged: String): Manifest = locked(dir) {
-    val m = open(dir)
-    val e = m.epoch + 1
-    require(staged == s"stage-e$e",
-      s"stale stage '$staged': table is at epoch ${m.epoch}, expected stage-e$e")
-    renameStage(s, dir, staged, e)
-    val (cols2, mp2) = mapNewSegment(s, dir, s"e$e", m)
-    val m2 = Manifest(e, m.segments :+ s"e$e", m.batches, m.batchHwm,
-      cols2, mp2, m.colTypes)
-    commit(dir, m2)
-    m2
-  }
+  def publish(s: SparkSession, dir: String, staged: String): Manifest =
+    publishCas(s, dir, staged) match {
+      case Right(m2) => m2
+      case Left(live) => throw new IllegalArgumentException(
+        s"stale stage '$staged': table is at epoch $live, expected stage-e${live + 1}")
+    }
 
   /** Column-mapping maintenance for one NEW segment: physical columns
     * matching a CURRENT served name keep their field id; unseen names

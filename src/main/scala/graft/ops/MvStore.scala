@@ -2,6 +2,8 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.ManifestIo.publishPartitions
+import java.nio.file.Paths
 
 /** Durable incremental MATERIALIZED-VIEW store — the aggregate-side
   * member of the durable-artifact family ([[AnnIndexStore]] vectors,
@@ -127,7 +129,7 @@ object MvStore extends graft.EpochStore("MV store", "b\\d+") {
             kinds: Seq[String] = Nil,
             numBuckets: Int = NumBuckets): MvManifest = locked(dir) {
     require(numBuckets > 0, s"numBuckets must be positive, got $numBuckets")
-    val base = java.nio.file.Paths.get(dir)
+    val base = Paths.get(dir)
     java.nio.file.Files.createDirectories(base)
     val expect = ("m" +: keys) ++ aggs
     require(partials.columns.toSet == expect.toSet,
@@ -139,9 +141,8 @@ object MvStore extends graft.EpochStore("MV store", "b\\d+") {
     // record the view's actual key/agg types so empty-view consumers
     // (changeFeed's zero-bucket fallback) never have to guess a schema
     val types = (keys ++ aggs).map(c => partials.schema(c).dataType.catalogString)
-    val published = graft.ManifestIo.publishPartitions(
-      withBucket(partials, numBuckets), base, 0L, "bucket", "b")
-    val m = MvManifest(0L, keys, aggs, published.map(b => b -> s"b$b/e0").toMap,
+    val m = MvManifest(0L, keys, aggs,
+      publishPartitions(withBucket(partials, numBuckets), base, 0L, "bucket", "b"),
       kinds, types, numBuckets)
     commit(dir, m)
     m
@@ -159,11 +160,8 @@ object MvStore extends graft.EpochStore("MV store", "b\\d+") {
     * in atomically; untouched buckets carry forward by reference.
     * Work is delta-proportional + the affected buckets' size — never
     * the history. */
-  def refresh(s: SparkSession, dir: String, deltaPartials: DataFrame,
-              retain: Int = RetainEpochs): RefreshCommit = locked(dir) {
-    val base = java.nio.file.Paths.get(dir)
-    val m = open(dir)
-    val next = m.epoch + 1
+  def refresh(s: SparkSession, dir: String,
+              deltaPartials: DataFrame): RefreshCommit = advance(dir) { (m, next) =>
     val delta = withBucket(deltaPartials, m.numBuckets)
     // ≤ NumBuckets driver-side ints — the partition list, not data
     val affected = delta.select(col("bucket")).distinct()
@@ -178,13 +176,10 @@ object MvStore extends graft.EpochStore("MV store", "b\\d+") {
       .unionByName(delta.select(cols.map(col): _*))
       .groupBy(("m" +: m.keys :+ "bucket").map(col): _*)
       .agg(merges.head, merges.tail: _*)
-    val published = graft.ManifestIo.publishPartitions(merged, base, next, "bucket", "b")
     val m2 = MvManifest(next, m.keys, m.aggs,
-      m.buckets ++ published.map(b => b -> s"b$b/e$next").toMap, m.kinds, m.types,
-      m.numBuckets)
-    commit(dir, m2)
-    gc(dir, next, retain)
-    RefreshCommit(m2, affected, readPaths)
+      m.buckets ++ publishPartitions(merged, Paths.get(dir), next, "bucket", "b"),
+      m.kinds, m.types, m.numBuckets)
+    (m2, RefreshCommit(m2, affected, readPaths))
   }
 
   /** RESHARD to a new month-bucket fan-out behind ONE flip — the
@@ -197,22 +192,17 @@ object MvStore extends graft.EpochStore("MV store", "b\\d+") {
     * refresh routes under the manifest's NEW fan-out.
     * [[RelationalQueries.q_mv_resharded]] hash-checks serving
     * unchanged across the re-layout. */
-  def reshard(s: SparkSession, dir: String, newBuckets: Int,
-              retain: Int = RetainEpochs): MvManifest = locked(dir) {
-    val m = open(dir)
+  def reshard(s: SparkSession, dir: String,
+              newBuckets: Int): MvManifest = advance(dir) { (m, next) =>
     require(newBuckets > 0 && newBuckets != m.numBuckets,
       s"reshard wants a new positive fan-out, got $newBuckets (view at ${m.numBuckets})")
-    val base = java.nio.file.Paths.get(dir)
-    val next = m.epoch + 1
     val rehashed = withBucket(
       s.read.parquet(m.buckets.values.map(rel => s"$dir/$rel").toSeq: _*)
         .select((("m" +: m.keys) ++ m.aggs).map(col): _*), newBuckets)
-    val published = graft.ManifestIo.publishPartitions(rehashed, base, next, "bucket", "b")
     val m2 = MvManifest(next, m.keys, m.aggs,
-      published.map(b => b -> s"b$b/e$next").toMap, m.kinds, m.types, newBuckets)
-    commit(dir, m2)
-    gc(dir, next, retain)
-    m2
+      publishPartitions(rehashed, Paths.get(dir), next, "bucket", "b"),
+      m.kinds, m.types, newBuckets)
+    (m2, m2)
   }
 
   // ----------------------------------------------------------- serve

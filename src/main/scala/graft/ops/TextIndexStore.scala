@@ -2,6 +2,8 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.ManifestIo.publishPartitions
+import java.nio.file.Paths
 
 /** Durable, versioned INVERTED text index — the lexical twin of
   * [[AnnIndexStore]], completing the hybrid-retrieval production story
@@ -175,15 +177,6 @@ object TextIndexStore extends graft.EpochStore("text index", "b\\d+|stats|docs|d
   private def postingsOf(docs: DataFrame, fanOut: Int): DataFrame =
     withBucket(postingsBase(docs), fanOut)
 
-  /** Stage posting rows partitioned by bucket, publish each staged
-    * bucket via rename into `bK/e<epoch>` — the stage/rename publish
-    * shared with the ANN and dedup stores ([[graft.ManifestIo
-    * .publishPartitions]]; bucket list from the stage listing: the
-    * write is the only corpus job). */
-  private def publishBuckets(rows: DataFrame, dir: String, epoch: Long): Seq[Int] =
-    graft.ManifestIo.publishPartitions(rows, java.nio.file.Paths.get(dir),
-      epoch, "bucket", "b")
-
   private def writeComponent(df: DataFrame, dir: String, rel: String): Unit =
     df.write.mode("overwrite").parquet(s"$dir/$rel")
 
@@ -241,9 +234,9 @@ object TextIndexStore extends graft.EpochStore("text index", "b\\d+|stats|docs|d
       if (numBuckets == SizeDerived) sizedBuckets(base.count()) else numBuckets
     val rows = withBucket(base, fanOut)
     try {
-      val published = publishBuckets(
+      val published = publishPartitions(
         rows.select(col("tok"), col("doc_id"), col("tf"), col("dl"), col("bucket")),
-        dir, 0L)
+        Paths.get(dir), 0L, "bucket", "b")
       val stats = rows.groupBy(col("tok")).agg(count(lit(1)).cast("long").as("df"))
       writeComponent(stats, dir, "stats/e0")
       val reg = registrySegment(rows)
@@ -253,7 +246,7 @@ object TextIndexStore extends graft.EpochStore("text index", "b\\d+|stats|docs|d
       val scalars = docs.sparkSession.read.parquet(s"$dir/docs/e0")
         .agg(count(lit(1)).as("n"), sum(col("dl")).as("s")).head
       val m = TextManifest(0L, scalars.getLong(0), scalars.getLong(1),
-        published.map(b => b -> s"b$b/e0").toMap, "stats/e0", Seq("docs/e0"),
+        published, "stats/e0", Seq("docs/e0"),
         numBuckets = fanOut)
       commit(dir, m)
       m
@@ -354,10 +347,8 @@ object TextIndexStore extends graft.EpochStore("text index", "b\\d+|stats|docs|d
     * batch's tokens hash into are read and merged) plus a vocab-sized
     * stats rewrite; the doc registry gains one APPENDED segment, the
     * scalars bump, one atomic flip commits, retention GC runs. */
-  def applyDelta(s: SparkSession, dir: String, newDocs: DataFrame,
-                 retain: Int = RetainEpochs): DeltaCommit = locked(dir) {
-    val m = open(dir)
-    val next = m.epoch + 1
+  def applyDelta(s: SparkSession, dir: String,
+                 newDocs: DataFrame): DeltaCommit = advance(dir) { (m, next) =>
     val rows = postingsOf(newDocs, m.numBuckets).cache()
     try {
       // insert-only contract, checked against the persisted registry
@@ -380,7 +371,7 @@ object TextIndexStore extends graft.EpochStore("text index", "b\\d+|stats|docs|d
         .select(col("tok"), col("doc_id"), col("tf"), col("dl"), col("bucket"))
         .unionByName(rows
           .select(col("tok"), col("doc_id"), col("tf"), col("dl"), col("bucket")))
-      val published = publishBuckets(merged, dir, next)
+      val published = publishPartitions(merged, Paths.get(dir), next, "bucket", "b")
 
       // stats merge: disjoint docs ⇒ df adds exactly
       val statsNew = s.read.parquet(s"$dir/${m.stats}")
@@ -391,15 +382,12 @@ object TextIndexStore extends graft.EpochStore("text index", "b\\d+|stats|docs|d
       writeComponent(regSeg, dir, s"docs/e$next")
       val delta = regSeg.agg(count(lit(1)).as("n"), sum(col("dl")).as("s")).head
 
-      val buckets = m.buckets ++ published.map(b => b -> s"b$b/e$next").toMap
       // m.dels carries forward: an insert epoch must not resurrect
       // tombstoned docs
       val m2 = TextManifest(next, m.nDocs + delta.getLong(0),
-        m.sumDl + delta.getLong(1), buckets, s"stats/e$next",
+        m.sumDl + delta.getLong(1), m.buckets ++ published, s"stats/e$next",
         m.docs :+ s"docs/e$next", m.dels, m.numBuckets)
-      commit(dir, m2)
-      gc(dir, next, retain)
-      DeltaCommit(m2, affected, readPaths)
+      (m2, DeltaCommit(m2, affected, readPaths))
     } finally { rows.unpersist(); () }
   }
 
@@ -440,10 +428,8 @@ object TextIndexStore extends graft.EpochStore("text index", "b\\d+|stats|docs|d
     * silently vanishing a doc's postings while its registry row stays
     * live would corrupt the scalars). Indexes built before the
     * doc→buckets map fail pointedly; one [[compact]] upgrades them. */
-  def applyUpdate(s: SparkSession, dir: String, updDocs: DataFrame,
-                  retain: Int = RetainEpochs): UpdateCommit = locked(dir) {
-    val m = open(dir)
-    val next = m.epoch + 1
+  def applyUpdate(s: SparkSession, dir: String,
+                  updDocs: DataFrame): UpdateCommit = advance(dir) { (m, next) =>
     val rows = postingsOf(updDocs, m.numBuckets).cache()
     try {
       val ids = updDocs.select(col("doc_id")).distinct()
@@ -490,13 +476,12 @@ object TextIndexStore extends graft.EpochStore("text index", "b\\d+|stats|docs|d
           val kept = oldAffected.join(updIds, Seq("doc_id"), "left_anti")
           val merged = kept.unionByName(rows
             .select(col("tok"), col("doc_id"), col("tf"), col("dl"), col("bucket")))
-          val published = publishBuckets(merged, dir, next)
+          val published = publishPartitions(merged, Paths.get(dir), next, "bucket", "b")
           // a bucket whose every posting belonged to updated docs can
           // come back EMPTY — it must leave the map (a fresh build
           // over the updated corpus would not have it), not keep
           // pointing at the stale pre-update epoch dir
-          val buckets = (m.buckets -- affected.toSet.diff(published.toSet)) ++
-            published.map(b => b -> s"b$b/e$next").toMap
+          val buckets = (m.buckets -- affected) ++ published
 
           // stats: df −(replaced postings' tokens) +(new postings');
           // posting rows are unique per (tok, doc), so each count is
@@ -517,9 +502,7 @@ object TextIndexStore extends graft.EpochStore("text index", "b\\d+|stats|docs|d
           val m2 = TextManifest(next, m.nDocs, m.sumDl - dlBefore + dlAfter,
             buckets, s"stats/e$next", m.docs :+ s"docs/e$next", m.dels,
             m.numBuckets)
-          commit(dir, m2)
-          gc(dir, next, retain)
-          UpdateCommit(m2, affected, dlBefore, dlAfter)
+          (m2, UpdateCommit(m2, affected, dlBefore, dlAfter))
         } finally { replaced.unpersist(); () }
       } finally { found.unpersist(); () }
     } finally { rows.unpersist(); () }
@@ -549,10 +532,8 @@ object TextIndexStore extends graft.EpochStore("text index", "b\\d+|stats|docs|d
     * doc_ids fail loudly: a delete that silently no-ops would let a
     * compliance pipeline believe data was removed when it never
     * existed under that id. */
-  def applyDelete(s: SparkSession, dir: String, delDocs: DataFrame,
-                  retain: Int = RetainEpochs): DeleteCommit = locked(dir) {
-    val m = open(dir)
-    val next = m.epoch + 1
+  def applyDelete(s: SparkSession, dir: String,
+                  delDocs: DataFrame): DeleteCommit = advance(dir) { (m, next) =>
     val ids = delDocs.select(col("doc_id")).distinct()
     // the EFFECTIVE registry (last segment wins): an updated doc has
     // one row per update epoch in the raw segments, and the delete's
@@ -575,9 +556,7 @@ object TextIndexStore extends graft.EpochStore("text index", "b\\d+|stats|docs|d
       val dropped = found.agg(sum(col("dl")).as("s")).head.getLong(0)
       val m2 = TextManifest(next, m.nDocs - nFound, m.sumDl - dropped,
         m.buckets, m.stats, m.docs, m.dels :+ rel, m.numBuckets)
-      commit(dir, m2)
-      gc(dir, next, retain)
-      DeleteCommit(m2, nFound, dropped)
+      (m2, DeleteCommit(m2, nFound, dropped))
     } finally { found.unpersist(); () }
   }
 
@@ -596,27 +575,21 @@ object TextIndexStore extends graft.EpochStore("text index", "b\\d+|stats|docs|d
     * by reference (both fan-out-independent). Serving after a reshard
     * is bit-identical ([[TextOps.t_bm25_resharded]] hash-checks it
     * against the same from-scratch oracle as [[TextOps.t_bm25]]). */
-  def reshard(s: SparkSession, dir: String, newBuckets: Int,
-              retain: Int = RetainEpochs): TextManifest = locked(dir) {
-    val m = open(dir)
+  def reshard(s: SparkSession, dir: String,
+              newBuckets: Int): TextManifest = advance(dir) { (m, next) =>
     require(newBuckets > 0 && newBuckets != m.numBuckets,
       s"reshard wants a new positive fan-out, got $newBuckets (index at ${m.numBuckets})")
-    val next = m.epoch + 1
     val rehashed = s.read.parquet(m.buckets.values.map(rel => s"$dir/$rel").toSeq: _*)
       .select(col("tok"), col("doc_id"), col("tf"), col("dl"))
       .withColumn("bucket",
         pmod(xxhash64(col("tok")), lit(newBuckets.toLong)).cast("int"))
       .cache()
     try {
-      val published = publishBuckets(rehashed, dir, next)
-      val reg = registrySegment(rehashed)
-      writeComponent(reg, dir, s"docs/e$next")
-      val m2 = TextManifest(next, m.nDocs, m.sumDl,
-        published.map(b => b -> s"b$b/e$next").toMap, m.stats,
+      val published = publishPartitions(rehashed, Paths.get(dir), next, "bucket", "b")
+      writeComponent(registrySegment(rehashed), dir, s"docs/e$next")
+      val m2 = TextManifest(next, m.nDocs, m.sumDl, published, m.stats,
         Seq(s"docs/e$next"), m.dels, newBuckets)
-      commit(dir, m2)
-      gc(dir, next, retain)
-      m2
+      (m2, m2)
     } finally { rehashed.unpersist(); () }
   }
 
@@ -631,10 +604,7 @@ object TextIndexStore extends graft.EpochStore("text index", "b\\d+|stats|docs|d
     * that against the from-scratch DuckDB replay over survivors).
     * Old epochs keep their own manifests, so retained snapshots still
     * time-travel across the purge. */
-  def compact(s: SparkSession, dir: String,
-              retain: Int = RetainEpochs): TextManifest = locked(dir) {
-    val m = open(dir)
-    val next = m.epoch + 1
+  def compact(s: SparkSession, dir: String): TextManifest = advance(dir) { (m, next) =>
     val dels =
       if (m.dels.isEmpty)
         s.emptyDataFrame.select(lit(0L).as("doc_id")).limit(0)
@@ -643,9 +613,9 @@ object TextIndexStore extends graft.EpochStore("text index", "b\\d+|stats|docs|d
       .join(broadcast(dels), Seq("doc_id"), "left_anti")
       .cache()
     try {
-      val published = publishBuckets(
+      val published = publishPartitions(
         surviving.select(col("tok"), col("doc_id"), col("tf"), col("dl"), col("bucket")),
-        dir, next)
+        Paths.get(dir), next, "bucket", "b")
       val stats = surviving.groupBy(col("tok")).agg(count(lit(1)).cast("long").as("df"))
       writeComponent(stats, dir, s"stats/e$next")
       // registry squash, recomputed from the surviving postings (not
@@ -661,12 +631,9 @@ object TextIndexStore extends graft.EpochStore("text index", "b\\d+|stats|docs|d
       require(scalars.getLong(0) == m.nDocs && scalars.getLong(1) == m.sumDl,
         s"purge recomputed scalars (${scalars.getLong(0)}, ${scalars.getLong(1)}) != " +
           s"manifest (${m.nDocs}, ${m.sumDl}) at $dir")
-      val m2 = TextManifest(next, m.nDocs, m.sumDl,
-        published.map(b => b -> s"b$b/e$next").toMap, s"stats/e$next",
+      val m2 = TextManifest(next, m.nDocs, m.sumDl, published, s"stats/e$next",
         Seq(s"docs/e$next"), Nil, m.numBuckets)
-      commit(dir, m2)
-      gc(dir, next, retain)
-      m2
+      (m2, m2)
     } finally { surviving.unpersist(); () }
   }
 }

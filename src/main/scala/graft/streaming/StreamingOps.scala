@@ -974,19 +974,19 @@ object StreamingOps {
     // paying a second exchange here (previously: agg exchange + a
     // repartition(bucket) exchange per micro-batch).
     merged.write.mode("overwrite").partitionBy("bucket").parquet(stage.toString)
-    val committed = affected.filter { b =>
+    val committed = affected.flatMap { b =>
       val src = stage.resolve(s"bucket=$b")
-      val dst = stateDir.resolve(s"b$b").resolve(s"e$newEpoch")
+      val rel = graft.ManifestIo.partitionPath("b", b, newEpoch)
+      val dst = stateDir.resolve(rel)
       java.nio.file.Files.createDirectories(dst.getParent)
       deleteRecursively(dst.toFile) // crashed attempt's leftovers
-      if (java.nio.file.Files.exists(src)) { java.nio.file.Files.move(src, dst); true }
-      else false // bucket rewrote to EMPTY (e.g. a DV compaction that
+      if (java.nio.file.Files.exists(src)) { java.nio.file.Files.move(src, dst); Some(b -> rel) }
+      else None // bucket rewrote to EMPTY (e.g. a DV compaction that
       // deleted its every row): reference nothing rather than a
       // never-created dir — the manifest diff reads as a drop
     }
     deleteRecursively(stage.toFile)
-    val newBuckets = (prevBuckets -- affected.toSet.diff(committed.toSet)) ++
-      committed.map(b => b -> s"b$b/e$newEpoch")
+    val newBuckets = (prevBuckets -- affected) ++ committed
     UpsertTable.commit(stateDirPath, UpsertManifest(newEpoch, newBuckets, numBuckets))
     UpsertTable.gc(stateDirPath, newEpoch, UpsertTable.RetainEpochs)
   }

@@ -89,7 +89,7 @@ class AnnIndexStoreSpec extends AnyFunSuite {
   }
 
   test("applyDelta flips atomically and keeps the pre-delta epoch readable (time travel)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_annspec_").toString
+    val dir = Fs.scratchDir("annspec").toString
     try {
       val m0 = AnnIndexStore.build(e0, dir)
       val before = postingKey(AnnIndexStore.postings(spark, dir, m0))
@@ -114,7 +114,7 @@ class AnnIndexStoreSpec extends AnyFunSuite {
   }
 
   test("racing committers: two concurrent applyDelta calls serialize, no stomped cells, both land") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_annspec_").toString
+    val dir = Fs.scratchDir("annspec").toString
     try {
       val m0 = AnnIndexStore.build(e0, dir)
       val beforeIds = AnnIndexStore.postings(spark, dir, m0)
@@ -150,7 +150,7 @@ class AnnIndexStoreSpec extends AnyFunSuite {
   }
 
   test("applyDelta delete op: the before-image names the cell, victim postings physically gone") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_annspec_").toString
+    val dir = Fs.scratchDir("annspec").toString
     try {
       val m0 = AnnIndexStore.build(e0, dir)
       val before = postingKey(AnnIndexStore.postings(spark, dir, m0))
@@ -176,7 +176,7 @@ class AnnIndexStoreSpec extends AnyFunSuite {
   }
 
   test("retention GC drops epochs beyond the horizon; evicted snapshots fail pointedly") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_annspec_gc_").toString
+    val dir = Fs.scratchDir("annspec_gc").toString
     try {
       AnnIndexStore.build(e0, dir)
       val base = e0.select(col("vec_id"), col("embedding"))
@@ -208,7 +208,7 @@ class AnnIndexStoreSpec extends AnyFunSuite {
   }
 
   test("snapshot lease: GC spares a leased epoch; evicted lease fails pointedly") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_annspec_lease_").toString
+    val dir = Fs.scratchDir("annspec_lease").toString
     try {
       AnnIndexStore.build(e0, dir)
       val base = e0.select(col("vec_id"), col("embedding"))
@@ -216,15 +216,16 @@ class AnnIndexStoreSpec extends AnyFunSuite {
       AnnIndexStore.applyDelta(spark, dir,
         SimilarityOps.ivfDeltaBatch(base, maxId))
       assert(AnnIndexStore.listEpochs(dir) == Seq(0L, 1L))
-      // a reader pins epoch 0 while a maintenance commit (retain=1,
-      // which would evict it) lands mid-read: the leased epoch and
+      // a reader pins epoch 0 while a maintenance commit and a retain=1
+      // GC (which would evict it) land mid-read: the leased epoch and
       // every dir it references must survive the pass
       val got = AnnIndexStore.withSnapshot(dir, 0L) { m0 =>
         val delta = base.filter(col("vec_id") % 17 === 0)
           .select((col("vec_id") + lit(2 * (maxId + 1))).as("vec_id"),
             col("embedding"), lit("insert").as("op"),
             lit(null).cast(base.schema("embedding").dataType).as("old_embedding"))
-        AnnIndexStore.applyDelta(spark, dir, delta, retain = 1)
+        val head = AnnIndexStore.applyDelta(spark, dir, delta).manifest.epoch
+        AnnIndexStore.gc(dir, head, retain = 1)
         assert(AnnIndexStore.listEpochs(dir).contains(0L),
           "leased epoch GC'd out from under an active reader")
         m0.cells.values.foreach { rel =>
@@ -251,7 +252,8 @@ class AnnIndexStoreSpec extends AnyFunSuite {
         .select((col("vec_id") + lit(3 * (maxId + 1))).as("vec_id"),
           col("embedding"), lit("insert").as("op"),
           lit(null).cast(base.schema("embedding").dataType).as("old_embedding"))
-      AnnIndexStore.applyDelta(spark, dir, delta2, retain = 1)
+      val head = AnnIndexStore.applyDelta(spark, dir, delta2).manifest.epoch
+      AnnIndexStore.gc(dir, head, retain = 1)
       assert(!AnnIndexStore.listEpochs(dir).contains(0L))
       val err = intercept[IllegalStateException](
         AnnIndexStore.withSnapshot(dir, 0L)(_ => ()))
@@ -289,7 +291,7 @@ class AnnIndexStoreSpec extends AnyFunSuite {
       .groupBy(col("vec_id")).agg(first(col("embedding")).as("embedding"))
       .orderBy(col("vec_id"))
       .select(col("vec_id"), col("embedding"))
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_reb_fresh_").toString
+    val dir2 = Fs.scratchDir("reb_fresh").toString
     try {
       val mf = AnnIndexStore.build(corpus, dir2)
       assert(mf.centroids.map(_._2.toSeq) == m2.centroids.map(_._2.toSeq),
@@ -309,7 +311,7 @@ class AnnIndexStoreSpec extends AnyFunSuite {
   }
 
   test("applyDeltaIdempotent: a replayed batch no-ops, a batch gap fails loudly") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ann_idem_").toString
+    val dir = Fs.scratchDir("ann_idem").toString
     try {
       AnnIndexStore.build(e0, dir,
         index = Some(e0.filter(col("vec_id") >= 8 && col("vec_id") % 2 === 0)))

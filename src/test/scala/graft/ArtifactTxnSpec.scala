@@ -29,9 +29,9 @@ class ArtifactTxnSpec extends AnyFunSuite {
 
   /** Fresh pair of stores + txn log dir. */
   private def fixture(tag: String): (String, String, java.nio.file.Path) = {
-    val text = java.nio.file.Files.createTempDirectory(s"graft_txn_text_$tag").toString
-    val dedup = java.nio.file.Files.createTempDirectory(s"graft_txn_dedup_$tag").toString
-    val log = java.nio.file.Files.createTempDirectory(s"graft_txn_log_$tag")
+    val text = Fs.scratchDir(s"txn_text_$tag").toString
+    val dedup = Fs.scratchDir(s"txn_dedup_$tag").toString
+    val log = Fs.scratchDir(s"txn_log_$tag")
     TextIndexStore.build(docs, text)
     DedupIndexStore.build(docs, dedup)
     (text, dedup, log)
@@ -112,7 +112,7 @@ class ArtifactTxnSpec extends AnyFunSuite {
   test("pending replays numerically by batch id, not lexicographically") {
     // intent files for b2 and b10: lexicographic order would replay
     // b10 first and fail b2's epoch pin; numeric order must win
-    val log = java.nio.file.Files.createTempDirectory("graft_txn_order")
+    val log = Fs.scratchDir("txn_order")
     def plant(id: String): Unit =
       intercept[RuntimeException](ArtifactTxn.run(log, id,
         Seq(ArtifactTxn.Step("s", "/none", 0L, "")),

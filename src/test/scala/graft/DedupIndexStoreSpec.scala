@@ -52,14 +52,8 @@ class DedupIndexStoreSpec extends AnyFunSuite {
     df.select("doc_new", "doc_old", "jac_e6").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
 
-  private def freshDir(tag: String): String = {
-    val p = java.nio.file.Files.createTempDirectory(s"graft_dis_$tag")
-    p.toFile.deleteOnExit()
-    p.toString
-  }
-
   test("a fresh session screens the batch identically to brute force, zero corpus jobs") {
-    val dir = freshDir("serve")
+    val dir = Fs.scratchDir("dis_serve").toString
     DedupIndexStore.build(oldDocs, dir)
     val expected = expectedPairs(oldDocs, batchDocs)
     assert(expected.nonEmpty, "fixture has no OLD x NEW near-dups - test is vacuous")
@@ -82,7 +76,7 @@ class DedupIndexStoreSpec extends AnyFunSuite {
   }
 
   test("probing reads only the batch's band-key buckets (manifest-pruned scan)") {
-    val dir = freshDir("prune")
+    val dir = Fs.scratchDir("dis_prune").toString
     DedupIndexStore.build(oldDocs, dir)
     val m = DedupIndexStore.open(dir)
     // a 1-doc batch has 16 band keys - they cannot cover all 16
@@ -103,7 +97,7 @@ class DedupIndexStoreSpec extends AnyFunSuite {
   }
 
   test("append delta converges exactly to the full rebuild; a small delta leaves buckets untouched") {
-    val dir = freshDir("delta")
+    val dir = Fs.scratchDir("dis_delta").toString
     val half = oldDocs.filter(col("doc_id") % 5 < 2)
     val rest = oldDocs.filter(col("doc_id") % 5 >= 2)
     val m0 = DedupIndexStore.build(half, dir)
@@ -131,7 +125,7 @@ class DedupIndexStoreSpec extends AnyFunSuite {
   }
 
   test("over-cap band keys take the exact-dup route: a planted 150-copy corpus still screens") {
-    val dir = freshDir("hot")
+    val dir = Fs.scratchDir("dis_hot").toString
     val text = "exact duplicate passage repeated across the planted corpus many times over"
     val planted = spark.range(150).select((col("id") + 1).as("doc_id"), lit(text).as("text"))
     DedupIndexStore.build(planted, dir)
@@ -146,7 +140,7 @@ class DedupIndexStoreSpec extends AnyFunSuite {
   }
 
   test("time travel: the pre-delta epoch still screens against its old corpus only") {
-    val dir = freshDir("tt")
+    val dir = Fs.scratchDir("dis_tt").toString
     val half = oldDocs.filter(col("doc_id") % 5 < 2)
     DedupIndexStore.build(half, dir)
     val preDelta = pairKey(DedupIndexStore.nearDups(spark, dir, DedupIndexStore.open(dir), batchDocs))
@@ -162,7 +156,7 @@ class DedupIndexStoreSpec extends AnyFunSuite {
   }
 
   test("append-only contract: re-adding an indexed doc_id fails loudly") {
-    val dir = freshDir("dup")
+    val dir = Fs.scratchDir("dis_dup").toString
     DedupIndexStore.build(oldDocs, dir)
     val err = intercept[IllegalArgumentException] {
       DedupIndexStore.applyDelta(spark, dir, oldDocs.limit(3))
@@ -172,12 +166,11 @@ class DedupIndexStoreSpec extends AnyFunSuite {
   }
 
   test("retention GC drops old epochs' manifests and unreferenced bucket dirs") {
-    val dir = freshDir("gc")
+    val dir = Fs.scratchDir("dis_gc").toString
     DedupIndexStore.build(oldDocs.filter(col("doc_id") % 5 < 2), dir)
-    DedupIndexStore.applyDelta(spark, dir,
-      oldDocs.filter(col("doc_id") % 5 === 2), retain = 1)
-    DedupIndexStore.applyDelta(spark, dir,
-      oldDocs.filter(col("doc_id") % 5 === 3), retain = 1)
+    DedupIndexStore.applyDelta(spark, dir, oldDocs.filter(col("doc_id") % 5 === 2))
+    DedupIndexStore.applyDelta(spark, dir, oldDocs.filter(col("doc_id") % 5 === 3))
+    DedupIndexStore.gc(dir, 2L, retain = 1)
     assert(DedupIndexStore.listEpochs(dir) == Seq(2L))
     val m = DedupIndexStore.open(dir)
     val onDisk = for {
@@ -195,8 +188,28 @@ class DedupIndexStoreSpec extends AnyFunSuite {
       expectedPairs(oldDocs, batchDocs))
   }
 
+  test("default retention: RetainEpochs + 2 deltas keep the last RetainEpochs epochs; swept bucket dirs are gone") {
+    val dir = Fs.scratchDir("dis_retain").toString
+    val n = DedupIndexStore.RetainEpochs + 2
+    val m0 = DedupIndexStore.build(oldDocs.filter(col("doc_id") % 5 < 2), dir)
+    // n disjoint insert batches, no retain argument → epochs 1..n
+    val fresh = oldDocs.filter(col("doc_id") % 5 >= 2)
+    val refs = m0.buckets.values.toSet ++ (0 until n).flatMap { i =>
+      DedupIndexStore.applyDelta(spark, dir,
+        fresh.filter(pmod(xxhash64(col("doc_id")), lit(n.toLong)) === i))
+        .manifest.buckets.values
+    }
+    val kept = (n - DedupIndexStore.RetainEpochs + 1 to n).map(_.toLong)
+    assert(DedupIndexStore.listEpochs(dir) == kept)
+    val live = kept.flatMap(e => DedupIndexStore.openAt(dir, e).buckets.values).toSet
+    val swept = refs -- live
+    assert(swept.nonEmpty, "the deltas rewrote no bucket an evicted epoch referenced")
+    swept.foreach(rel => assert(!new java.io.File(dir, rel).exists(), s"$rel survives GC"))
+    live.foreach(rel => assert(new java.io.File(dir, rel).exists(), s"$rel swept while live"))
+  }
+
   test("compaction squashes registry segments: same pairs, fewer leaf reads, snapshots intact") {
-    val dir = freshDir("compact")
+    val dir = Fs.scratchDir("dis_compact").toString
     DedupIndexStore.build(oldDocs.filter(col("doc_id") % 5 < 2), dir)
     DedupIndexStore.applyDelta(spark, dir, oldDocs.filter(col("doc_id") % 5 === 2))
     val pre = DedupIndexStore.applyDelta(spark, dir, oldDocs.filter(col("doc_id") % 5 === 3))
@@ -221,10 +234,11 @@ class DedupIndexStoreSpec extends AnyFunSuite {
     }
     assert(atPre == expected)
     // retain=1 GC after one more maintenance commit sweeps the old segments
-    DedupIndexStore.applyDelta(spark, dir,
+    val head = DedupIndexStore.applyDelta(spark, dir,
       spark.range(1).select(lit(2000000L).as("doc_id"),
-        lit("a single fresh appended document with plenty of words").as("text")),
-      retain = 1)
+        lit("a single fresh appended document with plenty of words").as("text")))
+      .manifest.epoch
+    DedupIndexStore.gc(dir, head, retain = 1)
     val segDirs = Option(new java.io.File(dir, "docs").listFiles()).toSeq.flatten
       .map(_.getName).sorted
     assert(segDirs == Seq("e3", "e4"),
@@ -232,7 +246,7 @@ class DedupIndexStoreSpec extends AnyFunSuite {
   }
 
   test("exact delete: victims' postings physically gone, survivors' pairs untouched") {
-    val dir = freshDir("del")
+    val dir = Fs.scratchDir("dis_del").toString
     val m0 = DedupIndexStore.build(oldDocs, dir)
     val victims = oldDocs.filter(col("doc_id") % 3 === 1)
     val survivors = oldDocs.filter(col("doc_id") % 3 =!= 1)
@@ -256,7 +270,7 @@ class DedupIndexStoreSpec extends AnyFunSuite {
   }
 
   test("single-flip update: ONE epoch, old postings physically gone, equals fresh build over updated corpus") {
-    val dir = freshDir("upd")
+    val dir = Fs.scratchDir("dis_upd").toString
     val m0 = DedupIndexStore.build(oldDocs, dir)
     def retext(tag: String) = oldDocs.filter(col("doc_id") % 9 === 2)
       .select(col("doc_id"),
@@ -296,7 +310,7 @@ class DedupIndexStoreSpec extends AnyFunSuite {
   }
 
   test("reshard: 4x both fan-outs in one flip, same pairs, probes bounded under the new fan-outs, maintenance keeps working") {
-    val dir = freshDir("reshard")
+    val dir = Fs.scratchDir("dis_reshard").toString
     val m0 = DedupIndexStore.build(oldDocs, dir)
     val before = pairKey(DedupIndexStore.nearDups(spark, dir, m0, batchDocs))
     val m1 = DedupIndexStore.reshard(spark, dir, 64, 64)
@@ -324,7 +338,7 @@ class DedupIndexStoreSpec extends AnyFunSuite {
   }
 
   test("update contract: unknown, deleted, and shingle-free updates fail loudly") {
-    val dir = freshDir("updc")
+    val dir = Fs.scratchDir("dis_updc").toString
     DedupIndexStore.build(oldDocs, dir)
     import spark.implicits._
     val unknown = intercept[IllegalArgumentException] {
@@ -349,7 +363,7 @@ class DedupIndexStoreSpec extends AnyFunSuite {
   }
 
   test("delete contract: unknown/double deletes loud; re-insert blocked until compact purges") {
-    val dir = freshDir("delc")
+    val dir = Fs.scratchDir("dis_delc").toString
     DedupIndexStore.build(oldDocs, dir)
     import spark.implicits._
     val unknown = intercept[IllegalArgumentException] {
@@ -384,7 +398,7 @@ class DedupIndexStoreSpec extends AnyFunSuite {
   }
 
   test("time travel across the delete: the pre-delete epoch still pairs against victims") {
-    val dir = freshDir("deltt")
+    val dir = Fs.scratchDir("dis_deltt").toString
     DedupIndexStore.build(oldDocs, dir)
     val full = expectedPairs(oldDocs, batchDocs)
     DedupIndexStore.applyDelete(spark, dir,
@@ -403,7 +417,7 @@ class DedupIndexStoreSpec extends AnyFunSuite {
     // come from the MANIFEST, never the compile-time defaults — an
     // index built at (8, 4) has to screen exactly like the default
     // build through every lifecycle step
-    val dir = freshDir("fan")
+    val dir = Fs.scratchDir("dis_fan").toString
     val half = oldDocs.filter(col("doc_id") % 5 < 2)
     val rest = oldDocs.filter(col("doc_id") % 5 >= 2)
     val m0 = DedupIndexStore.build(half, dir, numBuckets = 8, docBuckets = 4)
@@ -429,7 +443,7 @@ class DedupIndexStoreSpec extends AnyFunSuite {
       expectedPairs(survivors, batchDocs),
       "fan-out-(8,4) post-delete screen diverged from survivor brute force")
     // legacy manifests (no fan-out fields) parse to the historical 16s
-    val legacy = freshDir("fanlegacy")
+    val legacy = Fs.scratchDir("dis_fanlegacy").toString
     DedupIndexStore.build(half, legacy): Unit
     val p = java.nio.file.Paths.get(legacy, "_manifest.json")
     val stripped = java.nio.file.Files.readString(p)
@@ -442,7 +456,7 @@ class DedupIndexStoreSpec extends AnyFunSuite {
   }
 
   test("an empty batch serves an empty, well-typed result") {
-    val dir = freshDir("empty")
+    val dir = Fs.scratchDir("dis_empty").toString
     DedupIndexStore.build(oldDocs.limit(50), dir)
     val served = DedupIndexStore.nearDups(spark, dir, DedupIndexStore.open(dir),
       docs.limit(0))
@@ -451,7 +465,7 @@ class DedupIndexStoreSpec extends AnyFunSuite {
   }
 
   test("applyDeltaIdempotent: a replayed batch no-ops, a batch gap fails loudly") {
-    val dir = freshDir("idem")
+    val dir = Fs.scratchDir("dis_idem").toString
     DedupIndexStore.build(oldDocs.filter(col("doc_id") % 2 === 0), dir)
     val delta = oldDocs.filter(col("doc_id") % 2 === 1)
     val m1 = DedupIndexStore.applyBatch(dir, batchId = 0L)(DedupIndexStore.applyDelta(spark, dir, delta))

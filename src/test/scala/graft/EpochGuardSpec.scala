@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * interleavings over real manifests). */
 class EpochGuardSpec extends AnyFunSuite {
 
-  private def tmp(): Path = Files.createTempDirectory("graft_epoch_guard_")
+  private def tmp(): Path = Fs.scratchDir("epoch_guard")
   private def manifest(dir: Path, e: Long): Path = dir.resolve(s"_manifest-e$e.json")
   private def plant(dir: Path, e: Long): Unit = {
     Files.writeString(manifest(dir, e), s"""{"epoch":$e}"""); ()

@@ -16,11 +16,7 @@ import graft.streaming.StreamingOps.{UpsertManifest, UpsertTable}
   * entries are pinned the same way. No Spark session is needed. */
 class EpochStoreSpec extends AnyFunSuite {
 
-  private def tmp(): Path = {
-    val p = Files.createTempDirectory("graft_epoch_store")
-    p.toFile.deleteOnExit()
-    p
-  }
+  private def tmp(): Path = Fs.scratchDir("epoch_store")
 
   /** `m` back through the text codec and through a commit to disk. */
   private def roundTrips(store: EpochStore)(m: store.M): Seq[store.M] = {

@@ -13,14 +13,11 @@ import org.scalatest.funsuite.AnyFunSuite
 class ManifestIoSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
-  private def freshDir(tag: String): java.nio.file.Path = {
-    val p = java.nio.file.Files.createTempDirectory(s"graft_mio_$tag")
-    p.toFile.deleteOnExit()
-    p
-  }
-
   test("publishPartitions writes ~one file per partition dir, not tasks x fan-out") {
-    val dir = freshDir("pub")
+    def filesIn(dir: java.nio.file.Path, rel: String): Int =
+      Option(dir.resolve(rel).toFile.listFiles()).toSeq.flatten
+        .count(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("."))
+    val dir = Fs.scratchDir("mio_pub")
     val fanOut = 64
     // 32 upstream partitions x 64 buckets: the pre-fix write produced
     // up to 2048 files; the repartition-on-partition-column write must
@@ -28,12 +25,10 @@ class ManifestIoSpec extends AnyFunSuite {
     val rows = spark.range(0, 200000, 1, 32)
       .select(col("id"), pmod(col("id"), lit(fanOut)).cast("int").as("bucket"))
     val published = ManifestIo.publishPartitions(rows, dir, 0L, "bucket", "b")
-    assert(published == (0 until fanOut), "every bucket must publish")
-    val counts = published.map { b =>
-      val d = dir.resolve(s"b$b/e0").toFile
-      Option(d.listFiles()).toSeq.flatten
-        .count(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("."))
-    }
+    // every bucket publishes, keyed by id, at its relative epoch path
+    assert(published == (0 until fanOut).map(b => b -> s"b$b/e0").toMap,
+      "every bucket must publish at b<K>/e<epoch>")
+    val counts = published.values.map(filesIn(dir, _)).toSeq
     assert(counts.forall(_ == 1),
       s"bucket dirs must hold ONE data file each, got ${counts.distinct.sorted}")
     // the partition column survives the rename as a real data column
@@ -42,48 +37,26 @@ class ManifestIoSpec extends AnyFunSuite {
     assert(back.select("bucket").distinct().collect().map(_.getInt(0)).toSeq == Seq(7))
     // staged dir is gone; total row count round-trips
     assert(!java.nio.file.Files.exists(dir.resolve(".stage-e0")))
-    val all = spark.read.parquet(published.map(b => dir.resolve(s"b$b/e0").toString): _*)
+    val all = spark.read.parquet(published.values.map(rel => dir.resolve(rel).toString).toSeq: _*)
     assert(all.count() == 200000L)
-  }
-
-  test("publishPartitions with saltTasks spreads a planted hot partition over parallel writers") {
-    val fanOut = 8
     // planted skew: bucket 3 holds 97% of the rows (the LshBucketCap
-    // discipline's celebrity shape, applied to the WRITE path)
-    val rows = spark.range(0, 300000, 1, 32)
+    // discipline's celebrity shape, applied to the WRITE path) and
+    // still writes as ONE task/file
+    val hotFanOut = 8
+    val hotRows = spark.range(0, 300000, 1, 32)
       .select(col("id"),
         when(col("id") % 100 < 97, lit(3))
-          .otherwise(pmod(col("id"), lit(fanOut))).cast("int").as("bucket"))
-    def filesIn(dir: java.nio.file.Path, b: Int): Int = {
-      val d = dir.resolve(s"b$b/e0").toFile
-      Option(d.listFiles()).toSeq.flatten
-        .count(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("."))
-    }
-    // default (saltTasks = 1): the hot bucket writes as ONE task/file
-    val unsalted = freshDir("hot1")
-    ManifestIo.publishPartitions(rows, unsalted, 0L, "bucket", "b")
-    assert(filesIn(unsalted, 3) == 1)
-    // salted: the hot bucket's rows spread over up to 4 writers (>1
-    // file proves parallel tasks wrote it), cold buckets stay bounded
-    // by the salt, and the rows round-trip exactly
-    val salted = freshDir("hot4")
-    val published = ManifestIo.publishPartitions(rows, salted, 0L, "bucket", "b",
-      saltTasks = 4)
-    val populated = rows.select("bucket").distinct()
-      .collect().map(_.getInt(0)).sorted.toSeq
-    assert(published == populated, "every populated bucket must publish")
-    assert(filesIn(salted, 3) > 1, "hot partition still wrote as one straggler task")
-    assert(populated.forall(b => filesIn(salted, b) <= 4),
-      "salt must bound files per dir by saltTasks")
-    val back = spark.read.parquet(
-      published.map(b => salted.resolve(s"b$b/e0").toString): _*)
-    assert(back.count() == 300000L)
-    assert(back.filter(col("bucket") === 3).count() ==
-      rows.filter(col("bucket") === 3).count())
+          .otherwise(pmod(col("id"), lit(hotFanOut))).cast("int").as("bucket"))
+    val hot = Fs.scratchDir("mio_hot")
+    val hotPublished = ManifestIo.publishPartitions(hotRows, hot, 2L, "bucket", "b")
+    val populated = hotRows.select("bucket").distinct().collect().map(_.getInt(0))
+    assert(hotPublished == populated.map(b => b -> s"b$b/e2").toMap,
+      "every populated bucket must publish at b<K>/e<epoch>")
+    assert(filesIn(hot, "b3/e2") == 1)
   }
 
   test("gcEpochs sweeps exactly the unreferenced component epochs below current") {
-    val dir = freshDir("gc")
+    val dir = Fs.scratchDir("mio_gc")
     def touch(rel: String): Unit = {
       val p = dir.resolve(rel)
       java.nio.file.Files.createDirectories(p)
@@ -122,7 +95,7 @@ class ManifestIoSpec extends AnyFunSuite {
   }
 
   test("withSnapshot pins an epoch against gcEpochs; expired snapshots fail pointedly") {
-    val dir = freshDir("lease")
+    val dir = Fs.scratchDir("mio_lease")
     def touch(rel: String): Unit = {
       val p = dir.resolve(rel)
       java.nio.file.Files.createDirectories(p)
@@ -158,7 +131,7 @@ class ManifestIoSpec extends AnyFunSuite {
   // staleness window (no heartbeat: the GC-pause scenario stalls that
   // too) and proves the waker cannot release the stealer's lock.
   test("commit lock ownership: a stolen-from waker cannot release the stealer's lock") {
-    val dir = freshDir("lockown")
+    val dir = Fs.scratchDir("mio_lockown")
     val lock = ManifestIo.lockPath(dir)
     val noBeat = Long.MaxValue / 4 // heartbeat never fires
     val aAcquired = new java.util.concurrent.CountDownLatch(1)
@@ -195,7 +168,7 @@ class ManifestIoSpec extends AnyFunSuite {
   }
 
   test("commit lock heartbeat: a healthy-but-slow holder is never stolen; the waiter serializes behind it") {
-    val dir = freshDir("lockbeat")
+    val dir = Fs.scratchDir("mio_lockbeat")
     val order = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     // holds 4x the staleness window — the default heartbeat (staleMs/12)
     // must keep the mtime fresh so the waiter waits instead of stealing
@@ -210,7 +183,7 @@ class ManifestIoSpec extends AnyFunSuite {
   }
 
   test("commit lock is reentrant: an inner commit keeps the caller's lock held") {
-    val dir = freshDir("lockre")
+    val dir = Fs.scratchDir("mio_lockre")
     ManifestIo.withCommitLock(dir) {
       ManifestIo.commit(dir, 0L, """{"epoch":0}""")
       assert(java.nio.file.Files.exists(ManifestIo.lockPath(dir)),
@@ -220,7 +193,7 @@ class ManifestIoSpec extends AnyFunSuite {
   }
 
   test("commit CAS: a lost race fails loudly; the crash-replay seam still replays") {
-    val dir = freshDir("lockcas")
+    val dir = Fs.scratchDir("mio_lockcas")
     ManifestIo.commit(dir, 0L, """{"epoch":0}""")
     ManifestIo.commit(dir, 1L, """{"epoch":1,"winner":true}""")
     // a committer that read epoch 0 and lost the race must NOT

@@ -22,14 +22,8 @@ class TextIndexStoreSpec extends AnyFunSuite {
     df.select("doc_id", "score_e6", "n_hit").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
 
-  private def freshDir(tag: String): String = {
-    val p = java.nio.file.Files.createTempDirectory(s"graft_tis_$tag")
-    p.toFile.deleteOnExit()
-    p.toString
-  }
-
   test("a fresh session serves scores identical to the from-scratch pipeline, zero corpus jobs") {
-    val dir = freshDir("serve")
+    val dir = Fs.scratchDir("tis_serve").toString
     TextIndexStore.build(docs, dir)
     val expected = scoreKey(TextOps.bm25Scores(docs))
     val s2 = spark.newSession()
@@ -48,7 +42,7 @@ class TextIndexStoreSpec extends AnyFunSuite {
   }
 
   test("serving reads only the query terms' posting buckets (manifest-pruned scan)") {
-    val dir = freshDir("prune")
+    val dir = Fs.scratchDir("tis_prune").toString
     TextIndexStore.build(docs, dir)
     val m = TextIndexStore.open(dir)
     val served = TextIndexStore.bm25Scores(spark, dir, m)
@@ -64,7 +58,7 @@ class TextIndexStoreSpec extends AnyFunSuite {
   }
 
   test("append delta converges exactly to the full rebuild; untouched buckets keep their dirs") {
-    val dir = freshDir("delta")
+    val dir = Fs.scratchDir("tis_delta").toString
     val base = docs.filter(col("doc_id") % 13 =!= 0)
     val batch = docs.filter(col("doc_id") % 13 === 0)
     val m0 = TextIndexStore.build(base, dir)
@@ -91,7 +85,7 @@ class TextIndexStoreSpec extends AnyFunSuite {
   }
 
   test("time travel: the pre-delta epoch still serves its old scores bit-identically") {
-    val dir = freshDir("tt")
+    val dir = Fs.scratchDir("tis_tt").toString
     val base = docs.filter(col("doc_id") % 13 =!= 0)
     TextIndexStore.build(base, dir)
     val preDelta = scoreKey(TextIndexStore.bm25Scores(spark, dir, TextIndexStore.open(dir)))
@@ -107,7 +101,7 @@ class TextIndexStoreSpec extends AnyFunSuite {
   }
 
   test("append-only contract: re-adding an indexed doc_id fails loudly") {
-    val dir = freshDir("dup")
+    val dir = Fs.scratchDir("tis_dup").toString
     TextIndexStore.build(docs, dir)
     val err = intercept[IllegalArgumentException] {
       TextIndexStore.applyDelta(spark, dir, docs.limit(3))
@@ -118,7 +112,7 @@ class TextIndexStoreSpec extends AnyFunSuite {
   }
 
   test("tombstone delete: survivors serve under exact scalars, zero posting bytes touched") {
-    val dir = freshDir("del")
+    val dir = Fs.scratchDir("tis_del").toString
     val m0 = TextIndexStore.build(docs, dir)
     val victims = docs.filter(col("doc_id") % 7 === 3)
     val nVict = victims.count()
@@ -141,7 +135,7 @@ class TextIndexStoreSpec extends AnyFunSuite {
   }
 
   test("delete contract: unknown and double-deleted doc_ids fail loudly; insert-after-delete blocked until purge") {
-    val dir = freshDir("delc")
+    val dir = Fs.scratchDir("tis_delc").toString
     TextIndexStore.build(docs.filter(col("doc_id") % 2 === 0), dir)
     import spark.implicits._
     val unknown = intercept[IllegalArgumentException] {
@@ -170,7 +164,7 @@ class TextIndexStoreSpec extends AnyFunSuite {
   }
 
   test("purge compaction: postings physically clean, df exact, equals a fresh build over survivors") {
-    val dir = freshDir("purge")
+    val dir = Fs.scratchDir("tis_purge").toString
     TextIndexStore.build(docs, dir)
     val survivors = docs.filter(col("doc_id") % 7 =!= 3)
     TextIndexStore.applyDelete(spark, dir,
@@ -184,7 +178,7 @@ class TextIndexStoreSpec extends AnyFunSuite {
     assert(onDisk.filter(col("doc_id") % 7 === 3).count() == 0L,
       "purged postings still carry tombstoned docs")
     // vocab stats now EXACTLY match a fresh build over the survivors
-    val fresh = freshDir("purgeref")
+    val fresh = Fs.scratchDir("tis_purgeref").toString
     val mRef = TextIndexStore.build(survivors, fresh)
     def statsKey(d: String, rel: String) =
       spark.read.parquet(s"$d/$rel").collect().map(r => (r.getString(0), r.getLong(1))).toSet
@@ -196,7 +190,7 @@ class TextIndexStoreSpec extends AnyFunSuite {
   }
 
   test("single-flip update: ONE epoch, no tombstone, old postings physically gone, equals fresh build over updated corpus") {
-    val dir = freshDir("upd")
+    val dir = Fs.scratchDir("tis_upd").toString
     val m0 = TextIndexStore.build(docs, dir)
     def updText(tag: String) = docs.filter(col("doc_id") % 11 === 5)
       .select(col("doc_id"),
@@ -222,7 +216,7 @@ class TextIndexStoreSpec extends AnyFunSuite {
     // the updated index IS a fresh build over the updated corpus:
     // scalars, vocab stats (incl. tokens dropped at df=0), and scores
     val updatedCorpus = docs.filter(col("doc_id") % 11 =!= 5).unionByName(upd)
-    val fresh = freshDir("updref")
+    val fresh = Fs.scratchDir("tis_updref").toString
     val mRef = TextIndexStore.build(updatedCorpus, fresh)
     assert(commit.manifest.nDocs == mRef.nDocs &&
       commit.manifest.sumDl == mRef.sumDl, "scalars drifted from fresh build")
@@ -250,7 +244,7 @@ class TextIndexStoreSpec extends AnyFunSuite {
   }
 
   test("arbitrary-query serving: stats-looked-up df, pruned probes, OOV terms score nothing") {
-    val dir = freshDir("query")
+    val dir = Fs.scratchDir("tis_query").toString
     TextIndexStore.build(docs, dir)
     val m = TextIndexStore.open(dir)
     // a mixed query: two real vocabulary terms + one out-of-vocabulary
@@ -274,7 +268,7 @@ class TextIndexStoreSpec extends AnyFunSuite {
   }
 
   test("reshard: 4x fan-out in one flip, same scores, probes bounded under the new fan-out, updates keep working") {
-    val dir = freshDir("reshard")
+    val dir = Fs.scratchDir("tis_reshard").toString
     val m0 = TextIndexStore.build(docs, dir)
     val before = scoreKey(TextIndexStore.bm25Scores(spark, dir, m0))
     val m1 = TextIndexStore.reshard(spark, dir, TextIndexStore.NumBuckets * 4)
@@ -301,7 +295,7 @@ class TextIndexStoreSpec extends AnyFunSuite {
   }
 
   test("update contract: unknown, tombstoned, and empty-text updates fail loudly") {
-    val dir = freshDir("updc")
+    val dir = Fs.scratchDir("tis_updc").toString
     TextIndexStore.build(docs.filter(col("doc_id") % 2 === 0), dir)
     import spark.implicits._
     val unknown = intercept[IllegalArgumentException] {
@@ -329,7 +323,7 @@ class TextIndexStoreSpec extends AnyFunSuite {
   }
 
   test("time travel across the delete: the pre-delete epoch still serves the deleted docs") {
-    val dir = freshDir("deltt")
+    val dir = Fs.scratchDir("tis_deltt").toString
     TextIndexStore.build(docs, dir)
     val pre = scoreKey(TextIndexStore.bm25Scores(spark, dir, TextIndexStore.open(dir)))
     TextIndexStore.applyDelete(spark, dir,
@@ -349,7 +343,7 @@ class TextIndexStoreSpec extends AnyFunSuite {
     // scores as the default build, through every lifecycle step
     val expected = scoreKey(TextOps.bm25Scores(docs))
     for (fanOut <- Seq(8, 64)) {
-      val dir = freshDir(s"fan$fanOut")
+      val dir = Fs.scratchDir(s"tis_fan$fanOut").toString
       val base = docs.filter(col("doc_id") % 13 =!= 0)
       val m0 = TextIndexStore.build(base, dir, numBuckets = fanOut)
       assert(m0.numBuckets == fanOut, "build did not record its fan-out")
@@ -371,7 +365,7 @@ class TextIndexStoreSpec extends AnyFunSuite {
         s"fan-out-$fanOut purge diverged from the survivor pipeline")
     }
     // legacy manifests (no numBuckets field) parse to the historical 16
-    val legacy = freshDir("fanlegacy")
+    val legacy = Fs.scratchDir("tis_fanlegacy").toString
     TextIndexStore.build(docs, legacy): Unit
     val p = java.nio.file.Paths.get(legacy, "_manifest.json")
     val stripped = java.nio.file.Files.readString(p)
@@ -399,7 +393,7 @@ class TextIndexStoreSpec extends AnyFunSuite {
     // a SizeDerived build measures its own posting volume, records the
     // derived fan-out in the manifest, and serves scores identical to
     // an explicitly-sized build (fan-out changes layout, never scores)
-    val dir = freshDir("sized")
+    val dir = Fs.scratchDir("tis_sized").toString
     val m = TextIndexStore.build(docs, dir,
       numBuckets = TextIndexStore.SizeDerived)
     val nPostings = docs
@@ -413,13 +407,14 @@ class TextIndexStoreSpec extends AnyFunSuite {
   }
 
   test("retention GC drops old epochs' manifests and unreferenced component dirs") {
-    val dir = freshDir("gc")
-    // retain=1: after each delta only the newest epoch must survive
+    val dir = Fs.scratchDir("tis_gc").toString
+    // retain=1 GC after two deltas: only the newest epoch must survive
     TextIndexStore.build(docs.filter(col("doc_id") % 13 =!= 0), dir)
     TextIndexStore.applyDelta(spark, dir,
-      docs.filter(col("doc_id") % 13 === 0 && col("doc_id") % 2 === 0), retain = 1)
+      docs.filter(col("doc_id") % 13 === 0 && col("doc_id") % 2 === 0))
     TextIndexStore.applyDelta(spark, dir,
-      docs.filter(col("doc_id") % 13 === 0 && col("doc_id") % 2 =!= 0), retain = 1)
+      docs.filter(col("doc_id") % 13 === 0 && col("doc_id") % 2 =!= 0))
+    TextIndexStore.gc(dir, 2L, retain = 1)
     assert(TextIndexStore.listEpochs(dir) == Seq(2L))
     val m = TextIndexStore.open(dir)
     // stats of dropped epochs are swept; the live one survives
@@ -441,8 +436,27 @@ class TextIndexStoreSpec extends AnyFunSuite {
       scoreKey(TextOps.bm25Scores(docs)))
   }
 
+  test("default retention: RetainEpochs + 2 deltas keep the last RetainEpochs epochs; swept bucket dirs are gone") {
+    val dir = Fs.scratchDir("tis_retain").toString
+    val n = TextIndexStore.RetainEpochs + 2
+    val m0 = TextIndexStore.build(docs.filter(col("doc_id") % 13 =!= 0), dir)
+    // n disjoint insert batches, no retain argument → epochs 1..n
+    val refs = m0.buckets.values.toSet ++ (0 until n).flatMap { i =>
+      TextIndexStore.applyDelta(spark, dir,
+        docs.filter(col("doc_id") % 13 === 0 && col("doc_id") % n === i))
+        .manifest.buckets.values
+    }
+    val kept = (n - TextIndexStore.RetainEpochs + 1 to n).map(_.toLong)
+    assert(TextIndexStore.listEpochs(dir) == kept)
+    val live = kept.flatMap(e => TextIndexStore.openAt(dir, e).buckets.values).toSet
+    val swept = refs -- live
+    assert(swept.nonEmpty, "the deltas rewrote no bucket an evicted epoch referenced")
+    swept.foreach(rel => assert(!new java.io.File(dir, rel).exists(), s"$rel survives GC"))
+    live.foreach(rel => assert(new java.io.File(dir, rel).exists(), s"$rel swept while live"))
+  }
+
   test("applyDeltaIdempotent: a replayed batch no-ops, a batch gap fails loudly") {
-    val dir = freshDir("idem")
+    val dir = Fs.scratchDir("tis_idem").toString
     TextIndexStore.build(docs.filter(col("doc_id") % 2 === 0), dir)
     val delta = docs.filter(col("doc_id") % 2 === 1)
     val m1 = TextIndexStore.applyBatch(dir, batchId = 0L)(TextIndexStore.applyDelta(spark, dir, delta))

@@ -12,12 +12,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class GovernedTableSpec extends AnyFunSuite {
   lazy val spark = graft.SparkTestSession.spark
 
-  private def freshDir(): String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_wap_spec").toString
-    graft.Fs.deleteRecursively(new java.io.File(d))
-    d
-  }
-
   private def rows(ids: Range) = {
     val s = spark
     import s.implicits._
@@ -25,7 +19,7 @@ class GovernedTableSpec extends AnyFunSuite {
   }
 
   test("staged batch is invisible; publish is one flip; time travel serves the old epoch") {
-    val dir = freshDir()
+    val dir = graft.Fs.scratchDir("wap_spec").toString
     GovernedTable.build(rows(0 until 10), dir)
     val staged = GovernedTable.stage(rows(10 until 15), dir)
     // invisible: the serving view is still exactly the base
@@ -43,7 +37,7 @@ class GovernedTableSpec extends AnyFunSuite {
   }
 
   test("abort leaves no trace; a dirty WAP round never touches serving") {
-    val dir = freshDir()
+    val dir = graft.Fs.scratchDir("wap_spec").toString
     GovernedTable.build(rows(0 until 10), dir)
     val dirty = rows(10 until 20).withColumn("v", -col("v"))
     val (violations, published) =
@@ -63,7 +57,7 @@ class GovernedTableSpec extends AnyFunSuite {
   }
 
   test("crash seams: re-stage overwrites in place; stale stage fails pointedly; rename-then-crash replays") {
-    val dir = freshDir()
+    val dir = graft.Fs.scratchDir("wap_spec").toString
     GovernedTable.build(rows(0 until 5), dir)
     // crashed audit → re-stage the same batch: same handle, no dup rows
     val s1 = GovernedTable.stage(rows(5 until 8), dir)
@@ -103,7 +97,7 @@ class GovernedTableSpec extends AnyFunSuite {
   }
 
   test("column evolution: added column null-fills history, audit sees the widened view, time travel serves the old schema") {
-    val dir = freshDir()
+    val dir = graft.Fs.scratchDir("wap_spec").toString
     val s = spark
     import s.implicits._
     GovernedTable.build(rows(0 until 5), dir)
@@ -123,7 +117,7 @@ class GovernedTableSpec extends AnyFunSuite {
   }
 
   test("publish refuses to discard a re-staged batch that differs from the renamed segment") {
-    val dir = freshDir()
+    val dir = graft.Fs.scratchDir("wap_spec").toString
     GovernedTable.build(rows(0 until 5), dir)
     val s1 = GovernedTable.stage(rows(5 until 8), dir)
     java.nio.file.Files.move(
@@ -138,7 +132,7 @@ class GovernedTableSpec extends AnyFunSuite {
   }
 
   test("ingestBatch: exactly-once verdicts — replay no-ops, gap fails, rejection epoch time-travels") {
-    val dir = freshDir()
+    val dir = graft.Fs.scratchDir("wap_spec").toString
     GovernedTable.build(rows(0 until 5), dir)
     def noNeg(v: org.apache.spark.sql.DataFrame): Long =
       v.filter(col("v") < 0).count()
@@ -174,7 +168,7 @@ class GovernedTableSpec extends AnyFunSuite {
   }
 
   test("change feed: segment-diff only, empty across a rejection epoch, re-baseline after compact") {
-    val dir = freshDir()
+    val dir = graft.Fs.scratchDir("wap_spec").toString
     GovernedTable.build(rows(0 until 5), dir)
     def noNeg(v: org.apache.spark.sql.DataFrame): Long =
       v.filter(col("v") < 0).count()
@@ -216,7 +210,7 @@ class GovernedTableSpec extends AnyFunSuite {
   }
 
   test("staged-only audit never reads published segments; verdicts match the full view for per-row invariants") {
-    val dir = freshDir()
+    val dir = graft.Fs.scratchDir("wap_spec").toString
     GovernedTable.build(rows(0 until 10), dir)
     val staged = GovernedTable.stage(rows(10 until 15), dir)
     val so = GovernedTable.stagedOnly(spark, dir, staged)
@@ -243,7 +237,7 @@ class GovernedTableSpec extends AnyFunSuite {
   }
 
   test("verdict log is bounded: window caps, high-water mark keeps aged-out replays idempotent") {
-    val dir = freshDir()
+    val dir = graft.Fs.scratchDir("wap_spec").toString
     GovernedTable.build(rows(0 until 5), dir)
     def noNeg(v: org.apache.spark.sql.DataFrame): Long =
       v.filter(col("v") < 0).count()
@@ -279,7 +273,7 @@ class GovernedTableSpec extends AnyFunSuite {
   }
 
   test("crash-heal witness is content, not cardinality: same-count different rows refuse") {
-    val dir = freshDir()
+    val dir = graft.Fs.scratchDir("wap_spec").toString
     GovernedTable.build(rows(0 until 5), dir)
     val s1 = GovernedTable.stage(rows(5 until 8), dir)
     java.nio.file.Files.move(
@@ -296,7 +290,7 @@ class GovernedTableSpec extends AnyFunSuite {
   }
 
   test("multi-writer: racing publishers — exactly one CAS wins, the loser restages and lands") {
-    val dir = freshDir()
+    val dir = graft.Fs.scratchDir("wap_spec").toString
     GovernedTable.build(rows(0 until 5), dir)
     // two producers stage concurrently against the same live epoch —
     // disjoint dirs, no collision
@@ -335,7 +329,7 @@ class GovernedTableSpec extends AnyFunSuite {
   }
 
   test("ingestBatch racing publishCas: both land serialized — no lost segment, re-audited rebase") {
-    val dir = freshDir()
+    val dir = graft.Fs.scratchDir("wap_spec").toString
     GovernedTable.build(rows(0 until 5), dir)
     // a CAS producer stages against the live epoch BEFORE the ingest
     val sW = GovernedTable.stageAs(rows(20 until 24), dir, "w1")
@@ -366,7 +360,7 @@ class GovernedTableSpec extends AnyFunSuite {
   }
 
   test("compact racing publishCas: the stale rewrite is discarded and compaction retries against the advanced table") {
-    val dir = freshDir()
+    val dir = graft.Fs.scratchDir("wap_spec").toString
     GovernedTable.build(rows(0 until 5), dir)
     GovernedTable.publish(spark, dir, GovernedTable.stage(rows(5 until 8), dir)) // e1
     // plant a competing publish that lands between compact's open and
@@ -401,7 +395,7 @@ class GovernedTableSpec extends AnyFunSuite {
   }
 
   test("column mapping rejects an unmappable physical name at STAGE time, pre-mutation") {
-    val dir = freshDir()
+    val dir = graft.Fs.scratchDir("wap_spec").toString
     GovernedTable.build(rows(0 until 5), dir)
     GovernedTable.enableColumnMapping(spark, dir)
     val weird = rows(5 until 8).withColumnRenamed("v", "v value") // space: parquet-legal, manifest-illegal
@@ -421,7 +415,7 @@ class GovernedTableSpec extends AnyFunSuite {
   }
 
   test("gc grace: a CAS loser's writer-suffixed stage survives the sweep inside the retention window") {
-    val dir = freshDir()
+    val dir = graft.Fs.scratchDir("wap_spec").toString
     GovernedTable.build(rows(0 until 5), dir)
     GovernedTable.publish(spark, dir, GovernedTable.stage(rows(5 until 8), dir))   // e1
     val loser = GovernedTable.stageAs(rows(8 until 10), dir, "slow")               // stage-e2-slow
@@ -446,7 +440,7 @@ class GovernedTableSpec extends AnyFunSuite {
   }
 
   test("column mapping: rename/drop/widen are manifest-only; ids read old bytes; time travel serves old names") {
-    val dir = freshDir()
+    val dir = graft.Fs.scratchDir("wap_spec").toString
     val s = spark
     import s.implicits._
     GovernedTable.build(rows(0 until 5), dir)                                 // e0: (id, v)
@@ -511,7 +505,7 @@ class GovernedTableSpec extends AnyFunSuite {
   }
 
   test("retention gc: sweeps unreferenced segments and stale stages, spares the live view") {
-    val dir = freshDir()
+    val dir = graft.Fs.scratchDir("wap_spec").toString
     GovernedTable.build(rows(0 until 5), dir)
     GovernedTable.publish(spark, dir, GovernedTable.stage(rows(5 until 10), dir))
     GovernedTable.publish(spark, dir, GovernedTable.stage(rows(10 until 15), dir))

@@ -18,7 +18,7 @@ class MvStoreSpec extends AnyFunSuite {
   }
 
   test("refresh is delta-proportional, history-immutable; serve crosses sessions with no base scan") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_mvspec_").toString
+    val dir = graft.Fs.scratchDir("mvspec").toString
     val li = spark.read.parquet(s"$sf/lineitem.parquet")
     val partials = li
       .withColumn("m", date_format(col("l_shipdate"), "yyyy-MM"))
@@ -98,7 +98,7 @@ class MvStoreSpec extends AnyFunSuite {
   }
 
   test("retraction refresh: (-before, +after) partials correct the view delta-proportionally") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_mvretr_").toString
+    val dir = graft.Fs.scratchDir("mvretr").toString
     val li = spark.read.parquet(s"$sf/lineitem.parquet")
     def partials(rows: org.apache.spark.sql.DataFrame) = rows
       .withColumn("m", date_format(col("l_shipdate"), "yyyy-MM"))
@@ -140,7 +140,7 @@ class MvStoreSpec extends AnyFunSuite {
   }
 
   test("change feed between epochs is the refresh's net effect, read change-proportionally") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_mvfeed_").toString
+    val dir = graft.Fs.scratchDir("mvfeed").toString
     val li = spark.read.parquet(s"$sf/lineitem.parquet")
     val partials = li
       .withColumn("m", date_format(col("l_shipdate"), "yyyy-MM"))
@@ -192,7 +192,7 @@ class MvStoreSpec extends AnyFunSuite {
   }
 
   test("hll merge kind: sketch partials refresh incrementally, merge law exact, feed refused") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_mvhll_").toString
+    val dir = graft.Fs.scratchDir("mvhll").toString
     val ev = spark.read.parquet(s"$sf/events.parquet")
     val evn = graft.ops.Tables.normalizeEventTs(ev, s"$sf/events.parquet")
     val partials = evn
@@ -232,7 +232,7 @@ class MvStoreSpec extends AnyFunSuite {
   }
 
   test("fan-out is a persisted build parameter; reshard re-layouts in one flip and refreshes route under it") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_mvreshard_").toString
+    val dir = graft.Fs.scratchDir("mvreshard").toString
     val li = spark.read.parquet(s"$sf/lineitem.parquet")
     val partials = li
       .withColumn("m", date_format(col("l_shipdate"), "yyyy-MM"))
@@ -272,7 +272,7 @@ class MvStoreSpec extends AnyFunSuite {
     // spanning two no-change epochs (or any span over a bucket-less
     // manifest) must return zero rows with the view schema — the old
     // serve(...).limit(0) shortcut required a non-empty bucket set
-    val dir = java.nio.file.Files.createTempDirectory("graft_mvfeed_empty_").toString
+    val dir = graft.Fs.scratchDir("mvfeed_empty").toString
     val li = spark.read.parquet(s"$sf/lineitem.parquet")
     val partials = li
       .withColumn("m", date_format(col("l_shipdate"), "yyyy-MM"))
@@ -293,7 +293,7 @@ class MvStoreSpec extends AnyFunSuite {
   }
 
   test("lease-pinned change feed survives concurrent retention GC, expires after release") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_mvfeedlease_").toString
+    val dir = graft.Fs.scratchDir("mvfeedlease").toString
     val li = spark.read.parquet(s"$sf/lineitem.parquet")
     val p = li.withColumn("m", date_format(col("l_shipdate"), "yyyy-MM"))
       .groupBy(col("m"), col("l_returnflag"))
@@ -308,16 +308,19 @@ class MvStoreSpec extends AnyFunSuite {
       .agg(sum("rev_cents").as("r"), sum("qty").as("q"), sum("n").as("n"))
       .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
     MvStore.withChangeFeed(spark, dir, 0L, 1L) { feed =>
-      // retain=1 GC would evict epochs 0 and 1 — the leases spare them,
-      // so the pinned feed still reads complete files afterwards
-      MvStore.refresh(spark, dir, p.filter(col("m") === "2001-10"), retain = 1): Unit
+      // a refresh and a retain=1 GC would evict epochs 0 and 1 — the
+      // leases spare them, so the pinned feed still reads complete
+      // files afterwards
+      val head = MvStore.refresh(spark, dir, p.filter(col("m") === "2001-10")).manifest.epoch
+      MvStore.gc(dir, head, retain = 1)
       val got = feed.collect()
         .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
       assert(got == expect, "leased feed lost data under concurrent GC")
     }
     // leases released: the next GC pass evicts the endpoints, and the
     // bare feed fails POINTEDLY rather than reading a partial view
-    MvStore.refresh(spark, dir, p.filter(col("m") === "2001-10"), retain = 1): Unit
+    val head = MvStore.refresh(spark, dir, p.filter(col("m") === "2001-10")).manifest.epoch
+    MvStore.gc(dir, head, retain = 1)
     val gone = intercept[IllegalStateException](
       MvStore.changeFeed(spark, dir, 0L, 1L))
     assert(gone.getMessage.contains("snapshot expired"))
@@ -325,7 +328,7 @@ class MvStoreSpec extends AnyFunSuite {
   }
 
   test("retraction refresh surfaces in the feed as signed deltas with zero rows suppressed") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_mvfeedneg_").toString
+    val dir = graft.Fs.scratchDir("mvfeedneg").toString
     val li = spark.read.parquet(s"$sf/lineitem.parquet")
     def partials(src: org.apache.spark.sql.DataFrame) = src
       .withColumn("m", date_format(col("l_shipdate"), "yyyy-MM"))
@@ -354,7 +357,7 @@ class MvStoreSpec extends AnyFunSuite {
   }
 
   test("schema-driven store: a join-shaped view round-trips build → refresh → serve") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_mvjoin_spec_").toString
+    val dir = graft.Fs.scratchDir("mvjoin_spec").toString
     val li = spark.read.parquet(s"$sf/lineitem.parquet")
       .select(col("l_orderkey"), col("l_linenumber"), col("l_shipdate"),
         col("l_extendedprice"),
