@@ -2,11 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The one local session the command-line mains (Bench, Verify, Solo,
-  * PlanDump) run on: `local[cpus]` with `cpus` shuffle partitions, UI
-  * off, UTC. `nanosAsLong` is legacy-compat only: it lets a
-  * TIMESTAMP(NANOS)-written events fixture arrive as Long for
-  * [[ops.Tables.normalizeEventTs]]; the current fixture is
+/** The one local session recipe: the command-line mains (Bench,
+  * Verify, Solo, PlanDump, `BpeTrainer`), the scale benches and the
+  * test suite's shared session all run on `local[cpus]` with `cpus`
+  * shuffle partitions, UI off, UTC. `nanosAsLong` is legacy-compat
+  * only: it lets a TIMESTAMP(NANOS)-written events fixture arrive as
+  * Long for [[ops.Tables.normalizeEventTs]]; the current fixture is
   * timestamp[us] NTZ and ignores the flag. Each caller picks its own
   * log level. `DumpCli` keeps its own builder, which honours
   * `spark.master`. */

@@ -4,11 +4,12 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 
 /** Render a DataFrame as mysqldump text — the inverse of the converter.
-  * Used by tests (scalacheck round-trips) and the `conv_*` oracle
-  * queries to produce deterministic dump inputs from the driver's
-  * parquet fixtures. Mirrors mysqldump's format: header comments, one
-  * CREATE TABLE block, extended INSERTs batched like
-  * `--extended-insert` output.
+  * Used by tests (scalacheck round-trips), the `conv_*` oracle queries
+  * and the converter scale benches to produce deterministic dump inputs
+  * from the driver's parquet fixtures. Mirrors mysqldump's format:
+  * header comments, then per table one CREATE TABLE block and extended
+  * INSERTs batched like `--extended-insert` output. [[writeSection]]
+  * frames every section; [[dump]] is its in-memory form.
   */
 object DumpRenderer {
 
@@ -85,22 +86,40 @@ object DumpRenderer {
     s"INSERT INTO `$table`$colList VALUES ${tuples.mkString(",")};"
   }
 
-  /** Full dump text for (table, rows-per-insert-batched) sections, with
-    * mysqldump-style noise the reader must skip. */
+  /** Write a whole dump to `w`: mysqldump's header noise the reader
+    * must skip, then whatever `sections` writes (one [[writeSection]]
+    * per table), then the completion comment. */
+  def writeDump(w: java.io.Writer)(sections: => Unit): Unit = {
+    w.write("-- MySQL dump 10.13  Distrib 8.0.36\n")
+    w.write("/*!40101 SET @saved_cs_client = @@character_set_client */;\n\n")
+    sections
+    w.write("-- Dump completed\n")
+  }
+
+  /** Write one table's section to `w` as mysqldump frames it: header
+    * comment, `DROP TABLE`, `CREATE TABLE`, then `rows` as extended
+    * INSERTs of `batchSize` rows between `LOCK`/`UNLOCK`. Holds one
+    * batch at a time, so `rows` may stream a table of any size;
+    * `columns` as in [[insert]]. */
+  def writeSection(w: java.io.Writer, table: String, schema: StructType, rows: Iterator[Row],
+                   batchSize: Int, columns: Seq[String] = Nil): Unit = {
+    w.write(s"--\n-- Table structure for table `$table`\n--\n\n")
+    w.write(s"DROP TABLE IF EXISTS `$table`;\n")
+    w.write(createTable(table, schema)); w.write("\n\n")
+    w.write(s"LOCK TABLES `$table` WRITE;\n")
+    rows.grouped(batchSize).foreach { b => w.write(insert(table, b, columns)); w.write("\n") }
+    w.write("UNLOCK TABLES;\n\n")
+  }
+
+  /** Full dump text for (table, rows-per-insert-batched) sections. */
   def dump(sections: Seq[(String, StructType, Seq[Row])], batchSize: Int = 1000): String = {
-    val sb = new StringBuilder
-    sb.append("-- MySQL dump 10.13  Distrib 8.0.36\n")
-    sb.append("/*!40101 SET @saved_cs_client = @@character_set_client */;\n\n")
-    sections.foreach { case (table, schema, rows) =>
-      sb.append(s"--\n-- Table structure for table `$table`\n--\n\n")
-      sb.append(s"DROP TABLE IF EXISTS `$table`;\n")
-      sb.append(createTable(table, schema)).append("\n\n")
-      sb.append(s"LOCK TABLES `$table` WRITE;\n")
-      rows.grouped(batchSize).foreach(b => sb.append(insert(table, b)).append("\n"))
-      sb.append("UNLOCK TABLES;\n\n")
+    val w = new java.io.StringWriter
+    writeDump(w) {
+      sections.foreach { case (table, schema, rows) =>
+        writeSection(w, table, schema, rows.iterator, batchSize)
+      }
     }
-    sb.append("-- Dump completed\n")
-    sb.toString
+    w.toString
   }
 
   /** Render a (small) DataFrame section deterministically (driver-side

@@ -23,7 +23,7 @@ object ArrayAggregators {
     * bit_votes → elementwise-sum → fold-HOF pipeline, which
     * materialized a 64-long array PER TOKEN OCCURRENCE (2.5M rows ×
     * 64 longs at sf0.1 — the allocation was the measured bulk of the
-    * SimHash fingerprint stage, round-17 DedupProbe: 2.4 s → see
+    * SimHash fingerprint stage, OPTIMIZATION_r17.md §7: 2.4 s → see
     * spec). Vote arithmetic, merge commutativity, and the `> 0`
     * majority threshold are identical term by term, so fingerprints
     * are bit-equal (pinned by GraftFunctionsSpec's parity test). */

@@ -193,10 +193,7 @@ object BpeTrainer {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").appName("bpe-train")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local("4", Some("bpe-train"))
     try {
       val fixture = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
         .select("text").collect().map(_.getString(0))

@@ -85,8 +85,9 @@ object AnnIndexStore extends graft.EpochStore("ANN index", "c\\d+") {
       (j \ "centroids").extract[Seq[Array[Double]]].zipWithIndex.map(_.swap))
 
   /** SERVING-SESSION manifest memo (round-15 verdict item 4):
-    * `ServeCostProbe` measured 13–24 ms of manifest JSON parse per
-    * fresh `topK` call, GROWING with nlist — at the 2¹⁶-nlist cap the
+    * 13–24 ms of manifest JSON parse per fresh `topK` call was measured
+    * (SCALING.md, round-15 extension, `ann_serve_np*` row), GROWING
+    * with nlist — at the 2¹⁶-nlist cap the
     * pointer carries ~4M doubles (tens of MB) that a per-call [[open]]
     * re-parses for every query batch. A serving session pays the parse
     * ONCE per epoch: staleness is probed from the pointer's LEADING

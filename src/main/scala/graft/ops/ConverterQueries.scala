@@ -1,7 +1,8 @@
 package graft.ops
 
 import java.nio.file.{Files, Path, Paths}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.dump.{DumpConverter, DumpRenderer}
 
@@ -93,16 +94,13 @@ object ConverterQueries {
     val cm = Tables.customer(s, d)
     val reordered = Seq("c_mktsegment", "c_custkey", "c_acctbal", "c_name", "c_nationkey")
     val partial = Seq("c_custkey", "c_acctbal")
-    val sb = new StringBuilder
-    sb.append("-- MySQL dump 10.13  Distrib 8.0.36\n\n")
-    for ((table, cols) <- Seq(("customer_cm", reordered), ("customer_part", partial))) {
-      sb.append(DumpRenderer.createTable(table, cm.schema)).append("\n")
-      cm.select(cols.map(col): _*).orderBy(col("c_custkey")).collect()
-        .grouped(500)
-        .foreach(b => sb.append(DumpRenderer.insert(table, b.toSeq, cols)).append("\n"))
-      sb.append("\n")
-    }
-    Files.writeString(in.resolve("dump.sql"), sb.toString)
+    val w = Files.newBufferedWriter(in.resolve("dump.sql"))
+    try DumpRenderer.writeDump(w) {
+      for ((table, cols) <- Seq(("customer_cm", reordered), ("customer_part", partial)))
+        DumpRenderer.writeSection(w, table, cm.schema,
+          cm.select(cols.map(col): _*).orderBy(col("c_custkey")).collect().iterator,
+          batchSize = 500, cols)
+    } finally w.close()
     DumpConverter.convert(s, in.resolve("dump.sql").toString, out.toString, minPartitions = 4)
     val full = s.read.parquet(s"$out/customer_cm")
     val part = s.read.parquet(s"$out/customer_part").select(
@@ -117,26 +115,6 @@ object ConverterQueries {
 
   // ------------------------------------------------------------- scale
 
-  /** Stream one table section of a dump to `w` in bounded driver
-    * memory: `toLocalIterator` fetches one partition at a time and each
-    * extended-INSERT batch is rendered and released. (The collect-based
-    * [[DumpRenderer.section]] stays for KB-scale fixtures.) */
-  private[ops] def streamSection(w: java.io.Writer, table: String, df: DataFrame,
-                                 sortCols: Seq[String], batchSize: Int): Unit = {
-    w.write(s"--\n-- Table structure for table `$table`\n--\n\n")
-    w.write(s"DROP TABLE IF EXISTS `$table`;\n")
-    w.write(DumpRenderer.createTable(table, df.schema)); w.write("\n\n")
-    w.write(s"LOCK TABLES `$table` WRITE;\n")
-    val it = df.orderBy(sortCols.map(col): _*).toLocalIterator()
-    val buf = new scala.collection.mutable.ArrayBuffer[Row](batchSize)
-    while (it.hasNext) {
-      buf.clear()
-      while (it.hasNext && buf.size < batchSize) buf += it.next()
-      w.write(DumpRenderer.insert(table, buf.toSeq)); w.write("\n")
-    }
-    w.write("UNLOCK TABLES;\n\n")
-  }
-
   /** The big rendered dump is a FIXTURE (the input a real user already
     * has on disk), not part of the operator under test — built once per
     * (session, fixture dir) like the bucketed-join layout. */
@@ -145,20 +123,19 @@ object ConverterQueries {
   private[ops] def scaleDumpFile(s: SparkSession, d: String): Path =
     scaleDump(s, d) { dir =>
       val path = Files.createDirectories(Paths.get(dir)).resolve("dump.sql")
+      // parquet timestamp[ms] arrives as TimestampNTZ; the dump format
+      // (and the converter's UTC wall-clock parse) speak TimestampType —
+      // the UTC session TZ makes the cast value-preserving
+      val li = Tables.lineitem(s, d).withColumn("l_shipdate", col("l_shipdate").cast("timestamp"))
+      val o = Tables.orders(s, d).withColumn("o_orderdate", col("o_orderdate").cast("timestamp"))
       val w = Files.newBufferedWriter(path)
-      try {
-        w.write("-- MySQL dump 10.13  Distrib 8.0.36\n")
-        w.write("/*!40101 SET @saved_cs_client = @@character_set_client */;\n\n")
-        // parquet timestamp[ms] arrives as TimestampNTZ; the dump format
-        // (and the converter's UTC wall-clock parse) speak TimestampType —
-        // the UTC session TZ makes the cast value-preserving
-        streamSection(w, "lineitem",
-          Tables.lineitem(s, d).withColumn("l_shipdate", col("l_shipdate").cast("timestamp")),
-          Seq("l_orderkey", "l_linenumber"), batchSize = 1000)
-        streamSection(w, "orders",
-          Tables.orders(s, d).withColumn("o_orderdate", col("o_orderdate").cast("timestamp")),
-          Seq("o_orderkey"), batchSize = 1000)
-        w.write("-- Dump completed\n")
+      // `toLocalIterator` fetches one partition at a time, so the driver
+      // holds a partition and an INSERT batch, never a whole table
+      try DumpRenderer.writeDump(w) {
+        DumpRenderer.writeSection(w, "lineitem", li.schema,
+          li.orderBy("l_orderkey", "l_linenumber").toLocalIterator().asScala, batchSize = 1000)
+        DumpRenderer.writeSection(w, "orders", o.schema,
+          o.orderBy("o_orderkey").toLocalIterator().asScala, batchSize = 1000)
       } finally w.close()
       path
     }

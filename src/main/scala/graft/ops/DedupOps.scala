@@ -206,8 +206,8 @@ object DedupOps {
     * ~2M-row keep set and then the ~2.3M-row capped index itself
     * (post-explode size estimates are tiny, so the 10 MB bar never
     * fired) — two driver-side multi-million-entry hash-relation builds
-    * per run, ~2× the measured pair-stage cost at sf0.1 (DedupProbe:
-    * 1.6 s → 0.83 s), and a plan that at corpus scale would hit the
+    * per run, ~2× the measured pair-stage cost at sf0.1
+    * (OPTIMIZATION_r17.md §7: 1.6 s → 0.83 s), and a plan that at corpus scale would hit the
     * 8 GB broadcast cap. The `shuffle_hash` hints keep the co-
     * partitioned joins hash-based (no sort of the index) and bound
     * each build at one partition of kept shingles. Hot-shingle skew
@@ -458,10 +458,10 @@ object DedupOps {
       // previous bit_votes → elementwise-sum → fold-HOF chain
       // materialized a 64-long votes array PER TOKEN OCCURRENCE —
       // 2.5M × 64 longs of allocation at sf0.1, measured as the bulk
-      // of the fingerprint stage (DedupProbe 2.4 s → 0.9 s). Votes,
-      // merge order-independence, and the > 0 majority threshold are
-      // term-identical, so fingerprints are bit-equal (parity pinned
-      // in GraftFunctionsSpec).
+      // of the fingerprint stage (OPTIMIZATION_r17.md §7: 2.4 s →
+      // 0.9 s). Votes, merge order-independence, and the > 0 majority
+      // threshold are term-identical, so fingerprints are bit-equal
+      // (parity pinned in GraftFunctionsSpec).
       .groupBy("doc_id")
       .agg(ArrayAggregators.simhashFingerprint(xxhash64(col("tok"))).as("f"))
 
@@ -953,7 +953,7 @@ object DedupOps {
     * ¾-length segment is corpus-common, so segment buckets went
     * quadratic: the candidate join produced ~|A|×|B| pairs at sf0.1
     * and the query spent a steady 2.1 s on 1 000 rows (measured,
-    * DedupProbe). Deletion variants keep every distinguishing digit
+    * OPTIMIZATION_r17.md §8). Deletion variants keep every distinguishing digit
     * in the key, so bucket sizes track true near-dup degree; at
     * threshold 1 the neighborhood is len+1 keys/row — linear state,
     * shuffled by variant content, never |A|×|B|.

@@ -93,8 +93,8 @@ object SimilarityOps {
   private[ops] val KmFitCap = 1L << 20
 
   /** Flat-fit ceiling: above this k the Lloyd cost n·k·dim — linear in
-    * k with n pinned at [[KmFitCap]] (FitCurveProbe's measured curve,
-    * table in SCALING.md) — outgrows a build budget long before the
+    * k with n pinned at [[KmFitCap]] (the measured fit curve, table in
+    * SCALING.md's round-16 extension) — outgrows a build budget long before the
     * `sizedNlist` 2¹⁶ cap, so [[kmeansCentroids]] switches to the
     * two-level [[hierarchicalCentroids]] fit. Every fixture SF stays
     * far below this bar (flat fit, bit-identical to round 15). */
@@ -149,7 +149,8 @@ object SimilarityOps {
     * training shortcut, round-15 verdict watch item: "project the fit
     * curve to the nlist cap"): the flat Lloyd cost is n·k·dim per
     * iteration, and at the `sizedNlist` cap (k = 2¹⁶ over the 1M-row
-    * fit sample) FitCurveProbe's measured curve projects it far past
+    * fit sample) the measured fit curve (SCALING.md, round-16
+    * extension) projects it far past
     * any build budget. Splitting k as k₁·k₂ (k₁ ≈ √k coarse cells,
     * k₂ sub-centroids per cell) makes the heavy terms n·k₁·dim (the
     * coarse fit + one assignment pass) plus k₁ INDEPENDENT local

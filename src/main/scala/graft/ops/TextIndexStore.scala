@@ -92,9 +92,10 @@ object TextIndexStore extends graft.EpochStore("text index", "b\\d+|stats|docs|d
     * modest corpus makes per-bucket parquet files tiny (≈150 KB at
     * 500k docs / fan-out 1024), and the build's cost picks up a
     * per-FILE constant (writer open/close, fs metadata, rename) that
-    * grows with fan-out — measured directly in `Bm25BuildProbe`:
-    * stage-write 2.8 s at 128 files vs 7.7 s at 4096 over the SAME
-    * 11.6M posting rows. */
+    * grows with fan-out — measured directly by a round-15 phase probe
+    * of the build: stage-write 2.8 s at 128 files vs 7.7 s at 4096
+    * over the SAME 11.6M posting rows (SCALING.md's round-15 extension,
+    * `bm25_build` row, records the size rule it led to). */
   def suggestedBuckets(nDocs: Long): Int = {
     val root = math.ceil(math.sqrt(math.max(1L, nDocs).toDouble)).toLong
     val pow2 = java.lang.Long.highestOneBit(root * 2 - 1)
@@ -108,8 +109,8 @@ object TextIndexStore extends graft.EpochStore("text index", "b\\d+|stats|docs|d
 
   /** Target posting rows per bucket for size-derived fan-out — ≈ a
     * few MB of parquet per bucket file, safely above the small-file
-    * regime where the per-file constant dominates the build (measured
-    * in `Bm25BuildProbe`, see [[suggestedBuckets]]). */
+    * regime where the per-file constant dominates the build (measured,
+    * see [[suggestedBuckets]]). */
   val TargetPostingRowsPerBucket = 65536L
 
   /** Size the posting fan-out at a TARGET FILE SIZE: one bucket ≈

@@ -25,7 +25,7 @@ class FixtureDriftSpec extends AnyFunSuite {
   /** Write the fixture's events re-encoded with `ts` transformed, into
     * a temp dir laid out like a fixture dir (events.parquet). */
   private def variantDir(tag: String)(recode: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): String = {
-    val dir = java.nio.file.Files.createTempDirectory(s"graft_drift_${tag}_")
+    val dir = Fs.scratchDir(s"drift_$tag")
     recode(Tables.events(spark, sf))
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/events.parquet")
     dir.toString

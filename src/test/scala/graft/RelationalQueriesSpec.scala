@@ -5,14 +5,7 @@ import org.apache.spark.sql.functions.{col, count, countDistinct, lit, max, min,
 import org.scalatest.funsuite.AnyFunSuite
 
 object SparkTestSession {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
+  lazy val spark: SparkSession = Session.local("4", Some("graft-test"))
 }
 
 class RelationalQueriesSpec extends AnyFunSuite {

@@ -51,8 +51,8 @@ class DumpCliSpec extends AnyFunSuite {
 
   test("e2e: main with file input writes parquet (main.rs:25-33 parity)") {
     spark // ensure the shared test session exists before main's getOrCreate
-    val in = Files.createTempDirectory("cli-in")
-    val out = Files.createTempDirectory("cli-out")
+    val in = graft.Fs.scratchDir("cli-in")
+    val out = graft.Fs.scratchDir("cli-out")
     Files.writeString(in.resolve("dump.sql"), dump)
     DumpCli.main(Array("-o", out.toString, s"$in/dump.sql"))
     val back = spark.read.parquet(s"$out/t").collect().sortBy(_.getLong(0))
@@ -62,7 +62,7 @@ class DumpCliSpec extends AnyFunSuite {
 
   test("e2e: main with no input reads stdin (main.rs:56 parity)") {
     spark
-    val out = Files.createTempDirectory("cli-stdin-out")
+    val out = graft.Fs.scratchDir("cli-stdin-out")
     val oldIn = System.in
     try {
       System.setIn(new java.io.ByteArrayInputStream(dump.getBytes("UTF-8")))
@@ -73,8 +73,8 @@ class DumpCliSpec extends AnyFunSuite {
 
   test("done line reports quarantined rows separately from written rows") {
     spark
-    val in = Files.createTempDirectory("cli-quar-in")
-    val out = Files.createTempDirectory("cli-quar-out")
+    val in = graft.Fs.scratchDir("cli-quar-in")
+    val out = graft.Fs.scratchDir("cli-quar-out")
     val badDump =
       """CREATE TABLE `t` (`id` bigint NOT NULL);
         |INSERT INTO `t` VALUES (1),(2);

@@ -11,8 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class DumpConverterSpec extends AnyFunSuite {
   lazy val spark = graft.SparkTestSession.spark
 
-  def tmpDir(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
+  def tmpDir(prefix: String): String = graft.Fs.scratchDir(prefix).toString
 
   val userSchema = StructType(Seq(
     StructField("id", LongType, nullable = false),

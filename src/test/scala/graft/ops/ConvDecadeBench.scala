@@ -1,8 +1,9 @@
 package graft.ops
 
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
-import graft.dump.DumpConverter
+import graft.dump.{DumpConverter, DumpRenderer}
 
 /** The converter one decade up from ConvScaleBench's 53 MB fixture:
   * lineitem replicated 10× with disjoint order-key ranges (sf1-ish —
@@ -16,13 +17,7 @@ import graft.dump.DumpConverter
   * (optional args: fixture dir, replication factor) */
 object ConvDecadeBench {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = graft.Session.local("32")
     spark.sparkContext.setLogLevel("ERROR")
     val sf = args.headOption.getOrElse("/root/testdata/sf0.1")
     val reps = args.lift(1).flatMap(_.toIntOption).getOrElse(10)
@@ -39,11 +34,9 @@ object ConvDecadeBench {
         li.withColumn("l_orderkey", col("l_orderkey") + lit(k.toLong * maxOk))
       }.reduce(_ unionByName _)
       val w = Files.newBufferedWriter(dumpPath.resolveSibling(dumpPath.getFileName.toString + ".tmp"))
-      try {
-        w.write("-- MySQL dump 10.13  Distrib 8.0.36\n\n")
-        ConverterQueries.streamSection(w, "lineitem", big,
-          Seq("l_orderkey", "l_linenumber"), batchSize = 1000)
-        w.write("-- Dump completed\n")
+      try DumpRenderer.writeDump(w) {
+        DumpRenderer.writeSection(w, "lineitem", big.schema,
+          big.orderBy("l_orderkey", "l_linenumber").toLocalIterator().asScala, batchSize = 1000)
       } finally w.close()
       Files.move(dumpPath.resolveSibling(dumpPath.getFileName.toString + ".tmp"), dumpPath)
       println(f"#DECADE# rendered once in ${(System.nanoTime() - t0) / 1e9}%.1f s")
@@ -71,10 +64,7 @@ object ConvDecadeBench {
       println(s"#DECADEPHASE# minPartitions=$parts  " +
         phases.map { case (k, v) => f"$k=$v%.2f" }.mkString(" "))
       // delete output between runs so disk doesn't accumulate 10 copies
-      def rec(f: java.io.File): Unit = {
-        val cs = f.listFiles(); if (cs != null) cs.foreach(rec); f.delete(); ()
-      }
-      rec(out.toFile)
+      graft.Fs.deleteRecursively(out.toFile)
     }
     spark.stop()
   }

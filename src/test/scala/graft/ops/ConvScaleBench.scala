@@ -8,13 +8,7 @@ import graft.dump.DumpConverter
   * Run: sbt 'Test/runMain graft.ops.ConvScaleBench' */
 object ConvScaleBench {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = graft.Session.local("32")
     spark.sparkContext.setLogLevel("ERROR")
     val sf = args.headOption.getOrElse("/root/testdata/sf0.1")
     val dump = ConverterQueries.scaleDumpFile(spark, sf)
@@ -39,7 +33,7 @@ object ConvScaleBench {
       (sec, res.rowsWritten.values.sum, detail)
     }
     for (parts <- Seq(1, 2, 4, 8, 16, 32); _ <- 1 to 2) {
-      val out = Files.createTempDirectory(s"convbench_$parts")
+      val out = graft.Fs.scratchDir(s"convbench_$parts")
       val (sec, rows, detail) = timedConvert(parts, out)
       println(f"#CONV# minPartitions=$parts%2d  ${sec}%6.2f s  rows=$rows")
       println(s"#CONVPHASE# minPartitions=$parts  $detail")
@@ -58,7 +52,7 @@ object ConvScaleBench {
     for (parts <- Seq(1, 8, 32); _ <- 1 to 2) {
       val nonEmpty = spark.sparkContext.textFile(bzPath, parts)
         .mapPartitionsWithIndex((i, it) => Iterator((i, it.hasNext))).collect().count(_._2)
-      val out = Files.createTempDirectory(s"convbench_bz_$parts")
+      val out = graft.Fs.scratchDir(s"convbench_bz_$parts")
       val t0 = System.nanoTime()
       val res = DumpConverter.convert(spark, bzPath, out.toString, minPartitions = parts)
       val sec = (System.nanoTime() - t0) / 1e9

@@ -490,13 +490,7 @@ object ScaleBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = graft.Session.local("32")
     spark.sparkContext.setLogLevel("ERROR")
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val tiers = if (args.nonEmpty) args.flatMap(_.toIntOption).toSeq else Seq(4, 20)

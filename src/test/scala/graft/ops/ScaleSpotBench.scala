@@ -28,13 +28,7 @@ object ScaleSpotBench {
 
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = graft.Session.local(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     val src = "/root/testdata/sf0.1"
     val dst = s"${System.getProperty("java.io.tmpdir")}/graft_sf1_x$Copies"

@@ -49,7 +49,7 @@ class TextOpsSpec extends AnyFunSuite {
     // unguarded, element_at(toks, 0) errors under ANSI. Short docs
     // must simply produce no bigram rows (= the oracle's empty
     // generate_series), so only the multi-token doc appears.
-    val dir = java.nio.file.Files.createTempDirectory("bigram-short").toString
+    val dir = graft.Fs.scratchDir("bigram-short").toString
     Seq(
       (1L, "solo", "src0", "en", 4L),
       (2L, "", "src0", "en", 0L),
@@ -63,7 +63,7 @@ class TextOpsSpec extends AnyFunSuite {
 
   test("repetition: short docs report zero bigrams; repeated token dominates the ratio") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("rep-short").toString
+    val dir = graft.Fs.scratchDir("rep-short").toString
     Seq(
       (1L, "solo", "src0", "en", 4L),                    // 1 token: no bigrams
       (2L, "spam spam spam spam ham", "src0", "en", 23L) // top token 4/5
@@ -97,7 +97,7 @@ class TextOpsSpec extends AnyFunSuite {
     // rank first, with its exact count, and the sketch must agree
     // within eps*N even on an adversarial singleton tail.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("hh-plant").toString
+    val dir = graft.Fs.scratchDir("hh-plant").toString
     val docs = (1L to 50L).map(i => (i, s"whale tail$i whale whale", "src0", "en", 20L))
     docs.toDF("doc_id", "text", "source", "lang", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
