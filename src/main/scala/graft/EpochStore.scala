@@ -1,6 +1,8 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.StructType
 import org.json4s.{DefaultFormats, Extraction, Formats, JValue}
 import org.json4s.jackson.JsonMethods
 
@@ -26,15 +28,27 @@ import org.json4s.jackson.JsonMethods
   * dirs and returns the new manifest, and `advance` commits it and runs
   * retention GC at [[RetainEpochs]]. GC on commit is the rule; a caller
   * that wants a tighter horizon calls [[gc]] itself afterwards. The
-  * epoch-0 builds open no manifest and commit directly; the governed
-  * table (operator-run retention, optimistic re-checks) and the
-  * lock-free upsert table commit through [[commit]] themselves.
+  * epoch-0 builds open no manifest and commit directly. The governed
+  * table (operator-run retention, optimistic re-checks) commits through
+  * [[commit]] itself, and so does the upsert state table: its first
+  * micro-batch commits epoch 0 from an absent manifest, which
+  * [[advance]] cannot open, and its one writer is the stream that owns
+  * its checkpoint. [[commit]] still takes the store lock for the flip.
+  *
+  * Every mutator that rewrites existing buckets (ANN, text, dedup, MV,
+  * upsert) does so one way, through [[rewriteBuckets]]; the builds and
+  * ANN `rebalance`, which write a fresh layout, call
+  * [[ManifestIo.publishPartitions]] directly. Store code reads its
+  * component dirs through [[read]].
   *
   * `name` names the store in "no <name> at <dir>"; `componentPattern`
   * matches the top-level component dirs [[gc]] sweeps (`"b\\d+"`; the
-  * empty pattern matches none).
+  * empty pattern matches none). `bucketColumn` is the stored row column
+  * a bucketed store clusters by and `bucketPrefix` its bucket dirs'
+  * prefix ([[ManifestIo.partitionPath]]).
   */
-abstract class EpochStore(name: String, componentPattern: String) {
+abstract class EpochStore(name: String, componentPattern: String,
+                          bucketColumn: String = "bucket", bucketPrefix: String = "b") {
 
   /** The store's manifest case class. */
   type M <: EpochStore.Versioned
@@ -118,6 +132,54 @@ abstract class EpochStore(name: String, componentPattern: String) {
     commit(dir, m2)
     gc(dir, next, RetainEpochs)
     out
+  }
+
+  /** The path of component dir `rel`, relative to store dir `dir`. */
+  private[graft] def path(dir: String, rel: String): String = s"$dir/$rel"
+
+  private[graft] def paths(dir: String, rels: Iterable[String]): Seq[String] =
+    rels.map(path(dir, _)).toSeq
+
+  /** The one component read: the parquet under `rels` (relative to
+    * store dir `dir`) as one frame, its schema inferred from the files;
+    * `rels` must be non-empty. */
+  private[graft] def read(s: SparkSession, dir: String, rels: Iterable[String]): DataFrame =
+    s.read.parquet(paths(dir, rels): _*)
+
+  /** [[read]] under `schema` as given: nothing is inferred from
+    * footers, a column a file lacks reads as null, and no `rels` read
+    * as an empty frame of `schema`. */
+  private[graft] def read(s: SparkSession, dir: String, rels: Iterable[String],
+                          schema: StructType): DataFrame =
+    if (rels.isEmpty) s.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+    else s.read.schema(schema).parquet(paths(dir, rels): _*)
+
+  /** The schema a store's bucket rows hold, from the footer of one of
+    * the dirs in `buckets` (non-empty). */
+  private[graft] def bucketSchema(s: SparkSession, dir: String,
+                                  buckets: Map[Int, String]): StructType =
+    read(s, dir, buckets.values.take(1)).schema
+
+  /** The one bucket rewrite, on top of [[ManifestIo.publishPartitions]]:
+    *   - reads the dirs that bucket map `buckets` holds for the
+    *     `affected` ids (a reshard passes every id) through [[read]]
+    *     under `schema`: an empty frame of it when no dir exists;
+    *   - `rows` turns those old rows into the rows to publish;
+    *   - they are clustered by the bucket column once, and `merge`
+    *     runs over that clustering (a reduce keyed by a superset of
+    *     the bucket column plans no second exchange);
+    *   - the result is staged and renamed into epoch `next`'s dirs;
+    *   - returns the new map `(buckets -- affected) ++ published`: a
+    *     bucket that rewrote to no rows leaves the map. */
+  private[graft] def rewriteBuckets(s: SparkSession, dir: String, next: Long,
+                                    buckets: Map[Int, String], affected: Iterable[Int],
+                                    schema: StructType,
+                                    merge: DataFrame => DataFrame = identity)
+                                   (rows: DataFrame => DataFrame): Map[Int, String] = {
+    val old = read(s, dir, affected.toSeq.sorted.flatMap(buckets.get), schema)
+    val published = ManifestIo.publishPartitions(rows(old), Paths.get(dir), next,
+      bucketColumn, bucketPrefix, merge)
+    (buckets -- affected) ++ published
   }
 
   /** Write the immutable per-epoch manifest, then atomically replace

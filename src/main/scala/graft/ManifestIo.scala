@@ -201,36 +201,43 @@ private[graft] object ManifestIo {
   /** Stage-then-rename publish of per-partition parquet dirs — the
     * shared write path of every bucketed store artifact (ANN cells,
     * text-index posting buckets, dedup-index band buckets, MV month
-    * buckets): stage `rows` under `.stage-e<epoch>` partitioned by a
-    * COPY of `partColumn` (so the data files keep the original as a
-    * real column after the rename strips the `p<col>=K` dir name),
-    * then publish each staged partition via rename into its immutable
-    * [[partitionPath]] location. Published ids come from the STAGE
-    * DIRECTORY LISTING — the write is the only job over `rows`, so
-    * callers never pay a second corpus-sized pass just to learn which
-    * partitions materialized. A crashed attempt's leftover destination
-    * dirs are overwritten on replay (idempotent: nothing references
-    * `e<epoch>` until the manifest flips). Returns partition id →
-    * relative path (`"<dirPrefix><K>/e<epoch>"`) for every partition
-    * that published, ready to merge into a manifest's bucket map. */
+    * buckets, upsert state buckets): cluster `rows` by `partColumn`,
+    * run `merge` over that clustering, stage the result under
+    * `.stage-e<epoch>` partitioned by a COPY of `partColumn` (so the
+    * data files keep the original as a real column after the rename
+    * strips the `p<col>=K` dir name), then publish each staged
+    * partition via rename into its immutable [[partitionPath]]
+    * location. Published ids come from the STAGE DIRECTORY LISTING —
+    * the write is the only job over `rows`, so callers never pay a
+    * second corpus-sized pass just to learn which partitions
+    * materialized. A crashed attempt's leftover destination dirs are
+    * overwritten on replay (idempotent: nothing references `e<epoch>`
+    * until the manifest flip). Returns partition id → relative path
+    * (`"<dirPrefix><K>/e<epoch>"`) for every partition that published,
+    * ready to merge into a manifest's bucket map. */
   def publishPartitions(rows: org.apache.spark.sql.DataFrame, dir: Path,
-                        epoch: Long, partColumn: String,
-                        dirPrefix: String): Map[Int, String] = {
+                        epoch: Long, partColumn: String, dirPrefix: String,
+                        merge: org.apache.spark.sql.DataFrame =>
+                          org.apache.spark.sql.DataFrame = identity): Map[Int, String] = {
     import org.apache.spark.sql.functions.col
     val stage = dir.resolve(s".stage-e$epoch")
     Fs.deleteRecursively(stage.toFile)
-    // repartition ON the partition column first: without it every
-    // upstream task writes a file into every partition dir — tasks ×
-    // fan-out files (measured 9× super-linear build growth at fan-out
-    // 512 in ScaleBench, and a small-file storm an object store would
-    // punish harder). One extra shuffle of the posting rows buys
-    // ~one file per partition dir. Trade-off: a partition's rows now
-    // land on ONE task, so a pathologically hot partition writes as a
-    // straggler — acceptable because every caller sizes its fan-out
-    // ~√N (suggestedBuckets/suggestedNlist), which shrinks
-    // per-partition bytes as the corpus grows.
-    rows.withColumn("p" + partColumn, col(partColumn))
-      .repartition(col("p" + partColumn))
+    // cluster ON the partition column first: without it every upstream
+    // task writes a file into every partition dir — tasks × fan-out
+    // files (measured 9× super-linear build growth at fan-out 512 in
+    // ScaleBench, and a small-file storm an object store would punish
+    // harder). The one exchange buys ~one file per partition dir, and
+    // a `merge` reduce grouped by a superset of the partition column
+    // reuses it instead of planning its own. Trade-off: a partition's
+    // rows land on ONE task, so a pathologically hot partition writes
+    // as a straggler. Per-partition bytes follow the caller's fan-out
+    // rule: the persisted text index sizes its posting buckets at a
+    // target row count per bucket (`TextIndexStore.sizedBuckets`,
+    // 65,536 rows), and every other fan-out is a fixed default recorded
+    // in the manifest (16 text, dedup and upsert buckets, 8 MV buckets,
+    // ANN cells = the build's k) that `reshard`/`rebalance` change.
+    merge(rows.repartition(col(partColumn)))
+      .withColumn("p" + partColumn, col(partColumn))
       .write.mode("overwrite").partitionBy("p" + partColumn).parquet(stage.toString)
     val staged = Option(stage.toFile.listFiles()).toSeq.flatten
       .filter(f => f.isDirectory && f.getName.startsWith(s"p$partColumn="))

@@ -54,7 +54,7 @@ import java.nio.file.Paths
   * stage/epoch garbage behind; a replayed build/delta rewrites the
   * same epoch dirs before re-flipping.
   */
-object AnnIndexStore extends graft.EpochStore("ANN index", "c\\d+") {
+object AnnIndexStore extends graft.EpochStore("ANN index", "c\\d+", "cent", "c") {
   import graft.Fs.deleteRecursively
   import org.json4s.{Extraction, JArray, JValue}
 
@@ -214,9 +214,8 @@ object AnnIndexStore extends graft.EpochStore("ANN index", "c\\d+") {
     val dataCols =
       if (m.codebooks.nonEmpty) Seq("cent", "vec_id", "embedding", "nrm_e6", "codes")
       else Seq("cent", "vec_id", "embedding", "nrm_e6")
-    val wanted = cells.getOrElse(m.cells.keys.toSeq)
-    val paths = wanted.sorted.flatMap(m.cells.get).map(rel => s"$dir/$rel")
-    if (paths.nonEmpty) s.read.parquet(paths: _*).select(dataCols.map(col): _*)
+    val rels = cells.getOrElse(m.cells.keys.toSeq).sorted.flatMap(m.cells.get)
+    if (rels.nonEmpty) read(s, dir, rels).select(dataCols.map(col): _*)
     else {
       // no requested cell exists in the manifest (e.g. an insert-only
       // delta landing entirely in previously-empty cells): an EMPTY
@@ -350,15 +349,11 @@ object AnnIndexStore extends graft.EpochStore("ANN index", "c\\d+") {
     // the second pass entirely
     val affected = oldCells.union(newEntries.select("cent"))
       .distinct().collect().map(_.getInt(0)).sorted.toSeq
-    val cur = postings(s, dir, m, Some(affected))
-    val readPaths = affected.sorted.flatMap(m.cells.get).map(rel => s"$dir/$rel")
-    val rewritten = cur
-      .join(broadcast(remKeys), Seq("vec_id"), "left_anti")
-      .unionByName(newEntries)
-    // staged ⊆ affected: `rewritten` only carries affected cells' rows
-    val published = publishPartitions(rewritten, Paths.get(dir), next, "cent", "c")
-    val m2 = AnnManifest(next, cents, (m.cells -- affected) ++ published, m.codebooks)
-    (m2, DeltaCommit(m2, affected, readPaths))
+    // staged ⊆ affected: the rewrite only carries affected cells' rows
+    val cells = rewriteBuckets(s, dir, next, m.cells, affected, newEntries.schema)(
+      _.join(broadcast(remKeys), Seq("vec_id"), "left_anti").unionByName(newEntries))
+    val m2 = AnnManifest(next, cents, cells, m.codebooks)
+    (m2, DeltaCommit(m2, affected, paths(dir, affected.flatMap(m.cells.get))))
   }
 
   /** Retrain-and-re-encode maintenance — the rebuild an IVF index

@@ -149,10 +149,10 @@ object DedupIndexStore extends graft.EpochStore("dedup index", "b\\d+|docs|dels"
     // tasks × fan-out (same small-file argument as ManifestIo
     // .publishPartitions)
     registryRows(sh, docFanOut).repartition(col("dbucket")).write.mode("overwrite")
-      .partitionBy("dbucket").parquet(s"$dir/$rel")
+      .partitionBy("dbucket").parquet(path(dir, rel))
     // count folds the just-written parquet (metadata-sized read), not
     // a second pass over the shingling job
-    sh.sparkSession.read.parquet(s"$dir/$rel").count()
+    read(sh.sparkSession, dir, Seq(rel)).count()
   }
 
   /** Existing registry leaf dirs (`docs/eM/dbucket=K`) for the given
@@ -162,12 +162,11 @@ object DedupIndexStore extends graft.EpochStore("dedup index", "b\\d+|docs|dels"
     * mechanism. */
   private def registryLeafPaths(dir: String, m: DedupManifest,
                                 buckets: Seq[Int]): Seq[String] =
-    for {
-      rel <- m.docs
-      b <- buckets
-      p = s"$dir/$rel/dbucket=$b"
-      if new java.io.File(p).exists()
-    } yield p
+    m.docs.flatMap(registryLeaves(dir, _, buckets))
+
+  /** The existing leaf dirs of one registry segment `rel`. */
+  private def registryLeaves(dir: String, rel: String, buckets: Seq[Int]): Seq[String] =
+    paths(dir, buckets.map(b => s"$rel/dbucket=$b")).filter(new java.io.File(_).exists())
 
   /** The EFFECTIVE registry rows for the given dbuckets — per doc the
     * row from the LATEST segment wins: [[applyUpdate]] appends a
@@ -183,11 +182,10 @@ object DedupIndexStore extends graft.EpochStore("dedup index", "b\\d+|docs|dels"
                                  restrictTo: Option[DataFrame]): DataFrame = {
     val perSeg = for {
       rel <- m.docs
-      paths = buckets.map(b => s"$dir/$rel/dbucket=$b")
-        .filter(p => new java.io.File(p).exists())
-      if paths.nonEmpty
+      leaves = registryLeaves(dir, rel, buckets)
+      if leaves.nonEmpty
     } yield {
-      val seg = s.read.parquet(paths: _*).select(col("doc_id"), col("sh"))
+      val seg = s.read.parquet(leaves: _*).select(col("doc_id"), col("sh"))
       val bounded = restrictTo.fold(seg)(ids =>
         seg.join(broadcast(ids), Seq("doc_id"), "left_semi"))
       bounded.withColumn("segE", lit(rel.stripPrefix("docs/e").toLong))
@@ -255,15 +253,16 @@ object DedupIndexStore extends graft.EpochStore("dedup index", "b\\d+|docs|dels"
     // same driver-side probe-list shape as the IVF cell probe
     val probed = bands.select(col("bucket")).distinct()
       .collect().map(_.getInt(0)).toSeq.sorted
-    val paths = probed.flatMap(m.buckets.get).map(rel => s"$dir/$rel")
+    val rels = probed.flatMap(m.buckets.get)
+    val postingPaths = paths(dir, rels)
     val empty = s.emptyDataFrame
       .select(lit(0L).as("doc_new"), lit(0L).as("doc_old"), lit(0L).as("jac_e6"))
       .limit(0)
-    if (paths.isEmpty) return (empty, ServeDiag(probed, paths))
+    if (rels.isEmpty) return (empty, ServeDiag(probed, postingPaths))
 
     // bucket width over the read postings (a probed bucket holds ALL
     // postings for its keys, so the window df is the index-wide width)
-    val idx = s.read.parquet(paths: _*)
+    val idx = read(s, dir, rels)
       .withColumn("bdf", count(lit(1)).over(Window.partitionBy(col("band"), col("key"))))
     val q = broadcast(bands
       .select(col("doc_id").as("doc_new"), col("sfull").as("qfull"),
@@ -286,7 +285,7 @@ object DedupIndexStore extends graft.EpochStore("dedup index", "b\\d+|docs|dels"
     val candBuckets = pairs.select(col("dbucket")).distinct()
       .collect().map(_.getInt(0)).toSeq.sorted
     val regPaths = registryLeafPaths(dir, m, candBuckets)
-    if (regPaths.isEmpty) return (empty, ServeDiag(probed, paths, regPaths))
+    if (regPaths.isEmpty) return (empty, ServeDiag(probed, postingPaths, regPaths))
     // last-wins registry resolve, bounded to the candidate old docs
     // (single-segment indexes skip the resolve entirely)
     val reg = latestRegistryRows(s, dir, m, candBuckets,
@@ -300,7 +299,7 @@ object DedupIndexStore extends graft.EpochStore("dedup index", "b\\d+|docs|dels"
       .filter(col("c") * lit(2) >= col("u")) // c/u >= 0.5, integer-exact
       .select(col("doc_new"), col("doc_old"),
         round(lit(1000000.0) * col("c") / col("u")).cast("long").as("jac_e6"))
-    (verified, ServeDiag(probed, paths, regPaths))
+    (verified, ServeDiag(probed, postingPaths, regPaths))
   }
 
   // ----------------------------------------------- incremental delta
@@ -334,22 +333,15 @@ object DedupIndexStore extends graft.EpochStore("dedup index", "b\\d+|docs|dels"
       val rows = postingsOf(sh, m.numBuckets)
       val affected = rows.select(col("bucket")).distinct()
         .collect().map(_.getInt(0)).toSeq.sorted
-      val readPaths = affected.flatMap(m.buckets.get).map(rel => s"$dir/$rel")
-      val oldAffected =
-        if (readPaths.nonEmpty) s.read.parquet(readPaths: _*)
-        else s.emptyDataFrame.select(lit(0).as("band"), lit(0L).as("key"),
-          lit(0L).as("doc_id"), lit(0L).as("sfull"), lit(0).as("bucket")).limit(0)
-      val merged = oldAffected
-        .select(col("band"), col("key"), col("doc_id"), col("sfull"), col("bucket"))
-        .unionByName(rows)
-      val published = publishPartitions(merged, Paths.get(dir), next, "bucket", "b")
+      val buckets = rewriteBuckets(s, dir, next, m.buckets, affected, rows.schema)(
+        _.unionByName(rows))
 
       val added = writeRegistrySegment(sh, dir, s"docs/e$next", m.docBuckets)
       // m.dels carries forward: an insert epoch keeps pending deletes
       // pending (they resolve at compact)
-      val m2 = DedupManifest(next, m.nDocs + added, m.buckets ++ published,
+      val m2 = DedupManifest(next, m.nDocs + added, buckets,
         m.docs :+ s"docs/e$next", m.dels, m.numBuckets, m.docBuckets)
-      (m2, DeltaCommit(m2, affected, readPaths))
+      (m2, DeltaCommit(m2, affected, paths(dir, affected.flatMap(m.buckets.get))))
     } finally { sh.unpersist(); () }
   }
 
@@ -395,9 +387,7 @@ object DedupIndexStore extends graft.EpochStore("dedup index", "b\\d+|docs|dels"
         require(nFound == nBatch,
           s"update batch names ${nBatch - nFound} doc_ids never indexed at $dir")
         if (m.dels.nonEmpty) {
-          val already = ids.join(
-            s.read.parquet(m.dels.map(rel => s"$dir/$rel"): _*), "doc_id")
-            .limit(1).count()
+          val already = ids.join(read(s, dir, m.dels), "doc_id").limit(1).count()
           require(already == 0L,
             s"update batch contains deleted doc_ids at $dir — a deleted " +
               "doc is re-inserted (after compact), not updated")
@@ -412,17 +402,12 @@ object DedupIndexStore extends graft.EpochStore("dedup index", "b\\d+|docs|dels"
         val affected = postingsOf(oldSh, m.numBuckets).select(col("bucket"))
           .unionByName(newPost.select(col("bucket")))
           .distinct().collect().map(_.getInt(0)).toSeq.sorted
-        val readPaths = affected.flatMap(m.buckets.get).map(rel => s"$dir/$rel")
-        val cleaned =
-          if (readPaths.nonEmpty) s.read.parquet(readPaths: _*)
-            .join(broadcast(ids.select(col("doc_id"))), Seq("doc_id"), "left_anti")
-            .select(col("band"), col("key"), col("doc_id"), col("sfull"), col("bucket"))
-          else newPost.limit(0)
-        val published = publishPartitions(
-          cleaned.unionByName(newPost), Paths.get(dir), next, "bucket", "b")
-        writeRegistrySegment(newSh, dir, s"docs/e$next", m.docBuckets): Unit
         // a bucket emptied by the update drops from the manifest
-        val m2 = DedupManifest(next, m.nDocs, (m.buckets -- affected) ++ published,
+        val buckets = rewriteBuckets(s, dir, next, m.buckets, affected, newPost.schema)(
+          _.join(broadcast(ids.select(col("doc_id"))), Seq("doc_id"), "left_anti")
+            .unionByName(newPost))
+        writeRegistrySegment(newSh, dir, s"docs/e$next", m.docBuckets): Unit
+        val m2 = DedupManifest(next, m.nDocs, buckets,
           m.docs :+ s"docs/e$next", m.dels, m.numBuckets, m.docBuckets)
         (m2, UpdateCommit(m2, affected))
       } finally { oldSh.unpersist(); () }
@@ -472,9 +457,7 @@ object DedupIndexStore extends graft.EpochStore("dedup index", "b\\d+|docs|dels"
       require(nFound == nBatch,
         s"delete batch names ${nBatch - nFound} doc_ids never indexed at $dir")
       if (m.dels.nonEmpty) {
-        val already = ids.join(
-          s.read.parquet(m.dels.map(rel => s"$dir/$rel"): _*), "doc_id")
-          .limit(1).count()
+        val already = ids.join(read(s, dir, m.dels), "doc_id").limit(1).count()
         require(already == 0L,
           s"delete batch contains doc_ids already deleted at $dir")
       }
@@ -482,16 +465,16 @@ object DedupIndexStore extends graft.EpochStore("dedup index", "b\\d+|docs|dels"
       // shingles — identical keys to the ones build/delta placed
       val affected = postingsOf(victims, m.numBuckets).select(col("bucket")).distinct()
         .collect().map(_.getInt(0)).toSeq.sorted
-      val readPaths = affected.flatMap(m.buckets.get).map(rel => s"$dir/$rel")
-      val cleaned = s.read.parquet(readPaths: _*)
-        .join(broadcast(ids.select(col("doc_id"))), Seq("doc_id"), "left_anti")
-        .select(col("band"), col("key"), col("doc_id"), col("sfull"), col("bucket"))
-      val published = publishPartitions(cleaned, Paths.get(dir), next, "bucket", "b")
-      val rel = s"dels/e$next"
-      ids.select(col("doc_id")).write.mode("overwrite").parquet(s"$dir/$rel")
       // a bucket emptied by the delete drops out of the manifest
       // entirely (published ⊆ affected)
-      val m2 = DedupManifest(next, m.nDocs - nFound, (m.buckets -- affected) ++ published,
+      val buckets = rewriteBuckets(s, dir, next, m.buckets, affected,
+          bucketSchema(s, dir, m.buckets)) { old =>
+        old.join(broadcast(ids.select(col("doc_id"))), Seq("doc_id"), "left_anti")
+          .select(col("band"), col("key"), col("doc_id"), col("sfull"), col("bucket"))
+      }
+      val rel = s"dels/e$next"
+      ids.select(col("doc_id")).write.mode("overwrite").parquet(path(dir, rel))
+      val m2 = DedupManifest(next, m.nDocs - nFound, buckets,
         m.docs, m.dels :+ rel, m.numBuckets, m.docBuckets)
       (m2, DeleteCommit(m2, nFound, affected))
     } finally { victims.unpersist(); () }
@@ -514,16 +497,14 @@ object DedupIndexStore extends graft.EpochStore("dedup index", "b\\d+|docs|dels"
       (newBuckets != m.numBuckets || newDocBuckets != m.docBuckets),
       s"reshard wants new positive fan-outs, got ($newBuckets, $newDocBuckets) " +
         s"(index at (${m.numBuckets}, ${m.docBuckets}))")
-    val rehashed = s.read.parquet(m.buckets.values.map(rel => s"$dir/$rel").toSeq: _*)
-      .select(col("band"), col("key"), col("doc_id"), col("sfull"))
-      .withColumn("bucket", bandBucket(col("band"), col("key"), newBuckets))
-    val published = publishPartitions(rehashed, Paths.get(dir), next, "bucket", "b")
+    val buckets = rewriteBuckets(s, dir, next, m.buckets, m.buckets.keys,
+        bucketSchema(s, dir, m.buckets)) { old =>
+      old.withColumn("bucket", bandBucket(col("band"), col("key"), newBuckets))
+    }
     val rel = s"docs/e$next"
-    latestRegistryRows(s, dir, m, 0 until m.docBuckets, None)
-      .withColumn("dbucket", docBucket(col("doc_id"), newDocBuckets))
-      .repartition(col("dbucket"))
-      .write.mode("overwrite").partitionBy("dbucket").parquet(s"$dir/$rel")
-    val m2 = DedupManifest(next, m.nDocs, published, Seq(rel), m.dels,
+    writeRegistrySegment(latestRegistryRows(s, dir, m, 0 until m.docBuckets, None),
+      dir, rel, newDocBuckets): Unit
+    val m2 = DedupManifest(next, m.nDocs, buckets, Seq(rel), m.dels,
       newBuckets, newDocBuckets)
     (m2, m2)
   }
@@ -550,26 +531,20 @@ object DedupIndexStore extends graft.EpochStore("dedup index", "b\\d+|docs|dels"
   def compact(s: SparkSession, dir: String): DedupManifest = advance(dir) { (m, next) =>
     val regPaths = registryLeafPaths(dir, m, 0 until m.docBuckets)
     require(regPaths.nonEmpty, s"nothing to compact at $dir (empty registry)")
-    val dels =
-      if (m.dels.isEmpty)
-        s.emptyDataFrame.select(lit(0L).as("doc_id")).limit(0)
-      else s.read.parquet(m.dels.map(rel => s"$dir/$rel"): _*)
-    // leaf-dir reads drop the dbucket partition value, so it is
-    // recomputed from doc_id (the same deterministic hash that placed
-    // the row); the repartition keeps the rewrite at one file per
-    // leaf dir instead of tasks × fan-out
+    val live = latestRegistryRows(s, dir, m, 0 until m.docBuckets, None)
+    // leaf-dir reads drop the dbucket partition value, so the segment
+    // writer recomputes it from doc_id (the same deterministic hash
+    // that placed the row)
     val rel = s"docs/e$next"
     // last-wins squash: update-superseded rows die here along with the
     // delete-marked ones — the post-compact registry is one live row
     // per doc, exactly what a fresh build would write
-    latestRegistryRows(s, dir, m, 0 until m.docBuckets, None)
-      .join(broadcast(dels), Seq("doc_id"), "left_anti")
-      .withColumn("dbucket", docBucket(col("doc_id"), m.docBuckets))
-      .repartition(col("dbucket"))
-      .write.mode("overwrite").partitionBy("dbucket").parquet(s"$dir/$rel")
+    val n = writeRegistrySegment(
+      if (m.dels.isEmpty) live
+      else live.join(broadcast(read(s, dir, m.dels)), Seq("doc_id"), "left_anti"),
+      dir, rel, m.docBuckets)
     // the squashed registry must land exactly on the incrementally
     // maintained doc count — a mismatch means a commit drifted
-    val n = s.read.parquet(s"$dir/$rel").count()
     require(n == m.nDocs,
       s"compaction recomputed nDocs $n != manifest ${m.nDocs} at $dir")
     val m2 = DedupManifest(next, m.nDocs, m.buckets, Seq(rel), Nil,

@@ -159,27 +159,20 @@ object MvStore extends graft.EpochStore("MV store", "b\\d+") {
     * merge law), republished as new immutable epoch dirs, and flipped
     * in atomically; untouched buckets carry forward by reference.
     * Work is delta-proportional + the affected buckets' size — never
-    * the history. */
+    * the history. The re-reduce groups by the bucket column among its
+    * keys, so it runs on the publish's one bucket exchange. */
   def refresh(s: SparkSession, dir: String,
               deltaPartials: DataFrame): RefreshCommit = advance(dir) { (m, next) =>
-    val delta = withBucket(deltaPartials, m.numBuckets)
+    val delta = withBucket(deltaPartials, m.numBuckets).select(partialCols(m).map(col): _*)
     // ≤ NumBuckets driver-side ints — the partition list, not data
     val affected = delta.select(col("bucket")).distinct()
       .collect().map(_.getInt(0)).toSeq.sorted
-    val readPaths = affected.flatMap(m.buckets.get).map(rel => s"$dir/$rel")
-    val old =
-      if (readPaths.nonEmpty) s.read.parquet(readPaths: _*)
-      else delta.limit(0)
-    val cols = partialCols(m)
     val merges = mergeExprs(m)
-    val merged = old.select(cols.map(col): _*)
-      .unionByName(delta.select(cols.map(col): _*))
-      .groupBy(("m" +: m.keys :+ "bucket").map(col): _*)
-      .agg(merges.head, merges.tail: _*)
-    val m2 = MvManifest(next, m.keys, m.aggs,
-      m.buckets ++ publishPartitions(merged, Paths.get(dir), next, "bucket", "b"),
-      m.kinds, m.types, m.numBuckets)
-    (m2, RefreshCommit(m2, affected, readPaths))
+    val buckets = rewriteBuckets(s, dir, next, m.buckets, affected, delta.schema,
+      _.groupBy(("m" +: m.keys :+ "bucket").map(col): _*)
+        .agg(merges.head, merges.tail: _*))(_.unionByName(delta))
+    val m2 = MvManifest(next, m.keys, m.aggs, buckets, m.kinds, m.types, m.numBuckets)
+    (m2, RefreshCommit(m2, affected, paths(dir, affected.flatMap(m.buckets.get))))
   }
 
   /** RESHARD to a new month-bucket fan-out behind ONE flip — the
@@ -196,12 +189,11 @@ object MvStore extends graft.EpochStore("MV store", "b\\d+") {
               newBuckets: Int): MvManifest = advance(dir) { (m, next) =>
     require(newBuckets > 0 && newBuckets != m.numBuckets,
       s"reshard wants a new positive fan-out, got $newBuckets (view at ${m.numBuckets})")
-    val rehashed = withBucket(
-      s.read.parquet(m.buckets.values.map(rel => s"$dir/$rel").toSeq: _*)
-        .select((("m" +: m.keys) ++ m.aggs).map(col): _*), newBuckets)
-    val m2 = MvManifest(next, m.keys, m.aggs,
-      publishPartitions(rehashed, Paths.get(dir), next, "bucket", "b"),
-      m.kinds, m.types, newBuckets)
+    val buckets = rewriteBuckets(s, dir, next, m.buckets, m.buckets.keys,
+      bucketSchema(s, dir, m.buckets)) { old =>
+      withBucket(old.select((("m" +: m.keys) ++ m.aggs).map(col): _*), newBuckets)
+    }
+    val m2 = MvManifest(next, m.keys, m.aggs, buckets, m.kinds, m.types, newBuckets)
     (m2, m2)
   }
 
@@ -212,10 +204,9 @@ object MvStore extends graft.EpochStore("MV store", "b\\d+") {
     * sort). */
   private def reduceBuckets(s: SparkSession, dir: String, m: MvManifest,
                             rels: Iterable[String]): DataFrame = {
-    val paths = rels.toSeq.sorted.map(rel => s"$dir/$rel")
-    require(paths.nonEmpty, "reduceBuckets over zero buckets")
+    require(rels.nonEmpty, "reduceBuckets over zero buckets")
     val merges = mergeExprs(m)
-    s.read.parquet(paths: _*)
+    read(s, dir, rels.toSeq.sorted)
       .groupBy(m.keys.map(col): _*)
       .agg(merges.head, merges.tail: _*)
   }
@@ -343,7 +334,7 @@ object MvStore extends graft.EpochStore("MV store", "b\\d+") {
     // project sums as-is and sketches to their estimates
     def visible(m: MvManifest, rels: Iterable[String]): DataFrame = {
       val merges = mergeExprs(m)
-      s.read.parquet(rels.toSeq.sorted.map(rel => s"$dir/$rel"): _*)
+      read(s, dir, rels.toSeq.sorted)
         .groupBy(("m" +: m.keys).map(col): _*)
         .agg(merges.head, merges.tail: _*)
         .select(("m" +: m.keys).map(col) ++ m.aggs.zip(kindsOf(m)).map {

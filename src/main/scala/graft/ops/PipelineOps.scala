@@ -146,7 +146,7 @@ object PipelineOps {
                                      evalSh: DataFrame, dir: String): DataFrame = {
     val m = TextIndexStore.open(dir)
     val shTok = evalSh.select(col("s8"), explode(split(col("s8"), " ")).as("tok"))
-    val stats = s.read.parquet(s"$dir/${m.stats}")
+    val stats = TextIndexStore.read(s, dir, Seq(m.stats))
     val rare = shTok.join(stats, Seq("tok"))
       .groupBy(col("s8"))
       .agg(min(struct(col("df"), col("tok"))).getField("tok").as("rtok"))
@@ -160,10 +160,9 @@ object PipelineOps {
         StructType(Seq(StructField("doc_id", LongType),
           StructField("n_hits", LongType))))
     } else {
-      val bucketPaths = rareRows.map(_._2).distinct.sorted
-        .flatMap(m.buckets.get).map(rel => s"$dir/$rel")
       val rtoks = s.createDataFrame(rareRows.toSeq).toDF("rtok", "b").select("rtok")
-      val candDocs = s.read.parquet(bucketPaths: _*)
+      val candDocs = TextIndexStore.read(s, dir,
+          rareRows.map(_._2).distinct.sorted.flatMap(m.buckets.get))
         .join(broadcast(rtoks), col("tok") === col("rtok"), "left_semi")
         .select(col("doc_id")).distinct()
       val candSh = docs.join(candDocs, Seq("doc_id"), "left_semi")

@@ -174,12 +174,16 @@ object TextIndexStore extends graft.EpochStore("text index", "b\\d+|stats|docs|d
     base.withColumn("bucket",
       pmod(xxhash64(col("tok")), lit(fanOut.toLong)).cast("int"))
 
-  /** (doc_id, tok, tf, dl, bucket) postings of a corpus slice. */
+  /** (tok, doc_id, tf, dl, bucket) postings of a corpus slice, in the
+    * column order the bucket dirs store. */
   private def postingsOf(docs: DataFrame, fanOut: Int): DataFrame =
-    withBucket(postingsBase(docs), fanOut)
+    posting(withBucket(postingsBase(docs), fanOut))
+
+  private def posting(rows: DataFrame): DataFrame =
+    rows.select(col("tok"), col("doc_id"), col("tf"), col("dl"), col("bucket"))
 
   private def writeComponent(df: DataFrame, dir: String, rel: String): Unit =
-    df.write.mode("overwrite").parquet(s"$dir/$rel")
+    df.write.mode("overwrite").parquet(path(dir, rel))
 
   /** One registry segment from a batch's posting rows: per doc its
     * length AND the distinct posting buckets its tokens hash into —
@@ -203,7 +207,7 @@ object TextIndexStore extends graft.EpochStore("text index", "b\\d+|stats|docs|d
     * regenerates the column, upgrading a legacy index). */
   private def registryView(s: SparkSession, dir: String, m: TextManifest): DataFrame = {
     val segs = m.docs.zipWithIndex.map { case (rel, i) =>
-      val seg = s.read.parquet(s"$dir/$rel")
+      val seg = read(s, dir, Seq(rel))
       val withBuckets =
         if (seg.columns.contains("buckets")) seg
         else seg.withColumn("buckets", lit(null).cast("array<int>"))
@@ -235,16 +239,14 @@ object TextIndexStore extends graft.EpochStore("text index", "b\\d+|stats|docs|d
       if (numBuckets == SizeDerived) sizedBuckets(base.count()) else numBuckets
     val rows = withBucket(base, fanOut)
     try {
-      val published = publishPartitions(
-        rows.select(col("tok"), col("doc_id"), col("tf"), col("dl"), col("bucket")),
-        Paths.get(dir), 0L, "bucket", "b")
+      val published = publishPartitions(posting(rows), Paths.get(dir), 0L, "bucket", "b")
       val stats = rows.groupBy(col("tok")).agg(count(lit(1)).cast("long").as("df"))
       writeComponent(stats, dir, "stats/e0")
       val reg = registrySegment(rows)
       writeComponent(reg, dir, "docs/e0")
       // scalars fold the just-written registry parquet (n_docs rows,
       // a metadata-sized read) — not a second groupBy over postings
-      val scalars = docs.sparkSession.read.parquet(s"$dir/docs/e0")
+      val scalars = read(docs.sparkSession, dir, Seq("docs/e0"))
         .agg(count(lit(1)).as("n"), sum(col("dl")).as("s")).head
       val m = TextManifest(0L, scalars.getLong(0), scalars.getLong(1),
         published, "stats/e0", Seq("docs/e0"),
@@ -260,7 +262,7 @@ object TextIndexStore extends graft.EpochStore("text index", "b\\d+|stats|docs|d
     * (df desc, tok — the same derivation [[TextOps.t_bm25]] uses),
     * read from the persisted vocab stats: (tok, df, bucket). */
   private def queryTerms(s: SparkSession, dir: String, m: TextManifest): Seq[(String, Long, Int)] =
-    s.read.parquet(s"$dir/${m.stats}")
+    read(s, dir, Seq(m.stats))
       .withColumn("bucket", pmod(xxhash64(col("tok")), lit(m.numBuckets.toLong)).cast("int"))
       .orderBy(desc("df"), col("tok")).limit(TextOps.BmQueryK)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getInt(2))).toSeq
@@ -289,7 +291,7 @@ object TextIndexStore extends graft.EpochStore("text index", "b\\d+|stats|docs|d
   def bm25ScoresFor(s: SparkSession, dir: String, m: TextManifest,
                     qTerms: Seq[String]): DataFrame = {
     require(qTerms.nonEmpty, "bm25ScoresFor wants at least one query term")
-    val terms = s.read.parquet(s"$dir/${m.stats}")
+    val terms = read(s, dir, Seq(m.stats))
       .filter(col("tok").isin(qTerms: _*))
       .withColumn("bucket",
         pmod(xxhash64(col("tok")), lit(m.numBuckets.toLong)).cast("int"))
@@ -310,9 +312,7 @@ object TextIndexStore extends graft.EpochStore("text index", "b\\d+|stats|docs|d
     }
     val termRows = terms.map { case (t, df, _) => (t, df) }
     val termDf = s.createDataFrame(termRows).toDF("tok", "df")
-    val bucketPaths = terms.map(_._3).distinct.sorted
-      .flatMap(m.buckets.get).map(rel => s"$dir/$rel")
-    val live = s.read.parquet(bucketPaths: _*)
+    val live = read(s, dir, terms.map(_._3).distinct.sorted.flatMap(m.buckets.get))
       .filter(col("tok").isin(terms.map(_._1): _*))
     // tombstoned docs drop out via a broadcast anti-join (the delete
     // set is batch-sized, never corpus-sized); df stays the stale
@@ -321,7 +321,7 @@ object TextIndexStore extends graft.EpochStore("text index", "b\\d+|stats|docs|d
     val surviving =
       if (m.dels.isEmpty) live
       else live.join(
-        broadcast(s.read.parquet(m.dels.map(rel => s"$dir/$rel"): _*)),
+        broadcast(read(s, dir, m.dels)),
         Seq("doc_id"), "left_anti")
     val hits = surviving.join(broadcast(termDf), "tok")
     // manifest scalars enter as constant-folded literal columns; the
@@ -353,7 +353,7 @@ object TextIndexStore extends graft.EpochStore("text index", "b\\d+|stats|docs|d
     val rows = postingsOf(newDocs, m.numBuckets).cache()
     try {
       // insert-only contract, checked against the persisted registry
-      val reg = s.read.parquet(m.docs.map(rel => s"$dir/$rel"): _*)
+      val reg = read(s, dir, m.docs)
       val clash = rows.select(col("doc_id")).distinct()
         .join(reg, "doc_id").limit(1).count()
       require(clash == 0L,
@@ -361,21 +361,13 @@ object TextIndexStore extends graft.EpochStore("text index", "b\\d+|stats|docs|d
 
       val affected = rows.select(col("bucket")).distinct()
         .collect().map(_.getInt(0)).toSeq.sorted
-      val readPaths = affected.flatMap(m.buckets.get).map(rel => s"$dir/$rel")
       // bucket is a stored posting column (kept through the partition
       // rename), so the merge needs no re-hash
-      val oldAffected =
-        if (readPaths.nonEmpty) s.read.parquet(readPaths: _*)
-        else s.emptyDataFrame.select(lit("").as("tok"), lit(0L).as("doc_id"),
-          lit(0L).as("tf"), lit(0L).as("dl"), lit(0).as("bucket")).limit(0)
-      val merged = oldAffected
-        .select(col("tok"), col("doc_id"), col("tf"), col("dl"), col("bucket"))
-        .unionByName(rows
-          .select(col("tok"), col("doc_id"), col("tf"), col("dl"), col("bucket")))
-      val published = publishPartitions(merged, Paths.get(dir), next, "bucket", "b")
+      val buckets = rewriteBuckets(s, dir, next, m.buckets, affected, rows.schema)(
+        _.unionByName(rows))
 
       // stats merge: disjoint docs ⇒ df adds exactly
-      val statsNew = s.read.parquet(s"$dir/${m.stats}")
+      val statsNew = read(s, dir, Seq(m.stats))
         .unionByName(rows.groupBy(col("tok")).agg(count(lit(1)).cast("long").as("df")))
         .groupBy(col("tok")).agg(sum(col("df")).as("df"))
       writeComponent(statsNew, dir, s"stats/e$next")
@@ -386,9 +378,9 @@ object TextIndexStore extends graft.EpochStore("text index", "b\\d+|stats|docs|d
       // m.dels carries forward: an insert epoch must not resurrect
       // tombstoned docs
       val m2 = TextManifest(next, m.nDocs + delta.getLong(0),
-        m.sumDl + delta.getLong(1), m.buckets ++ published, s"stats/e$next",
+        m.sumDl + delta.getLong(1), buckets, s"stats/e$next",
         m.docs :+ s"docs/e$next", m.dels, m.numBuckets)
-      (m2, DeltaCommit(m2, affected, readPaths))
+      (m2, DeltaCommit(m2, affected, paths(dir, affected.flatMap(m.buckets.get))))
     } finally { rows.unpersist(); () }
   }
 
@@ -440,8 +432,7 @@ object TextIndexStore extends graft.EpochStore("text index", "b\\d+|stats|docs|d
         require(nFound == nBatch,
           s"update batch names ${nBatch - nFound} doc_ids never indexed at $dir")
         if (m.dels.nonEmpty) {
-          val tombstoned = ids.join(
-            s.read.parquet(m.dels.map(rel => s"$dir/$rel"): _*), "doc_id")
+          val tombstoned = ids.join(read(s, dir, m.dels), "doc_id")
             .limit(1).count()
           require(tombstoned == 0L,
             s"update batch contains tombstoned doc_ids at $dir — a deleted " +
@@ -463,48 +454,38 @@ object TextIndexStore extends graft.EpochStore("text index", "b\\d+|stats|docs|d
         val newBuckets = rows.select(col("bucket")).distinct()
           .collect().map(_.getInt(0))
         val affected = (oldBuckets ++ newBuckets).distinct.sorted.toSeq
-        val readPaths = affected.flatMap(m.buckets.get).map(rel => s"$dir/$rel")
         val updIds = broadcast(found.select(col("doc_id")))
-        val oldAffected =
-          if (readPaths.nonEmpty) s.read.parquet(readPaths: _*)
-            .select(col("tok"), col("doc_id"), col("tf"), col("dl"), col("bucket"))
-          else rows.select(col("tok"), col("doc_id"), col("tf"), col("dl"),
-            col("bucket")).limit(0)
+        // per affected bucket: old postings minus the updated docs', plus
+        // the new versions'. A bucket whose every posting belonged to
+        // updated docs comes back EMPTY and leaves the map (a fresh
+        // build over the updated corpus would not have it)
+        val buckets = rewriteBuckets(s, dir, next, m.buckets, affected, rows.schema)(
+          _.join(updIds, Seq("doc_id"), "left_anti").unionByName(rows))
         // the replaced postings — recovered from the affected buckets
         // themselves (the registry map guarantees they all live here)
-        val replaced = oldAffected.join(updIds, Seq("doc_id"), "left_semi").cache()
-        try {
-          val kept = oldAffected.join(updIds, Seq("doc_id"), "left_anti")
-          val merged = kept.unionByName(rows
-            .select(col("tok"), col("doc_id"), col("tf"), col("dl"), col("bucket")))
-          val published = publishPartitions(merged, Paths.get(dir), next, "bucket", "b")
-          // a bucket whose every posting belonged to updated docs can
-          // come back EMPTY — it must leave the map (a fresh build
-          // over the updated corpus would not have it), not keep
-          // pointing at the stale pre-update epoch dir
-          val buckets = (m.buckets -- affected) ++ published
+        val replaced = read(s, dir, affected.flatMap(m.buckets.get), rows.schema)
+          .join(updIds, Seq("doc_id"), "left_semi")
 
-          // stats: df −(replaced postings' tokens) +(new postings');
-          // posting rows are unique per (tok, doc), so each count is
-          // exactly the df movement. df = 0 ⇒ token leaves the vocab.
-          val statsNew = s.read.parquet(s"$dir/${m.stats}")
-            .unionByName(replaced.groupBy(col("tok"))
-              .agg((-count(lit(1))).cast("long").as("df")))
-            .unionByName(rows.groupBy(col("tok"))
-              .agg(count(lit(1)).cast("long").as("df")))
-            .groupBy(col("tok")).agg(sum(col("df")).as("df"))
-            .filter(col("df") > 0L)
-          writeComponent(statsNew, dir, s"stats/e$next")
-          val regSeg = registrySegment(rows)
-          writeComponent(regSeg, dir, s"docs/e$next")
+        // stats: df −(replaced postings' tokens) +(new postings');
+        // posting rows are unique per (tok, doc), so each count is
+        // exactly the df movement. df = 0 ⇒ token leaves the vocab.
+        val statsNew = read(s, dir, Seq(m.stats))
+          .unionByName(replaced.groupBy(col("tok"))
+            .agg((-count(lit(1))).cast("long").as("df")))
+          .unionByName(rows.groupBy(col("tok"))
+            .agg(count(lit(1)).cast("long").as("df")))
+          .groupBy(col("tok")).agg(sum(col("df")).as("df"))
+          .filter(col("df") > 0L)
+        writeComponent(statsNew, dir, s"stats/e$next")
+        val regSeg = registrySegment(rows)
+        writeComponent(regSeg, dir, s"docs/e$next")
 
-          val dlBefore = found.agg(coalesce(sum(col("dl")), lit(0L))).head.getLong(0)
-          val dlAfter = regSeg.agg(coalesce(sum(col("dl")), lit(0L))).head.getLong(0)
-          val m2 = TextManifest(next, m.nDocs, m.sumDl - dlBefore + dlAfter,
-            buckets, s"stats/e$next", m.docs :+ s"docs/e$next", m.dels,
-            m.numBuckets)
-          (m2, UpdateCommit(m2, affected, dlBefore, dlAfter))
-        } finally { replaced.unpersist(); () }
+        val dlBefore = found.agg(coalesce(sum(col("dl")), lit(0L))).head.getLong(0)
+        val dlAfter = regSeg.agg(coalesce(sum(col("dl")), lit(0L))).head.getLong(0)
+        val m2 = TextManifest(next, m.nDocs, m.sumDl - dlBefore + dlAfter,
+          buckets, s"stats/e$next", m.docs :+ s"docs/e$next", m.dels,
+          m.numBuckets)
+        (m2, UpdateCommit(m2, affected, dlBefore, dlAfter))
       } finally { found.unpersist(); () }
     } finally { rows.unpersist(); () }
   }
@@ -546,14 +527,12 @@ object TextIndexStore extends graft.EpochStore("text index", "b\\d+|stats|docs|d
       require(nFound == nBatch,
         s"delete batch names ${nBatch - nFound} doc_ids never indexed at $dir")
       if (m.dels.nonEmpty) {
-        val already = ids.join(
-          s.read.parquet(m.dels.map(rel => s"$dir/$rel"): _*), "doc_id")
-          .limit(1).count()
+        val already = ids.join(read(s, dir, m.dels), "doc_id").limit(1).count()
         require(already == 0L,
           s"delete batch contains doc_ids already tombstoned at $dir")
       }
       val rel = s"dels/e$next"
-      found.select(col("doc_id")).write.mode("overwrite").parquet(s"$dir/$rel")
+      writeComponent(found.select(col("doc_id")), dir, rel)
       val dropped = found.agg(sum(col("dl")).as("s")).head.getLong(0)
       val m2 = TextManifest(next, m.nDocs - nFound, m.sumDl - dropped,
         m.buckets, m.stats, m.docs, m.dels :+ rel, m.numBuckets)
@@ -580,18 +559,14 @@ object TextIndexStore extends graft.EpochStore("text index", "b\\d+|stats|docs|d
               newBuckets: Int): TextManifest = advance(dir) { (m, next) =>
     require(newBuckets > 0 && newBuckets != m.numBuckets,
       s"reshard wants a new positive fan-out, got $newBuckets (index at ${m.numBuckets})")
-    val rehashed = s.read.parquet(m.buckets.values.map(rel => s"$dir/$rel").toSeq: _*)
-      .select(col("tok"), col("doc_id"), col("tf"), col("dl"))
-      .withColumn("bucket",
-        pmod(xxhash64(col("tok")), lit(newBuckets.toLong)).cast("int"))
-      .cache()
-    try {
-      val published = publishPartitions(rehashed, Paths.get(dir), next, "bucket", "b")
-      writeComponent(registrySegment(rehashed), dir, s"docs/e$next")
-      val m2 = TextManifest(next, m.nDocs, m.sumDl, published, m.stats,
-        Seq(s"docs/e$next"), m.dels, newBuckets)
-      (m2, m2)
-    } finally { rehashed.unpersist(); () }
+    val schema = bucketSchema(s, dir, m.buckets)
+    val buckets = rewriteBuckets(s, dir, next, m.buckets, m.buckets.keys, schema)(old =>
+      withBucket(old.drop("bucket"), newBuckets))
+    // the registry's doc→buckets map, from the re-hashed postings
+    writeComponent(registrySegment(read(s, dir, buckets.values, schema)), dir, s"docs/e$next")
+    val m2 = TextManifest(next, m.nDocs, m.sumDl, buckets, m.stats,
+      Seq(s"docs/e$next"), m.dels, newBuckets)
+    (m2, m2)
   }
 
   /** PURGE compaction — the segment merge that makes tombstones
@@ -606,35 +581,27 @@ object TextIndexStore extends graft.EpochStore("text index", "b\\d+|stats|docs|d
     * Old epochs keep their own manifests, so retained snapshots still
     * time-travel across the purge. */
   def compact(s: SparkSession, dir: String): TextManifest = advance(dir) { (m, next) =>
-    val dels =
-      if (m.dels.isEmpty)
-        s.emptyDataFrame.select(lit(0L).as("doc_id")).limit(0)
-      else s.read.parquet(m.dels.map(rel => s"$dir/$rel"): _*)
-    val surviving = s.read.parquet(m.buckets.values.map(rel => s"$dir/$rel").toSeq: _*)
-      .join(broadcast(dels), Seq("doc_id"), "left_anti")
-      .cache()
-    try {
-      val published = publishPartitions(
-        surviving.select(col("tok"), col("doc_id"), col("tf"), col("dl"), col("bucket")),
-        Paths.get(dir), next, "bucket", "b")
-      val stats = surviving.groupBy(col("tok")).agg(count(lit(1)).cast("long").as("df"))
-      writeComponent(stats, dir, s"stats/e$next")
-      // registry squash, recomputed from the surviving postings (not
-      // the old segments): collapses update-epoch duplicates to the
-      // live row and REGENERATES the doc→buckets map — compacting a
-      // legacy (pre-update-support) index upgrades it in passing
-      val reg = registrySegment(surviving)
-      writeComponent(reg, dir, s"docs/e$next")
-      val scalars = s.read.parquet(s"$dir/docs/e$next")
-        .agg(count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L)).as("s")).head
-      // the recomputed scalars must land exactly on the incrementally
-      // maintained ones — a mismatch means a delete commit drifted
-      require(scalars.getLong(0) == m.nDocs && scalars.getLong(1) == m.sumDl,
-        s"purge recomputed scalars (${scalars.getLong(0)}, ${scalars.getLong(1)}) != " +
-          s"manifest (${m.nDocs}, ${m.sumDl}) at $dir")
-      val m2 = TextManifest(next, m.nDocs, m.sumDl, published, s"stats/e$next",
-        Seq(s"docs/e$next"), Nil, m.numBuckets)
-      (m2, m2)
-    } finally { surviving.unpersist(); () }
+    val schema = bucketSchema(s, dir, m.buckets)
+    val buckets = rewriteBuckets(s, dir, next, m.buckets, m.buckets.keys, schema)(old =>
+      if (m.dels.isEmpty) old
+      else posting(old.join(broadcast(read(s, dir, m.dels)), Seq("doc_id"), "left_anti")))
+    val surviving = read(s, dir, buckets.values, schema)
+    val stats = surviving.groupBy(col("tok")).agg(count(lit(1)).cast("long").as("df"))
+    writeComponent(stats, dir, s"stats/e$next")
+    // registry squash, recomputed from the surviving postings (not
+    // the old segments): collapses update-epoch duplicates to the
+    // live row and REGENERATES the doc→buckets map — compacting a
+    // legacy (pre-update-support) index upgrades it in passing
+    writeComponent(registrySegment(surviving), dir, s"docs/e$next")
+    val scalars = read(s, dir, Seq(s"docs/e$next"))
+      .agg(count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L)).as("s")).head
+    // the recomputed scalars must land exactly on the incrementally
+    // maintained ones — a mismatch means a delete commit drifted
+    require(scalars.getLong(0) == m.nDocs && scalars.getLong(1) == m.sumDl,
+      s"purge recomputed scalars (${scalars.getLong(0)}, ${scalars.getLong(1)}) != " +
+        s"manifest (${m.nDocs}, ${m.sumDl}) at $dir")
+    val m2 = TextManifest(next, m.nDocs, m.sumDl, buckets, s"stats/e$next",
+      Seq(s"docs/e$next"), Nil, m.numBuckets)
+    (m2, m2)
   }
 }

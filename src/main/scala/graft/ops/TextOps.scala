@@ -1066,7 +1066,7 @@ object TextOps {
   lazy val t_bm25_query: Q = (s, d) => {
     val dir = persistedTextIndexDir(s, d)
     val m = TextIndexStore.open(dir)
-    val qTerms = s.read.parquet(s"$dir/${m.stats}")
+    val qTerms = TextIndexStore.read(s, dir, Seq(m.stats))
       .orderBy(desc("df"), col("tok")).limit(BmQueryK * 2)
       .collect().map(_.getString(0)).drop(BmQueryK).toSeq
     TextIndexStore.bm25ScoresFor(s, dir, m, qTerms)

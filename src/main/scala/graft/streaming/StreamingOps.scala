@@ -1,7 +1,7 @@
 package graft.streaming
 
 import java.util.UUID
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, Trigger}
 import org.apache.spark.sql.types._
@@ -686,7 +686,17 @@ object StreamingOps {
     type M = UpsertManifest
     protected def manifestType = manifest[M]
     protected def referenced(m: UpsertManifest) = m.buckets.values
+
+    /** Every upsert commit: flip to `m`, then retention GC. */
+    def flip(dir: String, m: UpsertManifest): Unit = {
+      commit(dir, m)
+      gc(dir, m.epoch, RetainEpochs)
+    }
   }
+
+  /** A state row's bucket under fan-out `n`: `pmod`, so a negative key
+    * lands in a `b<K>` dir like every other store's rows. */
+  private def upsertBucket(n: Int): Column = pmod(col("user_id"), lit(n.toLong)).cast("int")
 
   /** The state table's columns: the key, then the last-write-wins
     * data columns in comparator order (the evolve table appends
@@ -699,20 +709,14 @@ object StreamingOps {
   private def lwwCols: Seq[Column] = Seq(unix_micros(col("ts")).as("tus"),
     col("event_type"), round(col("value") * 100).cast("long").as("cents"))
 
-  /** The state table's rows at manifest `m` — the buckets `buckets`
-    * selects, all by default. THE one place bucket paths are resolved
-    * from a manifest. The read takes `schema` as given and infers
-    * nothing from footers: a file written before a column joined the
-    * table reads it as null, and a zero-bucket epoch (a first EMPTY
+  /** The state table's rows at manifest `m`. The read takes `schema`
+    * as given and infers nothing from footers: a file written before a
+    * column joined the table reads it as null, the stored `bucket`
+    * column is not read, and a zero-bucket epoch (a first EMPTY
     * micro-batch commits one) reads as a typed empty table. */
   private def stateRows(s: SparkSession, dir: String, m: UpsertManifest,
-                        schema: StructType = UpsertSchema,
-                        buckets: Int => Boolean = _ => true): DataFrame = {
-    val paths = m.buckets.toSeq.filter(b => buckets(b._1)).sortBy(_._1)
-      .map { case (_, rel) => s"$dir/$rel" }
-    if (paths.isEmpty) s.createDataFrame(java.util.Collections.emptyList[Row](), schema)
-    else s.read.schema(schema).parquet(paths: _*)
-  }
+                        schema: StructType = UpsertSchema): DataFrame =
+    UpsertTable.read(s, dir, m.buckets.toSeq.sortBy(_._1).map(_._2), schema)
 
   /** The served shape of the state table, then `extra`. */
   private def lastState(rows: DataFrame, extra: Column*): DataFrame =
@@ -767,7 +771,8 @@ object StreamingOps {
     * buckets the batch touches, merges, and commits exactly those
     * buckets as NEW immutable epoch directories behind one atomic
     * manifest flip (see [[UpsertManifest]]). The state table is plain
-    * parquet bucketed by `user_id % [[UpsertBuckets]]` — no table
+    * parquet bucketed by `pmod(user_id, numBuckets)`, the fan-out its
+    * manifest records ([[UpsertBuckets]] by default) — no table
     * format required, yet each commit touches only the affected
     * buckets, which is what makes streaming upsert viable on a 100 TB
     * keyed table (a full-table rewrite per micro-batch is not) — and
@@ -871,28 +876,25 @@ object StreamingOps {
     * table, behind [[mergeUpsertBatch]] and the evolve drain: `rows`
     * is the batch projected to `user_id` plus the data columns in
     * comparator order, and its schema is the table's. LWW-reduce the
-    * batch, read back only the buckets it touches, merge, commit
-    * exactly one epoch. Commit protocol, in order:
-    *   1. stage: one job writes every affected bucket's merged rows
-    *      under .stage-eN/bucket=B/
-    *   2. publish: per-bucket rename into the immutable bB/eN location
-    *      (metadata-only moves)
-    *   3. flip: write the immutable per-epoch manifest, then atomically
-    *      replace the _manifest.json pointer
-    *   4. gc: drop manifests + epoch dirs older than the retention
-    *      horizon (epochs inside it stay readable as snapshots via
-    *      readUpsertStateAt — time travel)
+    * batch, then rewrite only the buckets it touches through the
+    * stores' one bucket rewrite ([[graft.EpochStore.rewriteBuckets]]:
+    * read them, cluster old ∪ delta by bucket, re-reduce, stage,
+    * rename into new immutable `bB/eN` dirs) and flip one epoch, then
+    * GC: epochs inside the retention horizon stay readable as
+    * snapshots via readUpsertStateAt (time travel).
     * No localCheckpoint needed: the merge reads OLD epoch dirs and
     * writes NEW ones — never a read-modify-write on the same files. A
-    * crash before 3 leaves the manifest pointing at the old consistent
-    * epoch set (stale stage/epoch dirs are unreferenced garbage,
-    * overwritten by the checkpoint's idempotent batch replay); after 3
-    * the new set is live. An EMPTY batch still commits an epoch — a
-    * manifest flip with unchanged bucket pointers, zero data moved —
-    * because callers that pin epochs to batch ids ([[runDualSink]]'s
-    * exactly-once protocol) would otherwise permanently misalign every
-    * later batch's pin the first time a micro-batch delivers no rows.
-    * Returns the committed epoch. */
+    * crash before the flip leaves the manifest pointing at the old
+    * consistent epoch set (stale stage/epoch dirs are unreferenced
+    * garbage, overwritten by the checkpoint's idempotent batch
+    * replay); after it the new set is live. An EMPTY batch still
+    * commits an epoch — a manifest flip with unchanged bucket
+    * pointers, zero data moved — because callers that pin epochs to
+    * batch ids ([[runDualSink]]'s exactly-once protocol) would
+    * otherwise permanently misalign every later batch's pin the first
+    * time a micro-batch delivers no rows. The schema of the rows never
+    * changes the protocol, which is what makes evolution a data-path
+    * concern only. Returns the committed epoch. */
   private def mergeLww(sb: SparkSession, stateDirPath: String, rows: DataFrame,
                        numBuckets: Int): Long = {
     // the fan-out is a PERSISTED table parameter: the manifest's value
@@ -907,7 +909,7 @@ object StreamingOps {
         UpsertTable.open(stateDirPath)
       else UpsertManifest(-1L, Map.empty, numBuckets)
     val newEpoch = man.epoch + 1
-    val bucket = (col("user_id") % man.numBuckets).cast("int")
+    val bucket = upsertBucket(man.numBuckets)
     val dataCols = rows.columns.toSeq.filter(_ != "user_id")
     def reduceKeys(df: DataFrame): DataFrame =
       df.groupBy(col("bucket"), col("user_id"))
@@ -926,69 +928,22 @@ object StreamingOps {
     try {
       // ≤ numBuckets driver-side ints — the partition list, not data
       val affected = delta.select("bucket").distinct().collect().map(_.getInt(0)).toSeq
-      if (affected.isEmpty) {
-        UpsertTable.commit(stateDirPath, man.copy(epoch = newEpoch))
-        UpsertTable.gc(stateDirPath, newEpoch, UpsertTable.RetainEpochs)
-      } else {
-        // the bucket column is derivable (user_id % buckets), so epoch
-        // dirs store only the data columns
-        val cur = stateRows(sb, stateDirPath, man, rows.schema, affected.toSet)
-          .withColumn("bucket", bucket).select(delta.columns.toSeq.map(col): _*)
-        // ONE exchange for merge + write: clustering by bucket BEFORE
-        // the reduce satisfies the aggregation's ClusteredDistribution
-        // (bucket ⊂ (bucket, user_id)) AND is exactly the layout the
-        // per-bucket staged write needs — the old shape paid a second
-        // full exchange after the agg (guide §2.4: two operations keyed
-        // compatibly share one exchange). Map-side partial aggregation
-        // loses almost nothing here: both union sides are already
-        // key-unique, so at most 2 rows per key existed to collapse.
-        val merged = reduceKeys(cur.unionByName(delta).repartition(col("bucket")))
-        commitMergedBuckets(stateDirPath, merged, affected, newEpoch, man.buckets,
-          man.numBuckets)
-      }
+      // the merge re-reduce runs on the rewrite's one bucket exchange
+      // (bucket ⊂ (bucket, user_id)). Map-side partial aggregation
+      // loses almost nothing: both union sides are already key-unique,
+      // so at most 2 rows per key exist to collapse. The stored bucket
+      // column is re-derived rather than read, so the read schema is
+      // the table's.
+      val buckets =
+        if (affected.isEmpty) man.buckets
+        else UpsertTable.rewriteBuckets(sb, stateDirPath, newEpoch, man.buckets, affected,
+            rows.schema, reduceKeys) { old =>
+          old.withColumn("bucket", bucket).select(delta.columns.toSeq.map(col): _*)
+            .unionByName(delta)
+        }
+      UpsertTable.flip(stateDirPath, UpsertManifest(newEpoch, buckets, man.numBuckets))
       newEpoch
     } finally delta.unpersist(blocking = false): Unit
-  }
-
-  /** Steps 1–3 of the upsert commit protocol (stage → per-bucket
-    * rename → atomic manifest flip) plus retention GC. The one merge
-    * caller is [[mergeLww]] (the upsert, as-of, dual-sink and evolve
-    * tables); the re-layouts [[reshardUpsertState]] and [[compactDv]]
-    * commit through it too. `merged` holds the affected buckets'
-    * complete post-merge rows (with the `bucket` partition column),
-    * and the crash argument in [[mergeLww]]'s protocol comment applies
-    * verbatim — the schema of the staged rows never changes the
-    * protocol, which is what makes evolution a data-path concern
-    * only. */
-  private def commitMergedBuckets(stateDirPath: String, merged: DataFrame,
-                                  affected: Seq[Int], newEpoch: Long,
-                                  prevBuckets: Map[Int, String],
-                                  numBuckets: Int): Unit = {
-    val stateDir = java.nio.file.Paths.get(stateDirPath)
-    val stage = stateDir.resolve(s".stage-e$newEpoch")
-    deleteRecursively(stage.toFile)
-    // CALLER CONTRACT: `merged` arrives clustered by `bucket` (each
-    // caller establishes it with one repartition(bucket) that its
-    // merge aggregation, when it has one, reuses — bucket ⊂ group
-    // keys), so the staged write emits one file per bucket dir without
-    // paying a second exchange here (previously: agg exchange + a
-    // repartition(bucket) exchange per micro-batch).
-    merged.write.mode("overwrite").partitionBy("bucket").parquet(stage.toString)
-    val committed = affected.flatMap { b =>
-      val src = stage.resolve(s"bucket=$b")
-      val rel = graft.ManifestIo.partitionPath("b", b, newEpoch)
-      val dst = stateDir.resolve(rel)
-      java.nio.file.Files.createDirectories(dst.getParent)
-      deleteRecursively(dst.toFile) // crashed attempt's leftovers
-      if (java.nio.file.Files.exists(src)) { java.nio.file.Files.move(src, dst); Some(b -> rel) }
-      else None // bucket rewrote to EMPTY (e.g. a DV compaction that
-      // deleted its every row): reference nothing rather than a
-      // never-created dir — the manifest diff reads as a drop
-    }
-    deleteRecursively(stage.toFile)
-    val newBuckets = (prevBuckets -- affected) ++ committed
-    UpsertTable.commit(stateDirPath, UpsertManifest(newEpoch, newBuckets, numBuckets))
-    UpsertTable.gc(stateDirPath, newEpoch, UpsertTable.RetainEpochs)
   }
 
   // ------------------ dual-sink fan-out (one stream, two artifacts)
@@ -1077,13 +1032,11 @@ object StreamingOps {
     val man = UpsertTable.open(stateDirPath)
     require(newBuckets > 0 && newBuckets != man.numBuckets,
       s"reshard wants a new positive fan-out, got $newBuckets (table at ${man.numBuckets})")
-    val merged = stateRows(s, stateDirPath, man)
-      .withColumn("bucket", (col("user_id") % newBuckets).cast("int"))
-      .repartition(col("bucket")) // commitMergedBuckets caller contract
-    // prevBuckets = empty: the OLD fan-out's bucket ids must not
-    // carry into the new map (a re-layout replaces the whole set)
-    commitMergedBuckets(stateDirPath, merged, 0 until newBuckets, man.epoch + 1,
-      Map.empty, newBuckets)
+    // every old bucket is affected: none of the OLD fan-out's ids
+    // carries into the new map (a re-layout replaces the whole set)
+    val buckets = UpsertTable.rewriteBuckets(s, stateDirPath, man.epoch + 1, man.buckets,
+      man.buckets.keys, UpsertSchema)(_.withColumn("bucket", upsertBucket(newBuckets)))
+    UpsertTable.flip(stateDirPath, UpsertManifest(man.epoch + 1, buckets, newBuckets))
     man.epoch + 1
   }
 
@@ -1121,7 +1074,7 @@ object StreamingOps {
   /** MERGE-ON-READ row deletes for the upsert state table — the
     * deletion-vector design (Delta DVs / Iceberg position deletes):
     * instead of rewriting every bucket a victim lives in (copy-on-
-    * write, what [[commitMergedBuckets]] does for upserts), the delete
+    * write, what [[mergeLww]] does for upserts), the delete
     * commits a SIDECAR of (file, row_index) positions — built from one
     * scan exposing `_metadata.file_path`/`row_index` — and serving
     * anti-joins the broadcast vector before the rows are used. ZERO
@@ -1138,8 +1091,8 @@ object StreamingOps {
     positioned(stateRows(s, stateDirPath, man))
       .filter(col("user_id") % DvMod === DvRem)
       .select(col("file"), col("idx"))
-      .write.mode("overwrite").parquet(s"$stateDirPath/$rel")
-    val n = s.read.parquet(s"$stateDirPath/$rel").count()
+      .write.mode("overwrite").parquet(UpsertTable.path(stateDirPath, rel))
+    val n = UpsertTable.read(s, stateDirPath, Seq(rel)).count()
     graft.ManifestIo.atomicWrite(java.nio.file.Paths.get(stateDirPath, "_dv.json"),
       Serialization.write(DvPointer(man.epoch, rel, n)))
     n
@@ -1175,7 +1128,7 @@ object StreamingOps {
         require(e == man.epoch,
           s"deletion vector is based on epoch $e but the table is at ${man.epoch} " +
             "— a bucket rewrite must re-base or drop its vector (compactDv does)")
-        base.join(broadcast(s.read.parquet(s"$stateDirPath/$rel")),
+        base.join(broadcast(UpsertTable.read(s, stateDirPath, Seq(rel))),
           Seq("file", "idx"), "left_anti")
       case None => base
     }
@@ -1192,17 +1145,17 @@ object StreamingOps {
     val DvPointer(e, rel, _) = readDvPointer(stateDirPath)
       .getOrElse(sys.error(s"no deletion vector at $stateDirPath"))
     require(e == man.epoch, s"stale deletion vector (epoch $e vs ${man.epoch})")
-    val dv = s.read.parquet(s"$stateDirPath/$rel")
+    val dv = UpsertTable.read(s, stateDirPath, Seq(rel))
     // buckets owning dv'd files — parsed from the vector itself
     val affected = dv.select(regexp_extract(col("file"), "/b(\\d+)/e\\d+/", 1)
         .cast("int").as("b")).distinct().collect().map(_.getInt(0)).toSeq.sorted
-    val merged = positioned(stateRows(s, stateDirPath, man, buckets = affected.toSet))
-      .join(broadcast(dv), Seq("file", "idx"), "left_anti")
-      .withColumn("bucket", (col("user_id") % man.numBuckets).cast("int"))
-      .select(col("bucket"), col("user_id"), col("tus"), col("event_type"), col("cents"))
-      .repartition(col("bucket")) // commitMergedBuckets caller contract
-    commitMergedBuckets(stateDirPath, merged, affected, man.epoch + 1,
-      man.buckets, man.numBuckets)
+    val buckets = UpsertTable.rewriteBuckets(s, stateDirPath, man.epoch + 1, man.buckets,
+        affected, UpsertSchema) { old =>
+      positioned(old).join(broadcast(dv), Seq("file", "idx"), "left_anti")
+        .select(upsertBucket(man.numBuckets).as("bucket"), col("user_id"), col("tus"),
+          col("event_type"), col("cents"))
+    }
+    UpsertTable.flip(stateDirPath, UpsertManifest(man.epoch + 1, buckets, man.numBuckets))
     java.nio.file.Files.delete(java.nio.file.Paths.get(stateDirPath, "_dv.json"))
     deleteRecursively(java.nio.file.Paths.get(stateDirPath, rel).toFile)
   }
@@ -1294,10 +1247,10 @@ object StreamingOps {
     * state (old epochs stay immutable; widening happens in the read
     * path, [[stateRows]] with the widened schema); the per-batch work
     * is unchanged from [[runUpsert]] — delta keys + affected buckets
-    * only; and the commit protocol is byte-identical
-    * ([[commitMergedBuckets]]), so crash/atomicity guarantees carry
-    * over unchanged. Nulls encode "pre-evolution" in state; the query
-    * surfaces them as -1 to keep the output column non-nullable. */
+    * only; and the commit protocol is the same [[mergeLww]], so
+    * crash/atomicity guarantees carry over unchanged. Nulls encode
+    * "pre-evolution" in state; the query surfaces them as -1 to keep
+    * the output column non-nullable. */
   val st_upsert_evolve: Q = (s, d) => {
     val stateDir = scratchDir("evolve_state")
     try st_upsert_evolve_run(s, d, stateDir.toString, (_, _) => ())

@@ -53,6 +53,22 @@ class ManifestIoSpec extends AnyFunSuite {
     assert(hotPublished == populated.map(b => b -> s"b$b/e2").toMap,
       "every populated bucket must publish at b<K>/e<epoch>")
     assert(filesIn(hot, "b3/e2") == 1)
+    // an aggregating merge runs on the publish's one bucket exchange:
+    // still one file per bucket dir, and the write plans ONE shuffle
+    val agg = Fs.scratchDir("mio_agg")
+    val (aggPublished, shuffles) = WritePlans.shufflesPerWrite(spark) {
+      ManifestIo.publishPartitions(rows, agg, 1L, "bucket", "b",
+        _.groupBy(col("bucket"), (col("id") % 1000).as("k")).agg(count(lit(1)).as("n")))
+    }
+    assert(shuffles == Seq(1), s"merge + publish must plan one shuffle, got $shuffles")
+    assert(aggPublished == (0 until fanOut).map(b => b -> s"b$b/e1").toMap)
+    val aggCounts = aggPublished.values.map(filesIn(agg, _)).toSeq
+    assert(aggCounts.forall(_ == 1),
+      s"merged bucket dirs must hold ONE data file each, got ${aggCounts.distinct.sorted}")
+    val merged = spark.read.parquet(aggPublished.values.map(rel => agg.resolve(rel).toString).toSeq: _*)
+    // (id % 64, id % 1000) takes lcm(64, 1000) = 8000 distinct values
+    assert(merged.count() == 8000L, "the merge must reduce to one row per (bucket, k)")
+    assert(merged.agg(sum("n")).head.getLong(0) == 200000L)
   }
 
   test("gcEpochs sweeps exactly the unreferenced component epochs below current") {

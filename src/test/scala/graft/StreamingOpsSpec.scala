@@ -488,6 +488,54 @@ class StreamingOpsSpec extends AnyFunSuite {
     }
   }
 
+  test("negative keys: buckets stay b<K>, GC sweeps below the horizon, DV compaction succeeds") {
+    import spark.implicits._
+    val st = graft.Fs.scratchDir("upsert_negkeys").toString
+    // every batch touches every key, so each merge rewrites every
+    // bucket and the previous epoch's dirs fall out of use; a key's
+    // last write lands in a different batch per key
+    val batches = (0 until StreamingOps.UpsertTable.RetainEpochs + 3).map { b =>
+      (-40L to 40L).map(k => (k, new java.sql.Timestamp(1000L * Math.floorMod(37 * b + 11 * k, 97L)),
+          s"t${math.abs(k + b) % 3}", ((k * 7 + b) % 11) * 1.25))
+        .toDF("user_id", "ts", "event_type", "value")
+    }
+    batches.foreach(b => StreamingOps.mergeUpsertBatch(spark, st, b): Unit)
+    def lww(rows: org.apache.spark.sql.DataFrame) =
+      rows.select(col("user_id"), unix_micros(col("ts")).as("tus"), col("event_type"),
+          round(col("value") * 100).cast("long").as("cents"))
+        .groupBy(col("user_id"))
+        .agg(max(struct(col("tus"), col("event_type"), col("cents"))).as("m"))
+        .select(col("user_id"), col("m.tus"), col("m.event_type"), col("m.cents"))
+        .collect().map(_.toString).sorted.toSeq
+    val expect = lww(batches.reduce(_ union _))
+    val head = StreamingOps.UpsertTable.open(st).epoch
+    assert(head == batches.size - 1L)
+    assert(StreamingOps.readUpsertStateAt(spark, st, head).collect().map(_.toString)
+      .sorted.toSeq == expect, "state must equal the LWW reduce over every batch")
+
+    // every bucket dir is b<K>, K ≥ 0, and none below the horizon
+    // survives unreferenced by a retained manifest
+    val epochs = StreamingOps.UpsertTable.listEpochs(st)
+    assert(epochs.length == StreamingOps.UpsertTable.RetainEpochs)
+    val referenced = epochs.flatMap(e => StreamingOps.UpsertTable.openAt(st, e).buckets.values).toSet
+    val onDisk = Option(new java.io.File(st).listFiles()).toSeq.flatten
+      .filter(f => f.isDirectory && f.getName.matches("b-?\\d+"))
+      .flatMap(b => Option(b.listFiles()).toSeq.flatten.map(e => s"${b.getName}/${e.getName}"))
+    assert(onDisk.nonEmpty && onDisk.forall(_.matches("b\\d+/e\\d+")),
+      s"bucket dirs must be b<K> with K >= 0: ${onDisk.sorted}")
+    val stray = onDisk.filter(rel => rel.split("/e")(1).toLong < head && !referenced(rel))
+    assert(stray.isEmpty, s"unreferenced sub-horizon epoch dirs survive GC: ${stray.sorted}")
+
+    // a deletion vector over the table compacts, and serving drops
+    // exactly its victims
+    assert(StreamingOps.commitDv(spark, st) > 0L)
+    StreamingOps.compactDv(spark, st)
+    val served = StreamingOps.serveUpsertMor(spark, st).collect().map(_.toString).sorted.toSeq
+    assert(served == expect.filter(r => r.stripPrefix("[").split(",")(0).toLong % 23 != 5),
+      "compacted state must equal the LWW reduce minus the vector's victims")
+    graft.Fs.deleteRecursively(new java.io.File(st))
+  }
+
   test("snapshot read vs GC: lease spares the epoch, expired snapshot fails pointedly") {
     val state = graft.Fs.scratchDir("upsert_lease_state")
     val ckpt = graft.Fs.scratchDir("upsert_lease_ckpt")

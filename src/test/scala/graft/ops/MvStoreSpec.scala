@@ -267,6 +267,29 @@ class MvStoreSpec extends AnyFunSuite {
     assert(served(MvStore.open(dir)) == expect)
   }
 
+  test("refresh plans one shuffle: the re-reduce runs on the publish's bucket exchange") {
+    import spark.implicits._
+    val dir = graft.Fs.scratchDir("mvspec_shuffles").toString
+    // local partials: any shuffle the refresh's write plans is its own
+    val hist = (0 until 36).flatMap(i => Seq("A", "N", "R").map(f =>
+      (f"${2000 + i / 12}%d-${i % 12 + 1}%02d", f, (i + 1).toLong * 100, 1L)))
+    MvStore.build(hist.toDF("m", "flag", "cents", "n"), dir, Seq("flag"), Seq("cents", "n"))
+    val delta = Seq(("2002-12", "A", 7L, 1L), ("2002-12", "N", 9L, 1L), ("2003-01", "R", 5L, 1L))
+      .toDF("m", "flag", "cents", "n")
+    val (commit, shuffles) = graft.WritePlans.shufflesPerWrite(spark) {
+      MvStore.refresh(spark, dir, delta)
+    }
+    assert(shuffles == Seq(1),
+      s"refresh must write once over one shuffle (merge reduce + publish), got $shuffles")
+    assert(commit.affected.nonEmpty)
+    val served = MvStore.serve(spark, dir, MvStore.open(dir)).collect()
+      .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+    val expect = (hist ++ Seq(("2002-12", "A", 7L, 1L), ("2002-12", "N", 9L, 1L),
+        ("2003-01", "R", 5L, 1L)))
+      .groupBy(_._2).map { case (f, rs) => f -> ((rs.map(_._3).sum, rs.map(_._4).sum)) }
+    assert(served == expect, "refresh drifted from the direct aggregate")
+  }
+
   test("change feed over an EMPTY view yields an empty frame, not a throw") {
     // the dual-sink bootstraps its MV with an empty epoch 0; a feed
     // spanning two no-change epochs (or any span over a bucket-less
